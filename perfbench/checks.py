@@ -5,7 +5,7 @@ from disk with pyarrow or DuckDB, never through Spark.
   in DuckDB straight from the generated parquet (label filter 0..3).
 - ``check_parquet_sink`` / ``check_libsvm_sink``: row count,
   array-order-sensitive checksum, index invariants and class weights
-  of one job's output.
+  of one job's output; ``check_feature_map``: one line per slot.
 - ``native_oracle_mismatches``: value equality of the native extract
   with ``__spark_entry__._pipeline_oracle_sql()`` run in DuckDB.
 """
@@ -144,6 +144,18 @@ def check_libsvm_sink(sink: str, extract: str, width: int, expect: dict[int, int
         errs += _weights_errs(t["label"].to_numpy(), t["weight"].to_numpy(), expect)
     digest = _digest(labels, idx.offsets.to_numpy(), np.array(flat_i), np.array(flat_v))
     return digest, len(lines), errs
+
+
+def check_feature_map(path: str, width: int) -> list[str]:
+    """One ``<idx> <name> i`` line per feature slot, idx = 0..width-1."""
+    with open(path, encoding="utf-8") as fd:
+        lines = fd.read().splitlines()
+    idx = [ln.split(" ", 1)[0] for ln in lines]
+    if len(lines) != width or idx != [str(i) for i in range(width)] or not all(
+        ln.endswith(" i") for ln in lines
+    ):
+        return [f"feature map: {len(lines)} lines, want {width} indexed slots"]
+    return []
 
 
 def native_oracle_mismatches(oracle_sql: str, events_path: str, extract: str) -> tuple[int, int]:

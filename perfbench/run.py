@@ -35,6 +35,7 @@ import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 
@@ -243,6 +244,9 @@ def _preflight() -> None:
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
     os.environ["PYSPARK_PYTHON"] = sys.executable
+    # every JVM spark-submit starts (launcher included) skips its
+    # /tmp/hsperfdata_<user> file: the run writes only inside the checkout
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"
 
 
 def _start_spark(work: str, cores: int):
@@ -250,7 +254,7 @@ def _start_spark(work: str, cores: int):
 
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    os.environ["TMPDIR"] = tmp
+    os.environ["TMPDIR"] = tempfile.tempdir = tmp
     return get_spark(
         app_name="perfbench",
         master=f"local[{cores}]",
@@ -288,8 +292,10 @@ def _check(w, res, expect) -> tuple[str, int, list[str]]:
     import checks
 
     if w.sink == "libsvm":
-        return checks.check_libsvm_sink(res.sink_path, res.extract_path, res.width, expect)
-    return checks.check_parquet_sink(res.sink_path, res.width, expect)
+        digest, rows, errs = checks.check_libsvm_sink(res.sink_path, res.extract_path, res.width, expect)
+    else:
+        digest, rows, errs = checks.check_parquet_sink(res.sink_path, res.width, expect)
+    return digest, rows, errs + checks.check_feature_map(res.fmap_path, res.width)
 
 
 def _run_cli(input_path: str, work: str) -> str:

@@ -55,6 +55,7 @@ class JobResult:
     spans: list[Span] = field(default_factory=list)
     sink_path: str = ""
     fmap_path: str = ""
+    scan_path: str = ""  # the scan-stage checkpoint (cookie-update rows)
     extract_path: str = ""  # the extract-stage checkpoint (full rows)
     width: int = 0
 
@@ -133,6 +134,7 @@ def run_job(spark, w: Workload, input_path: str, out_dir: str, traced: bool = Fa
             s.parent = "job"
     return JobResult(
         job_s=t1 - t0, spans=tr.spans, sink_path=sink_path, fmap_path=fmap,
+        scan_path=os.path.join(out_dir, "_checkpoints", "scan", "data"),
         extract_path=os.path.join(out_dir, "_checkpoints", "extract", "data"),
         width=len(names),
     )

@@ -1,5 +1,7 @@
 """Per-operator metrics of finished SQL executions, read from Spark's
-SQL status store (``sharedState().statusStore()``), which is kept with
+SQL status store (``sharedState().statusStore()``), and the task CPU
+time of finished stages, read from the application status store
+(``SparkContext.statusStore()``). Both are kept with
 ``spark.ui.enabled=false`` too.
 
 The store holds each metric as Spark's display string, e.g.
@@ -89,3 +91,19 @@ def next_execution_id(spark) -> int:
     store = spark._jsparkSession.sharedState().statusStore()
     ids = [e.executionId() for e in _seq(store.executionsList())]
     return max(ids) + 1 if ids else 0
+
+
+def stage_task_cpu_s(spark) -> dict[int, float]:
+    """Stage id -> CPU seconds its tasks spent on their executor threads
+    (``executorCpuTime``: JIT compiler, GC and other runtime threads are
+    not in it), for every stage the store retains. Waits for the
+    listener bus to drain first, so that finished tasks are counted."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    gw = spark.sparkContext._gateway
+    none = gw.jvm.java.util.ArrayList()
+    stages = sc.statusStore().stageList(none, False, False, gw.new_array(gw.jvm.double, 0), none)
+    out: dict[int, float] = {}
+    for st in _seq(stages):  # one entry per stage attempt
+        out[st.stageId()] = out.get(st.stageId(), 0.0) + st.executorCpuTime() / 1e9
+    return out

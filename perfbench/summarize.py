@@ -15,11 +15,10 @@ import argparse
 import glob
 import json
 import os
-import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from run import END_TO_END, ROOT, WALL  # noqa: E402
+from run import END_TO_END, ROOT, WALL, summarize  # noqa: E402
 
 
 def summarize_dir(path: str) -> dict:
@@ -38,12 +37,9 @@ def summarize_dir(path: str) -> dict:
     for wl, metrics in sorted(by_wl.items()):
         out[wl] = {}
         for name, vs in metrics.items():
-            med = statistics.median(vs)
-            q1, _, q3 = statistics.quantiles(vs, n=4) if len(vs) > 1 else (vs[0], 0, vs[0])
-            out[wl][name] = {
-                "unit": {**END_TO_END, **WALL}[name], "median": med, "q1": q1, "q3": q3, "n": len(vs),
-                "spread": (q3 - q1) / med, "values": vs,
-            }
+            s = summarize(vs)
+            s.update(unit={**END_TO_END, **WALL}[name], spread=(s["q3"] - s["q1"]) / s["median"], values=vs)
+            out[wl][name] = s
     return out
 
 

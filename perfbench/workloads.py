@@ -24,6 +24,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 EPOCH0_US = 1_704_067_200 * 10**6  # 2024-01-01 UTC
+FILES = 4  # parquet files every input is split into
 
 
 @dataclass(frozen=True)
@@ -35,7 +36,6 @@ class Workload:
     hot_updates: tuple[int, ...] = ()  # updates of each hot entity
     hot_pool: int = 0  # distinct values the hot entities draw from
     sink: str = "parquet"  # "parquet" | "libsvm"
-    files: int = 4  # parquet files the input is split into
 
 
 WORKLOADS: dict[str, Workload] = {
@@ -47,10 +47,10 @@ WORKLOADS: dict[str, Workload] = {
 }
 
 
-def _write(table: pa.Table, path: str, files: int) -> None:
+def _write(table: pa.Table, path: str) -> None:
     os.makedirs(path, exist_ok=True)
-    step = -(-table.num_rows // files)
-    for i in range(files):
+    step = -(-table.num_rows // FILES)
+    for i in range(FILES):
         pq.write_table(table.slice(i * step, step), os.path.join(path, f"part-{i:03d}.parquet"))
 
 
@@ -125,7 +125,11 @@ def _cookies(w: Workload, rng: np.random.Generator) -> pa.Table:
     names = np.array(_NAMES + [f"misc_{i}" for i in range(4)], dtype=object)[e_name][ent]
     domains = np.array(_DOMAINS, dtype=object)[rng.integers(0, len(_DOMAINS), n_ent)][ent]
     paths = np.where(rng.random(n_ent) < 0.3, "/app", "/")[ent]
-    labels = rng.integers(0, 5, n_ent).astype(np.int32)[ent]
+    labels = rng.integers(0, 5, n_ent).astype(np.int32)
+    # hot entities get a label the extract's label-range filter (0-3)
+    # keeps, so that their updates always reach the job
+    labels[ents:] = rng.integers(0, 4, len(w.hot_updates))
+    labels = labels[ent]
     ts = EPOCH0_US + ent * 3600 * 10**6 + upd.astype(np.int64) * 600 * 10**6
     flags = rng.random((4, n)) < 0.5
     return pa.table({
@@ -152,34 +156,34 @@ def _cookies(w: Workload, rng: np.random.Generator) -> pa.Table:
 
 def generate(w: Workload, seed: int, path: str) -> pa.Table:
     """Build ``w``'s input from ``seed``, write it under ``path`` and
-    return it (the checks recount labels from this table)."""
+    return it."""
     rng = np.random.default_rng([seed % 2**63, sum(map(ord, w.name))])
     table = _events(w, rng) if w.kind == "events" else _cookies(w, rng)
-    _write(table, path, w.files)
+    _write(table, path)
     return table
 
 
-def input_properties(w: Workload, table: pa.Table) -> dict:
-    """Measured shape of a generated input: rows, entities, updates per
-    entity (max/median) and the share of adjacent value pairs (previous,
-    current value within an entity, in update order) that repeat an
-    earlier pair, i.e. that a pair memo such as the gestalt cache could
-    serve. Events inputs are measured on ``props``, the column the
-    adapter's values fall back to."""
-    if w.kind == "events":
-        ent = table["user_id"].to_numpy()
-        order = np.lexsort((table["event_id"].to_numpy(), table["ts"].to_numpy().astype(np.int64), ent))
-        vals = table["props"].to_numpy(zero_copy_only=False)
-    else:
-        ent = table["entity_id"].to_numpy(zero_copy_only=False)
-        order = np.lexsort((table["update_idx"].to_numpy(), ent))
-        vals = table["value"].to_numpy(zero_copy_only=False)
-    ent, vals = ent[order], vals[order]
+def input_properties(updates: pa.Table) -> dict:
+    """Measured shape of a cookie-update table (the rows the job
+    extracts from: the generated input of a cookie workload, the
+    scan-stage output of an events workload): rows, entities, updates
+    per entity (max/median) and the share of adjacent value pairs
+    (previous, current value within an entity, in update order) that
+    repeat an earlier pair, i.e. that a pair memo such as the gestalt
+    cache could serve."""
+    ent = updates["entity_id"].to_numpy(zero_copy_only=False)
+    order = np.lexsort((
+        updates["update_idx"].to_numpy(),
+        updates["ts"].to_numpy().astype(np.int64),
+        ent,
+    ))
+    ent = ent[order]
+    vals = updates["value"].to_numpy(zero_copy_only=False)[order]
     _, counts = np.unique(ent, return_counts=True)
     same_ent = ent[1:] == ent[:-1]
     pairs = list(zip(vals[:-1][same_ent], vals[1:][same_ent]))
     return {
-        "rows": int(table.num_rows),
+        "rows": int(updates.num_rows),
         "entities": int(len(counts)),
         "updates_per_entity_max": int(counts.max()),
         "updates_per_entity_median": float(np.median(counts)),

@@ -1477,11 +1477,9 @@ def q_text_quality(spark, sf_dir):
         aug = F.when(nib == k, F.concat(F.col("text"), F.lit(v))).otherwise(aug)
     # three-phase (opt r7): project the token array, then ONE
     # interpreted aggregate computes the 4 language-marker counts AND
-    # the stopword count over a single lowered pass (stopword_ratio +
-    # lang_counts as separate exprs cost two tokenize+lower+contains
+    # the stopword count over a single lowered pass (separate stopword
+    # and language-count exprs cost two tokenize+lower+contains
     # passes — 27.5 + 33.4 us/doc single-task; the fold measures one).
-    # Counts are identical to TX.stopword_ratio / TX.lang_counts:
-    # same token source, same lower, same membership lists.
     staged = docs.select(
         "doc_id", "text", aug.alias("__aug"), TX.tokens("text").alias("__toks")
     )
@@ -2344,28 +2342,20 @@ def _search_sql(combos: list[dict]) -> str:
     """
 
 
-def _dot_w_expr(c: int) -> F.Column:
-    """similarity.dot(embedding, lit(_SEARCH_W[c])) as ONE SQL-text
-    parse. The Column-API form marshalled each of the 64 weight
-    literals (x 4 classes x combos) through its own py4j round trip —
-    profiled at 1.0s of the 1.45s grid_search_cv construct (5,871
-    round trips). One F.expr per class yields the IDENTICAL Catalyst
-    aggregate/zip_with/cast tree (weights are ints — exact SQL
-    literals), so execution and values are unchanged; construct
-    drops to a handful of parses (same trick as _sql_in_set)."""
-    arr = ",".join(f"{int(x)}D" for x in _SEARCH_W[c])
-    return F.expr(
-        f"aggregate(zip_with(embedding, array({arr}), "
-        "(x, y) -> cast(x as double) * cast(y as double)), "
-        "0D, (acc, v) -> acc + v)"
-    )
-
-
 def _search_scorer(params: dict) -> list:
-    return [
-        _dot_w_expr(c) / F.lit(params["temp"]) + F.lit(params["shift"] * c)
-        for c in range(4)
-    ]
+    """Per-class margins: similarity.dot against the class weights,
+    given as ONE SQL array literal per class. The Column-API array(lit,
+    ...) marshalled each of the 64 weight literals through its own py4j
+    round trip — profiled at 1.0s of the 1.45s grid_search_cv construct
+    (5,871 round trips). Weights are ints, so the D literals are exact."""
+    out = []
+    for c in range(4):
+        w = F.expr("array(" + ",".join(f"{int(x)}D" for x in _SEARCH_W[c]) + ")")
+        out.append(
+            similarity.dot(F.col("embedding"), w) / F.lit(params["temp"])
+            + F.lit(params["shift"] * c)
+        )
+    return out
 
 
 @_q("grid_search_cv", _search_sql(search_ops.expand_grid(_SEARCH_GRID)))

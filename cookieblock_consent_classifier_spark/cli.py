@@ -61,12 +61,8 @@ def main(argv: list[str] | None = None) -> None:
         help="predict mode: path to an XGBoost JSON tree dump; scores "
         "with the dump-compiled native predictor (xgbpredictor_dump.py "
         "analogue, equal-loss decision == predict_class.py:135) instead "
-        "of the deterministic stub scorer",
-    )
-    ap.add_argument(
-        "--dump-format", default="full", choices=["full", "sparse"],
-        help="--model-dump layout: full = one xgboost JSON dump "
-        "(flat tree list, round-robin classes); sparse = JSON list of "
+        "of the deterministic stub scorer. Either layout: a full dump "
+        "(flat list of tree objects, round-robin classes) or a list of "
         "per-class minimal-format forests (xgbpredictor_sparsedump.py)",
     )
     ap.add_argument("--num-updates", type=int, default=None,
@@ -194,7 +190,7 @@ def main(argv: list[str] | None = None) -> None:
         with open(dump_path, "w", encoding="utf-8") as fd:
             json.dump(dump, fd)
         # also export the reference's minimal sparse format (its
-        # JS-deployment artifact; servable via --dump-format sparse)
+        # JS-deployment artifact; also servable via --model-dump)
         sparse_path = os.path.join(args.output, "model_sparse.json")
         with open(sparse_path, "w", encoding="utf-8") as fd:
             json.dump(xgb.to_sparse_format(dump), fd)
@@ -236,7 +232,10 @@ def main(argv: list[str] | None = None) -> None:
 
             with open(args.model_dump) as fd:
                 dump = json.load(fd)
-            score_fn = xgb.dump_score_fn(dump, fmt=args.dump_format)
+            # the JSON's shape names the layout: per-class forests
+            # (lists) are the sparse format, tree objects a full dump
+            fmt = "sparse" if dump and isinstance(dump[0], list) else "full"
+            score_fn = xgb.dump_score_fn(dump, fmt=fmt)
             loss = P.EQUAL_LOSS  # predict_class.py:135
 
         def predict_stage(df):

@@ -270,24 +270,6 @@ def decode_psnr(payload: pd.Series, ref_payload: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-@pandas_udf(T.StructType([
-    T.StructField("mean", T.DoubleType()),
-    T.StructField("std", T.DoubleType()),
-    T.StructField("p99", T.DoubleType()),
-]))
-def pixel_stats(payload: pd.Series) -> pd.DataFrame:
-    """Per-image decoded-pixel summary stats (feature-extraction shape
-    for downstream quality filters)."""
-    rows = []
-    for b in payload:
-        if b is None:
-            rows.append((None, None, None))
-        else:
-            px = decode_image(bytes(b)).astype(np.float64)
-            rows.append((float(px.mean()), float(px.std()), float(np.percentile(px, 99))))
-    return pd.DataFrame(rows, columns=["mean", "std", "p99"], index=payload.index)
-
-
 def resize_pixels(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Deterministic block-mean resize (the stub codec's stand-in for
     a real resampler; swaps for PIL.Image.resize when available)."""

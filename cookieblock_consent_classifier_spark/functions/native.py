@@ -83,24 +83,6 @@ def expiry_buckets(col: str | Column) -> list[Column]:
     return out
 
 
-def content_length(col: str | Column) -> Column:
-    """UTF-8 byte length of the URL-decoded value
-    (feature_content_length, processor.py:1052-1059). NB engine-surface
-    variant: F.try_url_decode is Java URLDecoder ('+'→space, NULL on
-    malformed escapes) — the reference-exact Python-unquote path is the
-    fused kernel's dec_len field, which the plan compiler uses."""
-    return F.octet_length(F.try_url_decode(_c(col))).cast("double")
-
-
-def url_encoded(col: str | Column) -> Column:
-    """value != unquote(value) → ±1 (feature_url_encoding,
-    processor.py:1101-1113). Engine-surface variant (see
-    content_length note); the compiler compares against the kernel's
-    dec field instead."""
-    c = _c(col)
-    return pm(F.coalesce(F.try_url_decode(c), c) != c)
-
-
 # --- regex detectors (Java regex; parity with Python `re` verified in
 # tests for these specific patterns) ---------------------------------
 
@@ -278,25 +260,6 @@ def empty_content_ref(col: str | Column) -> Column:
     return pm(F.translate(_c(col), PY_WS, "") == F.lit(""))
 
 
-def js_object_shape(col: str | Column) -> Column:
-    """feature_contains_javascript_object's fast path
-    (processor.py:1148-1162): ^\\{.*}$ on the raw value → ±1 (the
-    base64-decoded fallback lives in vectorized.py)."""
-    return pm(_c(col).rlike(r"^\{.*\}$"))
-
-
-def delimiter_counts(col: str | Column, delimiters: str = ",|#:;&_.-") -> list[Column]:
-    """Native per-delimiter occurrence counts: len(v) − len(replace(v,
-    d, '')). Basis of the experimental native splitter the reference
-    prototypes (delim_sep_check, utils.py:178-196; processor.py:
-    1509-1555); the csv.Sniffer-exact variant is in vectorized.py."""
-    c = _c(col)
-    return [
-        (F.length(c) - F.length(F.replace(c, F.lit(d)))).cast("double").alias(f"delim_{i}")
-        for i, d in enumerate(delimiters)
-    ]
-
-
 def non_root_path(col: str | Column) -> Column:
     """feature_non_root_path (processor.py:757-763): trimmed path !=
     '/' → 1.0 else absent."""
@@ -424,13 +387,3 @@ def char_entropy(col: str | Column) -> Column:
         F.lit(0).cast("long").alias("tot"),
     )
     return F.aggregate(chars, zero, merge, finish)
-
-
-def shannon_entropy_ref(col: str | Column) -> Column:
-    """feature_shannon_entropy (processor.py:1083-1098) fully native:
-    char entropy of the Python-unquoted value. Used by the compiler
-    when a schema enables no other kernel feature (zero-Python plans);
-    when the fused Arrow kernel already exists the builder rides its
-    ``entropy`` field instead — same values (kernel-parity test on the
-    real fixtures), two physical strategies."""
-    return char_entropy(py_unquote(col))

@@ -58,21 +58,6 @@ def bpe_token_count(col: str | Column) -> Column:
     return F.regexp_count(_c(col), F.lit(BPE_PRETOKEN_PAT)).cast("long")
 
 
-def avg_token_len(col: str | Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks))
-
-
-def stopword_ratio(col: str | Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS)])
-    toks = tokens(col)
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double"))
-
-
 def punct_ratio(col: str | Column) -> Column:
     """Punctuation chars / total chars."""
     c = _c(col)
@@ -81,77 +66,18 @@ def punct_ratio(col: str | Column) -> Column:
     return F.when(n > 0, punct.cast("double") / n.cast("double"))
 
 
-def quality_score(col: str | Column) -> Column:
-    """Composite [0,1] quality heuristic: penalize very short docs,
-    high punctuation, zero stopwords (classic pretraining-corpus
-    filters)."""
-    c = _c(col)
-    len_score = F.least(F.length(c).cast("double") / F.lit(200.0), F.lit(1.0))
-    punct = F.coalesce(punct_ratio(c), F.lit(0.0))
-    sw = F.coalesce(stopword_ratio(c), F.lit(0.0))
-    return F.round(
-        F.lit(0.4) * len_score
-        + F.lit(0.3) * (F.lit(1.0) - F.least(punct * 4, F.lit(1.0)))
-        + F.lit(0.3) * F.least(sw * 5, F.lit(1.0)),
-        6,
-    )
-
-
-def lang_scores(col: str | Column) -> dict[str, Column]:
-    """Per-language stopword hit counts."""
-    toks = tokens(col)
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
-    return out
-
-
 LANG_ORDER: list[str] = sorted(LANG_MARKERS)
 
 
-def lang_counts(col: str | Column) -> Column:
-    """array<int> of per-language marker hit counts (LANG_ORDER
-    positions) in ONE interpreted pass over the token array.
-
-    Higher-order functions are CodegenFallback (interpreted, no
-    subexpression elimination): one filter() per language re-tokenizes
-    and re-lowers per pass, and an argmax when-chain over those scores
-    duplicates each one several times — ~10 interpreted array passes
-    per row. This folds everything into a single aggregate over
-    lowered tokens."""
-    lowered = F.transform(tokens(col), F.lower)
-    arrs = [F.array(*[F.lit(m) for m in LANG_MARKERS[lang]]) for lang in LANG_ORDER]
-    zero = F.array(*[F.lit(0) for _ in LANG_ORDER])
-    return F.aggregate(
-        lowered,
-        zero,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(*[F.array_contains(a, t).cast("int") for a in arrs]),
-            lambda x, y: x + y,
-        ),
-    )
-
-
 def lang_id_from_counts(counts: str | Column) -> Column:
-    """argmax language from a lang_counts() column; 'und' when all
-    zero. array_position returns the FIRST maximum → ties break by
-    language code order (LANG_ORDER is sorted), same as the when-chain
-    formulation."""
+    """argmax language from an array<int> of per-language marker hit
+    counts (LANG_ORDER positions); 'und' when all zero.
+    array_position returns the FIRST maximum → ties break by language
+    code order (LANG_ORDER is sorted)."""
     c = _c(counts)
     mx = F.array_max(c)
     pick = F.element_at(F.lit(LANG_ORDER), F.array_position(c, mx).cast("int"))
     return F.when(mx > 0, pick).otherwise(F.lit("und"))
-
-
-def lang_id(col: str | Column) -> Column:
-    """argmax language by marker hits; 'und' when all zero. Ties break
-    by language code order (deterministic). For hot paths, project
-    lang_counts() into its own column first and apply
-    lang_id_from_counts on it — this convenience form evaluates the
-    counts aggregate twice (max + position)."""
-    return lang_id_from_counts(lang_counts(col))
 
 
 def _word_ngrams(toks: Column, n: int) -> Column:
@@ -181,12 +107,6 @@ def dup_ngram_fraction_from_tokens(toks: str | Column, n: int = 2) -> Column:
         total > 0,
         F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double") / total.cast("double"),
     )
-
-
-def dup_ngram_fraction(col: str | Column, n: int = 2) -> Column:
-    """Convenience single-use form of dup_ngram_fraction_from_tokens
-    (tokenizes inline — prefer the _from_tokens form in hot paths)."""
-    return dup_ngram_fraction_from_tokens(tokens(col), n)
 
 
 def dup_line_fraction(col: str | Column) -> Column:

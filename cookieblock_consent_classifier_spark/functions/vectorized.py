@@ -18,7 +18,6 @@ from __future__ import annotations
 import base64
 import csv
 import difflib
-import json
 import math
 import zlib
 from collections import Counter
@@ -96,14 +95,6 @@ def _py_b64_decodable(dec: str) -> bool:
         return False
 
 
-def _py_b64_valid(s: str | None) -> bool | None:
-    """feature_base64_encoded (processor.py:1133-1146): URL-decode,
-    then lenient b64decode (see _py_b64_decodable)."""
-    if s is None:
-        return None
-    return _py_b64_decodable(unquote(s))
-
-
 _UNSET = object()
 
 
@@ -122,29 +113,6 @@ def _py_js_parse(txt: str, b64=_UNSET):
     if dec and "{" in dec:
         return try_split_json_like(dec)
     return None
-
-
-def _py_json_object(s: str | None) -> dict | None:
-    """Engine convenience API: the parsed object of feature_js_content
-    when (and only when) it is a dict; None otherwise. Input is the
-    raw value (URL-decoded internally, like the reference)."""
-    if s is None:
-        return None
-    obj = _py_js_parse(unquote(s))
-    return obj if isinstance(obj, dict) else None
-
-
-# str-class predicates: Python unicode semantics (str.isnumeric etc.)
-# differ from any regex approximation (processor.py:1305-1374) — these
-# must run in Python. 'identifier' excludes pure-alpha/pure-numeric
-# strings (feature_is_identifier, processor.py:1339-1345).
-_STR_CLASSES = {
-    "numeric": lambda v: v.isnumeric(),
-    "alpha": lambda v: v.isalpha(),
-    "upper": lambda v: v.isupper(),
-    "lower": lambda v: v.islower(),
-    "identifier": lambda v: v.isidentifier() and not v.isalpha() and not v.isnumeric(),
-}
 
 
 # ---------------------------------------------------------------------------
@@ -166,11 +134,6 @@ def gestalt_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(
         [_py_gestalt(x, y) for x, y in zip(a, b)], index=a.index, dtype="float64"
     )
-
-
-@pandas_udf(T.BooleanType())
-def base64_valid(s: pd.Series) -> pd.Series:
-    return s.map(_py_b64_valid, na_action="ignore")
 
 
 def gestalt_stats_udf(num_diffs: int):
@@ -218,35 +181,6 @@ def gestalt_stats_udf(num_diffs: int):
     return _udf
 
 
-def str_class_udf(kind: str):
-    """±1 unicode str-class feature (feature_numerical/alpha/upper/
-    lower/is_identifier, processor.py:1305-1374). URL-decoded first,
-    like the reference."""
-    fn = _STR_CLASSES[kind]
-
-    @pandas_udf(T.DoubleType())
-    def _udf(s: pd.Series) -> pd.Series:
-        def one(v):
-            return 1.0 if fn(unquote(v)) else -1.0
-
-        return s.map(one, na_action="ignore")
-
-    return _udf
-
-
-@pandas_udf(T.IntegerType())
-def js_content_len(s: pd.Series) -> pd.Series:
-    """len(parsed JS/JSON value) or null when unparseable
-    (feature_js_content slot 0, processor.py:1288-1291 — the reference
-    takes len() of ANY non-None parse, including lists and strings)."""
-
-    def one(v):
-        obj = _py_js_parse(unquote(v))
-        return None if obj is None else len(obj)
-
-    return s.map(one, na_action="ignore").astype("Int32")
-
-
 DELIMITERS = ",|#:;&_.-"  # processor.py:151
 
 
@@ -254,8 +188,8 @@ _SNIFF_PREFERRED = (",", "\t", ";", " ", ":")  # csv.Sniffer().preferred
 _SNIFFER = csv.Sniffer()
 
 
-def _sniff_delim(txt: str, delimiters: str):
-    """Exact twin of ``csv.Sniffer().sniff(txt, delimiters=...)``
+def _sniff_delim(txt: str):
+    """Exact twin of ``csv.Sniffer().sniff(txt, delimiters=DELIMITERS)``
     restricted to the fields ``_py_split_delimited`` consumes: returns
     ``(delimiter, quotechar, doublequote, skipinitialspace)`` or None
     where sniff would raise ``csv.Error``.
@@ -276,7 +210,7 @@ def _sniff_delim(txt: str, delimiters: str):
     Parity is pinned by tests/test_functions.py::test_sniff_parity
     against csv.Sniffer over a structured fuzz corpus."""
     if "\n" not in txt and '"' not in txt and "'" not in txt:
-        cands = {d: txt.count(d) for d in delimiters if d in txt}
+        cands = {d: txt.count(d) for d in DELIMITERS if d in txt}
         if not cands:
             return None  # sniff() raises Error("Could not determine delimiter")
         if len(cands) == 1:
@@ -293,7 +227,7 @@ def _sniff_delim(txt: str, delimiters: str):
         # ('', False, ...) and sniff defaults quotechar to '"'
         return delim, '"', False, skip
     try:
-        d = _SNIFFER.sniff(txt, delimiters=delimiters)
+        d = _SNIFFER.sniff(txt, delimiters=DELIMITERS)
         return d.delimiter, d.quotechar, d.doublequote, d.skipinitialspace
     except csv.Error:
         return None
@@ -318,7 +252,7 @@ def _split_sniffed(txt: str, sniffed) -> list[str]:
     )[0]
 
 
-def _py_split_delimited(txt: str, min_seps: int, delimiters: str = DELIMITERS):
+def _py_split_delimited(txt: str, min_seps: int):
     """split_delimiter_separated (utils.py:114-143) semantics:
     Sniffer dialect over the restricted delimiter set; accepted only if
     the raw string contains STRICTLY MORE than ``min_seps`` occurrences
@@ -331,7 +265,7 @@ def _py_split_delimited(txt: str, min_seps: int, delimiters: str = DELIMITERS):
     saves a base64 decode + a second ~100 us sniff per miss). A
     csv.Error from the READER (e.g. newline in an unquoted field) is
     (None, None) exactly like the original's shared except-clause."""
-    s = _sniff_delim(txt, delimiters)
+    s = _sniff_delim(txt)
     if s is None:
         return None, None
     if txt.count(s[0]) > min_seps:
@@ -351,35 +285,6 @@ def _py_b64_decode(s: str, min_len: int = 8):
         return base64.b64decode(s).decode("utf-8")
     except Exception:
         return None
-
-
-def csv_sniff_udf(delimiters: str = DELIMITERS, min_seps: int = 1):
-    """feature_delimiter_separated (processor.py:1116-1130): chosen
-    delimiter slot = token count, others −1 (handled by the caller);
-    returns struct(delim_idx int, num_tokens int), nulls when not
-    delimiter-separated."""
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("delim_idx", T.IntegerType()),
-                T.StructField("num_tokens", T.IntegerType()),
-            ]
-        )
-    )
-    def _udf(s: pd.Series) -> pd.DataFrame:
-        def one(v):
-            if v is None:
-                return (None, None)
-            toks, d = _py_split_delimited(unquote(v), min_seps, delimiters)
-            if toks is None:
-                return (None, None)
-            return (delimiters.index(d), len(toks))
-
-        rows = [one(v) for v in s]
-        return pd.DataFrame(rows, columns=["delim_idx", "num_tokens"], index=s.index)
-
-    return _udf
 
 
 _TRUTH_PAT = None  # compiled lazily per worker
@@ -402,8 +307,8 @@ def _hex_pat():
 
 def _py_csv_flags_from_tokens(toks):
     """The flag pass of feature_csv_content over already-split tokens
-    (None/empty → all −1) — shared by the standalone UDF and the fused
-    kernel (which reuses one sniff+split for both csv features)."""
+    (None/empty → all −1) — shared by _py_csv_content_flags and the
+    fused kernel (which reuses one sniff+split for both csv features)."""
     flags = [False] * 5
     if toks:
         hx = _hex_pat()
@@ -426,24 +331,10 @@ def _py_csv_content_flags(v: str | None, min_seps: int = 2):
     return _py_csv_flags_from_tokens(toks)
 
 
-def csv_content_udf(min_seps: int = 2):
-    fields = ["csv_num", "csv_hex", "csv_alpha", "csv_alnum", "csv_bool"]
-
-    @pandas_udf(T.StructType([T.StructField(f, T.DoubleType()) for f in fields]))
-    def _udf(s: pd.Series) -> pd.DataFrame:
-        rows = [
-            _py_csv_content_flags(v, min_seps) if v is not None else (None,) * 5
-            for v in s
-        ]
-        return pd.DataFrame(rows, columns=fields, index=s.index)
-
-    return _udf
-
-
 def _py_js_flags_tuple(data):
     """The 11-wide vector of feature_js_content from an ALREADY-parsed
-    value (see _py_js_content) — shared by the standalone UDF and the
-    fused kernel (which parses once per value)."""
+    value — shared by _py_js_content and the fused kernel (which
+    parses once per value)."""
     import re
 
     flags = dict.fromkeys(
@@ -504,23 +395,17 @@ JS_CONTENT_FIELDS = [
 ]
 
 
-@pandas_udf(T.StructType([T.StructField(f, T.DoubleType()) for f in JS_CONTENT_FIELDS]))
-def js_content_udf(s: pd.Series) -> pd.DataFrame:
-    rows = [_py_js_content(v) if v is not None else (None,) * 11 for v in s]
-    return pd.DataFrame(rows, columns=JS_CONTENT_FIELDS, index=s.index)
-
-
-def content_kernel_udf(content_terms: list[str], delimiters: str = DELIMITERS,
-                       delim_min_seps: int = 1, csv_min_seps: int = 2):
+def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
+                       csv_min_seps: int = 2):
     """FUSED per-update Python kernel: every non-native feature
     computed in ONE Arrow round-trip with ONE URL-decode per value.
 
     Separate pandas UDFs per feature would mean ~10 ArrowEvalPython
     evaluations per row batch, each re-decoding the value (measured
     ~2ms·core/row on the full schema); fusing them cuts the Python
-    path to a single batch pass. Field semantics are identical to the
-    standalone UDFs above (which remain the per-operator API and the
-    parity-test subjects).
+    path to a single batch pass. Each field's semantics are those of
+    the scalar ``_py_*`` helpers above; the parity tests read the
+    fields directly.
     """
     import re
 
@@ -599,9 +484,9 @@ def content_kernel_udf(content_terms: list[str], delimiters: str = DELIMITERS,
             # (min_seps=delim_min_seps) and csv_contents
             # (min_seps=csv_min_seps): only the acceptance threshold
             # differs, the sniffed dialect and the split tokens are
-            # identical (the standalone UDFs sniffed twice per value —
-            # the kernel's single largest per-row cost)
-            sn = _sniff_delim(dec, delimiters)
+            # identical (sniffing is the kernel's single largest
+            # per-row cost)
+            sn = _sniff_delim(dec)
             didx = ntok = None
             ctoks = None
             if sn is not None:
@@ -612,17 +497,16 @@ def content_kernel_udf(content_terms: list[str], delimiters: str = DELIMITERS,
                         split_toks = _split_sniffed(dec, sn)
                     except csv.Error:
                         # reader error (newline in unquoted field):
-                        # the original per-feature path returned
-                        # (None, None) for both features
+                        # _py_split_delimited returns (None, None) for
+                        # both features
                         cnt = -1
                 if cnt > delim_min_seps and split_toks:
-                    didx = delimiters.index(sn[0])
+                    didx = DELIMITERS.index(sn[0])
                     ntok = len(split_toks)
                 if cnt > csv_min_seps:
                     ctoks = split_toks
             csvf = _py_csv_flags_from_tokens(ctoks)
-            # ONE js parse feeds the whole js_contents block (the
-            # standalone UDF re-decodes and re-parses)
+            # ONE js parse feeds the whole js_contents block
             jsf = _py_js_flags_tuple(_py_js_parse(dec, b64=mb))
             ranks = sorted(
                 [i for t, i in lit_terms if t in dec]
@@ -642,14 +526,13 @@ def content_kernel_udf(content_terms: list[str], delimiters: str = DELIMITERS,
     return _udf
 
 
-def regex_ranks_udf(patterns: list[str], mode: str = "search", flags: int = 0,
-                    url_decode: bool = False):
+def regex_ranks_udf(patterns: list[str], mode: str = "search"):
     """Multi-hot regex-list lookup → array of matched ranks.
 
-    Covers feature_pattern_names (.match, processor.py:712-722),
-    feature_name_tokens (.search, :724-733), and
-    feature_english_terms_in_content (.search on unquoted value,
-    :1164-1174). The pattern list is captured in the closure (compiled
+    Covers feature_pattern_names (.match, processor.py:712-722) and
+    feature_name_tokens (.search, :724-733) on the raw cookie name;
+    feature_english_terms_in_content (:1164-1174) is the fused kernel's
+    ``term_ranks`` field. The pattern list is captured in the closure (compiled
     once per executor at UDF init — the reference's precompile
     discipline, processor.py:154-175); a broadcast-variable hookup is
     unnecessary at these list sizes (≤500 strings ship with the task).
@@ -658,24 +541,22 @@ def regex_ranks_udf(patterns: list[str], mode: str = "search", flags: int = 0,
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def _udf(s: pd.Series) -> pd.Series:
-        # literal patterns (no metachars, default flags) short-circuit
-        # to substring/prefix tests — semantically identical to
+        # literal patterns (no metachars) short-circuit to
+        # substring/prefix tests — semantically identical to
         # re.search/re.match of the escaped literal, ~10× cheaper over
         # a 500-pattern bank
         lits, regs = [], []
         for i, p in enumerate(patterns):
-            if flags == 0 and p == re.escape(p):
+            if p == re.escape(p):
                 lits.append((p, i))
             else:
-                regs.append((re.compile(p, flags), i))
+                regs.append((re.compile(p), i))
         matcher = (lambda c, v: c.match(v)) if mode == "match" else (lambda c, v: c.search(v))
         lit_test = (
             (lambda p, v: v.startswith(p)) if mode == "match" else (lambda p, v: p in v)
         )
 
         def one(v):
-            if url_decode:
-                v = unquote(v)
             return sorted(
                 [rank for p, rank in lits if lit_test(p, v)]
                 + [rank for c, rank in regs if matcher(c, v)]

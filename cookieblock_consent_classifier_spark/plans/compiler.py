@@ -127,10 +127,6 @@ DEFAULT_SCHEMA = None  # set lazily by callers with their Resources
 # (NULL = absent = sparse zero). Encoding: true→1.0 false→−1.0.
 # ---------------------------------------------------------------------------
 
-def _pm_b(cond: Column) -> list[Column]:
-    return [native.pm(cond)]
-
-
 def _per_update_builders(
     use_kernel: bool = True,
 ) -> dict[str, Callable[[dict], list[Column] | Column]]:
@@ -375,7 +371,6 @@ def compile_features(
     res: Resources,
     entity_col: str = "entity_id",
     training: bool = True,
-    skip_sample_mod: int | None = None,
     with_weights: bool = True,
     gestalt_max_updates: int = 10_000,
 ) -> tuple[DataFrame, list[str]]:
@@ -385,10 +380,7 @@ def compile_features(
     assembly. Returns (wide_df, feature_names).
 
     training=True applies the reference's label-range filter
-    (processor.py:473-478) and, when ``skip_sample_mod`` is set, the
-    deterministic hash replacement of its random CMP-cookie skip
-    (processor.py:481-483): drop matching-name entities unless
-    xxhash64(entity) % mod == 0.
+    (processor.py:473-478).
 
     ``gestalt_max_updates`` bounds the ONE collected sequence in the
     plan (the ordered values feeding the post-agg gestalt kernel —
@@ -406,10 +398,6 @@ def compile_features(
 
     if training:
         df = df.filter(F.col("label").between(0, 3))
-        if skip_sample_mod:
-            cmp_name = F.col("name").rlike("^(OptanonConsent|OptanonAlertBoxClosed|CookieConsent)$")
-            keep = F.pmod(F.xxhash64(F.col(entity_col)), F.lit(skip_sample_mod)) == 0
-            df = df.filter(~cmp_name | keep)
 
     w = Window.partitionBy(entity_col).orderBy("ts", "update_idx")
     enabled_pe = {s.name for s in schema.per_entity if s.enabled}

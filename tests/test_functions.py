@@ -48,6 +48,12 @@ def collect_col(df, col):
     return [r["c"] for r in df.select(col.alias("c")).collect()]
 
 
+def kernel_field(df, field):
+    """One field of the fused content kernel over column ``v`` — the
+    struct the plan compiler projects its per-update features from."""
+    return collect_col(df, V.content_kernel_udf([])(F.col("v"))[field])
+
+
 def test_entropy_matches_python(vals):
     got = collect_col(vals, V.shannon_entropy("v"))
     for v, g in zip(VALUES, got):
@@ -70,7 +76,7 @@ def test_base64_validity(vals):
     # feature_base64_encoded (processor.py:1133-1146): lenient decode
     # (validate=False silently drops non-alphabet chars) on the
     # URL-DECODED content
-    got = collect_col(vals, V.base64_valid("v"))
+    got = kernel_field(vals, "b64_valid")
     for v, g in zip(VALUES, got):
         try:
             base64.b64decode(unquote(v))
@@ -84,31 +90,32 @@ def test_base64_reference_quirks(spark):
     # url-encoded padding decodes ('dGVzdA%3D%3D'), embedded spaces are
     # discarded by the lenient decoder ('dGVz dA==')
     df = spark.createDataFrame([("dGVzdA%3D%3D",), ("dGVz dA==",), ("a",)], ["v"])
-    got = collect_col(df, V.base64_valid("v"))
+    got = kernel_field(df, "b64_valid")
     assert got == [True, True, False]
 
 
 def test_str_classes_unicode_exact(vals):
-    for kind, fn in [
-        ("numeric", str.isnumeric),
-        ("alpha", str.isalpha),
-        ("upper", str.isupper),
-        ("lower", str.islower),
+    for field, fn in [
+        ("is_numeric", str.isnumeric),
+        ("is_alpha", str.isalpha),
+        ("is_upper", str.isupper),
+        ("is_lower", str.islower),
         # feature_is_identifier (processor.py:1339-1345) excludes
         # pure-alpha and pure-numeric strings
-        ("identifier", lambda s: s.isidentifier() and not s.isalpha() and not s.isnumeric()),
+        ("is_ident", lambda s: s.isidentifier() and not s.isalpha() and not s.isnumeric()),
     ]:
-        got = collect_col(vals, V.str_class_udf(kind)("v"))
+        got = kernel_field(vals, field)
         for v, g in zip(VALUES, got):
             exp = 1.0 if fn(unquote(v)) else -1.0
-            assert g == exp, (kind, v)
+            assert g == exp, (field, v)
 
 
 def test_unicode_digits_diverge_from_regex(spark):
-    # the reason isnumeric is a pandas UDF, not rlike (SURVEY §2.3#17)
+    # the reason isnumeric runs in the Python kernel, not rlike
+    # (SURVEY §2.3#17)
     df = spark.createDataFrame([("٣٤٥",)], ["v"])
     regex = df.select(F.col("v").rlike("^[0-9]+$").alias("c")).first()["c"]
-    py = df.select(V.str_class_udf("numeric")("v").alias("c")).first()["c"]
+    (py,) = kernel_field(df, "is_numeric")
     assert regex is False and py == 1.0
 
 
@@ -178,10 +185,13 @@ def test_regex_detectors(vals):
 
 
 def test_url_encoding_and_content_length(spark):
+    # the compiler's forms: url_encoding = pm(value != dec),
+    # content_length = dec_len (utf-8 bytes of the unquoted value)
     df = spark.createDataFrame([("a%20b",), ("plain",)], ["v"])
-    enc = collect_col(df, native.url_encoded("v"))
+    k = V.content_kernel_udf([])(F.col("v"))
+    enc = collect_col(df, native.pm(F.col("v") != k["dec"]))
     assert enc == [1.0, -1.0]
-    cl = collect_col(df, native.content_length("v"))
+    cl = kernel_field(df, "dec_len")
     assert cl == [3.0, 5.0]  # "a b" is 3 utf-8 bytes
 
 
@@ -205,7 +215,10 @@ def test_csv_sniffer_parity(spark):
 
     vals = ["a,b,c", "x|y|z|w", "no-delims-here maybe", "k=v&k2=v2", "a,b"]
     df = spark.createDataFrame([(v,) for v in vals], ["v"])
-    got = [r["c"] for r in df.select(V.csv_sniff_udf(min_seps=1)("v").alias("c")).collect()]
+    k = V.content_kernel_udf([])(F.col("v"))  # delim_min_seps=1
+    got = df.select(
+        k["delim_idx"].alias("delim_idx"), k["num_tokens"].alias("num_tokens")
+    ).collect()
     sniffer = csv.Sniffer()
     delims = ",|#:;&_.-"
     for v, g in zip(vals, got):
@@ -298,7 +311,7 @@ def test_sniff_fast_path_parity_fuzz():
             exp = (d.delimiter, d.quotechar, d.doublequote, d.skipinitialspace)
         except _csv.Error:
             exp = None
-        got = V._sniff_delim(txt, delims)
+        got = V._sniff_delim(txt)
         assert got == exp, (repr(txt), got, exp)
         # and the full split path: tokens must match reading with the
         # real sniffed dialect under both acceptance thresholds

@@ -1,5 +1,5 @@
 """Native Python-unquote + Shannon entropy (functions/native.py:
-py_unquote / char_entropy / shannon_entropy_ref) — the pure-Catalyst
+py_unquote / char_entropy) — the pure-Catalyst
 form of feature_shannon_entropy (processor.py:1083-1098) that lets
 compiler.native_schema carry the entropy slots with zero Python nodes
 (NATIVE_CAPABLE_PER_UPDATE). Pins:
@@ -143,7 +143,7 @@ def test_py_unquote_matches_cpython(spark):
 def test_char_entropy_matches_reference_formula(spark):
     corpus = EDGE_CASES + _fuzz_corpus(150)
     df = spark.createDataFrame([(s,) for s in corpus] + [(None,)], "v string")
-    rows = df.select("v", native.shannon_entropy_ref("v").alias("ent")).collect()
+    rows = df.select("v", native.char_entropy(native.py_unquote("v")).alias("ent")).collect()
     for r in rows:
         exp = _py_entropy(r.v)
         if exp is None:
@@ -168,7 +168,7 @@ def test_native_matches_kernel_on_real_fixtures(spark):
     assert len(values) > 500
     assert any("%" in v for v in values), "fixtures must exercise unquote"
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    rows = df.select("v", native.shannon_entropy_ref("v").alias("ent")).collect()
+    rows = df.select("v", native.char_entropy(native.py_unquote("v")).alias("ent")).collect()
     worst = 0.0
     for r in rows:
         exp = _py_entropy(r.v)

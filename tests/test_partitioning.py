@@ -50,7 +50,6 @@ def test_bucketed_input_zero_exchange_feature_pipeline(spark, tmp_path):
     shuffle regardless of layout.) Values must equal the unbucketed
     run exactly."""
     from cookieblock_consent_classifier_spark.plans.compiler import compile_features
-    from cookieblock_consent_classifier_spark.runtime.bucketing import write_bucketed
     from cookieblock_consent_classifier_spark.schema import FeatureSchema, FeatureSpec
     from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
     from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
@@ -59,7 +58,9 @@ def test_bucketed_input_zero_exchange_feature_pipeline(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS bkt_updates")
     import shutil
     shutil.rmtree("spark-warehouse/bkt_updates", ignore_errors=True)
-    write_bucketed(df, "bkt_updates", "entity_id", num_buckets=8, sort_col="entity_id")
+    df.write.mode("overwrite").bucketBy(8, "entity_id").sortBy("entity_id").saveAsTable(
+        "bkt_updates"
+    )
     bucketed = spark.table("bkt_updates")
 
     schema = FeatureSchema(

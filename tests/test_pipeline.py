@@ -340,16 +340,6 @@ def test_weights_inverse_class_frequency(compiled):
         assert r["weight"] == pytest.approx(n / by_label[r["label"]])
 
 
-def test_deterministic_sampling_filter(spark):
-    df = spark.createDataFrame(_rows(), COOKIE_UPDATE_SCHEMA)
-    schema = default_schema(RES, num_updates=1, num_diffs=1)
-    a, _ = compile_features(df, schema, RES, training=True, skip_sample_mod=3)
-    b, _ = compile_features(df, schema, RES, training=True, skip_sample_mod=3)
-    assert sorted(r["entity_id"] for r in a.collect()) == sorted(
-        r["entity_id"] for r in b.collect()
-    )
-
-
 def test_single_entity_shuffle(spark):
     """The compiled plan must hash-exchange on entity exactly once
     (window + groupBy share the partitioning); broadcasts excluded."""

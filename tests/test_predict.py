@@ -122,10 +122,13 @@ def test_cli_predict_mode(spark, tmp_path):
     assert all(0 <= r["predicted_label"] <= 3 for r in rows)
 
 
-def test_cli_predict_mode_with_model_dump(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["full", "sparse"])
+def test_cli_predict_mode_with_model_dump(spark, tmp_path, layout):
     """--model-dump scores with the dump-compiled native predictor
     (xgbpredictor_dump.py analogue) and the equal-loss decision
-    (predict_class.py:135) instead of the stub scorer."""
+    (predict_class.py:135) instead of the stub scorer. The dump's
+    layout is read from the JSON's shape: the minimal sparse export
+    (per-class forests) must give the same labels as the full dump."""
     import contextlib
     import io
     import json as J
@@ -134,9 +137,10 @@ def test_cli_predict_mode_with_model_dump(spark, tmp_path):
     from cookieblock_consent_classifier_spark import xgb
     from cookieblock_consent_classifier_spark.cli import main as cli_main
 
-    dump_path = str(tmp_path / "model_dump.json")
+    dump = xgb.fixture_dump()
+    dump_path = str(tmp_path / f"model_{layout}.json")
     with open(dump_path, "w", encoding="utf-8") as fd:
-        J.dump(xgb.fixture_dump(), fd)
+        J.dump(dump if layout == "full" else xgb.to_sparse_format(dump), fd)
 
     out = str(tmp_path / "pred_dump_out")
     buf = io.StringIO()
@@ -156,3 +160,12 @@ def test_cli_predict_mode_with_model_dump(spark, tmp_path):
                 rows += [J.loads(line) for line in fd if line.strip()]
     assert len(rows) == 60
     assert all(0 <= r["predicted_label"] <= 3 for r in rows)
+    # both layouts: the labels of the full dump scored in-process over
+    # the run's own extract checkpoint
+    feat = spark.read.parquet(os.path.join(out, "_checkpoints", "extract", "data"))
+    want = {
+        r["entity_id"]: r["predicted_label"]
+        for r in P.predict(feat, score_fn=xgb.dump_score_fn(dump), loss=P.EQUAL_LOSS)
+        .select("entity_id", "predicted_label").collect()
+    }
+    assert {r["entity_id"]: r["predicted_label"] for r in rows} == want

@@ -165,32 +165,3 @@ def test_streaming_per_update_feature_extraction(spark, tmp_path: Path):
         for r in features(spark.read.parquet(str(src))).collect()
     }
     assert got == exp and len(got) == 100
-
-
-def test_streaming_exact_dedup_matches_batch(spark, events, tmp_path: Path):
-    """streaming_exact_dedup through the real streaming engine (file
-    source -> dropDuplicatesWithinWatermark -> memory sink) keeps
-    exactly one row per key and matches the batch dedup's key set."""
-    from cookieblock_consent_classifier_spark.streaming.dedup import streaming_exact_dedup
-
-    # synthesize duplicate keys: user_id % 37 gives ~37 distinct keys
-    # over 1000s of events
-    dup = events.withColumn("dup_key", (F.col("user_id") % 37).cast("string"))
-    src = str(tmp_path / "src")
-    dup.write.parquet(src)
-
-    batch_keys = {
-        r["dup_key"]
-        for r in streaming_exact_dedup(dup, ["dup_key"]).select("dup_key").collect()
-    }
-
-    stream = spark.readStream.schema(dup.schema).parquet(src)
-    deduped = streaming_exact_dedup(stream, ["dup_key"], watermark="365 days")
-    q = (
-        deduped.writeStream.format("memory").queryName("dedup_test")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(300), "streaming dedup query timed out"
-    got = spark.sql("SELECT dup_key, count(*) AS n FROM dedup_test GROUP BY dup_key").collect()
-    assert {r["dup_key"] for r in got} == batch_keys
-    assert all(r["n"] == 1 for r in got)  # exactly-once per key

@@ -1,15 +1,10 @@
-"""IVF ANN + bucketed co-located joins."""
+"""IVF ANN."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from cookieblock_consent_classifier_spark.operators import similarity
-from cookieblock_consent_classifier_spark.runtime.bucketing import (
-    bucketed_join,
-    write_bucketed,
-)
 
 
 def test_ivf_assign_deterministic_and_total(spark, embeddings):
@@ -111,31 +106,6 @@ def test_ivf_partitioned_probe_prunes_cells(spark, embeddings, tmp_path):
     # probed rows == the cells' full inverted lists (no loss)
     expected = assigned.filter(F.col("cell").isin(2, 5)).count()
     assert probe.count() == expected
-
-
-def test_bucketed_join_has_no_exchange(spark, events, orders, tmp_path):
-    import shutil
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS buckdemo")
-    for t in ("ev_b", "ord_b"):
-        spark.sql(f"DROP TABLE IF EXISTS buckdemo.{t}")
-        shutil.rmtree(f"spark-warehouse/buckdemo.db/{t}", ignore_errors=True)
-    write_bucketed(events.select("event_id", "user_id", "value"),
-                   "buckdemo.ev_b", "user_id", 8, sort_col="user_id")
-    write_bucketed(orders.select(F.col("o_custkey").alias("user_id"), "o_orderkey"),
-                   "buckdemo.ord_b", "user_id", 8, sort_col="user_id")
-    # force sort-merge (the test tables are small enough to broadcast,
-    # which would hide the bucketing effect we're pinning)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "buckdemo.ev_b", "buckdemo.ord_b", "user_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:1500]
-        assert "Exchange" not in plan, plan[:1500]  # bucket co-location: zero shuffles
-        expected = events.join(orders, events.user_id == orders.o_custkey).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
 
 
 def test_ivf_refine_improves_objective_and_is_deterministic(spark, embeddings):

@@ -173,12 +173,12 @@ def q_time_diff_stats(spark, sf_dir):
     """feature_time_diff (processor.py:1476-1483) + mean/stddev agg
     with −1 sentinels (processor.py:835,841), CARRYING the folded
     slot-pivot family since round 6 (fixed num_updates slot blocks,
-    processor.py:425-428 — the former standalone `slot_pivot` oracle
+    processor.py:425-428 — the former standalone slot-pivot oracle
     row; columns preserved in both engines, slot fold freed for
     `approx_stats`).
 
     Opt round 7: the pivot is FOLDED into the stats groupBy via
-    temporal.slot_pivot_aggs — the former stats-join-slot_pivot shape
+    temporal.slot_pivot_aggs — the former stats-join-slot-pivot shape
     computed both sides from their own scan + exchange + sort +
     window (ReuseExchange can't merge them: different window exprs),
     i.e. the whole lineage twice plus a join. One window now carries
@@ -492,7 +492,7 @@ def q_content_flags(spark, sf_dir):
         F.substring(h, 1, 8), F.substring(h, 9, 4), F.substring(h, 13, 4),
         F.substring(h, 17, 4), F.substring(h, 21, 12),
     )
-    uuid_cols = native.uuid_version_onehot(fake_uuid)
+    uuid_cols = native.uuid_version_onehot_ref(fake_uuid)
     uuid_names = ["uuid_v1", "uuid_v2", "uuid_v3", "uuid_v4", "uuid_v5", "uuid_other"]
     return docs.select(
         "doc_id",
@@ -626,24 +626,13 @@ def q_content_length_stats(spark, sf_dir):
 )
 def q_label_weights(spark, sf_dir):
     """inverse-class-frequency weights n_total/n_class
-    (retrieve_label_weights, processor.py:263-273). The total is
-    derived INSIDE the tiny counts aggregate (collect the ≤#labels
-    rows into one cell, native sum, explode back — same opt-r7 fold
-    as plans/assemble.py): the former counts.agg(sum) + crossJoin
-    re-ran the fact-table scan+aggregate a second time just to add a
-    handful of longs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    counts = emb.groupBy("label").agg(F.count("*").alias("n"))
-    packed = counts.agg(F.collect_list(F.struct("label", "n")).alias("__cs"))
-    return packed.select(
-        F.explode("__cs").alias("__c"),
-        F.aggregate("__cs", F.lit(0).cast("bigint"), lambda a, x: a + x["n"])
-        .alias("__total"),
-    ).select(
-        F.col("__c.label").alias("label"),
-        F.col("__c.n").alias("n"),
-        F.round(F.col("__total").cast("double") / F.col("__c.n"), 6).alias("weight"),
-    )
+    (retrieve_label_weights, processor.py:263-273) through the
+    extraction job's own plans.assemble.class_weights (one scan, the
+    total folded into the tiny counts aggregate)."""
+    from cookieblock_consent_classifier_spark.plans.assemble import class_weights
+
+    w = class_weights(_t(spark, sf_dir, "embeddings"))
+    return w.select("label", "n", F.round("weight", 6).alias("weight"))
 
 
 # =====================================================================
@@ -918,7 +907,7 @@ def _xgb_oracle_sql() -> str:
     by 1 ulp across engines)."""
     from cookieblock_consent_classifier_spark import xgb  # noqa: PLC0415
 
-    forests = xgb.class_forests_full(xgb.fixture_dump(), 4)
+    forests = xgb.class_forests_full(xgb.fixture_dump())
     m = xgb.forest_margin_sql(forests, lambda i: f"p{i}")
     return f"""
     WITH s AS (
@@ -959,26 +948,17 @@ def q_bayes_decision(spark, sf_dir):
     per-class margin (exact double), first-max argmax prediction, and
     6dp-rounded softmax probability — all value-matched against the
     DuckDB CASE-tree twin generated from the same dump."""
-    from cookieblock_consent_classifier_spark import xgb
+    from cookieblock_consent_classifier_spark import predict as P, xgb
 
     emb = _t(spark, sf_dir, "embeddings")
-    loss = [[0.0, 1.0, 2.0, 3.0], [1.0, 0.0, 1.0, 2.0],
-            [2.0, 1.0, 0.0, 1.0], [3.0, 2.0, 1.0, 0.0]]
     p = [F.element_at(F.col("embedding"), i + 1).cast("double") for i in range(4)]
-    d = [sum(p[i] * F.lit(loss[i][j]) for i in range(4)) for j in range(4)]
-    decision = (
-        F.when((d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3]), 0)
-        .when((d[1] <= d[2]) & (d[1] <= d[3]), 1)
-        .when(d[2] <= d[3], 2)
-        .otherwise(3)
-    )
     sparse = emb.select(
         "vec_id",
-        decision.alias("decision"),
+        P.bayesian_decision(F.array(*p)).alias("decision"),  # DEFAULT_LOSS
         F.array(*[F.lit(i) for i in range(4)]).cast("array<int>").alias("indices"),
         F.array(*p).alias("values"),
     )
-    forests = xgb.class_forests_full(xgb.fixture_dump(), 4)
+    forests = xgb.class_forests_full(xgb.fixture_dump())
     # two-phase: extract the forest's features once (unconditional
     # projection → CSE works), trees reference plain attributes
     lookup = xgb.sparse_feat()
@@ -989,7 +969,7 @@ def q_bayes_decision(spark, sf_dir):
     return aug.select(
         "vec_id",
         "decision",
-        xgb.argmax_first(margins).alias("xgb_pred"),
+        search_ops.argmax_class(margins).alias("xgb_pred"),
         margins[0].alias("xgb_m0"),
         F.round(F.element_at(probs, 1), 6).alias("xgb_p0"),
     )
@@ -1759,9 +1739,10 @@ def q_lsh_candidates(spark, sf_dir):
     bands = dedup.lsh_bands(sig, "doc_id", num_hashes=8, band_size=2)
     pairs = dedup.lsh_candidate_pairs(bands, "doc_id")
     # join the candidate pairs against ONE shingle projection per side:
-    # value-identical to ngram_jaccard over the texts, but each doc's
-    # interpreted word_shingles evaluates once per side instead of
-    # once per pair (the DuckDB twin has always used this shape)
+    # value-identical to the Jaccard of word_shingles over the texts,
+    # but each doc's interpreted word_shingles evaluates once per side
+    # instead of once per pair (the DuckDB twin has always used this
+    # shape)
     sh = docs.select("doc_id", dedup.shingle_tokens("text").alias("__tk")).select(
         "doc_id", dedup.word_shingles_from_tokens(F.col("__tk"), 3).alias("s")
     )
@@ -2347,9 +2328,13 @@ def _search_scorer(params: dict) -> list:
     given as ONE SQL array literal per class. The Column-API array(lit,
     ...) marshalled each of the 64 weight literals through its own py4j
     round trip — profiled at 1.0s of the 1.45s grid_search_cv construct
-    (5,871 round trips). Weights are ints, so the D literals are exact."""
+    (5,871 round trips). Weights must be ints, so the D literals are
+    exact and equal the DuckDB twin's; a fractional weight raises
+    rather than being truncated on one side only."""
     out = []
     for c in range(4):
+        if any(x != int(x) for x in _SEARCH_W[c]):
+            raise ValueError(f"class {c} search weights are not integral")
         w = F.expr("array(" + ",".join(f"{int(x)}D" for x in _SEARCH_W[c]) + ")")
         out.append(
             similarity.dot(F.col("embedding"), w) / F.lit(params["temp"])
@@ -2619,14 +2604,15 @@ def _gbdt_oracle_sql() -> str | None:
         return None
     from cookieblock_consent_classifier_spark import xgb
 
-    forests = xgb.class_forests_full(dump, 4)
+    forests = xgb.class_forests_full(dump)
     margins = xgb.forest_margin_sql(
         forests, lambda i: f"CAST(embedding[{i + 1}] AS DOUBLE)"
     )
     m_cols = ",\n         ".join(f"{m} AS m{j}" for j, m in enumerate(margins))
     # first-max MARGIN argmax, not an exp-softmax bayes replay: under
-    # EQUAL_LOSS the two are identical tie-for-tie (xgb.argmax_first
-    # docstring; softmax is strictly monotone), and margins are exact
+    # EQUAL_LOSS the two are identical tie-for-tie (softmax is strictly
+    # monotone; search.argmax_class breaks ties to the lowest class,
+    # like the equal-loss argmin), and margins are exact
     # doubles in BOTH engines (identical literals, left-assoc sums)
     # while exp() may differ by 1 ulp across engines — the proven
     # bayes_decision/xgb_pred pattern.
@@ -2684,7 +2670,7 @@ def q_gbdt_train_score(spark, sf_dir):
     cached = _PLAN_CACHE.get(key)
     if cached is None:
         rows, dump = gbdt_train_rows_and_dump(spark, sf_dir)
-        xgb.validate_full_dump(dump, 4)
+        xgb.validate_full_dump(dump)
         scored = P.predict(rows, score_fn=xgb.dump_score_fn(dump), loss=P.EQUAL_LOSS)
         hist = scored.groupBy("predicted_label").agg(
             F.count("*").alias("n_pred"),

@@ -45,7 +45,7 @@ from cookieblock_consent_classifier_spark.session import get_spark
 # operator families (temporal window, as-of, dedup, similarity, text)
 BENCH_QUERIES = [
     "update_count",  # carries the folded flag_changed columns since r5
-    "time_diff_stats",  # carries the folded slot_pivot columns since r6
+    "time_diff_stats",  # carries the folded slot-pivot columns since r6
     "sessionize",
     "asof_join_orders",
     "backfill",

@@ -6,6 +6,11 @@ Usage (ship path, north rule):
     spark-submit --py-files pkg.zip -m cookieblock_consent_classifier_spark.cli \
         --input <parquet dir or synth:N> --output <dir> [--format libsvm|parquet]
 
+``--mode train`` fits the default ``gbdt.GBDTParams`` (3 rounds of
+depth-3 trees) on all but a deterministic HOLDOUT share of the
+entities; ``--mode predict`` scores with the ``--model-dump`` it is
+given.
+
 Replaces the reference's prepare_training_data.py CLI
 (prepare_training_data.py:60-139): scan → filter → extract → sink →
 feature map, plus checkpoint/resume and per-stage metrics.
@@ -20,11 +25,17 @@ import os
 from pyspark.sql import functions as F
 
 from cookieblock_consent_classifier_spark import sinks
+from cookieblock_consent_classifier_spark.plans.assemble import class_weights
 from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema
 from cookieblock_consent_classifier_spark.runtime.checkpoints import CheckpointedPipeline
 from cookieblock_consent_classifier_spark.session import get_spark
 from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
 from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
+
+# train mode: deterministic md5-hash holdout share for validation
+# accuracy (train_test_split analogue, train_xgb.py:292 — hash-based so
+# resumed runs split identically)
+HOLDOUT = 0.2
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -42,15 +53,6 @@ def main(argv: list[str] | None = None) -> None:
         "reference-format model_dump.json servable by --mode predict "
         "--model-dump",
     )
-    ap.add_argument("--train-rounds", type=int, default=3)
-    ap.add_argument("--train-depth", type=int, default=3)
-    ap.add_argument(
-        "--holdout", type=float, default=0.2,
-        help="train mode: deterministic md5-hash holdout fraction for "
-        "validation accuracy (train_test_split analogue, "
-        "train_xgb.py:292 — hash-based so resumable runs split "
-        "identically); 0 disables",
-    )
     ap.add_argument(
         "--cmp-prefix", default="OptanonConsent",
         help="predict mode: cookie-name prefix for the consent histogram "
@@ -58,17 +60,13 @@ def main(argv: list[str] | None = None) -> None:
     )
     ap.add_argument(
         "--model-dump", default=None,
-        help="predict mode: path to an XGBoost JSON tree dump; scores "
-        "with the dump-compiled native predictor (xgbpredictor_dump.py "
-        "analogue, equal-loss decision == predict_class.py:135) instead "
-        "of the deterministic stub scorer. Either layout: a full dump "
-        "(flat list of tree objects, round-robin classes) or a list of "
-        "per-class minimal-format forests (xgbpredictor_sparsedump.py)",
+        help="predict mode (required there): path to an XGBoost JSON "
+        "tree dump, scored with the dump-compiled native predictor "
+        "(xgbpredictor_dump.py analogue, equal-loss decision == "
+        "predict_class.py:135). Either layout: a full dump (flat list "
+        "of tree objects, round-robin classes) or a list of per-class "
+        "minimal-format forests (xgbpredictor_sparsedump.py)",
     )
-    ap.add_argument("--num-updates", type=int, default=None,
-                    help="override num_updates (default: config value, else 1)")
-    ap.add_argument("--num-diffs", type=int, default=None,
-                    help="override num_diffs (default: config value, else 1)")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument(
         "--features-json", default=None,
@@ -80,6 +78,8 @@ def main(argv: list[str] | None = None) -> None:
         help="base dir for relative resource paths in --features-json",
     )
     args = ap.parse_args(argv)
+    if args.mode == "predict" and not args.model_dump:
+        ap.error("--mode predict requires --model-dump")
 
     spark = get_spark(app_name="cbcs-extract")
     if args.features_json:
@@ -89,14 +89,6 @@ def main(argv: list[str] | None = None) -> None:
     else:
         res = fixture_resources()
         schema = default_schema(res)
-    if args.num_updates is not None or args.num_diffs is not None:
-        import dataclasses
-
-        schema = dataclasses.replace(
-            schema,
-            num_updates=args.num_updates or schema.num_updates,
-            num_diffs=args.num_diffs or schema.num_diffs,
-        )
 
     ckpt_root = os.path.join(args.output, "_checkpoints")
     if args.no_resume and os.path.exists(ckpt_root):
@@ -138,53 +130,24 @@ def main(argv: list[str] | None = None) -> None:
         from cookieblock_consent_classifier_spark import predict as P, xgb
         from cookieblock_consent_classifier_spark.operators import gbdt
 
-        if not 0.0 <= args.holdout < 1.0:
-            raise SystemExit(f"--holdout must be in [0, 1), got {args.holdout}")
         # deterministic hash split (the SAME helper the search/CV
         # dataflow uses — 60-bit md5, uniform buckets): stable across
         # resumed runs
         from cookieblock_consent_classifier_spark.operators.search import hash_fold
 
-        train_df, holdout_df = feat.df, None
-        if args.holdout > 0:
-            bucket = hash_fold(F.col("entity_id").cast("string"), 1000)
-            cut = round(args.holdout * 1000)
-            train_df = feat.df.filter(bucket >= cut)
-            holdout_df = feat.df.filter(bucket < cut)
-            # re-derive inverse-class-frequency weights from the TRAIN
-            # split only (the extract-stage weights were computed over
-            # the full corpus and would fold holdout label counts into
-            # the objective)
-            # total folded into the counts aggregate (opt r7, same as
-            # plans/assemble.py): counts.agg(sum) re-ran the ENTIRE
-            # feature-pipeline lineage a second time just to total
-            # the per-label longs
-            counts = train_df.groupBy("label").agg(F.count("*").alias("__n"))
-            packed = counts.agg(
-                F.collect_list(F.struct("label", "__n")).alias("__cs")
-            )
-            w = packed.select(
-                F.explode("__cs").alias("__c"),
-                F.aggregate(
-                    "__cs", F.lit(0).cast("bigint"), lambda a, x: a + x["__n"]
-                ).alias("__t"),
-            ).select(
-                F.col("__c.label").alias("label"),
-                (F.col("__t") / F.col("__c.__n")).alias("__w"),
-            )
-            train_df = (
-                train_df.drop("weight")
-                .join(F.broadcast(w), "label", "left")
-                .withColumnRenamed("__w", "weight")
-            )
+        bucket = hash_fold(F.col("entity_id").cast("string"), 1000)
+        cut = round(HOLDOUT * 1000)
+        train_df = feat.df.filter(bucket >= cut)
+        holdout_df = feat.df.filter(bucket < cut)
+        # re-derive inverse-class-frequency weights from the TRAIN
+        # split only (the extract-stage weights were computed over the
+        # full corpus and would fold holdout label counts into the
+        # objective)
+        w = class_weights(train_df).select("label", "weight")
+        train_df = train_df.drop("weight").join(F.broadcast(w), "label", "left")
 
-        dump = gbdt.train_gbdt(
-            train_df,
-            gbdt.GBDTParams(
-                num_rounds=args.train_rounds, max_depth=args.train_depth
-            ),
-        )
-        xgb.validate_full_dump(dump, 4)
+        dump = gbdt.train_gbdt(train_df)
+        xgb.validate_full_dump(dump)
         os.makedirs(args.output, exist_ok=True)
         dump_path = os.path.join(args.output, "model_dump.json")
         with open(dump_path, "w", encoding="utf-8") as fd:
@@ -197,8 +160,6 @@ def main(argv: list[str] | None = None) -> None:
         score_fn = xgb.dump_score_fn(dump)  # compile the scorer once
 
         def _acc(df):
-            if df is None:
-                return None
             r = P.predict(df, score_fn=score_fn, loss=P.EQUAL_LOSS).select(
                 F.avg((F.col("predicted_label") == F.col("label")).cast("double")).alias("a")
             ).first()["a"]
@@ -219,28 +180,22 @@ def main(argv: list[str] | None = None) -> None:
         # inference dataflow (predict_class.py:107-161): score ->
         # Bayesian loss-matrix decision -> predictions JSON + the
         # consent-cookie histogram for the CMP name prefix
-        from cookieblock_consent_classifier_spark import predict as P
+        from cookieblock_consent_classifier_spark import predict as P, xgb
 
         # the sparse feature row drops entity attrs; re-attach the
         # cookie name from the scan stage for the histogram filter
         names_df = src.df.select("entity_id", "name").dropDuplicates(["entity_id"])
 
-        score_fn = None
-        loss = None
-        if args.model_dump:
-            from cookieblock_consent_classifier_spark import xgb  # noqa: PLC0415
-
-            with open(args.model_dump) as fd:
-                dump = json.load(fd)
-            # the JSON's shape names the layout: per-class forests
-            # (lists) are the sparse format, tree objects a full dump
-            fmt = "sparse" if dump and isinstance(dump[0], list) else "full"
-            score_fn = xgb.dump_score_fn(dump, fmt=fmt)
-            loss = P.EQUAL_LOSS  # predict_class.py:135
+        with open(args.model_dump) as fd:
+            dump = json.load(fd)
+        # the JSON's shape names the layout: per-class forests (lists)
+        # are the sparse format, tree objects a full dump
+        fmt = "sparse" if dump and isinstance(dump[0], list) else "full"
+        score_fn = xgb.dump_score_fn(dump, fmt=fmt)
 
         def predict_stage(df):
             return (
-                P.predict(df, score_fn=score_fn, loss=loss)
+                P.predict(df, score_fn=score_fn, loss=P.EQUAL_LOSS)  # predict_class.py:135
                 .join(names_df, "entity_id", "left")
                 .select("entity_id", "name", "probs", "predicted_label")
             )

@@ -123,8 +123,8 @@ audio_features_udf = audio_features_udf.asNondeterministic()
 
 def extract_audio_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     """Append the audio feature struct fields to the frame (the
-    multimodal decode→featurize pass; same shape as
-    image.extract_image_features)."""
+    multimodal decode→featurize pass: one decode feeds every
+    feature)."""
     from pyspark.sql import functions as F
 
     out = df.withColumn("__af", audio_features_udf(F.col(bytes_col)))

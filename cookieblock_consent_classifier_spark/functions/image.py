@@ -270,120 +270,6 @@ def decode_psnr(payload: pd.Series, ref_payload: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def resize_pixels(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Deterministic block-mean resize (the stub codec's stand-in for
-    a real resampler; swaps for PIL.Image.resize when available)."""
-    h, w = pixels.shape
-    ys = np.linspace(0, h, out_h + 1).astype(int)
-    xs = np.linspace(0, w, out_w + 1).astype(int)
-    out = np.empty((out_h, out_w), dtype=np.uint8)
-    for i in range(out_h):
-        for j in range(out_w):
-            blk = pixels[ys[i]: max(ys[i + 1], ys[i] + 1), xs[j]: max(xs[j + 1], xs[j] + 1)]
-            out[i, j] = int(blk.mean())
-    return out
-
-
-def resize_udf(out_w: int, out_h: int):
-    """decode → resize → re-encode (lossless container), vectorized
-    over Arrow batches; the standard normalize-resolution step of an
-    image training-data pipeline."""
-
-    @pandas_udf(T.BinaryType())
-    def _udf(payload: pd.Series) -> pd.Series:
-        def one(b):
-            return encode_image(resize_pixels(decode_image(bytes(b)), out_w, out_h), "png")
-
-        return payload.map(one, na_action="ignore")
-
-    return _udf
-
-
-def extract_image_features(df: DataFrame, bytes_col: str = "bytes"):
-    """mapInPandas feature-extraction pass: decode once per image and
-    emit the full per-image feature record (stats + phash) in a single
-    Arrow batch iterator — the pattern for heavy multimodal kernels
-    where one decode feeds many features (vs per-feature UDFs that
-    would re-decode). Schema is explicit (mapInPandas contract).
-    """
-    import pyspark.sql.types as T_
-
-    out_schema = T_.StructType(
-        df.schema.fields
-        + [
-            T_.StructField("px_mean", T_.DoubleType()),
-            T_.StructField("px_std", T_.DoubleType()),
-            T_.StructField("phash_check", T_.LongType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            means, stds, hashes = [], [], []
-            for b in pdf[bytes_col]:
-                if b is None:
-                    means.append(None), stds.append(None), hashes.append(None)
-                    continue
-                px = decode_image(bytes(b)).astype(np.float64)
-                means.append(float(px.mean()))
-                stds.append(float(px.std()))
-                hashes.append(average_phash(decode_image(bytes(b))))
-            pdf = pdf.copy()
-            pdf["px_mean"], pdf["px_std"], pdf["phash_check"] = means, stds, hashes
-            yield pdf
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-_VIDEO_MAGIC = b"SGVC"
-
-
-def encode_video_frames(frames: list[np.ndarray]) -> bytes:
-    """Multi-frame container: magic + frame count + length-prefixed
-    REAL PNG frames. Stands in for a video file at the Spark-plumbing
-    level (binary column → per-frame decode); compressed video codecs
-    are not available in this container."""
-    parts = [_VIDEO_MAGIC, struct.pack("<I", len(frames))]
-    for px in frames:
-        payload = encode_png_gray(px)
-        parts.append(struct.pack("<I", len(payload)))
-        parts.append(payload)
-    return b"".join(parts)
-
-
-def decode_video_frames(payload: bytes) -> list[bytes]:
-    """Split the container back into per-frame PNG payloads. A bare
-    single-image payload (PNG or synthetic) is treated as one frame."""
-    if payload[:4] != _VIDEO_MAGIC:
-        return [bytes(payload)]
-    (n,) = struct.unpack("<I", payload[4:8])
-    pos = 8
-    frames = []
-    for _ in range(n):
-        (ln,) = struct.unpack("<I", payload[pos:pos + 4])
-        frames.append(bytes(payload[pos + 4:pos + 4 + ln]))
-        pos += 4 + ln
-    return frames
-
-
-def frame_sample_udf(every_n: int = 2):
-    """Frame sampling for video-shaped payloads: parse the multi-frame
-    container, keep every ``every_n``-th frame (0, n, 2n, …) as its
-    own single-image payload — the standard video→training-frames
-    step. Output shape: binary → array<binary>; bare single-image
-    payloads pass through as one frame."""
-
-    @pandas_udf(T.ArrayType(T.BinaryType()))
-    def _udf(payload: pd.Series) -> pd.Series:
-        def one(b):
-            frames = decode_video_frames(bytes(b))
-            return frames[::max(1, every_n)]
-
-        return payload.map(one, na_action="ignore")
-
-    return _udf
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Bit-level hamming distance between two int64 hashes — native
     (bit_count(a XOR b)); this is the phash-delta feature."""

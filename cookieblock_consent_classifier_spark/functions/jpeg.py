@@ -199,7 +199,6 @@ def _amplitude_bits(v: int) -> tuple[int, int]:
 
 # -- vectorized entropy encoder ---------------------------------------
 
-_POW2 = 2 ** np.arange(16, dtype=np.int64)
 # bit_length lookup for |v| < 2^15 (largest possible quantized
 # coefficient / DC diff magnitude is ~2x1016): one uint8 gather beats
 # a 16-way binary search per element

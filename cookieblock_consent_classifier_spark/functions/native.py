@@ -125,10 +125,6 @@ PY_WS_CODEPOINTS: tuple[int, ...] = (
     0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
 )
 PY_WS = "".join(map(chr, PY_WS_CODEPOINTS))
-UUID_PAT = (                                                  # processor.py:170
-    r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-([0-9a-fA-F])[0-9a-fA-F]{3}-"
-    r"[0-9a-fA-F]{4}-[0-9a-fA-F]{12}"
-)
 
 
 def boolean_content(col: str | Column) -> Column:
@@ -175,20 +171,6 @@ def hex_content(col: str | Column) -> Column:
     NATIVE_CAPABLE since round 6."""
     c = _c(col)
     return pm(c.rlike(HEX_PAT) & ~c.rlike(NUM_PAT))
-
-
-def uuid_version_onehot(col: str | Column) -> list[Column]:
-    """feature_canonical_uuid (processor.py:1430-1458): 6-wide one-hot
-    over UUID version 1-5 + other; no match → all −1."""
-    c = _c(col)
-    ver = F.regexp_extract(c, UUID_PAT, 1)
-    matched = ver != ""
-    out = []
-    for v in ("1", "2", "3", "4", "5"):
-        out.append(F.when(matched & (ver == v), PLUS()).otherwise(MINUS()))
-    other = matched & ~ver.isin("1", "2", "3", "4", "5")
-    out.append(F.when(other, PLUS()).otherwise(MINUS()))
-    return out
 
 
 # --- reference-exact regex variants (used by the parity plan

@@ -175,12 +175,3 @@ def pii_count(col: str | Column, pattern: str) -> Column:
     """Occurrences of one PII pattern (JVM regexp_count — scan-speed,
     no Python)."""
     return F.regexp_count(_c(col), F.lit(pattern))
-
-
-def pii_scrub(col: str | Column) -> Column:
-    """Redact all PII_RULES occurrences with their typed tokens, in
-    rule order — one chained JVM regexp_replace pass."""
-    c = _c(col)
-    for _, pat, token in PII_RULES:
-        c = F.regexp_replace(c, pat, token)
-    return c

@@ -2,8 +2,7 @@ from cookieblock_consent_classifier_spark.operators.asof import asof_join
 from cookieblock_consent_classifier_spark.operators.temporal import (
     backfill,
     sessionize,
-    slot_pivot,
     with_lag,
 )
 
-__all__ = ["asof_join", "backfill", "sessionize", "slot_pivot", "with_lag"]
+__all__ = ["asof_join", "backfill", "sessionize", "with_lag"]

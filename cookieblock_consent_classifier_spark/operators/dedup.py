@@ -1,12 +1,12 @@
-"""Deduplication operators for web-scale training corpora: exact,
-MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators for web-scale training corpora: MinHash+LSH,
+SimHash, n-gram Jaccard (exact dedup is one md5 groupBy, declared as
+the ``dedup_exact`` query).
 
 All hashing is md5-based (hex) so results are engine-portable and
 deterministic across runs/cluster sizes — a requirement for resumable
 pipelines (and it lets DuckDB serve as the correctness oracle).
 
 Scale design:
-- exact dedup: one hash-shuffle groupBy on a 16-byte key — optimal.
 - minhash: per-doc signature is a narrow projection (explode shingles
   → groupBy doc min(hash_k)); shuffle keyed by doc_id, combiner-side
   partial mins make the shuffle tiny regardless of doc length.
@@ -24,20 +24,6 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from cookieblock_consent_classifier_spark.functions.text import hex_to_long, normalize_text
-
-
-def exact_dup_clusters(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Group rows by exact (normalized) content hash; returns one row
-    per duplicate cluster: key, size, min id (the canonical survivor).
-    """
-    keyed = df.select(
-        F.md5(normalize_text(text_col)).alias("dup_key"), F.col(id_col).alias("id")
-    )
-    return (
-        keyed.groupBy("dup_key")
-        .agg(F.count("*").alias("cluster_size"), F.min("id").alias("keep_id"))
-        .filter(F.col("cluster_size") > 1)
-    )
 
 
 def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
@@ -390,21 +376,13 @@ def connected_components(
 def jaccard_from_shingles(sa: Column, sb: Column) -> Column:
     """Jaccard over two PRE-COMPUTED shingle-array columns. Joining
     candidate pairs against a (doc_id, shingles) projection and
-    applying this is value-identical to ngram_jaccard over the texts
-    but evaluates each doc's shingles once per side instead of once
-    per PAIR (word_shingles is the interpreted-HOF heavy part; a doc
+    applying this is value-identical to the Jaccard of
+    ``word_shingles`` over the two texts, but evaluates each doc's
+    shingles once per side instead of once per PAIR (word_shingles is the interpreted-HOF heavy part; a doc
     in k candidate pairs paid it k times)."""
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = F.size(F.array_union(sa, sb)).cast("double")
     return F.when(union > 0, F.round(inter / union, 6)).otherwise(F.lit(None))
-
-
-def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact word-n-gram Jaccard similarity between two text columns —
-    the verification predicate applied to LSH candidate pairs. In hot
-    paths prefer joining a shingle projection + jaccard_from_shingles
-    (see its docstring)."""
-    return jaccard_from_shingles(word_shingles(text_a, n), word_shingles(text_b, n))
 
 
 SIMHASH_BITS = 48  # < 2^53: power-of-two double division stays exact

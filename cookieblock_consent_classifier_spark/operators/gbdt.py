@@ -34,17 +34,17 @@ connected-components pattern). Driver memory holds histograms only:
 O(nodes · features · bins). Rounds x classes x depth jobs total —
 the standard distributed-GBDT shape.
 
-Determinism (repo discipline, SURVEY §5): training is RUN-DETERMINISTIC
-for bin_method="width". Every row-local value (softmax margins,
+Determinism (repo discipline, SURVEY §5): training is
+RUN-DETERMINISTIC. Every row-local value (softmax margins,
 gradients) is a fixed expression of the input row; the only
 order-sensitive step — the distributed g/h sums — is made canonical by
 aggregating in DECIMAL(38,18) (exact, commutative; double sums vary in
 the last ulps with partition order) and converting to float once on
 the driver. Split selection then ties off on (gain rounded to 1e-9,
 lowest fidx, lowest bin), so two runs over the same input emit
-byte-identical dumps (tests/test_gbdt.py pins this).
-bin_method="quantile" uses percentile_approx, whose sketch-merge order
-is runtime-dependent — usable, but not byte-pinned.
+byte-identical dumps (tests/test_gbdt.py pins this). Bin edges are
+equal-width over each feature's [min, max] for the same reason: an
+approximate-quantile sketch merges in runtime-dependent order.
 """
 
 from __future__ import annotations
@@ -54,36 +54,27 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from cookieblock_consent_classifier_spark import xgb
+from cookieblock_consent_classifier_spark.schema import NUM_CLASSES
+
+LEARNING_RATE = 0.3
+REG_LAMBDA = 1.0
+MIN_CHILD_HESS = 1e-3
+MIN_GAIN = 1e-9
 
 
 @dataclass
 class GBDTParams:
-    num_classes: int = 4
     num_rounds: int = 3
     max_depth: int = 3
-    learning_rate: float = 0.3
-    reg_lambda: float = 1.0
     n_bins: int = 16
-    min_child_hess: float = 1e-3
-    min_gain: float = 1e-9
-    # "width" = equal-width over [min, max]; "quantile" = one
-    # percentile_approx aggregation per feature — heavy-tailed
-    # features get usable candidate thresholds instead of one hot bin
-    bin_method: str = "width"
 
 
-def _feature_bins(
-    df: DataFrame, n_bins: int, method: str = "width"
-) -> dict[int, list[float]]:
+def _feature_bins(df: DataFrame, n_bins: int) -> dict[int, list[float]]:
     """Candidate split edges per feature over its PRESENT values (one
     distributed pass; sparse zero/absent is the dedicated missing
-    mass, not a bin). Returns fidx → ascending [edge_1 ..] — bin(v) =
-    count(edges <= v), split condition = the first right-side edge.
-
-    method="width": equal-width over [min, max]. method="quantile":
-    percentile_approx edges (deduped) — robust to heavy tails."""
-    if method not in ("width", "quantile"):
-        raise ValueError(f"unknown bin_method {method!r}")
+    mass, not a bin): equal-width over [min, max]. Returns fidx →
+    ascending [edge_1 ..] — bin(v) = count(edges <= v), split
+    condition = the first right-side edge."""
     # explicit 0.0 entries are missing mass everywhere else (histogram
     # filter + scorer routing) — they must not shape bin edges either
     ex = (
@@ -92,15 +83,6 @@ def _feature_bins(
         .filter(F.col("v") != 0.0)
     )
     edges: dict[int, list[float]] = {}
-    if method == "quantile":
-        qs = [k / n_bins for k in range(1, n_bins)]
-        stats = ex.groupBy("fidx").agg(
-            F.percentile_approx("v", qs, 10_000).alias("qs")
-        ).collect()
-        for r in stats:
-            uniq = sorted({float(q) for q in r["qs"] if q is not None})
-            edges[int(r["fidx"])] = uniq or [0.0]
-        return edges
     stats = ex.groupBy("fidx").agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
     ).collect()
@@ -120,11 +102,11 @@ def train_gbdt(
 ) -> list[dict]:
     """(indices array<int>, values array<double>, label int) rows →
     reference-format model dump (flat tree list, tree i → class
-    i % num_classes). Feed to xgb.dump_score_fn / cli --model-dump."""
+    i % NUM_CLASSES). Feed to xgb.dump_score_fn / cli --model-dump."""
     import numpy as np  # noqa: PLC0415
 
     p = params or GBDTParams()
-    k = p.num_classes
+    k = NUM_CLASSES
 
     # optional per-row sample weight (the inverse-class-frequency
     # column assemble_sparse attaches): weighted objective g*=w, h*=w,
@@ -137,7 +119,7 @@ def train_gbdt(
         F.array(*[F.lit(0.0) for _ in range(k)]).alias("margins"),
     ).localCheckpoint(eager=True)
 
-    edges = _feature_bins(rows, p.n_bins, p.bin_method)
+    edges = _feature_bins(rows, p.n_bins)
     feats = sorted(edges)
     # hoist: the feature→edges map literal is large (features × bins
     # Column nodes); build it ONCE, not per round × class × level
@@ -209,7 +191,7 @@ def train_gbdt(
                     .collect()
                 }
                 level_splits = _best_splits(
-                    frontier, feats, edges, hist, totals, p, np
+                    frontier, feats, edges, hist, totals, np
                 )
                 if not level_splits:
                     break
@@ -238,7 +220,7 @@ def train_gbdt(
                 .collect()
             }
             leaves = {
-                n: -p.learning_rate * sg / (sh + p.reg_lambda)
+                n: -LEARNING_RATE * sg / (sh + REG_LAMBDA)
                 for n, (sg, sh) in totals.items()
                 if n not in splits
             }
@@ -289,7 +271,7 @@ def _bin_from_edges_expr(edges: dict[int, list[float]]):
     )
 
 
-def _best_splits(frontier, feats, edges, hist, totals, p, np):
+def _best_splits(frontier, feats, edges, hist, totals, np):
     """Argmax-gain split per frontier node from the collected
     histograms; missing mass (node total − present sums) rides LEFT
     (the scorer's missing→yes semantics).
@@ -303,10 +285,10 @@ def _best_splits(frontier, feats, edges, hist, totals, p, np):
         if n not in totals:
             continue
         gt, ht = totals[n]
-        if ht < 2 * p.min_child_hess:
+        if ht < 2 * MIN_CHILD_HESS:
             continue
-        base = gt * gt / (ht + p.reg_lambda)
-        best = (p.min_gain, None, None)
+        base = gt * gt / (ht + REG_LAMBDA)
+        best = (MIN_GAIN, None, None)
         for fidx in feats:  # ascending fidx: first strict improvement wins
             es = edges[fidx]
             nb = len(es) + 1
@@ -322,12 +304,12 @@ def _best_splits(frontier, feats, edges, hist, totals, p, np):
             gl = g_missing + np.cumsum(sg)[:-1]
             hl = h_missing + np.cumsum(sh)[:-1]
             gr, hr = gt - gl, ht - hl
-            ok = (hl >= p.min_child_hess) & (hr >= p.min_child_hess)
+            ok = (hl >= MIN_CHILD_HESS) & (hr >= MIN_CHILD_HESS)
             if not ok.any():
                 continue
             gain = np.where(
                 ok,
-                gl * gl / (hl + p.reg_lambda) + gr * gr / (hr + p.reg_lambda) - base,
+                gl * gl / (hl + REG_LAMBDA) + gr * gr / (hr + REG_LAMBDA) - base,
                 -np.inf,
             )
             gain = np.round(gain, 9)  # tolerance: equal-to-1e-9 is a tie

@@ -2,10 +2,10 @@
 
 The reference trains XGBoost under sklearn GridSearchCV /
 RandomizedSearchCV (classifiers/train_xgb.py:460-476: param grids,
-n_jobs, CV splits, accuracy selection). The trainer itself is out of
-engine scope (no GBDT lib in the container; predict.py documents the
-pluggable-scorer contract) — what belongs to the ENGINE is the search
-dataflow, and that is what this module provides, Spark-first:
+n_jobs, CV splits, accuracy selection). The search takes any
+``scorer(params) -> per-class score Columns``; what belongs to the
+ENGINE is the search dataflow, and that is what this module provides,
+Spark-first:
 
 - ONE pass over the data evaluates EVERY parameter combination: each
   combo contributes row-local per-class score expressions; predictions
@@ -38,7 +38,13 @@ def hash_fold(id_col: str | Column, num_folds: int) -> Column:
 
 def argmax_class(scores: list[Column]) -> Column:
     """Index of the max score; ties break to the LOWEST class index
-    (struct array_max over (score, -idx))."""
+    (struct array_max over (score, -idx)) — exactly
+    ``list.index(max(...))`` (xgbpredictor_sparsedump.py:89) and the
+    equal-loss bayesian argmin (utils.py:107-125). The engine's one
+    first-max argmax: the search dataflow and the ``bayes_decision``
+    query's margin decision both use it. Spark orders NaN above every
+    number, so a NaN score wins; tree margins are finite sums of leaf
+    literals and never NaN."""
     arr = F.array(*[
         F.struct(s.cast("double").alias("s"), F.lit(-i).alias("nc"))
         for i, s in enumerate(scores)

@@ -109,45 +109,22 @@ def sessionize(
     )
 
 
-def slot_pivot(
-    df: DataFrame,
-    entity_col: str,
-    order_cols: Sequence[str],
-    value_cols: Sequence[str],
-    num_slots: int,
-) -> DataFrame:
-    """First-N-updates pivot: rank updates per entity, keep slots
-    0..num_slots-1, emit fixed columns ``slot{i}_{col}``.
+def slot_pivot_aggs(
+    value_cols: Sequence[str], num_slots: int, slot_col: str = "__slot"
+) -> list[Column]:
+    """First-N-updates pivot as aggregate columns ``slot{i}_{col}``
+    over a ``slot_col`` row_number (0-based) of the entity window, for
+    use inside the caller's groupBy(entity).
 
     Mirrors the reference's fixed ``num_updates`` column blocks where
     entities with fewer updates leave zero-filled (absent) slots
     (processor.py:425-428,448-451): missing slots here are NULL and the
-    sparse assembler drops NULLs, reproducing absent-not-false.
-
-    Implementation: row_number ≤ N filter, then groupBy(entity) with
-    conditional firsts — a single shuffle, no Spark `pivot()` second
-    pass (pivot would scan twice to infer keys; slots are static).
-    """
-    w = entity_window(entity_col, list(order_cols))
-    ranked = df.withColumn("__slot", F.row_number().over(w) - F.lit(1)).filter(
-        F.col("__slot") < num_slots
-    )
-    return ranked.groupBy(entity_col).agg(
-        *slot_pivot_aggs(value_cols, num_slots)
-    )
-
-
-def slot_pivot_aggs(
-    value_cols: Sequence[str], num_slots: int, slot_col: str = "__slot"
-) -> list[Column]:
-    """The conditional-first aggregate columns of ``slot_pivot`` —
-    exposed so a caller that already groupBys on the entity over the
-    same ordered window can FOLD the pivot into its aggregation
-    (opt guide §2.4): a standalone slot_pivot next to another
-    aggregate of the same frame costs a second scan + exchange +
-    window + an agg-agg join; the folded form computes identical
-    values from the one pass (the ``when(slot == i)`` conditions
-    subsume the rank filter)."""
+    sparse assembler drops NULLs, reproducing absent-not-false. Slots
+    at or past ``num_slots`` match no ``when(slot == i)``, so no rank
+    filter is needed, and a caller that already aggregates the entity
+    over the same ordered window folds the pivot into that one pass
+    (opt guide §2.4) instead of a second scan + exchange + window +
+    join; no Spark ``pivot()`` second pass either (slots are static)."""
     return [
         F.max(F.when(F.col(slot_col) == i, F.col(c))).alias(f"slot{i}_{c}")
         for i in range(num_slots)

@@ -1,7 +1,6 @@
 from cookieblock_consent_classifier_spark.plans.compiler import (
-    DEFAULT_SCHEMA,
     compile_features,
     default_schema,
 )
 
-__all__ = ["DEFAULT_SCHEMA", "compile_features", "default_schema"]
+__all__ = ["compile_features", "default_schema"]

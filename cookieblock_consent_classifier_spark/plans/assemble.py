@@ -14,30 +14,55 @@ no Python, no shuffle beyond the compiler's single groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from cookieblock_consent_classifier_spark.plans.compiler import Block
+
+
+def class_weights(df: DataFrame) -> DataFrame:
+    """(label, n, weight): rows per label of ``df`` and the inverse
+    class frequency n_total/n_class (retrieve_label_weights,
+    processor.py:263-273).
+
+    A global Window would funnel every row through one partition;
+    instead aggregate the tiny per-label counts, and derive the total
+    INSIDE that same aggregate: collect the <=#labels count rows into
+    one row, sum natively, explode back. A separate
+    ``counts.agg(F.sum(...))`` re-executes the entire upstream lineage
+    a second time just to add a handful of longs (opt guide §2.4: the
+    plan drops 2 Exchanges)."""
+    counts = df.groupBy("label").agg(F.count("*").alias("__n"))
+    packed = counts.agg(F.collect_list(F.struct("label", "__n")).alias("__cs"))
+    return packed.select(
+        F.explode("__cs").alias("__c"),
+        F.aggregate(
+            "__cs", F.lit(0).cast("bigint"), lambda a, x: a + x["__n"]
+        ).alias("__total"),
+    ).select(
+        F.col("__c.label").alias("label"),
+        F.col("__c.__n").alias("n"),
+        (F.col("__total") / F.col("__c.__n")).alias("weight"),
+    )
 
 
 def assemble_sparse(
     wide: DataFrame,
     blocks: list[Block],
-    entity_col: str = "entity_id",
-    label_col: str | None = "label",
+    counts_src: DataFrame,
     with_weights: bool = True,
-    counts_src: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (entity_id, indices array<int>, values array<double>,
-    label, weight).
+    label[, weight]).
 
-    ``counts_src``: optional frame with EXACTLY one row per output row
-    carrying ``label_col`` — used as the (cheaper) source for the
-    class-frequency counts instead of the assembled output itself.
-    compile_features passes its pre-join per-entity aggregate: the
-    broadcast rank joins are 1:1 (rank_df dedupes its keys), so the
-    label multiset is identical, while the counts branch of the plan
-    drops the rank joins and the name/domain aggregates (opt guide
-    §2.3 — shuffle/aggregate only the bytes the decision needs)."""
+    ``counts_src``: a frame with EXACTLY one row per output row
+    carrying ``label`` — the (cheaper) source for the class-frequency
+    counts instead of the assembled output itself. compile_features
+    passes its pre-join per-entity aggregate: the broadcast rank joins
+    are 1:1 (rank_df dedupes its keys), so the label multiset is
+    identical (tests/test_pipeline.py pins it with duplicate resource
+    keys), while the counts branch of the plan drops the rank joins
+    and the name/domain aggregates (opt guide §2.3 — shuffle/aggregate
+    only the bytes the decision needs)."""
     pieces = []
     base = 0
     for b in blocks:
@@ -63,54 +88,16 @@ def assemble_sparse(
     coo = F.filter(F.flatten(F.array(*pieces)), lambda e: e["v"].isNotNull())
     coo = F.array_sort(coo)  # structs sort by first field → ascending index
     out = wide.withColumn("__coo", coo).select(
-        entity_col,
+        "entity_id",
         F.transform("__coo", lambda e: e["i"]).alias("indices"),
         F.transform("__coo", lambda e: e["v"]).alias("values"),
-        *( [F.col(label_col).cast("int").alias("label")] if label_col else [] ),
+        F.col("label").cast("int").alias("label"),
     )
-    if label_col and with_weights:
-        # inverse class frequency n_total/n_class (processor.py:263-273).
-        # A global Window would funnel every row through one partition;
-        # instead aggregate the tiny per-label counts and broadcast-join
-        # them back (scales to any row count).
-        src = (
-            counts_src.select(F.col(label_col).cast("int").alias("label"))
-            if counts_src is not None
-            else out.select("label")
-        )
-        counts = src.groupBy("label").agg(F.count("*").alias("__n"))
-        # The global total is derived INSIDE the same tiny aggregate:
-        # collect the <=#labels count rows into one row, sum natively,
-        # explode back. The former `counts.agg(F.sum(...))` re-executed
-        # the entire upstream lineage a second time — a THIRD full
-        # aggregation pass (scan → entity aggregate → exchange) in the
-        # physical plan just to add <=5 numbers (opt guide §2.4:
-        # remove shuffles outright; the plan drops 2 Exchanges).
-        packed = counts.agg(F.collect_list(F.struct("label", "__n")).alias("__cs"))
-        weights = packed.select(
-            F.explode("__cs").alias("__c"),
-            F.aggregate(
-                "__cs", F.lit(0).cast("bigint"), lambda a, x: a + x["__n"]
-            ).alias("__total"),
-        ).select(
-            F.col("__c.label").alias("label"),
-            (F.col("__total") / F.col("__c.__n")).alias("weight"),
+    if with_weights:
+        weights = class_weights(
+            counts_src.select(F.col("label").cast("int").alias("label"))
         )
         out = out.join(F.broadcast(weights), "label", "left").select(
-            entity_col, "indices", "values", "label", "weight"
+            "entity_id", "indices", "values", "label", "weight"
         )
     return out
-
-
-def feature_usage_stats(assembled: DataFrame, feature_names: list[str]) -> DataFrame:
-    """Per-feature nonzero counts over the assembled sparse rows
-    (feature_matrix_statistics.py:38-70): explode(indices) → groupBy →
-    count, named by the feature map, sorted descending."""
-    idx = assembled.select(F.explode("indices").alias("fidx"))
-    names = F.array(*[F.lit(n) for n in feature_names])
-    return (
-        idx.groupBy("fidx")
-        .agg(F.count("*").alias("nonzero_count"))
-        .withColumn("feature", F.element_at(names, (F.col("fidx") + 1).cast("int")))
-        .orderBy(F.desc("nonzero_count"), F.asc("fidx"))
-    )

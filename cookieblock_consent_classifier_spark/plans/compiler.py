@@ -30,7 +30,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from cookieblock_consent_classifier_spark.functions import native, vectorized as V
-from cookieblock_consent_classifier_spark.schema import FeatureSchema, FeatureSpec
+from cookieblock_consent_classifier_spark.schema import NUM_CLASSES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df
 
 
@@ -117,9 +117,6 @@ def default_schema(res: Resources, num_updates: int = 1, num_diffs: int = 1) -> 
         num_updates=num_updates, num_diffs=num_diffs,
         per_entity=tuple(pe), per_update=tuple(pu), per_diff=tuple(pd_),
     )
-
-
-DEFAULT_SCHEMA = None  # set lazily by callers with their Resources
 
 
 # ---------------------------------------------------------------------------
@@ -369,7 +366,6 @@ def compile_features(
     df: DataFrame,
     schema: FeatureSchema,
     res: Resources,
-    entity_col: str = "entity_id",
     training: bool = True,
     with_weights: bool = True,
     gestalt_max_updates: int = 10_000,
@@ -397,9 +393,9 @@ def compile_features(
     names = schema.feature_names()
 
     if training:
-        df = df.filter(F.col("label").between(0, 3))
+        df = df.filter(F.col("label").between(0, NUM_CLASSES - 1))
 
-    w = Window.partitionBy(entity_col).orderBy("ts", "update_idx")
+    w = Window.partitionBy("entity_id").orderBy("ts", "update_idx")
     enabled_pe = {s.name for s in schema.per_entity if s.enabled}
     need_gestalt = "gestalt_total" in enabled_pe or any(
         s.enabled and s.name == "gestalt_similarity" for s in schema.per_diff
@@ -655,7 +651,7 @@ def compile_features(
             ).alias("__vals")
         )
 
-    ent = proj.groupBy(entity_col).agg(*aggs)
+    ent = proj.groupBy("entity_id").agg(*aggs)
     if post_agg_pivots:
         # unpack the packed slot structs back into the named pivot
         # columns (row-wise, codegen'd; NULL struct → NULL fields)
@@ -762,8 +758,5 @@ def compile_features(
 
     from cookieblock_consent_classifier_spark.plans.assemble import assemble_sparse
 
-    wide = assemble_sparse(
-        ent, blocks, entity_col=entity_col, label_col="label",
-        with_weights=with_weights, counts_src=ent_pre_join,
-    )
+    wide = assemble_sparse(ent, blocks, ent_pre_join, with_weights=with_weights)
     return wide, names

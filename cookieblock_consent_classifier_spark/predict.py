@@ -3,13 +3,11 @@
   extract (no label filter, no sampling) → score → bayesian decision
   → predictions sink + consent-cookie histogram.
 
-The reference scores with a trained GBDT booster; boosters are not
-part of the engine (and not installed here), so scoring is a
-pluggable column: ``score_fn(assembled) -> array<double>`` of
-per-class probabilities. The default stub is a deterministic sparse
-linear model (hashed weights) that keeps the whole dataflow real and
-testable; swap in a real model via mapInPandas without touching the
-surrounding plan.
+The reference scores with a trained GBDT booster. Here the scorer is
+always a tree model: ``score_fn(assembled) -> array<double>`` of
+per-class probabilities, compiled from an XGBoost JSON dump by
+``xgb.dump_score_fn`` (the dump the engine's own trainer,
+operators/gbdt.py, writes, or one exported by the reference).
 """
 
 from __future__ import annotations
@@ -38,26 +36,6 @@ EQUAL_LOSS = [
 ]
 
 
-def stub_scores(num_classes: int = 4) -> Column:
-    """Deterministic per-class scores from the sparse feature row:
-    class c score = sigmoid of a hashed-weight dot product. Stands in
-    for booster.predict; same shape, fully distributed."""
-    def cls_score(c: int) -> Column:
-        dot = F.aggregate(
-            F.zip_with(
-                "indices", "values",
-                lambda i, v: F.sin((i.cast("double") + F.lit(c * 97)) * 0.73) * v,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-dot / F.lit(100.0)))
-
-    raw = F.array(*[cls_score(c) for c in range(num_classes)])
-    total = F.aggregate(raw, F.lit(0.0), lambda a, x: a + x)
-    return F.transform(raw, lambda x: x / total)
-
-
 def bayesian_decision(probs: Column, loss: list[list[float]] | None = None) -> Column:
     """argmin_j Σ_i probs[i]·L[i][j] (classifiers/utils.py:85-125);
     ties break to the lowest class index."""
@@ -82,7 +60,7 @@ def bayesian_decision(probs: Column, loss: list[list[float]] | None = None) -> C
 
 def predict(
     assembled: DataFrame,
-    score_fn: Callable[[DataFrame], Column | tuple[DataFrame, Column]] | None = None,
+    score_fn: Callable[[DataFrame], Column | tuple[DataFrame, Column]],
     loss: list[list[float]] | None = None,
 ) -> DataFrame:
     """(entity_id, indices, values, ...) → (entity_id, probs,
@@ -93,7 +71,7 @@ def predict(
     in an unconditional projection first (the xgb expression path does
     — CASE-branch subexpressions get no elimination); ``__xf_``
     scratch columns are dropped from the output."""
-    res = score_fn(assembled) if score_fn else stub_scores()
+    res = score_fn(assembled)
     if isinstance(res, tuple):
         assembled, probs = res
     else:

@@ -44,46 +44,10 @@ COOKIE_UPDATE_SCHEMA = T.StructType(
     ]
 )
 
-# North-rule target shape (BASELINE.json input_hint): image+caption
-# entity-update table. `bytes` is an opaque binary payload; decode /
-# phash-delta / caption-diff run as Arrow-vectorized pandas UDFs.
-IMAGE_UPDATE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("bytes", T.BinaryType(), True),
-        T.StructField("w", T.IntegerType(), True),
-        T.StructField("h", T.IntegerType(), True),
-        T.StructField("fmt", T.StringType(), True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("phash", T.LongType(), True),
-    ]
-)
-
-# As-of dimension: label state becomes known at effective_ts; the as-of
-# join must never attach a label with effective_ts > fact.ts (zero
-# temporal leakage). In the reference the label is static per cookie
-# (processor.py:473) — the generalization adds the time axis.
-LABEL_DIM_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("effective_ts", T.TimestampType(), False),
-        T.StructField("label", T.IntegerType(), False),
-    ]
-)
-
-# Sparse feature-row output: the Spark analogue of the reference's COO
-# -> CSR matrix (processor.py:127-134, 301-304). One row per entity,
-# (indices, values) arrays + label + weight sidecars as columns.
-FEATURE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("indices", T.ArrayType(T.IntegerType(), False), False),
-        T.StructField("values", T.ArrayType(T.DoubleType(), False), False),
-        T.StructField("label", T.IntegerType(), True),
-        T.StructField("weight", T.DoubleType(), True),
-    ]
-)
+# Label contract: the reference's four cookie classes 0..3
+# (processor.py:473-478). Training extraction drops labels outside that
+# range; every scorer emits one probability per class.
+NUM_CLASSES = 4
 
 
 @dataclass(frozen=True)

@@ -7,25 +7,22 @@
   0-based ascending indices (dump_libsvm, processor.py:343-356) —
   built as a formatted string column, written via the text sink;
   fully distributed, no driver materialization.
-- debug JSON: dense {feature_name: value} per row — the golden-output
-  mechanism (retrieve_debug_output, processor.py:358-373); test-only.
 - feature map: one line per column `<idx>\t<name>\tq` for XGBoost
   (dump_feature_map, processor.py:382-391); driver-side metadata.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
-def libsvm_lines(df: DataFrame, with_weight_comment: bool = False) -> DataFrame:
+def libsvm_lines(df: DataFrame) -> DataFrame:
     """Format (indices, values, label[, weight]) as LibSVM text lines.
     Indices are already ascending (assemble.py sorts)."""
     pairs = F.zip_with(
@@ -36,27 +33,8 @@ def libsvm_lines(df: DataFrame, with_weight_comment: bool = False) -> DataFrame:
     return df.select(line.alias("value"))
 
 
-def write_libsvm(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    libsvm_lines(df).write.mode(mode).text(path)
-
-
-def debug_rows(df: DataFrame, feature_names: list[str], limit: int = 100) -> list[dict]:
-    """Dense {name: value} dicts (test/debug only — collects!)."""
-    out = []
-    for r in df.limit(limit).collect():
-        out.append(
-            {
-                "entity_id": r["entity_id"],
-                "features": {feature_names[i]: v for i, v in zip(r["indices"], r["values"])},
-            }
-        )
-    return out
-
-
-def write_debug_json(df: DataFrame, feature_names: list[str], path: str, limit: int = 100) -> None:
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w", encoding="utf-8") as fd:
-        json.dump(debug_rows(df, feature_names, limit), fd, indent=1, sort_keys=True)
+def write_libsvm(df: DataFrame, path: str) -> None:
+    libsvm_lines(df).write.mode("overwrite").text(path)
 
 
 def write_feature_map(feature_names: list[str], path: str) -> None:

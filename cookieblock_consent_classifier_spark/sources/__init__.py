@@ -1,5 +1,4 @@
 from cookieblock_consent_classifier_spark.sources.readers import (
-    load_tables,
     read_entity_updates,
     union_latest_wins,
 )
@@ -9,7 +8,6 @@ from cookieblock_consent_classifier_spark.sources.synth import (
 )
 
 __all__ = [
-    "load_tables",
     "read_entity_updates",
     "union_latest_wins",
     "synth_image_updates",

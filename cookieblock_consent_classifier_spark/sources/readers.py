@@ -27,12 +27,6 @@ TESTDATA_TABLES = (
 )
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Sequence[str] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
-
-
 # ---------------------------------------------------------------------------
 # events → cookie-update adapter (engine-portable derivations)
 # ---------------------------------------------------------------------------

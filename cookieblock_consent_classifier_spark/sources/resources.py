@@ -87,43 +87,41 @@ def load_vendor_txt(path: str) -> frozenset[str]:
         return frozenset(py_uniform_domain(line.strip()) for line in fd)
 
 
-def rank_df(spark: SparkSession, keys: list[str], key_col: str, rank_col: str = "rank") -> DataFrame:
-    """Rank table as a DataFrame for broadcast hash joins (rank =
+def rank_df(spark: SparkSession, keys: list[str], key_col: str) -> DataFrame:
+    """(``key_col``, rank) table for broadcast hash joins (rank =
     position, 0-based). Mirrors the reference's dict construction
     (utils.py:43-54): a duplicate key keeps its LAST rank — critical
     for join correctness too, since a duplicate key in the build side
     would fan out the probe rows."""
     last_wins = {k: i for i, k in enumerate(keys)}
     return spark.createDataFrame(
-        [(k, i) for k, i in last_wins.items()], [key_col, rank_col]
+        [(k, i) for k, i in last_wins.items()], [key_col, "rank"]
     )
 
 
-def fixture_resources(
-    n_names: int = 20, n_domains: int = 20, n_patterns: int = 10,
-    n_tokens: int = 15, n_terms: int = 10,
-) -> Resources:
+def fixture_resources() -> Resources:
     """Deterministic synthetic resource bundle shaped like the
-    reference's resources/ directory contents (same cardinality knobs,
-    smaller defaults)."""
-    top_names = [f"track_cookie_{i}" for i in range(n_names - 4)] + [
+    reference's resources/ directory contents (smaller lists: 20 top
+    names and domains, 10 name patterns, 15 name tokens, 10 content
+    terms)."""
+    top_names = [f"track_cookie_{i}" for i in range(16)] + [
         "session-id", "consent-pref", "ga_visitor", "ab_bucket",
     ]
-    top_domains = [f"cdn{i}.example-ads.com" for i in range(n_domains - 3)] + [
+    top_domains = [f"cdn{i}.example-ads.com" for i in range(17)] + [
         "analytics.example.org", "example-cmp.net", "social-widgets.io",
     ]
     name_patterns = [
         r"^ga_", r"^_?utm", r"^sess(ion)?[-_]", r"^consent", r"^ab[-_]test",
         r"^track_cookie_[0-9]+$", r"^cf[a-z]+$", r"^id_[0-9a-f]+", r"^pref", r"^opt(in|out)",
-    ][:n_patterns]
+    ]
     name_tokens = [
         "id", "sess", "track", "consent", "pref", "visitor", "bucket",
         "ga", "utm", "ab", "opt", "cf", "uid", "token", "cart",
-    ][:n_tokens]
+    ]
     content_terms = [
         "consent", "true", "false", "preferences", "analytics",
         "advertising", "necessary", "functional", "userid", "timestamp",
-    ][:n_terms]
+    ]
     iab_vendors = frozenset(
         {"example-ads.com", "analytics.example.org", "bigsspvendor.com"}
     )

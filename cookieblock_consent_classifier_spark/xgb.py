@@ -11,7 +11,7 @@ fallback for ensembles too deep to compile as expressions:
   Semantics over DENSE feature arrays: value == 0.0 counts as
   missing and takes the yes (left) path; value < condition → left;
   else right. Trees are assigned round-robin to classes
-  (tree i → class i % num_classes, xgbpredictor_dump.py:117-135),
+  (tree i → class i % NUM_CLASSES, xgbpredictor_dump.py:117-135),
   class margin = Σ leaf weights, probabilities = softmax
   (xgbpredictor_dump.py:148-153), decision = bayesian argmin with
   equal loss weights == first-max argmax (utils.py:107-125).
@@ -41,6 +41,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from cookieblock_consent_classifier_spark.schema import NUM_CLASSES
+
 FeatCol = Callable[[int], Column]
 FeatSql = Callable[[int], str]
 
@@ -51,13 +53,13 @@ _FOREST_CACHE: dict[str, list] = {}
 # -- dump parsing / validation ----------------------------------------
 
 
-def validate_full_dump(model_dump: list[dict], num_classes: int) -> None:
+def validate_full_dump(model_dump: list[dict]) -> None:
     """Enforce the reference's four dump invariants
     (xgbpredictor_dump.py:47-53, 120-127): trees divisible by classes,
     every non-leaf binary, yes-path left (yes < no), missing == yes."""
-    if len(model_dump) % num_classes != 0:
+    if len(model_dump) % NUM_CLASSES != 0:
         raise ValueError(
-            f"{len(model_dump)} trees not divisible by {num_classes} classes"
+            f"{len(model_dump)} trees not divisible by {NUM_CLASSES} classes"
         )
     def walk(node: dict) -> None:
         if "leaf" in node:
@@ -82,11 +84,11 @@ def count_nodes(node: dict) -> int:
     return 1 + sum(count_nodes(k) for k in kids)
 
 
-def class_forests_full(model_dump: list[dict], num_classes: int) -> list[list[dict]]:
+def class_forests_full(model_dump: list[dict]) -> list[list[dict]]:
     """Round-robin tree→class assignment (xgbpredictor_dump.py:131-134)."""
-    forests: list[list[dict]] = [[] for _ in range(num_classes)]
+    forests: list[list[dict]] = [[] for _ in range(NUM_CLASSES)]
     for i, tree in enumerate(model_dump):
-        forests[i % num_classes].append(tree)
+        forests[i % NUM_CLASSES].append(tree)
     return forests
 
 
@@ -149,37 +151,6 @@ def softmax_cols(margins: list[Column]) -> Column:
     return F.array(*[e / total for e in exps])
 
 
-def argmax_first(margins: list[Column]) -> Column:
-    """First-max argmax via >= chains — exactly list.index(max(...))
-    (xgbpredictor_sparsedump.py:89) and np.argmin over equal-loss
-    bayesian distances (utils.py:107-125): ties go to the LOWEST
-    class index. Applied to margins: exp is strictly monotone, so the
-    softmax argmax equals the margin argmax, tie-for-tie."""
-    n = len(margins)
-    decision = None
-    for j in range(n - 1, -1, -1):
-        if decision is None:
-            decision = F.lit(j)
-        else:
-            cond = None
-            for k in range(j + 1, n):
-                c = margins[j] >= margins[k]
-                cond = c if cond is None else (cond & c)
-            decision = F.when(cond, F.lit(j)).otherwise(decision)
-    return decision.cast("int")
-
-
-def argmax_probs(probs: Column, num_classes: int = 4) -> Column:
-    """First-max argmax over the probability ARRAY — exactly
-    ``probs.index(max(probs))`` (xgbpredictor_sparsedump.py:89). NB
-    not interchangeable with the equal-loss bayesian decision in
-    float arithmetic: on an exact probability tie the bayesian sums
-    accumulate in different orders per class and can break the tie
-    differently; the sparse-dump reference semantics is argmax."""
-    ps = [F.element_at(probs, i + 1) for i in range(num_classes)]
-    return argmax_first(ps)
-
-
 def sparse_feat(indices_col: str = "indices", values_col: str = "values") -> FeatCol:
     """Sparse-row lookup over the engine's (indices array<int>,
     values array<double>) columns: one map_from_arrays, then NULL-safe
@@ -199,8 +170,7 @@ def _score_batch(
     xgbpredictor_sparsedump.py:78-90), iterative to dodge Python
     recursion limits on deep trees."""
     n = len(idx_arrays)
-    num_classes = len(class_forests)
-    out = np.zeros((n, num_classes), dtype=np.float64)
+    out = np.zeros((n, len(class_forests)), dtype=np.float64)
     for r in range(n):
         # NaN is KEPT: the reference's dense walk and the compiled
         # expression path both send NaN RIGHT (NaN==0.0 false,
@@ -267,7 +237,7 @@ def probs_kernel_udf(class_forests: list[list[dict]], fmt: str = "full"):
     return F.pandas_udf(_fn, "array<double>")
 
 
-# -- the pluggable scorer (predict.py contract) -----------------------
+# -- the scorer (predict.py contract) --------------------------------
 
 # Above this many total dump nodes the Arrow kernel wins decisively:
 # measured at 100k rows/local[8] (BENCH/BASELINE.md §Round 4), the
@@ -298,7 +268,6 @@ def forest_features(class_forests: list[list[dict]], fmt: str = "full") -> list[
 
 def dump_score_fn(
     model_dump: list[dict] | list[list[dict]],
-    num_classes: int = 4,
     fmt: str = "full",
     max_expr_nodes: int = DEFAULT_MAX_EXPR_NODES,
 ) -> Callable[[DataFrame], Column | tuple[DataFrame, Column]]:
@@ -319,12 +288,12 @@ def dump_score_fn(
     so each of the N tree nodes would rebuild map_from_arrays per row
     (measured 7x at ~500 nodes, BENCH/BASELINE.md §Round 4)."""
     if fmt == "full":
-        validate_full_dump(model_dump, num_classes)
-        forests = class_forests_full(model_dump, num_classes)
+        validate_full_dump(model_dump)
+        forests = class_forests_full(model_dump)
     else:
         forests = list(model_dump)
-        if len(forests) != num_classes:
-            raise ValueError(f"expected {num_classes} per-class forests, got {len(forests)}")
+        if len(forests) != NUM_CLASSES:
+            raise ValueError(f"expected {NUM_CLASSES} per-class forests, got {len(forests)}")
     total_nodes = sum(count_nodes(t) for f in forests for t in f)
     feats_used = forest_features(forests, fmt)
 
@@ -418,9 +387,7 @@ def fixture_dump() -> list[dict]:
 # -- format conversion: full dump → minimal sparse dump ---------------
 
 
-def to_sparse_format(
-    model_dump: list[dict], num_classes: int = 4
-) -> list[list[dict]]:
+def to_sparse_format(model_dump: list[dict]) -> list[list[dict]]:
     """Full JSON dump → per-class forests in the reference's MINIMAL
     sparse format (xgbpredictor_sparsedump.py:64: node {"f","c","u",
     "l","r"}, leaf {"v"}) — the artifact the reference exports for its
@@ -434,7 +401,7 @@ def to_sparse_format(
     c <= 0. The engine's assembled rows never store explicit zeros
     (sparse zero = absent, plans/assemble.py), so scoring is
     equivalent on engine data — pinned in tests/test_xgb.py."""
-    validate_full_dump(model_dump, num_classes)
+    validate_full_dump(model_dump)
 
     def conv(node: dict) -> dict:
         if "leaf" in node:
@@ -448,5 +415,5 @@ def to_sparse_format(
             "r": conv(right),
         }
 
-    forests = class_forests_full(model_dump, num_classes)
+    forests = class_forests_full(model_dump)
     return [[conv(t) for t in f] for f in forests]

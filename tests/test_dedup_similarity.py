@@ -8,14 +8,20 @@ from pyspark.sql import functions as F
 from cookieblock_consent_classifier_spark.operators import dedup, similarity
 
 
-def test_exact_dup_clusters_normalized(spark):
+def test_exact_dup_clusters_normalized(spark, tmp_path):
+    """The dedup_exact query clusters on the md5 of the normalized
+    text; a cluster's survivor is its lowest doc_id."""
+    import __spark_entry__ as entrymod
+
     rows = [
         (1, "Hello,  World!"),
         (2, "hello world"),          # same after normalization
         (3, "entirely different"),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = dedup.exact_dup_clusters(df, "text", "doc_id").collect()
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = entrymod.q_dedup_exact(spark, str(tmp_path)).filter("cluster_size > 1").collect()
     assert len(out) == 1
     assert out[0]["cluster_size"] == 2 and out[0]["keep_id"] == 1
 
@@ -70,7 +76,8 @@ def test_lsh_pairs_no_self_pairs_on_duplicate_ids(spark):
 
 def test_ngram_jaccard(spark):
     df = spark.createDataFrame([("a b c d", "a b c d"), ("a b c d", "x y z w")], ["x", "y"])
-    got = [r["j"] for r in df.select(dedup.ngram_jaccard(F.col("x"), F.col("y"), 2).alias("j")).collect()]
+    j = dedup.jaccard_from_shingles(dedup.word_shingles("x", 2), dedup.word_shingles("y", 2))
+    got = [r["j"] for r in df.select(j.alias("j")).collect()]
     assert got[0] == 1.0 and got[1] == 0.0
 
 

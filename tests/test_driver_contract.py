@@ -35,3 +35,16 @@ def test_every_oracle_has_a_query_and_order_is_stable():
     assert all(n in oracles for n in names[:n_oracle])
     # calling twice yields the same order (dict determinism)
     assert names == list(entrymod.queries())
+
+
+def test_search_scorer_rejects_non_integral_weights(monkeypatch):
+    """The search weights reach Spark as ``<int>D`` literals and DuckDB
+    as the same integers; a fractional weight must raise instead of
+    being truncated on the Spark side only."""
+    import pytest
+
+    w = [list(row) for row in entrymod._SEARCH_W]
+    w[0][5] = 1.5
+    monkeypatch.setattr(entrymod, "_SEARCH_W", w)
+    with pytest.raises(ValueError, match="not integral"):
+        entrymod._search_scorer({"temp": 1.0, "shift": 0.0})

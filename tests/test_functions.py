@@ -155,14 +155,42 @@ def test_one_hot_unknown_all_minus(spark):
     assert [rows[1][f"c{i}"] for i in range(3)] == [-1.0, -1.0, -1.0]
 
 
-def test_uuid_onehot(vals):
-    cols = native.uuid_version_onehot("v")
-    rows = vals.select(
+def test_uuid_onehot(spark, vals):
+    """feature_canonical_uuid one-hot (the compiler's and the
+    content_flags query's uuid_version_onehot_ref): case-insensitive
+    hex, version digit 1-5 or "other" (a letter version, either case),
+    no match -> all -1; cross-checked against Python ``re``."""
+    import re
+
+    want = {
+        "f81d4fae-7dec-41d0-a765-00a0c91e6bf6": 3,  # v4
+        "F81D4FAE-7DEC-11D0-A765-00A0C91E6BF6": 0,  # uppercase hex, v1
+        "x 6BA7B810-9dad-51d1-80B4-00c04fd430c8 y": 4,  # mixed case, v5
+        "f81d4fae-7dec-a1d0-a765-00a0c91e6bf6": 5,  # letter version
+        "F81D4FAE-7DEC-B1D0-A765-00A0C91E6BF6": 5,  # uppercase letter version
+        "f81d4fae-7dec-01d0-a765-00a0c91e6bf6": 5,  # digit outside 1-5
+        "g81d4fa-7dec-41d0-a765-00a0c91e6bf6": None,  # 7-hex first group
+        "hello world": None,
+    }
+    df = spark.createDataFrame([(v,) for v in want], ["v"]).unionByName(vals.select("v"))
+    cols = native.uuid_version_onehot_ref("v")
+    rows = df.select(
         F.col("v"), *[c.alias(f"u{i}") for i, c in enumerate(cols)]
     ).collect()
     by = {r["v"]: [r[f"u{i}"] for i in range(6)] for r in rows}
-    assert by["f81d4fae-7dec-41d0-a765-00a0c91e6bf6"] == [-1.0, -1.0, -1.0, 1.0, -1.0, -1.0]
-    assert by["hello world"] == [-1.0] * 6
+    ref = re.compile(
+        r"[0-9a-f]{8}-[0-9a-f]{4}-([0-9a-f])[0-9a-f]{3}-[0-9a-f]{4}-[0-9a-f]{12}",
+        re.IGNORECASE,
+    )
+    for v, got in by.items():
+        m = ref.search(v) if v is not None else None
+        slot = None if m is None else "12345".find(m.group(1).lower())
+        expect = [-1.0] * 6
+        if m is not None:
+            expect[slot if slot >= 0 else 5] = 1.0
+        assert got == expect, v
+        if v in want:
+            assert (None if m is None else expect.index(1.0)) == want[v], v
 
 
 def test_regex_detectors(vals):
@@ -235,8 +263,9 @@ def test_csv_sniffer_parity(spark):
 
 
 def test_pii_scrub_and_counts(spark):
-    """PII rules (functions/text.py): counts + chained typed-token
-    redaction, both polarities, exact expected strings (the
+    """PII rules (functions/text.py): Spark counts per rule, and the
+    chained typed-token redaction the text_quality query builds from
+    the same rules, both polarities, exact expected strings (the
     text_quality oracle hashes the scrubbed string so this pins the
     same bytes DuckDB must produce)."""
     import re
@@ -266,13 +295,11 @@ def test_pii_scrub_and_counts(spark):
                 TX.pii_count("t", pat).alias(f"n_{name}")
                 for name, pat, _ in TX.PII_RULES
             ],
-            TX.pii_scrub("t").alias("scrubbed"),
         ).collect()
     }
     for i, (t, n_em, n_ip, n_id, want) in enumerate(cases):
         r = out[i]
         assert (r["n_email"], r["n_ipv4"], r["n_id"]) == (n_em, n_ip, n_id), t
-        assert r["scrubbed"] == want, t
         # cross-check vs Python re (Java-regex semantics twin)
         s = t
         for _, pat, token in TX.PII_RULES:

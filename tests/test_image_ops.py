@@ -1,52 +1,10 @@
-"""Multimodal plumbing: resize, mapInPandas feature extraction,
-frame sampling."""
+"""Image codec plumbing: format dispatch and the real PNG codec."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from cookieblock_consent_classifier_spark.functions import image as I
-from cookieblock_consent_classifier_spark.sources.synth import synth_image_updates
-
-
-@pytest.fixture(scope="module")
-def images(spark):
-    return synth_image_updates(spark, num_entities=6, updates_per_entity=2,
-                               hot_entities=0).cache()
-
-
-def test_resize_shape_and_determinism(spark, images):
-    out = images.select("image_id", "ts", I.resize_udf(8, 8)("bytes").alias("small"))
-    rows = out.collect()
-    for r in rows:
-        px = I.decode_image(bytes(r["small"]))
-        assert px.shape == (8, 8)
-    rows2 = out.collect()
-    assert [bytes(r["small"]) for r in rows] == [bytes(r["small"]) for r in rows2]
-
-
-def test_resize_preserves_mean_approximately():
-    px = I.synth_pixels("img_t", 0, 32, 32)
-    small = I.resize_pixels(px, 8, 8)
-    assert abs(float(px.mean()) - float(small.mean())) < 4.0
-
-
-def test_map_in_pandas_feature_extraction(spark, images):
-    out = I.extract_image_features(images)
-    rows = out.collect()
-    assert {"px_mean", "px_std", "phash_check"} <= set(out.columns)
-    for r in rows:
-        assert r["phash_check"] == r["phash"]  # single decode == stored
-        assert 0.0 <= r["px_mean"] <= 255.0
-
-
-def test_frame_sample_shape(spark, images):
-    out = images.select(I.frame_sample_udf(2)("bytes").alias("frames"))
-    r = out.first()
-    assert len(r["frames"]) == 1
-    assert I.decode_image(bytes(r["frames"][0])) is not None
 
 
 def test_unknown_format_raises():
@@ -133,29 +91,3 @@ def test_png_crc_corruption_detected():
     payload[40] ^= 0xFF  # flip a byte inside IDAT
     with _pt.raises(ValueError, match="CRC"):
         I.decode_image(bytes(payload))
-
-
-def test_video_container_frame_sampling(spark):
-    """Multi-frame container round-trip + every-n sampling through the
-    Arrow UDF; sampled frames decode to the original pixels."""
-    import numpy as np
-    from cookieblock_consent_classifier_spark.functions import image as I
-
-    frames = [I.synth_pixels("vid0", i, 12, 8) for i in range(7)]
-    payload = I.encode_video_frames(frames)
-    parts = I.decode_video_frames(payload)
-    assert len(parts) == 7
-    for px, raw in zip(frames, parts):
-        assert np.array_equal(I.decode_image(raw), px)
-
-    df = spark.createDataFrame([("vid0", bytearray(payload))], ["video_id", "bytes"])
-    out = df.select(I.frame_sample_udf(every_n=3)("bytes").alias("fr")).first()
-    sampled = out["fr"]
-    assert len(sampled) == 3  # frames 0, 3, 6
-    for k, raw in zip((0, 3, 6), sampled):
-        assert np.array_equal(I.decode_image(bytes(raw)), frames[k])
-    # bare single image passes through as one frame
-    single = I.encode_image(frames[0], "png")
-    df2 = spark.createDataFrame([("i0", bytearray(single))], ["video_id", "bytes"])
-    out2 = df2.select(I.frame_sample_udf(every_n=2)("bytes").alias("fr")).first()
-    assert len(out2["fr"]) == 1

@@ -352,3 +352,50 @@ def test_single_entity_shuffle(spark):
     plan = wide._jdf.queryExecution().executedPlan().toString()
     n_hash_exchanges = plan.count("Exchange hashpartitioning(entity_id")
     assert n_hash_exchanges == 1, plan[:2000]
+
+
+def test_weight_counts_source_matches_output_under_duplicate_rank_keys(spark, monkeypatch):
+    """The class weights count labels over compile_features' pre-join
+    aggregate (assemble_sparse's ``counts_src``), not over the
+    assembled output. That is right only while every broadcast rank
+    join stays 1:1, which rank_df guarantees by keeping the LAST rank
+    of a duplicate key. Resources with duplicate top_names and
+    top_domains keys would otherwise fan the joined rows out."""
+    import dataclasses
+
+    from cookieblock_consent_classifier_spark.plans import assemble
+    from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
+
+    seen = []
+    real = assemble.assemble_sparse
+
+    def spy(wide, blocks, counts_src, with_weights=True):
+        seen.append(counts_src)
+        return real(wide, blocks, counts_src, with_weights)
+
+    monkeypatch.setattr(assemble, "assemble_sparse", spy)
+    # synth names are cookie_<ent % 37>, domains cdn<ent % 11>.example-ads.com
+    res = dataclasses.replace(
+        RES,
+        top_names=[*RES.top_names, "cookie_5", "cookie_5"],
+        top_domains=[*RES.top_domains, "cdn3.example-ads.com", "cdn3.example-ads.com"],
+    )
+    df = synth_cookie_updates(spark, num_entities=60, updates_per_entity=2)
+    wide, _ = compile_features(df, default_schema(res), res)
+    rows = wide.collect()
+
+    def label_counts(d):
+        return sorted(tuple(r) for r in d.groupBy("label").count().collect())
+
+    assert label_counts(seen[0]) == label_counts(wide)
+    assert len(rows) == len({r["entity_id"] for r in rows})
+    by_label = Counter(r["label"] for r in rows)
+    for r in rows:
+        assert r["weight"] == pytest.approx(len(rows) / by_label[r["label"]])
+    # the duplicate keys fired, at their last rank only
+    names = {r["entity_id"]: r["name"] for r in df.select("entity_id", "name").collect()}
+    last_name = len(res.top_names) - 1
+    hits = [r for r in rows if names[r["entity_id"]] == "cookie_5"]
+    assert hits and all(
+        last_name in r["indices"] and last_name - 1 not in r["indices"] for r in hits
+    )

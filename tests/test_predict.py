@@ -1,13 +1,12 @@
-"""Inference dataflow: scoring stub, bayesian decision, predictions
-sink, histogram, feature-usage stats, libsvm reader."""
+"""Inference dataflow: dump-compiled scorer, bayesian decision,
+predictions sink, histogram, libsvm reader, predict-mode CLI."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cookieblock_consent_classifier_spark import predict as P, sinks
-from cookieblock_consent_classifier_spark.plans.assemble import feature_usage_stats
+from cookieblock_consent_classifier_spark import predict as P, sinks, xgb
 from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema
 from cookieblock_consent_classifier_spark.sources.readers import read_libsvm
 from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
@@ -22,6 +21,11 @@ def assembled(spark):
     return wide.cache(), names, df
 
 
+def _predict(wide):
+    """The fixture tree dump through the production scorer."""
+    return P.predict(wide, score_fn=xgb.dump_score_fn(xgb.fixture_dump()))
+
+
 def test_predict_no_filter_keeps_all_entities(assembled):
     wide, _, df = assembled
     assert wide.count() == df.select("entity_id").distinct().count()
@@ -29,7 +33,7 @@ def test_predict_no_filter_keeps_all_entities(assembled):
 
 def test_probs_sum_to_one_and_decision_in_range(assembled):
     wide, _, _ = assembled
-    pred = P.predict(wide)
+    pred = _predict(wide)
     rows = pred.select("probs", "predicted_label").collect()
     for r in rows:
         assert sum(r["probs"]) == pytest.approx(1.0)
@@ -49,7 +53,7 @@ def test_bayesian_decision_known_cases(spark):
 
 def test_predictions_json_roundtrip(spark, assembled, tmp_path):
     wide, _, df = assembled
-    pred = P.predict(wide)
+    pred = _predict(wide)
     P.write_predictions_json(pred, str(tmp_path / "preds"))
     back = spark.read.json(str(tmp_path / "preds"))
     assert back.count() == wide.count()
@@ -58,22 +62,11 @@ def test_predictions_json_roundtrip(spark, assembled, tmp_path):
 
 def test_consent_histogram(spark, assembled):
     wide, _, df = assembled
-    pred = P.predict(wide)
+    pred = _predict(wide)
     hist = P.consent_histogram(pred, df, "cookie_1")
     n_matching = df.filter(F.col("name").startswith("cookie_1")) \
         .select("entity_id").distinct().count()
     assert hist.agg(F.sum("n")).first()[0] == n_matching
-
-
-def test_feature_usage_stats(assembled):
-    wide, names, _ = assembled
-    stats = feature_usage_stats(wide, names)
-    rows = stats.collect()
-    assert all(r["nonzero_count"] >= 1 for r in rows)
-    assert all(r["feature"] in names for r in rows)
-    # update_count fires for every entity
-    by = {r["feature"]: r["nonzero_count"] for r in rows}
-    assert by["update_count-0"] == wide.count()
 
 
 def test_libsvm_reader_roundtrip(spark, assembled, tmp_path):
@@ -86,23 +79,38 @@ def test_libsvm_reader_roundtrip(spark, assembled, tmp_path):
     assert r["features"].size == len(names)
 
 
+def test_cli_predict_requires_model_dump(tmp_path):
+    """The scorer is always a model: predict mode without --model-dump
+    is a usage error, not a silent stand-in scorer."""
+    from cookieblock_consent_classifier_spark.cli import main as cli_main
+
+    with pytest.raises(SystemExit) as exc:
+        cli_main([
+            "--input", "synth:10", "--output", str(tmp_path / "out"),
+            "--mode", "predict",
+        ])
+    assert exc.value.code == 2  # argparse usage error
+
+
 def test_cli_predict_mode(spark, tmp_path):
     """predict_class.py-analogue CLI: synth input -> no-filter extract
     -> score -> decision -> predictions JSON + consent histogram."""
+    import contextlib
+    import io
     import json as J
     import os
 
     from cookieblock_consent_classifier_spark.cli import main as cli_main
 
+    dump_path = str(tmp_path / "model_dump.json")
+    with open(dump_path, "w", encoding="utf-8") as fd:
+        J.dump(xgb.fixture_dump(), fd)
     out = str(tmp_path / "pred_out")
-    import contextlib
-    import io
-
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         cli_main([
             "--input", "synth:100", "--output", out, "--mode", "predict",
-            "--cmp-prefix", "cookie_",
+            "--cmp-prefix", "cookie_", "--model-dump", dump_path,
         ])
     res = J.loads(buf.getvalue().strip().splitlines()[-1])
     assert {s["stage"] for s in res["stages"]} == {"scan", "extract", "predict"}
@@ -126,15 +134,14 @@ def test_cli_predict_mode(spark, tmp_path):
 def test_cli_predict_mode_with_model_dump(spark, tmp_path, layout):
     """--model-dump scores with the dump-compiled native predictor
     (xgbpredictor_dump.py analogue) and the equal-loss decision
-    (predict_class.py:135) instead of the stub scorer. The dump's
-    layout is read from the JSON's shape: the minimal sparse export
-    (per-class forests) must give the same labels as the full dump."""
+    (predict_class.py:135). The dump's layout is read from the JSON's
+    shape: the minimal sparse export (per-class forests) must give the
+    same labels as the full dump."""
     import contextlib
     import io
     import json as J
     import os
 
-    from cookieblock_consent_classifier_spark import xgb
     from cookieblock_consent_classifier_spark.cli import main as cli_main
 
     dump = xgb.fixture_dump()

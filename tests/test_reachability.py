@@ -1,0 +1,130 @@
+"""Every top-level engine definition is reached from a production root.
+
+An ``ast`` walk, no imports: the roots are ``cli.py``,
+``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``. A
+definition (function, class or assigned name at module level of
+``cookieblock_consent_classifier_spark/``) is reached when its name is
+referenced from a root, or from the body of a definition that is
+reached. Names are matched without their module (``x.foo`` and ``foo``
+both reach every ``foo``), so the walk can only over-approximate what
+production uses; what it still reports is code only tests call.
+
+A definition that production does not reach but that must stay is
+listed in ``KEEP`` with the reason.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "cookieblock_consent_classifier_spark"
+
+KEEP = {
+    # the PSNR >= 40 dB lossy-codec invariant the image tests pin
+    "functions/image.py:psnr": "test reference for the image codec's PSNR invariant",
+    "functions/image.py:decode_psnr": "test reference for the image codec's PSNR invariant",
+    # the per-symbol JPEG entropy coder the vectorized one must equal
+    "functions/jpeg.py:_encode_entropy_loop": "bit-exact reference for the vectorized coder",
+    "functions/jpeg.py:_encode_entropy": "single-image form compared with the reference",
+    "functions/jpeg.py:_BitWriter": "bit writer of the reference coder",
+    "functions/jpeg.py:_amplitude_bits": "amplitude coding of the reference coder",
+    "functions/jpeg.py:_category": "size category of the reference coder",
+    # the pure-Python twin in tests/test_pipeline.py builds on these
+    "functions/vectorized.py:_py_split_delimited": "pure-Python pipeline twin",
+    "functions/vectorized.py:_py_csv_content_flags": "pure-Python pipeline twin",
+    "functions/vectorized.py:_py_js_content": "pure-Python pipeline twin",
+    "operators/dedup.py:simhash48_native": "native twin the simhash kernel is checked against",
+    "operators/dedup.py:word_shingles": "shingle builder the Jaccard tests compose with",
+    "operators/similarity.py:lsh_near_dup_pairs": "LSH scale path for corpora too large for all-pairs",
+    "sources/readers.py:read_entity_updates": "Iceberg branch of the entity-update scan",
+    "sources/readers.py:read_libsvm": "reads back the libsvm sink",
+    "sources/readers.py:cookie_json_to_rows": "reference-JSON input adapter",
+    "sources/synth.py:synth_label_dim": "as-of label dimension generator",
+    "schema.py:COOKIE_UPDATE_SCHEMA": "the input contract perfbench/workloads.py writes",
+}
+
+
+def _refs(nodes) -> set[str]:
+    """Identifiers, attribute names and imported names (``import x as
+    y`` uses both) anywhere under ``nodes``."""
+    out: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.split(".")[-1])
+                if n.asname:
+                    out.add(n.asname)
+    return out
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = stmt.targets if isinstance(stmt, ast.Assign) else (
+        [stmt.target] if isinstance(stmt, ast.AnnAssign) else []
+    )
+    return [t.id for t in targets if isinstance(t, ast.Name)]
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fd:
+        return ast.parse(fd.read(), path)
+
+
+def unreached() -> list[str]:
+    defs: dict[str, list] = {}  # "rel/path.py:name" -> [stmt]
+    by_name: dict[str, list[str]] = {}
+    module_code: list = []  # engine statements that run at import
+    for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, os.path.join(ROOT, PKG))
+        if os.path.basename(path) == "__init__.py":
+            continue  # re-exports only
+        for stmt in _parse(path).body:
+            names = [n for n in _defined_names(stmt) if not n.startswith("__")]
+            if names:
+                for n in names:
+                    key = f"{rel}:{n}"
+                    defs.setdefault(key, []).append(stmt)
+                    by_name.setdefault(n, []).append(key)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                module_code.append(stmt)
+    roots = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, PKG, "cli.py")]
+    roots += glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
+    roots += glob.glob(os.path.join(ROOT, "scripts", "*.py"))
+    root_trees = [_parse(p) for p in roots]
+
+    reached: set[str] = set()
+    todo = list(_refs(root_trees) | _refs(module_code))
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for key in by_name.get(name, []):
+            if key not in reached:
+                reached.add(key)
+                todo.extend(_refs(defs[key]))
+    return sorted(k for k in defs if k not in reached and k not in KEEP)
+
+
+def test_every_engine_definition_is_reached_or_kept():
+    assert unreached() == []
+
+
+def test_keep_list_names_existing_definitions():
+    """A KEEP entry whose definition is gone is stale."""
+    gone = []
+    for key in KEEP:
+        rel, name = key.split(":")
+        tree = _parse(os.path.join(ROOT, PKG, rel))
+        if not any(name in _defined_names(s) for s in tree.body):
+            gone.append(key)
+    assert gone == []

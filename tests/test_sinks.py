@@ -1,4 +1,4 @@
-"""Sink round-trips: parquet, LibSVM text, debug JSON, feature map."""
+"""Sink round-trips: parquet, LibSVM text, feature map."""
 
 from __future__ import annotations
 
@@ -52,13 +52,7 @@ def test_libsvm_format(spark, assembled):
 
 def test_debug_json_and_feature_map(assembled, tmp_path: Path):
     wide, names = assembled
-    sinks.write_debug_json(wide, names, str(tmp_path / "debug.json"), limit=5)
     sinks.write_feature_map(names, str(tmp_path / "fmap.txt"))
-    import json
-
-    dbg = json.loads((tmp_path / "debug.json").read_text())
-    assert len(dbg) == 5
-    assert all(set(d["features"]) <= set(names) for d in dbg)
     fmap = (tmp_path / "fmap.txt").read_text().splitlines()
     assert len(fmap) == len(names)
     # reference format (dump_feature_map, processor.py:382-391):

@@ -61,7 +61,13 @@ def test_slot_pivot_zero_fill_missing_slots(spark):
     rows = [("one", _ts(0), "x"), ("two", _ts(0), "p"), ("two", _ts(1), "q"),
             ("two", _ts(2), "r"), ("two", _ts(3), "s")]
     df = spark.createDataFrame(rows, ["entity", "ts", "v"])
-    out = {r["entity"]: r for r in temporal.slot_pivot(df, "entity", ["ts"], ["v"], 3).collect()}
+    # the shape time_diff_stats folds into its entity aggregate: a
+    # row_number slot over the entity window, then conditional firsts
+    ranked = df.withColumn(
+        "__slot", F.row_number().over(temporal.entity_window("entity", ["ts"])) - F.lit(1)
+    )
+    pivot = ranked.groupBy("entity").agg(*temporal.slot_pivot_aggs(["v"], 3))
+    out = {r["entity"]: r for r in pivot.collect()}
     assert out["one"]["slot0_v"] == "x" and out["one"]["slot1_v"] is None
     # truncation: 4th update of "two" never appears
     assert (out["two"]["slot0_v"], out["two"]["slot1_v"], out["two"]["slot2_v"]) == ("p", "q", "r")

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 import ref_shims
 from cookieblock_consent_classifier_spark import predict as P, xgb
+from cookieblock_consent_classifier_spark.operators.search import argmax_class
+from cookieblock_consent_classifier_spark.schema import NUM_CLASSES
 
 N_FEATURES = 10  # rows probe indices 0..9; fixture trees use 0..3
 
@@ -97,7 +99,8 @@ def _engine_scored(sparse_df, score_fn, decision: str = "bayes"):
     against its own reference semantics."""
     scored = P.predict(sparse_df, score_fn=score_fn, loss=P.EQUAL_LOSS)
     if decision == "argmax":
-        scored = scored.withColumn("predicted_label", xgb.argmax_probs(F.col("probs")))
+        first_max = argmax_class([F.element_at("probs", i + 1) for i in range(NUM_CLASSES)])
+        scored = scored.withColumn("predicted_label", first_max)
     out = (
         scored.select("entity_id", "probs", "predicted_label")
         .orderBy("entity_id")
@@ -200,19 +203,19 @@ def _spark_one_row(spark, idx, vals):
 def test_validate_rejects_bad_dumps():
     good = xgb.fixture_dump()
     with pytest.raises(ValueError, match="divisible"):
-        xgb.validate_full_dump(good[:3], 4)
+        xgb.validate_full_dump(good[:3])
     bad_yes = {
         "nodeid": 0, "split": 0, "split_condition": 0.0, "yes": 2, "no": 1,
         "missing": 2, "children": [{"nodeid": 2, "leaf": 1.0}, {"nodeid": 1, "leaf": 2.0}],
     }
     with pytest.raises(ValueError, match="yes path"):
-        xgb.validate_full_dump([bad_yes], 1)
+        xgb.validate_full_dump([bad_yes, *good[1:4]])
     bad_missing = {
         "nodeid": 0, "split": 0, "split_condition": 0.0, "yes": 1, "no": 2,
         "missing": 2, "children": [{"nodeid": 1, "leaf": 1.0}, {"nodeid": 2, "leaf": 2.0}],
     }
     with pytest.raises(ValueError, match="missing path"):
-        xgb.validate_full_dump([bad_missing], 1)
+        xgb.validate_full_dump([*good[:3], bad_missing])
 
 
 # -- SQL twin (the oracle-gate construction) --------------------------
@@ -222,7 +225,7 @@ def test_margin_sql_matches_spark_exactly(spark, sparse_df, rows):
     """forest_margin_sql's DuckDB text and the Spark expression build
     the same left-associated float sums over the same literals —
     bit-exact margins, no rounding tolerance."""
-    forests = xgb.class_forests_full(xgb.fixture_dump(), 4)
+    forests = xgb.class_forests_full(xgb.fixture_dump())
     margins = xgb.forest_margins(forests, xgb.sparse_feat())
     got = (
         sparse_df.select(

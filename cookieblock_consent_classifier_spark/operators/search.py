@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from cookieblock_consent_classifier_spark.sources.resources import local_table
+
 
 def hash_fold(id_col: str | Column, num_folds: int) -> Column:
     """Deterministic fold id in [0, num_folds): md5 of the row id →
@@ -116,8 +118,8 @@ def grid_search(
     )
     # attach the param values (tiny broadcast dim)
     keys = sorted(param_grid)
-    spark = df.sparkSession
-    pdf = spark.createDataFrame(
+    pdf = local_table(
+        df.sparkSession,
         [(i, *[float(c[k]) for k in keys]) for i, c in enumerate(combos)],
         ["param_id", *keys],
     )

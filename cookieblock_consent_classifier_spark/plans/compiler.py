@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from cookieblock_consent_classifier_spark.functions import native, vectorized as V
 from cookieblock_consent_classifier_spark.schema import NUM_CLASSES, FeatureSchema, FeatureSpec
-from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df
+from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df, sql_literal
 
 
 @dataclass
@@ -336,30 +336,12 @@ def _sql_in_set(col_name: str, values) -> Column:
     marshals every literal through its own py4j round-trip (the 568
     IAB vendors cost ~0.2s of driver time per compile); a single
     F.expr parse yields the identical Catalyst In/InSet (hash-set
-    probe at runtime), so execution is unchanged.
-
-    Backslash escaping is only correct while the default parser mode
-    holds (spark.sql.parser.escapedStringLiterals=false); if a caller's
-    session flipped the legacy conf, string literals parse differently,
-    so fall back to the (slower, parse-mode-independent) Column.isin
-    path rather than silently mis-matching members."""
+    probe at runtime), so execution is unchanged. Members are
+    ``sql_literal`` hex strings, so the text means the same under
+    either parser string-literal mode."""
     if not values:
         return F.lit(False)
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        legacy = spark is not None and (
-            spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") == "true"
-        )
-    except Exception:
-        legacy = False
-    if legacy:
-        return F.col(col_name).isin(*values)
-    q = ",".join(
-        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
-    )
-    return F.expr(f"`{col_name}` IN ({q})")
+    return F.expr(f"`{col_name}` IN ({', '.join(map(sql_literal, values))})")
 
 
 def compile_features(

@@ -4,8 +4,9 @@ The reference loads pre-sorted CSV/TXT resources into dicts and
 compiled-pattern lists at setup (load_lookup_from_csv utils.py:33-56;
 setup_* processor.py:594-682). Our analogue:
 
-- rank tables (top names / top domains) → small DataFrames, consumed
-  via broadcast hash join;
+- rank tables (top names / top domains) → small JVM-local tables
+  (``local_table``: one VALUES parse, no Python RDD), consumed via
+  broadcast hash join;
 - regex lists (name patterns, name tokens, content terms) → Python
   lists captured in vectorized pandas UDF closures;
 - vendor domains → broadcast left-semi join (or set closure).
@@ -21,6 +22,7 @@ real crawl-derived files through the same loaders.
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass
 
@@ -87,16 +89,45 @@ def load_vendor_txt(path: str) -> frozenset[str]:
         return frozenset(py_uniform_domain(line.strip()) for line in fd)
 
 
+def sql_literal(v: str | int | float) -> str:
+    """One Python value as Spark SQL literal text. Strings travel as
+    hex UTF-8 bytes cast back to STRING, so no quote, backslash or
+    non-ASCII character needs escaping and the text parses the same
+    under either ``spark.sql.parser.escapedStringLiterals`` setting.
+    Ints become BIGINT, floats DOUBLE (``repr`` round-trips exactly;
+    non-finite ones go through a string cast)."""
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST({sql_literal(repr(v))} AS DOUBLE)"
+    if isinstance(v, int):
+        return f"{v}L"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def local_table(spark: SparkSession, rows: list[tuple], names: list[str]) -> DataFrame:
+    """A small driver-side table as ONE ``VALUES`` parse: the plan leaf
+    is a JVM ``LocalRelation`` (physical ``LocalTableScan``), so
+    broadcasting it collects rows on the driver without a Spark job
+    and without Python workers — unlike ``createDataFrame(list)``,
+    whose pickled Python RDD (``Scan ExistingRDD``) is deserialised by
+    a Python worker per task on every job. For fixed-size lookup and
+    parameter tables only: the text grows with the rows."""
+    if not rows:
+        raise ValueError("local_table needs at least one row")
+    values = ", ".join("(" + ", ".join(map(sql_literal, r)) + ")" for r in rows)
+    cols = ", ".join("`" + n.replace("`", "``") + "`" for n in names)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+
+
 def rank_df(spark: SparkSession, keys: list[str], key_col: str) -> DataFrame:
-    """(``key_col``, rank) table for broadcast hash joins (rank =
-    position, 0-based). Mirrors the reference's dict construction
-    (utils.py:43-54): a duplicate key keeps its LAST rank — critical
-    for join correctness too, since a duplicate key in the build side
-    would fan out the probe rows."""
+    """(``key_col`` string, rank bigint) table for broadcast hash joins
+    (rank = position, 0-based) as a ``local_table``. Mirrors the
+    reference's dict construction (utils.py:43-54): a duplicate key
+    keeps its LAST rank — critical for join correctness too, since a
+    duplicate key in the build side would fan out the probe rows."""
     last_wins = {k: i for i, k in enumerate(keys)}
-    return spark.createDataFrame(
-        [(k, i) for k, i in last_wins.items()], [key_col, "rank"]
-    )
+    return local_table(spark, list(last_wins.items()), [key_col, "rank"])
 
 
 def fixture_resources() -> Resources:

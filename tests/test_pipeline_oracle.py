@@ -86,11 +86,31 @@ def test_native_pipeline_plan_is_pure_jvm_single_entity_exchange(pipeline):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
         "native sub-schema must compile to zero Python nodes"
     )
+    # nor a Python-side RDD leaf: the rank lookup tables are JVM-local
+    # (LocalTableScan), so a native job starts no Python worker at all
+    assert "Scan ExistingRDD" not in plan, "lookup table built as a Python RDD"
     # the feature path (window -> groupBy -> assembly) reuses ONE
     # entity exchange; the only other entity exchanges allowed are the
     # column-pruned weight side-branches (entity_id+label only).
     ent_ex = re.findall(r"Exchange hashpartitioning\(entity_id#\d+", plan)
     assert 1 <= len(ent_ex) <= 3, plan[:2000]
+
+
+def test_default_pipeline_python_nodes_are_the_feature_udfs_only(events, res):
+    """default_schema's Python boundary is exactly its feature UDFs:
+    the fused Arrow content kernel (over ``value``), the post-aggregation
+    gestalt kernel (over ``transform(__vals)``) and the two regex-rank
+    UDFs (over ``name``) — no other Python node and no ``Scan
+    ExistingRDD`` leaf (the rank lookup tables are LocalTableScans)."""
+    wide, _ = compile_features(
+        cookie_updates_from_events(events), default_schema(res, num_updates=2, num_diffs=2), res
+    )
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    nodes = re.findall(r"^[\s:+\-*()\d]*([A-Za-z]\w*)", plan, re.M)
+    assert [n for n in nodes if re.search(r"Python|Pandas|InArrow", n)] == ["ArrowEvalPython"] * 3
+    py_lines = " ".join(line for line in plan.splitlines() if "ArrowEvalPython" in line)
+    assert sorted(re.findall(r"_udf\((\w+)", py_lines)) == ["name", "name", "transform", "value"]
+    assert "Scan ExistingRDD" not in plan, "lookup table built as a Python RDD"
 
 
 def test_sparse_rows_contract(pipeline, res):

@@ -4,8 +4,8 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Metric (BASELINE.json): entity-timestamps/sec of feature rows
 materialized by the flagship feature pipeline; per-query wall times
-for the operator suite. Scaling-efficiency evidence (local[8] vs
-local[32]) is produced by scripts/bench_scaling.py → BENCH/BASELINE.md.
+for the operator suite. Scaling efficiency (local[1] -> local[4]
+speedup) is recorded by `perfbench/run.py --all`.
 
 Measurement protocol (the host is SHARED; identical runs vary up to
 3x under external load):

@@ -101,12 +101,13 @@ def main(argv: list[str] | None = None) -> None:
                      f"w{schema.total_width}i{args.input}",
     )
 
-    def load(_):
-        if args.input.startswith("synth:"):
-            return synth_cookie_updates(spark, int(args.input.split(":", 1)[1]))
-        return spark.read.parquet(args.input)
-
-    src = pipe.stage("scan", load)
+    if args.input.startswith("synth:"):
+        n = int(args.input.split(":", 1)[1])
+        src = pipe.stage("scan", lambda _: synth_cookie_updates(spark, n))
+    else:
+        # the input frame is the scan's upstream, so its file listing
+        # is in the fingerprint: a rewritten input recomputes
+        src = pipe.stage("scan", lambda df: df, upstream=spark.read.parquet(args.input))
 
     names_holder: list[list[str]] = []
     # train needs the labeled/filtered extraction path too; only

@@ -165,16 +165,12 @@ def gestalt_stats_udf(num_diffs: int):
             if seq is None or len(seq) < 2:
                 rows.append((-1.0, -1.0, []))
                 continue
-            # same memo as _py_gestalt (ratio() is pure; update streams
-            # repeat values); long pairs bypass the cache unchanged
-            ratios = [
-                _gestalt_cached(a, b)
-                if len(a) + len(b) <= _GESTALT_MEMO_MAX_LEN
-                else difflib.SequenceMatcher(None, a, b).ratio()
-                for a, b in zip(seq, seq[1:])
-            ]
-            m = statistics.mean(ratios)
-            s = statistics.stdev(ratios) if len(ratios) > 1 else -1.0
+            # a pair with a NULL side has no ratio: its diff slot is
+            # absent and it stays out of the mean/std (as lev_distance)
+            ratios = [_py_gestalt(a, b) for a, b in zip(seq, seq[1:])]
+            present = [r for r in ratios if r is not None]
+            m = statistics.mean(present) if present else -1.0
+            s = statistics.stdev(present) if len(present) > 1 else -1.0
             rows.append((m, s, ratios[:num_diffs]))
         return pd.DataFrame(rows, columns=["mean", "std", "diffs"], index=vals.index)
 

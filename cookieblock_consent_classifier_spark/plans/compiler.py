@@ -33,6 +33,18 @@ from cookieblock_consent_classifier_spark.functions import native, vectorized as
 from cookieblock_consent_classifier_spark.schema import NUM_CLASSES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df, sql_literal
 
+# Bound on the ONE collected sequence in the plan: the ordered values
+# feeding the post-agg gestalt kernel (difflib is order-dependent and
+# cannot salt). Updates at slot >= the cap never enter the collected
+# cell, so a pathological hot entity (10^7+ updates) costs
+# O(cap x value_len) memory instead of OOM. Per-diff gestalt slots
+# live at slot <= num_diffs (far below the cap) and stay exact;
+# gestalt_total mean/std is then over the first cap updates — a
+# documented truncation, mirroring the reference's own fixed
+# num_updates/num_diffs slot caps. Every other per-entity aggregate is
+# algebraic and stays exact at any count.
+GESTALT_MAX_UPDATES = 10_000
+
 
 @dataclass
 class Block:
@@ -350,7 +362,6 @@ def compile_features(
     res: Resources,
     training: bool = True,
     with_weights: bool = True,
-    gestalt_max_updates: int = 10_000,
 ) -> tuple[DataFrame, list[str]]:
     """Compile the declared schema over a long-format entity-update
     DataFrame (COOKIE_UPDATE_SCHEMA shape) into a wide per-entity
@@ -358,18 +369,8 @@ def compile_features(
     assembly. Returns (wide_df, feature_names).
 
     training=True applies the reference's label-range filter
-    (processor.py:473-478).
-
-    ``gestalt_max_updates`` bounds the ONE collected sequence in the
-    plan (the ordered values feeding the post-agg gestalt kernel —
-    difflib is order-dependent and cannot salt): updates at slot ≥ cap
-    never enter the collected cell, so a pathological hot entity
-    (10^7+ updates) costs O(cap × value_len) memory instead of OOM.
-    Per-diff gestalt slots live at slot ≤ num_diffs (far below any
-    sane cap) and stay exact; gestalt_total mean/std is then over the
-    first cap updates — a documented truncation, mirroring the
-    reference's own fixed num_updates/num_diffs slot caps. Every other
-    per-entity aggregate is algebraic and stays exact at any count.
+    (processor.py:473-478). The gestalt sequence is capped at
+    GESTALT_MAX_UPDATES.
     """
     spark = df.sparkSession
     names = schema.feature_names()
@@ -382,9 +383,9 @@ def compile_features(
     need_gestalt = "gestalt_total" in enabled_pe or any(
         s.enabled and s.name == "gestalt_similarity" for s in schema.per_diff
     )
-    if need_gestalt and gestalt_max_updates <= schema.num_diffs:
+    if need_gestalt and GESTALT_MAX_UPDATES <= schema.num_diffs:
         raise ValueError(
-            f"gestalt_max_updates={gestalt_max_updates} must exceed "
+            f"GESTALT_MAX_UPDATES={GESTALT_MAX_UPDATES} must exceed "
             f"num_diffs={schema.num_diffs} (per-diff gestalt slots live "
             "at slot <= num_diffs)"
         )
@@ -619,14 +620,14 @@ def compile_features(
         aggs += mean_std("__entropy", "e__entropy")
     if need_gestalt:
         # ordered value sequence for the post-agg gestalt kernel,
-        # bounded at gestalt_max_updates (collect_list drops NULLs, so
+        # bounded at GESTALT_MAX_UPDATES (collect_list drops NULLs, so
         # slots past the cap never enter the cell — the hot-entity
         # memory bound; see docstring)
         aggs.append(
             F.sort_array(
                 F.collect_list(
                     F.when(
-                        F.col("__slot") < F.lit(gestalt_max_updates),
+                        F.col("__slot") < F.lit(GESTALT_MAX_UPDATES),
                         F.struct(F.col("__slot").alias("s"), F.col("value").alias("v")),
                     )
                 )

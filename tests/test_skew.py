@@ -15,6 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cookieblock_consent_classifier_spark.plans import compiler
 from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema
 from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
 
@@ -64,14 +65,13 @@ def hot_entity_df(spark):
     return hot.unionByName(cold)
 
 
-def test_hot_entity_completes_and_is_exact(spark, hot_entity_df):
+def test_hot_entity_completes_and_is_exact(spark, hot_entity_df, monkeypatch):
     res = fixture_resources()
     schema = default_schema(res, num_updates=2, num_diffs=1)
-    # explicit cap above the sequence length: proves exactness of the
+    # cap above the sequence length: proves exactness of the
     # UNtruncated gestalt over the full 1e5-update sequence
-    wide, names = compile_features(
-        hot_entity_df, schema, res, training=True, gestalt_max_updates=HOT_UPDATES + 1
-    )
+    monkeypatch.setattr(compiler, "GESTALT_MAX_UPDATES", HOT_UPDATES + 1)
+    wide, names = compile_features(hot_entity_df, schema, res, training=True)
     rows = {r["entity_id"]: r for r in wide.collect()}
     assert len(rows) == 6
     hot = rows["hot"]
@@ -94,7 +94,7 @@ def test_hot_entity_completes_and_is_exact(spark, hot_entity_df):
 
 def test_pathological_entity_capped_no_oom(spark):
     """10^7 updates on ONE entity through the default
-    gestalt_max_updates cap: the collected gestalt cell is bounded at
+    GESTALT_MAX_UPDATES cap: the collected gestalt cell is bounded at
     the cap (O(cap x value_len) memory, not O(updates)), per-diff
     gestalt slots (slot <= num_diffs) stay exact, and every algebraic
     aggregate is exact over the FULL sequence. Uses a slim schema

@@ -2392,26 +2392,8 @@ def q_ann_ivf_refined_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     base = similarity.deterministic_centroids(emb, 8)
     refined = similarity.ivf_refine(emb, base, dim=64, iters=1)
-    assigned = similarity.ivf_assign(emb, refined)
-    q = emb.filter(F.col("vec_id") < 10)
-    c = refined.select("centroid_id", F.col("embedding").alias("__cvec"))
-    qq = q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    q_cells = (
-        qq.crossJoin(F.broadcast(c))
-        .withColumn("__sim", similarity.cosine(F.col("q_vec"), F.col("__cvec")))
-        .withColumn("__rn", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("centroid_id"))))
-        .filter(F.col("__rn") <= 2)
-        .select("query_id", "q_vec", F.col("centroid_id").alias("cell"))
-    )
-    scored = (
-        assigned.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                F.round(similarity.cosine(F.col("q_vec"), F.col("embedding")), 4).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
+    return similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 10), refined,
+                               k=5, nprobe=2)
 
 
 @_q("cookie_pipeline_fullwidth")  # golden-parity surface: no SQL twin
@@ -2456,8 +2438,9 @@ def q_ann_ivf_topk(spark, sf_dir):
     partition-pruned scale path; exactness-vs-bruteforce pinned in
     tests with nprobe == num_cells)."""
     emb = _t(spark, sf_dir, "embeddings")
-    out = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 10),
-                              k=5, num_cells=8, nprobe=2)
+    cents = similarity.deterministic_centroids(emb, 8)
+    out = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 10), cents,
+                              k=5, nprobe=2)
     return out.select("query_id", "neighbor_id", "cos_sim", "rank")
 
 

@@ -19,6 +19,8 @@ feature map, plus checkpoint/resume and per-stage metrics.
 from __future__ import annotations
 
 import argparse
+import dataclasses
+import hashlib
 import json
 import os
 
@@ -36,6 +38,17 @@ from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_upda
 # accuracy (train_test_split analogue, train_xgb.py:292 — hash-based so
 # resumed runs split identically)
 HOLDOUT = 0.2
+
+
+def config_token(input_path: str, training: bool, schema, res) -> str:
+    """Every setting that changes what the checkpointed stages write:
+    the input, the training flag (label filter and class weights), the
+    whole feature schema and the resources. ``iab_vendors`` is sorted
+    because a frozenset's repr follows PYTHONHASHSEED, and the token
+    must be the same in every process."""
+    res_fields = dataclasses.asdict(res)
+    res_fields["iab_vendors"] = sorted(res.iab_vendors)
+    return f"{input_path}|training={training}|{schema!r}|{res_fields!r}"
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -90,15 +103,17 @@ def main(argv: list[str] | None = None) -> None:
         res = fixture_resources()
         schema = default_schema(res)
 
+    # train needs the labeled/filtered extraction path too; only
+    # predict runs the no-filter inference extraction
+    training = args.mode in ("extract", "train")
+
     ckpt_root = os.path.join(args.output, "_checkpoints")
     if args.no_resume and os.path.exists(ckpt_root):
         import shutil
 
         shutil.rmtree(ckpt_root)
     pipe = CheckpointedPipeline(
-        spark, ckpt_root,
-        config_token=f"u{schema.num_updates}d{schema.num_diffs}"
-                     f"w{schema.total_width}i{args.input}",
+        spark, ckpt_root, config_token=config_token(args.input, training, schema, res)
     )
 
     if args.input.startswith("synth:"):
@@ -110,14 +125,9 @@ def main(argv: list[str] | None = None) -> None:
         src = pipe.stage("scan", lambda df: df, upstream=spark.read.parquet(args.input))
 
     names_holder: list[list[str]] = []
-    # train needs the labeled/filtered extraction path too; only
-    # predict runs the no-filter inference extraction
-    training = args.mode in ("extract", "train")
 
     def extract(df):
-        wide, names = compile_features(
-            df, schema, res, training=training, with_weights=training
-        )
+        wide, names = compile_features(df, schema, res, training=training)
         names_holder.append(names)
         return wide
 
@@ -187,8 +197,9 @@ def main(argv: list[str] | None = None) -> None:
         # cookie name from the scan stage for the histogram filter
         names_df = src.df.select("entity_id", "name").dropDuplicates(["entity_id"])
 
-        with open(args.model_dump) as fd:
-            dump = json.load(fd)
+        with open(args.model_dump, "rb") as fd:
+            dump_bytes = fd.read()
+        dump = json.loads(dump_bytes)
         # the JSON's shape names the layout: per-class forests (lists)
         # are the sparse format, tree objects a full dump
         fmt = "sparse" if dump and isinstance(dump[0], list) else "full"
@@ -201,8 +212,10 @@ def main(argv: list[str] | None = None) -> None:
                 .select("entity_id", "name", "probs", "predicted_label")
             )
 
+        # the model is an input of the stage: a different dump recomputes
         pred = pipe.stage(
-            "predict", predict_stage, upstream=feat.df, upstream_fingerprint="extract",
+            "predict", predict_stage, upstream=feat.df,
+            upstream_fingerprint="extract|" + hashlib.sha256(dump_bytes).hexdigest(),
         )
         P.write_predictions_json(pred.df, os.path.join(args.output, "predictions_json"))
         hist = P.consent_histogram(

@@ -25,15 +25,18 @@ from pyspark.sql import DataFrame, types as T
 from pyspark.sql.functions import pandas_udf
 
 
-def encode_wav_pcm16(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """Standard RIFF/WAVE container, PCM 16-bit LE, mono (shape (n,))
-    or multi-channel (shape (n, ch))."""
+SAMPLE_RATE = 16000  # Hz, of every payload the engine writes
+
+
+def encode_wav_pcm16(samples: np.ndarray) -> bytes:
+    """Standard RIFF/WAVE container at ``SAMPLE_RATE``, PCM 16-bit LE,
+    mono (shape (n,)) or multi-channel (shape (n, ch))."""
     if samples.ndim == 1:
         samples = samples[:, None]
     n, ch = samples.shape
     data = samples.astype("<i2").tobytes()
-    byte_rate = sample_rate * ch * 2
-    fmt = struct.pack("<HHIIHH", 1, ch, sample_rate, byte_rate, ch * 2, 16)
+    byte_rate = SAMPLE_RATE * ch * 2
+    fmt = struct.pack("<HHIIHH", 1, ch, SAMPLE_RATE, byte_rate, ch * 2, 16)
     body = (
         b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
         + b"data" + struct.pack("<I", len(data)) + data
@@ -121,13 +124,13 @@ def audio_features_udf(payload: pd.Series) -> pd.DataFrame:
 audio_features_udf = audio_features_udf.asNondeterministic()
 
 
-def extract_audio_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Append the audio feature struct fields to the frame (the
-    multimodal decode→featurize pass: one decode feeds every
-    feature)."""
+def extract_audio_features(df: DataFrame) -> DataFrame:
+    """Append the audio feature struct fields of the ``bytes`` column
+    to the frame (the multimodal decode→featurize pass: one decode
+    feeds every feature)."""
     from pyspark.sql import functions as F
 
-    out = df.withColumn("__af", audio_features_udf(F.col(bytes_col)))
+    out = df.withColumn("__af", audio_features_udf(F.col("bytes")))
     for f in AUDIO_FEATURE_FIELDS:
         out = out.withColumn(f.name, F.col("__af")[f.name])
     return out.drop("__af")
@@ -146,12 +149,12 @@ def synth_wav_udf(audio_id: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def synth_tone(entity_id: str, freq_hz: float, seconds: float = 0.25,
-               sample_rate: int = 16000, amplitude: float = 0.5) -> np.ndarray:
-    """Deterministic sine tone (per-entity phase offset) as int16 PCM."""
+def synth_tone(entity_id: str, freq_hz: float) -> np.ndarray:
+    """Deterministic 0.25 s sine tone of amplitude 0.5 (per-entity
+    phase offset) as int16 PCM at ``SAMPLE_RATE``."""
     from cookieblock_consent_classifier_spark.functions.image import hash_str
 
     phase = (hash_str(entity_id) % 360) / 360.0 * 2 * np.pi
-    t = np.arange(int(seconds * sample_rate)) / sample_rate
-    wave = amplitude * np.sin(2 * np.pi * freq_hz * t + phase)
+    t = np.arange(SAMPLE_RATE // 4) / SAMPLE_RATE
+    wave = 0.5 * np.sin(2 * np.pi * freq_hz * t + phase)
     return np.round(wave * 32767).astype(np.int16)

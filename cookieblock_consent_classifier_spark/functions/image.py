@@ -20,8 +20,7 @@ Codecs:
   (the input_hint lossy invariant, pinned in tests/test_jpeg.py). No external decoder
   exists in this container to cross-check against — the structural
   markers are asserted in tests and the table-from-stream design
-  keeps the decoder general. Legacy round-1..3 stand-in payloads
-  (SGIM container) still decode.
+  keeps the decoder general.
 
 Everything Spark-side — binary column handling, Arrow batch shapes,
 pandas-UDF signatures, per-entity phash-delta windows, PSNR
@@ -45,7 +44,6 @@ try:  # real codecs if ever available — plumbing is codec-agnostic
 except Exception:
     HAVE_PIL = False
 
-_MAGIC = b"SGIM"
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -207,12 +205,7 @@ def decode_image(payload: bytes) -> np.ndarray:
         from cookieblock_consent_classifier_spark.functions import jpeg  # noqa: PLC0415
 
         return jpeg.decode_jpeg_gray(payload)
-    if payload[:4] != _MAGIC:
-        raise ValueError("not a PNG / JFIF / legacy-container payload")
-    # legacy round-1..3 stand-in container (kept so old persisted
-    # payloads still decode)
-    w, h = struct.unpack("<II", payload[4:12])
-    return np.frombuffer(payload[12:], dtype=np.uint8).reshape(h, w)
+    raise ValueError("not a PNG / JFIF payload")
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
@@ -222,9 +215,10 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     return 10.0 * np.log10(255.0**2 / mse)
 
 
-def average_phash(pixels: np.ndarray, grid: int = 8) -> int:
-    """64-bit average hash: block-mean to grid×grid, bit=1 where block
+def average_phash(pixels: np.ndarray) -> int:
+    """64-bit average hash: block-mean to 8×8, bit=1 where block
     mean > global mean. Deterministic, pure numpy."""
+    grid = 8
     h, w = pixels.shape
     ys = np.linspace(0, h, grid + 1).astype(int)
     xs = np.linspace(0, w, grid + 1).astype(int)
@@ -276,15 +270,13 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def with_phash_delta(
-    df: DataFrame, entity_col: str = "image_id", ts_col: str = "ts", phash_col: str = "phash"
-) -> DataFrame:
-    """Per-entity consecutive phash hamming delta (the image analogue
-    of the reference's per-diff value-distance features,
-    processor.py:1496-1503)."""
-    w = Window.partitionBy(entity_col).orderBy(ts_col)
-    prev = F.lag(phash_col).over(w)
+def with_phash_delta(df: DataFrame) -> DataFrame:
+    """Per-``image_id`` consecutive ``phash`` hamming delta in ``ts``
+    order (the image analogue of the reference's per-diff value-distance
+    features, processor.py:1496-1503)."""
+    w = Window.partitionBy("image_id").orderBy("ts")
+    prev = F.lag("phash").over(w)
     return df.withColumn(
         "phash_delta",
-        F.when(prev.isNotNull(), hamming64(F.col(phash_col), prev)).cast("integer"),
+        F.when(prev.isNotNull(), hamming64(F.col("phash"), prev)).cast("integer"),
     )

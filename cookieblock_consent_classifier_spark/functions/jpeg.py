@@ -733,13 +733,10 @@ def _decode_entropy_loop(
     return zz
 
 
-def decode_jpeg_gray(payload: bytes, _entropy: str = "fast") -> np.ndarray:
+def decode_jpeg_gray(payload: bytes) -> np.ndarray:
     """Baseline JFIF bytes → uint8 (h, w). Single-component baseline
-    only; SOF2 (progressive) and multi-component raise.
-
-    ``_entropy`` selects the huffman decode implementation: "fast"
-    (default — table-driven, _decode_entropy_fast) or "loop" (the
-    per-symbol spec reader, retained as the parity target)."""
+    only; SOF2 (progressive) and multi-component raise. The huffman
+    stage is the table-driven _decode_entropy_fast."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -807,8 +804,9 @@ def decode_jpeg_gray(payload: bytes, _entropy: str = "fast") -> np.ndarray:
     qt = qts[comp_qt]
     nby, nbx = -(-h // 8), -(-w // 8)
     nblocks = nby * nbx
-    impl = _decode_entropy_fast if _entropy == "fast" else _decode_entropy_loop
-    zz = impl(payload[data_start:], huff[(0, comp_dc)], huff[(1, comp_ac)], nblocks)
+    zz = _decode_entropy_fast(
+        payload[data_start:], huff[(0, comp_dc)], huff[(1, comp_ac)], nblocks
+    )
 
     coef = np.zeros((nblocks, 64), dtype=np.int64)
     coef[:, ZIGZAG] = zz  # un-zigzag

@@ -272,10 +272,10 @@ def _py_split_delimited(txt: str, min_seps: int):
     return None, None
 
 
-def _py_b64_decode(s: str, min_len: int = 8):
-    """try_decode_base64 (utils.py:81-94): decode iff ≥ MIN_B64_LEN
+def _py_b64_decode(s: str):
+    """try_decode_base64 (utils.py:81-94): decode iff ≥ 8 characters
     and the result is valid UTF-8."""
-    if not isinstance(s, str) or len(s) < min_len:
+    if not isinstance(s, str) or len(s) < 8:
         return None
     try:
         return base64.b64decode(s).decode("utf-8")

@@ -2,9 +2,10 @@
 
 Attaches, to every fact row ``(entity, ts)``, the dimension attributes
 from the latest dim row of the same entity with ``dim_ts <= fact.ts``
-(strict mode: ``<``). The reference never needs this because its label
-is static per cookie (processor.py:473); the north rule generalizes to
-time-varying label/metadata state (BASELINE.json north_rule).
+(the optional strict columns: ``<``). The reference never needs this
+because its label is static per cookie (processor.py:473); the north
+rule generalizes to time-varying label/metadata state (BASELINE.json
+north_rule).
 
 Strategy — union + single window, NOT a range join:
   1. tag fact rows (tag=1) and dim rows (tag=0), union by a shared
@@ -24,7 +25,8 @@ their own update counts (the window state is O(1) per row: running
 
 Tie semantics: at equal timestamps, dim sorts BEFORE fact (tag order),
 so a dim update effective exactly at fact.ts IS visible (inclusive);
-``strict=True`` shifts dim after fact to get exclusive semantics.
+the ``also_strict_suffix`` columns sort dim after fact for exclusive
+semantics.
 Among multiple dim rows at the same (entity, ts), the one greatest by
 ``dim_order`` wins (deterministic).
 """
@@ -43,20 +45,20 @@ def asof_join(
     fact_ts: str = "ts",
     dim_ts: str = "ts",
     payload: Sequence[str] = (),
-    strict: bool = False,
     dim_order: Sequence[str] = (),
-    suffix: str = "_asof",
     tolerance_seconds: float | None = None,
     also_strict_suffix: str | None = None,
     also_tolerance_suffix: str | None = None,
 ) -> DataFrame:
-    """Return ``fact`` with ``<payload>{suffix}`` columns attached
+    """Return ``fact`` with ``<payload>_asof`` columns attached
     point-in-time-correctly. Facts with no prior dim state get nulls.
 
     ``tolerance_seconds`` (pandas merge_asof ``tolerance`` analogue):
     a matched dim row older than the tolerance yields nulls instead —
     same single-shuffle plan, the staleness check is a row-local
-    predicate on the forward-filled dim timestamp. Assumes non-null
+    predicate on the forward-filled dim timestamp. Without
+    ``also_tolerance_suffix`` the cut applies in place to the
+    ``_asof`` columns; the strict columns are never cut. Assumes non-null
     dim payload values (each payload column is forward-filled
     independently, like the base join).
 
@@ -65,50 +67,22 @@ def asof_join(
     semantics in the same pass. Both modes share the one hash
     exchange; only a second sort order differs (dim-after-fact at
     equal ts), so the plan is Exchange → Sort → Window → Sort →
-    Window — still a single shuffle. Only valid with strict=False.
+    Window — still a single shuffle.
 
     ``also_tolerance_suffix``: attach
     ``<payload><also_tolerance_suffix>`` columns carrying the
-    staleness-cut variant ALONGSIDE the raw inclusive columns (the
-    tolerance check is a row-local predicate over the already-filled
-    state, so this adds zero sorts and zero shuffles). Requires
-    ``tolerance_seconds``; composes with ``also_strict_suffix``
-    (inclusive + strict + tolerance, all from the ONE exchange).
+    staleness-cut variant of ``tolerance_seconds`` ALONGSIDE the raw
+    inclusive columns (the tolerance check is a row-local predicate
+    over the already-filled state, so this adds zero sorts and zero
+    shuffles); composes with ``also_strict_suffix`` (inclusive +
+    strict + tolerance, all from the ONE exchange). The suffixes must
+    differ from each other and from ``_asof``.
     """
     if not payload:
         raise ValueError("payload columns required")
-    if also_strict_suffix is not None and strict:
-        raise ValueError("also_strict_suffix requires strict=False")
-    if also_tolerance_suffix is not None and tolerance_seconds is None:
-        raise ValueError("also_tolerance_suffix requires tolerance_seconds")
-    if also_tolerance_suffix is not None and also_tolerance_suffix in (
-        suffix,
-        also_strict_suffix,
-    ):
-        # same suffix would silently overwrite the inclusive (or
-        # strict) columns in place instead of adding a variant
-        raise ValueError(
-            "also_tolerance_suffix must differ from suffix/also_strict_suffix"
-        )
-    if also_strict_suffix is not None and also_strict_suffix == suffix:
-        raise ValueError("also_strict_suffix must differ from suffix")
-    if (
-        also_strict_suffix is not None
-        and tolerance_seconds is not None
-        and also_tolerance_suffix is None
-    ):
-        # the in-place staleness cut applies to the inclusive columns
-        # only; a silent combination would return leakage-safe
-        # inclusive columns next to stale strict ones. Name the
-        # tolerance columns (also_tolerance_suffix) to combine.
-        raise ValueError(
-            "also_strict_suffix + tolerance_seconds need also_tolerance_suffix"
-        )
 
     fact_cols = fact.columns
-    fact_tag, dim_tag = (1, 0) if not strict else (0, 1)
-
-    f_side = fact.withColumn("__tag", F.lit(fact_tag))
+    f_side = fact.withColumn("__tag", F.lit(1))
     for p in payload:
         f_side = f_side.withColumn(f"__dim_{p}", F.lit(None).cast(dim.schema[p].dataType))
     f_side = f_side.withColumn("__ets", F.col(fact_ts))
@@ -118,7 +92,7 @@ def asof_join(
     d_side = dim.select(
         F.col(on),
         F.col(dim_ts).alias("__ets"),
-        F.lit(dim_tag).alias("__tag"),
+        F.lit(0).alias("__tag"),
         *[F.col(p).alias(f"__dim_{p}") for p in payload],
         *[F.col(c).alias(f"__dimord_{i}") for i, c in enumerate(dim_order)],
     )
@@ -140,7 +114,7 @@ def asof_join(
     filled = unioned
     for p in payload:
         filled = filled.withColumn(
-            f"{p}{suffix}", F.last(f"__dim_{p}", ignorenulls=True).over(w)
+            f"{p}_asof", F.last(f"__dim_{p}", ignorenulls=True).over(w)
         )
     if also_strict_suffix is not None:
         # same partition key, reversed tag order: fact sorts BEFORE a
@@ -161,7 +135,7 @@ def asof_join(
                 F.last(f"__dim_{p}", ignorenulls=True).over(w_strict),
             )
     if tolerance_seconds is not None:
-        dim_ts_marker = F.when(F.col("__tag") == dim_tag, F.col("__ets"))
+        dim_ts_marker = F.when(F.col("__tag") == 0, F.col("__ets"))
         filled = filled.withColumn(
             "__asof_ts", F.last(dim_ts_marker, ignorenulls=True).over(w)
         )
@@ -170,14 +144,14 @@ def asof_join(
             - F.unix_micros(F.col("__asof_ts").cast("timestamp"))
         ) <= F.lit(int(tolerance_seconds * 1_000_000))
         # named tolerance columns when requested, else cut in place
-        out_suffix = also_tolerance_suffix or suffix
+        out_suffix = also_tolerance_suffix or "_asof"
         for p in payload:
             filled = filled.withColumn(
-                f"{p}{out_suffix}", F.when(age_ok, F.col(f"{p}{suffix}"))
+                f"{p}{out_suffix}", F.when(age_ok, F.col(f"{p}_asof"))
             )
-    out_cols = fact_cols + [f"{p}{suffix}" for p in payload]
+    out_cols = fact_cols + [f"{p}_asof" for p in payload]
     if also_strict_suffix is not None:
         out_cols += [f"{p}{also_strict_suffix}" for p in payload]
     if also_tolerance_suffix is not None:
         out_cols += [f"{p}{also_tolerance_suffix}" for p in payload]
-    return filled.filter(F.col("__tag") == fact_tag).select(*out_cols)
+    return filled.filter(F.col("__tag") == 1).select(*out_cols)

@@ -39,17 +39,16 @@ from cookieblock_consent_classifier_spark.functions import text as TX
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "text",
     id_cols: Sequence[str] = ("doc_id",),
     chunk_tokens: int = 64,
 ) -> DataFrame:
-    """Long-form chunk rows: ``(*id_cols, chunk_id, n_tok,
-    chunk_text)``. Whitespace-empty documents produce zero rows;
+    """Long-form chunk rows of the ``text`` column: ``(*id_cols,
+    chunk_id, n_tok, chunk_text)``. Whitespace-empty documents produce zero rows;
     every other document produces ``ceil(n_tokens / chunk_tokens)``
     chunks, the last one partial."""
     if chunk_tokens <= 0:
         raise ValueError("chunk_tokens must be positive")
-    toks = TX.tokens(text_col)
+    toks = TX.tokens("text")
     n_chunks = F.ceil(F.size(toks) / F.lit(float(chunk_tokens))).cast("int")
     staged = docs.select(
         *id_cols, toks.alias("__toks"), n_chunks.alias("__nc")
@@ -74,11 +73,11 @@ def pack_chunks(
     chunks: DataFrame,
     stream_col: str,
     order_cols: Sequence[str],
-    tokens_col: str = "n_tok",
     budget: int = 256,
 ) -> DataFrame:
     """Attach ``bin_id``: the training-sequence index of each chunk
-    within its stream (greedy-by-start-offset concatenation packing).
+    within its stream (greedy-by-start-offset concatenation packing of
+    the ``n_tok`` counts ``chunk_documents`` writes).
     ``order_cols`` must be a deterministic total order within the
     stream or bin assignment is not reproducible."""
     if budget <= 0:
@@ -88,7 +87,7 @@ def pack_chunks(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    cum_before = F.coalesce(F.sum(tokens_col).over(w), F.lit(0).cast("long"))
+    cum_before = F.coalesce(F.sum("n_tok").over(w), F.lit(0).cast("long"))
     return chunks.withColumn(
         "bin_id", F.floor(cum_before / F.lit(budget)).cast("long")
     )

@@ -160,10 +160,13 @@ def lsh_bands(
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
+# giant-bucket cap of lsh_candidate_pairs (members kept per bucket)
+LSH_MAX_BUCKET_SIZE = 4096
+
+
 def lsh_candidate_pairs(
     bands_df: DataFrame,
     id_col: str = "id",
-    max_bucket_size: int | None = 4096,
     stats: dict | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) among bucket-mates, via ONE
@@ -178,21 +181,21 @@ def lsh_candidate_pairs(
     the (band, key, id) rows once; cross-band repeats collapse in the
     same final distinct as before.
 
-    ``max_bucket_size`` (round 7 — the giant-bucket defense): a
+    ``LSH_MAX_BUCKET_SIZE`` (round 7 — the giant-bucket defense): a
     pathological bucket costs O(k²) pairs under any shape, and in the
     groupBy form it lands in ONE task's collect+explode; at corpus
     scale boilerplate duplication routinely produces 10⁵–10⁶-member
     buckets (10¹⁰+ pairs — an OOM or a forever-task). Buckets over
-    the cap are DETERMINISTICALLY sampled down to ``max_bucket_size``
-    members: members are ranked by md5(id) (engine-portable, unbiased
-    w.r.t. id order) and the lowest-ranked ``max_bucket_size`` kept,
+    the cap are DETERMINISTICALLY sampled down to the cap: members
+    are ranked by md5(id) (engine-portable, unbiased w.r.t. id order)
+    and the lowest-ranked ``LSH_MAX_BUCKET_SIZE`` kept,
     so pair count per bucket is bounded by cap²/2. Near-dup detection
     degrades gracefully: members of a truncated bucket usually share
     several other buckets (num_bands chances), and a 4096-member
     bucket is far past the point where LSH banding is selective
-    anyway. The default is far above any gated fixture (max observed
+    anyway. The cap is far above any gated fixture (max observed
     bucket: 3 / 6 / 20 at sf0.01/0.1/1.0), so declared-query results
-    are unchanged; pass None to disable.
+    are unchanged; the cap cannot be switched off.
 
     ``stats`` (optional dict, same pattern as connected_components):
     when provided, runs one extra aggregation job over the bucket
@@ -208,35 +211,25 @@ def lsh_candidate_pairs(
         .agg(F.array_distinct(F.sort_array(F.collect_list(id_col))).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    if max_bucket_size is not None:
-        over = F.size("ids") > max_bucket_size
-        if stats is not None:
-            row = buckets.filter(over).agg(
-                F.count("*").alias("nb"),
-                F.coalesce(
-                    F.sum(F.size("ids") - max_bucket_size), F.lit(0)
-                ).alias("nd"),
-            ).first()
-            stats["capped_buckets"] = row["nb"]
-            stats["dropped_members"] = int(row["nd"])
-        # md5-rank sample, then restore id order (downstream combos
-        # rely on the sorted-ascending invariant for a < b)
-        ranked = F.sort_array(
-            F.transform(
-                F.col("ids"),
-                lambda x: F.struct(
-                    F.md5(x.cast("string")).alias("r"), x.alias("v")
-                ),
-            )
+    cap = LSH_MAX_BUCKET_SIZE
+    over = F.size("ids") > cap
+    if stats is not None:
+        row = buckets.filter(over).agg(
+            F.count("*").alias("nb"),
+            F.coalesce(F.sum(F.size("ids") - cap), F.lit(0)).alias("nd"),
+        ).first()
+        stats["capped_buckets"] = row["nb"]
+        stats["dropped_members"] = int(row["nd"])
+    # md5-rank sample, then restore id order (downstream combos rely
+    # on the sorted-ascending invariant for a < b)
+    ranked = F.sort_array(
+        F.transform(
+            F.col("ids"),
+            lambda x: F.struct(F.md5(x.cast("string")).alias("r"), x.alias("v")),
         )
-        sampled = F.sort_array(
-            F.transform(
-                F.slice(ranked, 1, max_bucket_size), lambda e: e["v"]
-            )
-        )
-        buckets = buckets.withColumn(
-            "ids", F.when(over, sampled).otherwise(F.col("ids"))
-        )
+    )
+    sampled = F.sort_array(F.transform(F.slice(ranked, 1, cap), lambda e: e["v"]))
+    buckets = buckets.withColumn("ids", F.when(over, sampled).otherwise(F.col("ids")))
     n = F.size(F.col("ids"))
     combos = F.flatten(
         F.transform(
@@ -255,14 +248,14 @@ def lsh_candidate_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iters: int = 25,
-    small_graph_threshold: int = 1_000_000,
-    stats: dict | None = None,
-) -> DataFrame:
+# connected_components runs union-find on the driver up to this many
+# edges, and distributed label propagation of at most CC_MAX_ROUNDS
+# rounds above it
+CC_DRIVER_MAX_EDGES = 1_000_000
+CC_MAX_ROUNDS = 25
+
+
+def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """Connected components over an undirected pair graph — the
     cluster-merge step after near-dup candidate verification (pairs
     alone under-merge: A~B and B~C must collapse into one cluster even
@@ -270,7 +263,7 @@ def connected_components(
 
     ADAPTIVE execution: the verified-pair graph is typically orders of
     magnitude smaller than the corpus (that is the point of LSH), so
-    below ``small_graph_threshold`` edges the exact min-root
+    up to ``CC_DRIVER_MAX_EDGES`` edges the exact min-root
     union-find runs driver-side (milliseconds; an iterative Spark loop
     would pay several whole-cluster job rounds for a graph that fits
     in one task). Above the threshold: distributed min-label
@@ -278,10 +271,11 @@ def connected_components(
     min of its own and its neighbors' labels, then follows the new
     label one more hop (halves rounds on chains); per-round
     localCheckpoint cuts the lineage; convergence checked against the
-    previous (already-materialized) labels; bounded by ``max_iters``.
+    previous (already-materialized) labels; bounded by ``CC_MAX_ROUNDS``.
     The classic MapReduce-CC shape; deterministic and resumable.
 
-    Returns (node, component) where component = min node id reachable.
+    Takes an (a, b) edge frame. Returns (node, component) where
+    component = min node id reachable.
     Only nodes that appear in an edge are emitted (singletons need no
     merging).
 
@@ -292,11 +286,11 @@ def connected_components(
     spark = edges.sparkSession
     # materialize the (typically expensive) verified-pair lineage ONCE;
     # the size probe and the subsequent path both read local blocks
-    edges = edges.select(a_col, b_col).localCheckpoint(eager=True)
+    edges = edges.select("a", "b").localCheckpoint(eager=True)
     n_edges = edges.count()
     if stats is not None:
         stats["edges"] = n_edges
-    if n_edges <= small_graph_threshold:
+    if n_edges <= CC_DRIVER_MAX_EDGES:
         if stats is not None:
             stats["path"] = "driver"
             stats["rounds"] = 0
@@ -312,17 +306,17 @@ def connected_components(
             return root
 
         for r in pairs:
-            ra, rb = find(r[a_col]), find(r[b_col])
+            ra, rb = find(r["a"]), find(r["b"])
             if ra != rb:  # min id becomes the root -> component = min reachable
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        nodes = {x for r in pairs for x in (r[a_col], r[b_col])}
+        nodes = {x for r in pairs for x in (r["a"], r["b"])}
         out = [(n, find(n)) for n in sorted(nodes)]
         return spark.createDataFrame(out, ["node", "component"])
     sym = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(
-        edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     ).distinct()
     # self-loops keep a node's own label in every min-aggregation
     nodes = sym.select(F.col("src").alias("node")).distinct()
@@ -338,7 +332,7 @@ def connected_components(
     if stats is not None:
         stats["path"] = "distributed"
         stats["rounds"] = 0
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ROUNDS):
         if stats is not None:
             stats["rounds"] += 1
         # label(dst) <- min over incoming src labels (incl. self-loop)
@@ -488,11 +482,11 @@ def simhash48(text_col: str | Column) -> Column:
     return _simhash48_kernel(hashes)
 
 
-def simhash_blocks(simhash_col: Column, num_blocks: int = 4) -> list[Column]:
-    """Pigeonhole blocking keys: split the 48-bit simhash into
-    ``num_blocks`` chunks; near-dups within hamming ≤ num_blocks-1
-    share at least one exact chunk → candidate generation by
-    equi-join, never all-pairs."""
+def simhash_blocks(simhash_col: Column) -> list[Column]:
+    """Pigeonhole blocking keys: split the 48-bit simhash into 4
+    chunks; near-dups within hamming ≤ 3 share at least one exact
+    chunk → candidate generation by equi-join, never all-pairs."""
+    num_blocks = 4
     width = SIMHASH_BITS // num_blocks
     return [
         F.shiftright(simhash_col, i * width)

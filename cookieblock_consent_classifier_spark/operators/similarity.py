@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over an ``embedding`` column (array<float>)
+keyed by ``vec_id``.
 
 - brute-force cosine top-k: exact baseline; a broadcast of the (small)
   query set against the full corpus — one pass, no shuffle until the
@@ -40,28 +41,21 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_to: int = 4,
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every corpus
     vector, rank per query. Ties broken by neighbor id (deterministic).
-    Self-matches excluded. Output: (query_id, neighbor_id, cos_sim,
-    rank)."""
+    Self-matches excluded. Output: (query_id, neighbor_id, cos_sim
+    rounded to 4 places, rank)."""
     # norms are projected per ROW on each side BEFORE the cross join
     # (opt r7): cosine() inline recomputed both interpreted norm
     # aggregates per PAIR — with |q| queries that is |q| re-evaluations
     # of every corpus norm. Same fold, same multiplication order
     # (norm(q) * norm(c)), so the doubles are bit-identical.
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("__qn", norm(F.col("q_vec")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     ).withColumn("__cn", norm(F.col("c_vec")))
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -72,7 +66,7 @@ def brute_force_topk(
             F.round(
                 dot(F.col("q_vec"), F.col("c_vec"))
                 / (F.col("__qn") * F.col("__cn")),
-                round_to,
+                4,
             ).alias("cos_sim"),
         )
     )
@@ -159,12 +153,7 @@ def lsh_near_dup_pairs(
     ).filter(F.col("cos_sim") >= threshold)
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF cell assignment: each vector → nearest centroid by cosine,
     computed entirely ROW-LOCALLY: the (tiny, already-deterministic)
     centroid set is collected, L2-normalized driver-side, and embedded
@@ -177,12 +166,12 @@ def ivf_assign(
     num_cells× the corpus, a non-starter at 10^12 vectors.
     Ties break toward the smallest centroid_id. Returns corpus
     columns + ``cell``."""
-    rows = centroids.select("centroid_id", vec_col).collect()
+    rows = centroids.select("centroid_id", "embedding").collect()
     if not rows:
         raise ValueError("ivf_assign: empty centroid set")
     cents = []
     for r in rows:
-        v = [float(x) for x in r[vec_col]]
+        v = [float(x) for x in r["embedding"]]
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         cents.append((int(r["centroid_id"]), [x / n for x in v]))
     cents.sort()
@@ -192,7 +181,7 @@ def ivf_assign(
     # SHORTER side with NULLs, so a wider corpus vector would
     # otherwise NULL the whole dot (same hazard as hyperplane_bucket)
     dim = len(cents[0][1])
-    vec = F.slice(F.col(vec_col), 1, dim)
+    vec = F.slice(F.col("embedding"), 1, dim)
     # struct(score, -cid): array_max compares field-wise, so ties on
     # score pick the LARGER -cid == smaller centroid_id
     scored = F.zip_with(
@@ -206,9 +195,7 @@ def ivf_assign(
     return corpus.withColumn("cell", (-best["ncid"]).cast("int"))
 
 
-def deterministic_centroids(
-    corpus: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def deterministic_centroids(corpus: DataFrame, k: int) -> DataFrame:
     """Deterministic centroid pick: the k corpus vectors with the
     smallest md5-hash of their id (a uniform pseudo-random but
     reproducible sample — resumable runs pick identical cells). A
@@ -219,14 +206,16 @@ def deterministic_centroids(
     # them with a single-partition window is free
     limited = (
         corpus.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"), F.col(id_col), F.col(vec_col)
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
+            F.col("vec_id"),
+            F.col("embedding"),
         )
-        .orderBy("__h", id_col)
+        .orderBy("__h", "vec_id")
         .limit(k)
     )
-    w = Window.orderBy("__h", id_col)
+    w = Window.orderBy("__h", "vec_id")
     return limited.withColumn("centroid_id", F.row_number().over(w) - 1).select(
-        "centroid_id", vec_col
+        "centroid_id", "embedding"
     )
 
 
@@ -235,54 +224,49 @@ def ivf_refine(
     centroids: DataFrame,
     dim: int,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic Lloyd refinement of IVF centroids: assign (the
     shuffle-free ivf_assign) → per-cell mean (ONE hash aggregation;
     the element-wise mean is dim native avg() expressions — plan width
     O(dim), no explode) → repeat. Empty cells keep their previous
     centroid (deterministic, no re-seeding). Returns refined
-    (centroid_id, vec) with the input's column names."""
+    (centroid_id, embedding)."""
     cents = centroids
     for _ in range(iters):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
+        assigned = ivf_assign(corpus, cents)
         means = assigned.groupBy("cell").agg(
-            *[F.avg(F.element_at(F.col(vec_col), i + 1)).alias(f"__m{i}") for i in range(dim)]
+            *[F.avg(F.element_at(F.col("embedding"), i + 1)).alias(f"__m{i}") for i in range(dim)]
         ).select(
             F.col("cell").alias("centroid_id"),
-            F.array(*[F.col(f"__m{i}") for i in range(dim)]).alias(vec_col),
+            F.array(*[F.col(f"__m{i}") for i in range(dim)]).alias("embedding"),
         )
-        prev = {int(r["centroid_id"]): list(r[vec_col])
-                for r in cents.select("centroid_id", vec_col).collect()}
-        new = {int(r["centroid_id"]): [float(x) for x in r[vec_col]]
+        prev = {int(r["centroid_id"]): list(r["embedding"])
+                for r in cents.select("centroid_id", "embedding").collect()}
+        new = {int(r["centroid_id"]): [float(x) for x in r["embedding"]]
                for r in means.collect()}
         merged = [(cid, new.get(cid, vec)) for cid, vec in sorted(prev.items())]
         spark = corpus.sparkSession
-        cents = spark.createDataFrame(merged, ["centroid_id", vec_col])
+        cents = spark.createDataFrame(merged, ["centroid_id", "embedding"])
     return cents
 
 
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: DataFrame,
     k: int = 5,
-    num_cells: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
 ) -> DataFrame:
-    """IVF approximate top-k: corpus is partitioned into
-    ``num_cells`` inverted lists; each query scores only the
-    ``nprobe`` nearest cells' members. At scale the assigned corpus is
-    written partitioned by cell, so a probe reads nprobe/num_cells of
-    the data (partition pruning does the rest)."""
-    cents = deterministic_centroids(corpus, num_cells, id_col, vec_col)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
+    """IVF approximate top-k: corpus is partitioned into one inverted
+    list per ``centroids`` row (``deterministic_centroids``, or its
+    ``ivf_refine`` refinement); each query scores only the ``nprobe``
+    nearest cells' members. At scale the assigned corpus is written
+    partitioned by cell, so a probe reads nprobe/num_cells of the data
+    (partition pruning does the rest)."""
+    assigned = ivf_assign(corpus, centroids)
 
-    c = cents.select("centroid_id", F.col(vec_col).alias("__cvec"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    c = centroids.select("centroid_id", F.col("embedding").alias("__cvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
     q_cells = (
         q.crossJoin(F.broadcast(c))
         .withColumn("__sim", cosine(F.col("q_vec"), F.col("__cvec")))
@@ -297,11 +281,11 @@ def ivf_topk(
     )
     scored = (
         assigned.join(F.broadcast(q_cells), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("q_vec"), F.col(vec_col)), round_to).alias("cos_sim"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(cosine(F.col("q_vec"), F.col("embedding")), 4).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -312,13 +296,9 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     num_planes: int = 6,
     num_tables: int = 1,
-    round_to: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
     """ANN top-k: score only bucket-mates. Recall < 1 by design; the
     candidate join is an equi-join on (table, bucket) keys (shuffle ∝
@@ -332,13 +312,13 @@ def lsh_topk(
                 F.struct(
                     F.lit(t).alias("tbl"),
                     hyperplane_bucket(
-                        F.col(vec_col), dim, num_planes, seed=seed + 1009 * t
+                        F.col("embedding"), dim, num_planes, seed=7 + 1009 * t
                     ).alias("bucket"),
                 )
             )
         return df.select(
-            F.col(id_col).alias(id_alias),
-            F.col(vec_col).alias(vec_alias),
+            F.col("vec_id").alias(id_alias),
+            F.col("embedding").alias(vec_alias),
             F.explode(F.array(*cols)).alias("tb"),
         ).select(id_alias, vec_alias, F.col("tb.tbl").alias("tbl"),
                  F.col("tb.bucket").alias("bucket"))
@@ -353,7 +333,7 @@ def lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), round_to).alias("cos_sim"),
+            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 4).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

@@ -37,7 +37,6 @@ def salted_mean_stddev(
     value_col: str | Column,
     num_salts: int = 16,
     salt_cols: Sequence[str] | None = None,
-    out_prefix: str = "",
 ) -> DataFrame:
     """Two-phase mean + sample-stddev per entity via (n, Σx, Σx²)
     partials — algebraically exact merge, no giant single partition.
@@ -72,9 +71,9 @@ def salted_mean_stddev(
     var = (F.col("__s2") - F.col("__s1") * F.col("__s1") / n) / (n - 1)
     return merged.select(
         entity_col,
-        F.when(n >= 1, mean).otherwise(F.lit(-1.0)).alias(f"{out_prefix}mean"),
+        F.when(n >= 1, mean).otherwise(F.lit(-1.0)).alias("mean"),
         F.when(n >= 2, F.sqrt(F.greatest(var, F.lit(0.0))))
         .otherwise(F.lit(-1.0))
-        .alias(f"{out_prefix}stddev"),
-        n.alias(f"{out_prefix}n"),
+        .alias("stddev"),
+        n.alias("n"),
     )

@@ -45,7 +45,6 @@ def with_lag(
     entity_col: str,
     order_cols: Sequence[str],
     cols: Sequence[str],
-    prefix: str = "prev_",
 ) -> DataFrame:
     """Attach ``prev_<col>`` = value at the previous update of the same
     entity (reference per-diff iteration: zip(updates, updates[1:]) at
@@ -53,7 +52,7 @@ def with_lag(
     w = entity_window(entity_col, list(order_cols))
     out = df
     for c in cols:
-        out = out.withColumn(f"{prefix}{c}", F.lag(c).over(w))
+        out = out.withColumn(f"prev_{c}", F.lag(c).over(w))
     return out
 
 
@@ -62,19 +61,19 @@ def backfill(
     entity_col: str,
     order_cols: Sequence[str],
     cols: Sequence[str],
-    suffix: str = "_filled",
 ) -> DataFrame:
-    """Forward-fill: latest non-null value at-or-before each row within
-    the entity's timeline (``last(col, ignorenulls=True)`` over an
-    unbounded-preceding frame). This is also the kernel of the as-of
-    join (operators/asof.py)."""
+    """Forward-fill into ``<col>_filled``: latest non-null value
+    at-or-before each row within the entity's timeline
+    (``last(col, ignorenulls=True)`` over an unbounded-preceding
+    frame). This is also the kernel of the as-of join
+    (operators/asof.py)."""
     w = (
         entity_window(entity_col, list(order_cols))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = df
     for c in cols:
-        out = out.withColumn(f"{c}{suffix}", F.last(c, ignorenulls=True).over(w))
+        out = out.withColumn(f"{c}_filled", F.last(c, ignorenulls=True).over(w))
     return out
 
 
@@ -84,11 +83,11 @@ def sessionize(
     ts_col: str,
     gap_seconds: int,
     order_tiebreak: Sequence[str] = (),
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the time
-    since the entity's previous event exceeds ``gap_seconds``
-    (strictly: delta > gap keeps same-session at exactly `gap`).
+    """Gap-based sessionization into ``session_id``: a new session
+    starts when the time since the entity's previous event exceeds
+    ``gap_seconds`` (strictly: delta > gap keeps same-session at
+    exactly `gap`).
 
     Pure Window composition — boundary flag via lag, running sum as
     session index (0-based per entity). Generalizes the reference's
@@ -105,15 +104,15 @@ def sessionize(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn(
-        session_col, (F.sum(new_session).over(running) - F.lit(1)).cast("long")
+        "session_id", (F.sum(new_session).over(running) - F.lit(1)).cast("long")
     )
 
 
 def slot_pivot_aggs(
-    value_cols: Sequence[str], num_slots: int, slot_col: str = "__slot"
+    value_cols: Sequence[str], num_slots: int
 ) -> list[Column]:
     """First-N-updates pivot as aggregate columns ``slot{i}_{col}``
-    over a ``slot_col`` row_number (0-based) of the entity window, for
+    over a ``__slot`` row_number (0-based) of the entity window, for
     use inside the caller's groupBy(entity).
 
     Mirrors the reference's fixed ``num_updates`` column blocks where
@@ -126,7 +125,7 @@ def slot_pivot_aggs(
     (opt guide §2.4) instead of a second scan + exchange + window +
     join; no Spark ``pivot()`` second pass either (slots are static)."""
     return [
-        F.max(F.when(F.col(slot_col) == i, F.col(c))).alias(f"slot{i}_{c}")
+        F.max(F.when(F.col("__slot") == i, F.col(c))).alias(f"slot{i}_{c}")
         for i in range(num_slots)
         for c in value_cols
     ]
@@ -157,10 +156,9 @@ def rolling_time_agg(
     ts_col: str,
     agg_col: str,
     window_seconds: float,
-    aggs: Sequence[str] = ("sum", "count", "avg"),
-    prefix: str = "rolling",
 ) -> DataFrame:
-    """Trailing time-RANGE window aggregates: for every row, aggregate
+    """Trailing time-RANGE window aggregates ``rolling_sum``,
+    ``rolling_count`` and ``rolling_avg``: for every row, aggregate
     ``agg_col`` over the entity's rows with ts in
     [row.ts - window_seconds, row.ts] (both ends inclusive — matching
     SQL RANGE ... PRECEDING AND CURRENT ROW).
@@ -176,10 +174,9 @@ def rolling_time_agg(
         .orderBy(micros)
         .rangeBetween(-int(window_seconds * 1_000_000), 0)
     )
-    fns = {"sum": F.sum, "count": F.count, "avg": F.avg, "min": F.min, "max": F.max}
     out = df
-    for a in aggs:
-        out = out.withColumn(f"{prefix}_{a}", fns[a](agg_col).over(w))
+    for name, fn in (("sum", F.sum), ("count", F.count), ("avg", F.avg)):
+        out = out.withColumn(f"rolling_{name}", fn(agg_col).over(w))
     return out
 
 
@@ -188,9 +185,9 @@ def interpolate_linear(
     entity_col: str,
     ts_col: str,
     value_col: str,
-    out_col: str | None = None,
 ) -> DataFrame:
-    """Linear time-interpolation of missing values: a NULL at time t
+    """Linear time-interpolation of missing values into
+    ``<value_col>_interp``: a NULL at time t
     between the entity's previous known (t0, v0) and next known
     (t1, v1) becomes v0 + (v1 - v0)·(t - t0)/(t1 - t0). Known values
     pass through; leading/trailing NULLs (no bracket on one side) stay
@@ -198,7 +195,6 @@ def interpolate_linear(
 
     Two frames over the SAME partitioning (one shuffle): trailing
     last-known and leading first-known, both (value, ts) pairs."""
-    out_col = out_col or f"{value_col}_interp"
     micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
     known_v = F.when(F.col(value_col).isNotNull(), F.col(value_col))
     known_t = F.when(F.col(value_col).isNotNull(), micros)
@@ -219,4 +215,4 @@ def interpolate_linear(
     filled = F.when(F.col(value_col).isNotNull(), F.col(value_col)).otherwise(
         F.when(v0.isNotNull() & v1.isNotNull(), interp)
     )
-    return df.withColumn(out_col, filled)
+    return df.withColumn(f"{value_col}_interp", filled)

@@ -361,7 +361,6 @@ def compile_features(
     schema: FeatureSchema,
     res: Resources,
     training: bool = True,
-    with_weights: bool = True,
 ) -> tuple[DataFrame, list[str]]:
     """Compile the declared schema over a long-format entity-update
     DataFrame (COOKIE_UPDATE_SCHEMA shape) into a wide per-entity
@@ -369,8 +368,8 @@ def compile_features(
     assembly. Returns (wide_df, feature_names).
 
     training=True applies the reference's label-range filter
-    (processor.py:473-478). The gestalt sequence is capped at
-    GESTALT_MAX_UPDATES.
+    (processor.py:473-478) and attaches the class weights. The gestalt
+    sequence is capped at GESTALT_MAX_UPDATES.
     """
     spark = df.sparkSession
     names = schema.feature_names()
@@ -741,5 +740,5 @@ def compile_features(
 
     from cookieblock_consent_classifier_spark.plans.assemble import assemble_sparse
 
-    wide = assemble_sparse(ent, blocks, ent_pre_join, with_weights=with_weights)
+    wide = assemble_sparse(ent, blocks, ent_pre_join, with_weights=training)
     return wide, names

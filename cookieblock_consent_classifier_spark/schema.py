@@ -53,15 +53,14 @@ NUM_CLASSES = 4
 @dataclass(frozen=True)
 class FeatureSpec:
     """One declared feature = reference features.json entry
-    (processor.py:5-17): name, enable flag, sub-vector width, kwargs,
-    optional setup resource."""
+    (processor.py:5-17): name, enable flag, sub-vector width, kwargs.
+    The entry's setup resource is loaded into ``Resources`` by
+    ``sources/config.load_features_config``."""
 
     name: str
     enabled: bool = True
     vector_size: int = 1
     args: dict = field(default_factory=dict)
-    setup: str | None = None
-    source: str | None = None
     # the config entry's own "name" field — what the reference's
     # feature map prints (retrieve_feature_names_as_list uses
     # feature["name"], not the function name). None → same as `name`.

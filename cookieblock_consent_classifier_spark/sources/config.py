@@ -137,8 +137,6 @@ def load_features_config(config_path: str, base_dir: str | None = None) -> tuple
             enabled=bool(entry.get("enabled", True)),
             vector_size=int(entry.get("vector_size", 1)),
             args=dict(entry.get("args", {})),
-            setup=setup,
-            source=source,
             # the reference's feature map prints the entry's own
             # "name" (retrieve_feature_names_as_list), which need not
             # equal the engine spec name — carry it through so fmap

@@ -274,20 +274,18 @@ def cookie_json_to_rows(data: dict) -> list[tuple]:
     return rows
 
 
-def union_latest_wins(
-    dfs: Sequence[DataFrame], key_cols: Sequence[str], precedence_col: str = "__src_rank"
-) -> DataFrame:
+def union_latest_wins(dfs: Sequence[DataFrame], key_cols: Sequence[str]) -> DataFrame:
     """Union N inputs; on key collision the row from the LATEST input
     wins (reference dict-merge semantics,
     prepare_training_data.py:79). Each df is tagged with its position;
     row_number over (key) ordered by tag desc keeps the winner."""
-    tagged = [df.withColumn(precedence_col, F.lit(i)) for i, df in enumerate(dfs)]
+    tagged = [df.withColumn("__src_rank", F.lit(i)) for i, df in enumerate(dfs)]
     unioned = tagged[0]
     for t in tagged[1:]:
         unioned = unioned.unionByName(t)
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(precedence_col))
+    w = Window.partitionBy(*key_cols).orderBy(F.desc("__src_rank"))
     return (
         unioned.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", precedence_col)
+        .drop("__rn", "__src_rank")
     )

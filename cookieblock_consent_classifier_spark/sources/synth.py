@@ -71,11 +71,9 @@ def synth_image_updates(
     updates_per_entity: int = 4,
     hot_entities: int = 2,
     hot_updates: int = 64,
-    width: int = 32,
-    height: int = 32,
-    with_bytes: bool = True,
 ) -> DataFrame:
-    """One row per (image_id, update). Entity i<hot_entities gets
+    """One row per (image_id, update) of a 32x32 image, with its
+    encoded ``bytes``. Entity i<hot_entities gets
     ``hot_updates`` updates (skew probe). Timestamps: base spacing 600s
     with every 3rd gap pushed past GAP_SECONDS (session boundaries,
     including one EXACTLY at the gap → must stay in-session)."""
@@ -127,8 +125,8 @@ def synth_image_updates(
         rows.select(
             F.concat(F.lit("img_"), F.lpad(ent.cast("string"), 8, "0")).alias("image_id"),
             ts.alias("ts"),
-            F.lit(width).alias("w"),
-            F.lit(height).alias("h"),
+            F.lit(32).alias("w"),
+            F.lit(32).alias("h"),
             fmt.alias("fmt"),
             caption.alias("caption"),
             upd.alias("update_idx"),
@@ -137,13 +135,9 @@ def synth_image_updates(
     df = df.withColumn(
         "phash", _phash_udf("image_id", "update_idx", "w", "h", "fmt")
     )
-    if with_bytes:
-        df = df.withColumn(
-            "bytes", _encode_udf("image_id", "update_idx", "w", "h", "fmt")
-        )
+    df = df.withColumn("bytes", _encode_udf("image_id", "update_idx", "w", "h", "fmt"))
     return df.select(
-        "image_id", "ts", *( ["bytes"] if with_bytes else [] ),
-        "w", "h", "fmt", "caption", "phash", "update_idx",
+        "image_id", "ts", "bytes", "w", "h", "fmt", "caption", "phash", "update_idx"
     )
 
 

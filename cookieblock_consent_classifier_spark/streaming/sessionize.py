@@ -20,10 +20,9 @@ def streaming_sessionize(
     ts_col: str,
     gap_seconds: int,
     watermark: str = "1 hour",
-    aggs: list | None = None,
 ) -> DataFrame:
     """events stream → one row per closed (entity, session) window
-    with count + custom aggregates.
+    with its event count.
 
     Works identically on a batch DataFrame (session_window is
     batch-compatible), which is how the parity test pins streaming
@@ -37,7 +36,7 @@ def streaming_sessionize(
     window = F.session_window(F.col(ts_col), f"{gap_seconds} seconds")
     return (
         base.groupBy(F.col(entity_col), window)
-        .agg(F.count("*").alias("n_events"), *(aggs or []))
+        .agg(F.count("*").alias("n_events"))
         .select(
             entity_col,
             F.col("session_window.start").alias("session_start"),

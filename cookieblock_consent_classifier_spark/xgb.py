@@ -27,7 +27,7 @@ Scale design: the compiled expression path is a pure column
 expression — zero shuffle, whole-stage codegen, scan-speed at any
 row count. Expression size grows with ensemble size, so
 ``dump_score_fn`` auto-switches to the Arrow kernel (one pandas UDF,
-numpy tree walk per batch) above ``max_expr_nodes`` total dump nodes;
+numpy tree walk per batch) above ``MAX_EXPR_NODES`` total dump nodes;
 both paths are pinned equal in tests/test_xgb.py.
 """
 
@@ -151,11 +151,11 @@ def softmax_cols(margins: list[Column]) -> Column:
     return F.array(*[e / total for e in exps])
 
 
-def sparse_feat(indices_col: str = "indices", values_col: str = "values") -> FeatCol:
+def sparse_feat() -> FeatCol:
     """Sparse-row lookup over the engine's (indices array<int>,
     values array<double>) columns: one map_from_arrays, then NULL-safe
     per-index probes (try_element_at — ANSI element_at throws)."""
-    m = F.map_from_arrays(F.col(indices_col), F.col(values_col))
+    m = F.map_from_arrays(F.col("indices"), F.col("values"))
     return lambda idx: F.try_element_at(m, F.lit(int(idx)))
 
 
@@ -246,7 +246,7 @@ def probs_kernel_udf(class_forests: list[list[dict]], fmt: str = "full"):
 # nested CaseWhen projections leave codegen's fast path — and driver
 # compile grows linearly (~14s at 2k nodes). The expression path is
 # for small/fixture models where plan purity (zero Python) matters.
-DEFAULT_MAX_EXPR_NODES = 256
+MAX_EXPR_NODES = 256
 
 
 def forest_features(class_forests: list[list[dict]], fmt: str = "full") -> list[int]:
@@ -269,7 +269,6 @@ def forest_features(class_forests: list[list[dict]], fmt: str = "full") -> list[
 def dump_score_fn(
     model_dump: list[dict] | list[list[dict]],
     fmt: str = "full",
-    max_expr_nodes: int = DEFAULT_MAX_EXPR_NODES,
 ) -> Callable[[DataFrame], Column | tuple[DataFrame, Column]]:
     """score_fn for predict.predict(): sparse feature rows →
     array<double> softmax probabilities.
@@ -278,6 +277,9 @@ def dump_score_fn(
     JSON dump (round-robin class assignment). ``fmt="sparse"``:
     model_dump is already a list of per-class forests (one minimal
     dump file per class, xgbpredictor_sparsedump.py:117-128).
+
+    A dump of at most ``MAX_EXPR_NODES`` nodes compiles to expressions;
+    a larger one scores in the Arrow kernel.
 
     The expression path returns (augmented_df, probs): each DISTINCT
     feature the forest references is extracted ONCE into a ``__xf_i``
@@ -294,11 +296,11 @@ def dump_score_fn(
         forests = list(model_dump)
         if len(forests) != NUM_CLASSES:
             raise ValueError(f"expected {NUM_CLASSES} per-class forests, got {len(forests)}")
-    total_nodes = sum(count_nodes(t) for f in forests for t in f)
+    as_expr = sum(count_nodes(t) for f in forests for t in f) <= MAX_EXPR_NODES
     feats_used = forest_features(forests, fmt)
 
     def score(assembled: DataFrame) -> Column | tuple[DataFrame, Column]:
-        if total_nodes <= max_expr_nodes:
+        if as_expr:
             lookup = sparse_feat()
             aug = assembled.select(
                 "*", *[lookup(i).alias(f"__xf_{i}") for i in feats_used]

@@ -19,10 +19,12 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema
 from cookieblock_consent_classifier_spark.session import get_spark

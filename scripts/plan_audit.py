@@ -17,10 +17,12 @@ Writes PLAN_AUDIT.md. Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from cookieblock_consent_classifier_spark.session import get_spark
@@ -85,7 +87,7 @@ def main() -> None:
         if r.get("rowwise_python", 0) > 0 or r.get("python_rdd_scans", 0) > 0
         or r.get("cartesian", 0) > 0
     ]
-    with open("/root/repo/PLAN_AUDIT.md", "w", encoding="utf-8") as fd:
+    with open(os.path.join(ROOT, "PLAN_AUDIT.md"), "w", encoding="utf-8") as fd:
         fd.write(
             "# PLAN_AUDIT — AQE-final physical plans of every queries() entry\n\n"
             f"sf_dir: {sf_dir}. Node counts per query; flags: row-at-a-time\n"

@@ -11,14 +11,17 @@ from cookieblock_consent_classifier_spark.functions import audio as A
 
 def test_wav_roundtrip_and_foreign_layout():
     tone = A.synth_tone("e1", 440.0)
-    payload = A.encode_wav_pcm16(tone, 16000)
+    payload = A.encode_wav_pcm16(tone)
     assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
     samples, sr = A.decode_wav_pcm16(payload)
     assert sr == 16000 and samples.shape == (len(tone), 1)
     assert np.allclose(samples[:, 0], tone / 32768.0)
     # stereo + an extra chunk before data (foreign writers do this)
     stereo = np.stack([tone, -tone], axis=1)
-    p2 = bytearray(A.encode_wav_pcm16(stereo, 8000))
+    p2 = bytearray(A.encode_wav_pcm16(stereo))
+    # a foreign writer's 8 kHz header: sample rate and byte rate
+    fmt_at = p2.find(b"fmt ")
+    p2[fmt_at + 12:fmt_at + 20] = (8000).to_bytes(4, "little") + (8000 * 2 * 2).to_bytes(4, "little")
     # splice a LIST chunk between fmt and data
     insert_at = p2.find(b"data")
     extra = b"LIST" + (4).to_bytes(4, "little") + b"INFO"
@@ -41,10 +44,10 @@ def test_non_pcm_raises():
 
 def test_audio_features_values():
     sr = 16000
-    tone = A.synth_tone("e2", 1000.0, seconds=0.5, amplitude=0.5)
-    samples, _ = A.decode_wav_pcm16(A.encode_wav_pcm16(tone, sr))
+    tone = A.synth_tone("e2", 1000.0)  # 0.25 s at amplitude 0.5
+    samples, _ = A.decode_wav_pcm16(A.encode_wav_pcm16(tone))
     d, srate, ch, rms, peak, zcr, clip = A.audio_features(samples, sr)
-    assert d == pytest.approx(0.5)
+    assert d == pytest.approx(0.25)
     assert srate == sr and ch == 1
     # sine RMS = A/sqrt(2); A = 0.5
     assert rms == pytest.approx(0.5 / np.sqrt(2), rel=1e-3)

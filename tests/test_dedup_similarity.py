@@ -159,7 +159,7 @@ def test_lsh_near_dup_recall(spark, embeddings):
     assert recall >= 0.85, recall  # measured 0.939 for 3 planes x 12 tables
 
 
-def test_connected_components_known_graph(spark):
+def test_connected_components_known_graph(spark, monkeypatch):
     """Chain + pair + triangle + long path (forces multiple
     propagation rounds) → exact component assignment."""
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (20, 22)]
@@ -167,10 +167,10 @@ def test_connected_components_known_graph(spark):
     df = spark.createDataFrame(edges, ["a", "b"])
     # exercise BOTH execution paths: driver union-find (default
     # threshold) and the distributed min-label loop (threshold=0)
-    for thresh in (1_000_000, 0):
+    for thresh in (dedup.CC_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", thresh)
         got = {r["node"]: r["component"]
-               for r in dedup.connected_components(
-                   df, small_graph_threshold=thresh).collect()}
+               for r in dedup.connected_components(df).collect()}
         _check(got)
 
 
@@ -221,9 +221,9 @@ def test_lsh_topk_recall(spark, embeddings):
     assert recall >= 0.85, recall
 
 
-def test_connected_components_distributed_multi_round(spark):
+def test_connected_components_distributed_multi_round(spark, monkeypatch):
     """Force the DISTRIBUTED min-label + pointer-jumping path
-    (small_graph_threshold=0) on a 64-node chain + a disjoint
+    (CC_DRIVER_MAX_EDGES=0) on a 64-node chain + a disjoint
     triangle: the chain needs multiple propagation rounds (>= 3 even
     with pointer jumping), and the result must equal the driver
     union-find path exactly."""
@@ -232,7 +232,9 @@ def test_connected_components_distributed_multi_round(spark):
     edges = spark.createDataFrame(chain + tri, ["a", "b"])
 
     dist_stats: dict = {}
-    dist = dedup.connected_components(edges, small_graph_threshold=0, stats=dist_stats)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+        dist = dedup.connected_components(edges, stats=dist_stats)
     drv_stats: dict = {}
     drv = dedup.connected_components(edges, stats=drv_stats)
 
@@ -247,7 +249,7 @@ def test_connected_components_distributed_multi_round(spark):
     assert dist_stats["edges"] == drv_stats["edges"] == 66
     # a 64-chain cannot converge in 2 rounds even with pointer jumping
     # (label reach grows a constant factor per round), and must
-    # converge well inside the max_iters bound
+    # converge well inside the CC_MAX_ROUNDS bound
     assert 3 <= dist_stats["rounds"] <= 12, dist_stats
 
 
@@ -321,8 +323,8 @@ def test_minhash_two_stage_matches_inline(spark):
         assert got == want, k
 
 
-def test_lsh_bucket_cap_pathological(spark):
-    """Round-7 giant-bucket defense (max_bucket_size): 5,000 identical
+def test_lsh_bucket_cap_pathological(spark, monkeypatch):
+    """Round-7 giant-bucket defense (LSH_MAX_BUCKET_SIZE): 5,000 identical
     docs collapse into single LSH buckets per band; uncapped that is
     ~12.5M pairs in one task's explode. With the cap the pair count is
     bounded, deterministic, and the drop is surfaced via stats."""
@@ -333,17 +335,18 @@ def test_lsh_bucket_cap_pathological(spark):
     sig = dedup.minhash_signatures(docs, "text", "doc_id", num_hashes=8)
     bands = dedup.lsh_bands(sig, "doc_id", num_hashes=8, band_size=2)
     stats: dict = {}
-    pairs = dedup.lsh_candidate_pairs(
-        bands, "doc_id", max_bucket_size=40, stats=stats
-    )
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET_SIZE", 40)
+    pairs = dedup.lsh_candidate_pairs(bands, "doc_id", stats=stats)
     rows = pairs.collect()
     assert len(rows) == 40 * 39 // 2  # identical sample in all 4 bands
     assert all(r["a"] < r["b"] for r in rows)
     assert stats == {"capped_buckets": 4, "dropped_members": 4 * (5000 - 40)}
     # deterministic across runs
-    again = dedup.lsh_candidate_pairs(bands, "doc_id", max_bucket_size=40)
+    again = dedup.lsh_candidate_pairs(bands, "doc_id")
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again.collect()))
-    # under-cap buckets are untouched: default cap reproduces uncapped
+    monkeypatch.undo()
+    # under-cap buckets are untouched: the default cap returns every
+    # in-bucket pair
     small = spark.createDataFrame(
         [(i, f"doc number {i} shares trigram prefix doc number") for i in range(8)],
         ["doc_id", "text"],
@@ -351,6 +354,10 @@ def test_lsh_bucket_cap_pathological(spark):
     ssig = dedup.minhash_signatures(small, "text", "doc_id", num_hashes=8)
     sbands = dedup.lsh_bands(ssig, "doc_id", num_hashes=8, band_size=2)
     capped = sorted(map(tuple, dedup.lsh_candidate_pairs(sbands, "doc_id").collect()))
-    uncapped = sorted(map(tuple, dedup.lsh_candidate_pairs(
-        sbands, "doc_id", max_bucket_size=None).collect()))
-    assert capped == uncapped
+    buckets: dict = {}
+    for r in sbands.collect():
+        buckets.setdefault((r["band"], r["band_key"]), set()).add(r["doc_id"])
+    every_pair = {
+        (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+    }
+    assert every_pair and capped == sorted(every_pair)

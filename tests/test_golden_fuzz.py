@@ -122,7 +122,7 @@ def test_golden_fuzz_allclose(spark, fuzz_setup, seed):
 
     schema, res = load_features_config(cfg_path, base_dir=REF)
     df = spark.createDataFrame(cookie_json_to_rows(data), COOKIE_UPDATE_SCHEMA)
-    wide, names = compile_features(df, schema, res, training=False, with_weights=False)
+    wide, names = compile_features(df, schema, res, training=False)
     got = {}
     for r in wide.collect():
         v = np.zeros(len(names))

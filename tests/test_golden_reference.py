@@ -81,7 +81,7 @@ def test_feature_names_byte_exact(ref_module, abs_config, engine_config):
 def _engine_dense(spark, data, schema, res):
     rows = cookie_json_to_rows(data)
     df = spark.createDataFrame(rows, COOKIE_UPDATE_SCHEMA)
-    wide, names = compile_features(df, schema, res, training=False, with_weights=False)
+    wide, names = compile_features(df, schema, res, training=False)
     out = {}
     for r in wide.collect():
         v = np.zeros(len(names))
@@ -156,7 +156,7 @@ def test_golden_training_mode_labels_and_weights(spark, ref_module, abs_config, 
     schema, res = engine_config
     rows = cookie_json_to_rows(data)
     df = spark.createDataFrame(rows, COOKIE_UPDATE_SCHEMA)
-    wide, names = compile_features(df, schema, res, training=True, with_weights=True)
+    wide, names = compile_features(df, schema, res, training=True)
     got = {r["entity_id"]: r for r in wide.collect()}
     assert set(got) == set(keys)
 

@@ -8,6 +8,7 @@ constants), and the marker structure is asserted here byte-level."""
 from __future__ import annotations
 
 import struct
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -94,14 +95,17 @@ def test_quality_knob_trades_size_for_fidelity():
 
 
 def test_image_dispatch_routes_jpeg_and_legacy():
-    """encode_image/decode_image dispatch: fmt='jpeg' emits real JFIF;
-    PNG and the legacy SGIM stand-in container still decode."""
+    """encode_image/decode_image dispatch: fmt='jpeg' emits real JFIF,
+    fmt='png' a lossless PNG; any other container, such as the SGIM
+    stand-in, raises."""
     px = synth_pixels("jpeg_disp", 3, 20, 12)
     enc = encode_image(px, "jpeg")
     assert enc[:2] == b"\xff\xd8"
     assert psnr(px, decode_image(enc)) >= 40.0
+    assert np.array_equal(decode_image(encode_image(px, "png")), px)
     legacy = b"SGIM" + struct.pack("<II", 4, 4) + bytes(range(16))
-    assert decode_image(legacy).shape == (4, 4)
+    with pytest.raises(ValueError):
+        decode_image(legacy)
 
 
 # -- property fuzz (hypothesis) ---------------------------------------
@@ -269,6 +273,13 @@ def test_encode_image_batch_matches_per_image():
     assert batch == single
 
 
+def _decode_loop(enc: bytes) -> np.ndarray:
+    """decode_jpeg_gray with the per-symbol spec reader in place of
+    the table-driven huffman stage."""
+    with mock.patch.object(jpeg, "_decode_entropy_fast", jpeg._decode_entropy_loop):
+        return jpeg.decode_jpeg_gray(enc)
+
+
 def test_fast_entropy_decoder_identical_on_corpus():
     """Round 6 (VERDICT r5 item 2): the table-driven entropy decoder
     (_decode_entropy_fast: one vectorized unstuff pass, per-byte
@@ -279,8 +290,8 @@ def test_fast_entropy_decoder_identical_on_corpus():
     qualities."""
     for px, q in _psnr_corpus():
         enc = jpeg.encode_jpeg_gray(px, quality=q)
-        fast = jpeg.decode_jpeg_gray(enc, _entropy="fast")
-        loop = jpeg.decode_jpeg_gray(enc, _entropy="loop")
+        fast = jpeg.decode_jpeg_gray(enc)
+        loop = _decode_loop(enc)
         assert np.array_equal(fast, loop), (px.shape, q)
 
 
@@ -296,10 +307,7 @@ def test_fast_entropy_decoder_fuzz_identical(h, w, seed, quality):
     rng = np.random.default_rng(seed)
     px = rng.integers(0, 256, (h, w)).astype(np.uint8)
     enc = jpeg.encode_jpeg_gray(px, quality=quality)
-    assert np.array_equal(
-        jpeg.decode_jpeg_gray(enc, _entropy="fast"),
-        jpeg.decode_jpeg_gray(enc, _entropy="loop"),
-    )
+    assert np.array_equal(jpeg.decode_jpeg_gray(enc), _decode_loop(enc))
 
 
 def test_fast_decoder_rejects_truncated_scans():
@@ -314,9 +322,9 @@ def test_fast_decoder_rejects_truncated_scans():
     scan_start = sos + 2 + struct.unpack(">H", enc[sos + 2:sos + 4])[0]
     for cut in (scan_start + 2, scan_start + 8, len(enc) - 12):
         mutant = enc[:cut] + b"\xff\xd9"
-        for impl in ("fast", "loop"):
+        for decode in (jpeg.decode_jpeg_gray, _decode_loop):
             with pytest.raises(ValueError):
-                jpeg.decode_jpeg_gray(mutant, _entropy=impl)
+                decode(mutant)
 
 
 def test_fast_decoder_speedup_on_corpus():
@@ -330,16 +338,17 @@ def test_fast_decoder_speedup_on_corpus():
     streams = [jpeg.encode_jpeg_gray(px, quality=q) for px, q in _psnr_corpus()]
     # warm both paths (decode-table cache, numpy)
     for enc in streams[:4]:
-        jpeg.decode_jpeg_gray(enc, _entropy="fast")
-        jpeg.decode_jpeg_gray(enc, _entropy="loop")
+        jpeg.decode_jpeg_gray(enc)
+        _decode_loop(enc)
     t_fast = t_loop = float("inf")
     for _ in range(3):
         t0 = time.perf_counter()
         for enc in streams:
-            jpeg.decode_jpeg_gray(enc, _entropy="fast")
+            jpeg.decode_jpeg_gray(enc)
         t_fast = min(t_fast, time.perf_counter() - t0)
         t0 = time.perf_counter()
-        for enc in streams:
-            jpeg.decode_jpeg_gray(enc, _entropy="loop")
+        with mock.patch.object(jpeg, "_decode_entropy_fast", jpeg._decode_entropy_loop):
+            for enc in streams:
+                jpeg.decode_jpeg_gray(enc)
         t_loop = min(t_loop, time.perf_counter() - t0)
     assert t_loop / t_fast >= 2.5, (t_loop, t_fast)

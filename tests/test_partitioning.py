@@ -14,7 +14,7 @@ def test_date_partitioned_scan_prunes(spark, tmp_path):
     a day-filtered query must only scan that day's partition (pinned
     via PartitionFilters + the input files actually read)."""
     im = synth_image_updates(spark, num_entities=20, updates_per_entity=3,
-                             hot_entities=0, with_bytes=False)
+                             hot_entities=0).drop("bytes")
     path = str(tmp_path / "img_part")
     im.withColumn("dt", F.to_date("ts")).write.partitionBy("dt").parquet(path)
 
@@ -75,12 +75,11 @@ def test_bucketed_input_zero_exchange_feature_pipeline(spark, tmp_path):
         per_diff=(FeatureSpec("time_difference"), FeatureSpec("lev_distance")),
     )
     res = fixture_resources()
-    # with_weights=False: the inverse-class-frequency weight join is a
+    # training=False: the inverse-class-frequency weight join is a
     # tiny LABEL-keyed side computation (per-entity cardinality, ~4
     # rows after its aggregates) whose exchanges are unrelated to the
     # entity shuffle this test pins
-    wide_b, names = compile_features(bucketed, schema, res, training=True,
-                                     with_weights=False)
+    wide_b, names = compile_features(bucketed, schema, res, training=False)
 
     plan = wide_b._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
@@ -88,8 +87,7 @@ def test_bucketed_input_zero_exchange_feature_pipeline(spark, tmp_path):
     assert "ArrowEvalPython" not in plan, plan  # native-only: kernel pruned
     assert "Bucketed: true" in plan, plan
 
-    wide_u, _ = compile_features(df, schema, res, training=True,
-                                 with_weights=False)
+    wide_u, _ = compile_features(df, schema, res, training=False)
     got = {r["entity_id"]: (list(r["indices"]), [round(v, 9) for v in r["values"]])
            for r in wide_b.collect()}
     want = {r["entity_id"]: (list(r["indices"]), [round(v, 9) for v in r["values"]])

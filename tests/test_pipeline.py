@@ -345,10 +345,11 @@ def test_single_entity_shuffle(spark):
     (window + groupBy share the partitioning); broadcasts excluded."""
     df = spark.createDataFrame(_rows(), COOKIE_UPDATE_SCHEMA)
     schema = default_schema(RES)
-    # weights add a second (label-keyed) branch that re-reads the same
-    # subtree; AQE reuses that exchange at runtime. The invariant we
-    # pin here: the CORE pipeline needs exactly one entity shuffle.
-    wide, _ = compile_features(df, schema, RES, with_weights=False)
+    # training weights add a second (label-keyed) branch that re-reads
+    # the same subtree; AQE reuses that exchange at runtime. The
+    # invariant we pin here: the CORE pipeline needs exactly one entity
+    # shuffle.
+    wide, _ = compile_features(df, schema, RES, training=False)
     plan = wide._jdf.queryExecution().executedPlan().toString()
     n_hash_exchanges = plan.count("Exchange hashpartitioning(entity_id")
     assert n_hash_exchanges == 1, plan[:2000]

@@ -20,7 +20,8 @@ def test_ivf_assign_deterministic_and_total(spark, embeddings):
 
 def test_ivf_topk_consistent_with_bruteforce(spark, embeddings):
     q = embeddings.filter(F.col("vec_id") < 5)
-    ivf = similarity.ivf_topk(embeddings, q, k=5, num_cells=4, nprobe=4)
+    cents = similarity.deterministic_centroids(embeddings, 4)
+    ivf = similarity.ivf_topk(embeddings, q, cents, k=5, nprobe=4)
     bf = similarity.brute_force_topk(embeddings, q, k=embeddings.count())
     # with nprobe == num_cells, IVF probes everything -> must equal
     # brute-force top-5 exactly
@@ -31,7 +32,8 @@ def test_ivf_topk_consistent_with_bruteforce(spark, embeddings):
 
 def test_ivf_topk_partial_probe_is_subset(spark, embeddings):
     q = embeddings.filter(F.col("vec_id") < 3)
-    ivf = similarity.ivf_topk(embeddings, q, k=5, num_cells=8, nprobe=2)
+    cents = similarity.deterministic_centroids(embeddings, 8)
+    ivf = similarity.ivf_topk(embeddings, q, cents, k=5, nprobe=2)
     bf = similarity.brute_force_topk(embeddings, q, k=embeddings.count())
     joined = ivf.alias("a").join(
         bf.alias("b"),

@@ -16,7 +16,7 @@ from pathlib import Path
 
 import pytest
 
-REPO = Path("/root/repo")
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _make_pkg_zip(dest: Path) -> Path:

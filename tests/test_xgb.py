@@ -15,6 +15,8 @@ same construction the driver's correctness gate runs through the
 
 from __future__ import annotations
 
+from unittest import mock
+
 import duckdb
 import numpy as np
 import pytest
@@ -91,6 +93,13 @@ def _reference_full(rows):
     return probs, decisions
 
 
+def _kernel_score_fn(dump, fmt: str = "full"):
+    """dump_score_fn forced onto the Arrow kernel path (no dump is
+    small enough for expressions when MAX_EXPR_NODES is 0)."""
+    with mock.patch.object(xgb, "MAX_EXPR_NODES", 0):
+        return xgb.dump_score_fn(dump, fmt=fmt)
+
+
 def _engine_scored(sparse_df, score_fn, decision: str = "bayes"):
     """decision="bayes": equal-loss bayesian (full-dump reference,
     xgbpredictor_dump.py:153); "argmax": probs.index(max) (sparse-dump
@@ -121,7 +130,7 @@ def test_full_dump_expression_path_matches_reference(spark, sparse_df, rows):
 def test_full_dump_kernel_path_matches_reference(spark, sparse_df, rows):
     ref_probs, ref_dec = _reference_full(rows)
     probs, dec = _engine_scored(
-        sparse_df, xgb.dump_score_fn(xgb.fixture_dump(), max_expr_nodes=0)
+        sparse_df, _kernel_score_fn(xgb.fixture_dump())
     )
     np.testing.assert_allclose(probs, ref_probs, rtol=1e-12, atol=1e-15)
     np.testing.assert_array_equal(dec, ref_dec)
@@ -163,7 +172,7 @@ def test_sparse_dump_kernel_path_matches_reference(spark, sparse_df, rows):
     ref_probs, ref_dec = _reference_sparse(rows)
     probs, dec = _engine_scored(
         sparse_df,
-        xgb.dump_score_fn(sparse_fixture(), fmt="sparse", max_expr_nodes=0),
+        _kernel_score_fn(sparse_fixture(), fmt="sparse"),
         decision="argmax",
     )
     np.testing.assert_allclose(probs, ref_probs, rtol=1e-12, atol=1e-15)
@@ -271,7 +280,7 @@ def test_nan_values_route_right_on_all_paths(spark):
     ref_probs, ref_dec = _reference_full(rows)
     expr_probs, expr_dec = _engine_scored(df, xgb.dump_score_fn(xgb.fixture_dump()))
     kern_probs, kern_dec = _engine_scored(
-        df, xgb.dump_score_fn(xgb.fixture_dump(), max_expr_nodes=0)
+        df, _kernel_score_fn(xgb.fixture_dump())
     )
     np.testing.assert_allclose(expr_probs, ref_probs, rtol=1e-12, atol=1e-15)
     np.testing.assert_allclose(kern_probs, ref_probs, rtol=1e-12, atol=1e-15)
@@ -281,7 +290,7 @@ def test_nan_values_route_right_on_all_paths(spark):
     # NOT the recorded default branch)
     sp = sparse_fixture()
     e_p, _ = _engine_scored(df, xgb.dump_score_fn(sp, fmt="sparse"))
-    k_p, _ = _engine_scored(df, xgb.dump_score_fn(sp, fmt="sparse", max_expr_nodes=0))
+    k_p, _ = _engine_scored(df, _kernel_score_fn(sp, fmt="sparse"))
     np.testing.assert_allclose(k_p, e_p, rtol=1e-12, atol=1e-15)
 
 
@@ -316,10 +325,10 @@ def test_null_values_expression_missing_kernel_nan_collapse(spark):
         expr_missing, _ = _engine_scored(df_missing, xgb.dump_score_fn(dump, fmt=fmt))
         np.testing.assert_allclose(expr_null, expr_missing, rtol=1e-12, atol=1e-15)
         kern_null, _ = _engine_scored(
-            df_null, xgb.dump_score_fn(dump, fmt=fmt, max_expr_nodes=0)
+            df_null, _kernel_score_fn(dump, fmt=fmt)
         )
         kern_nan, _ = _engine_scored(
-            df_nan, xgb.dump_score_fn(dump, fmt=fmt, max_expr_nodes=0)
+            df_nan, _kernel_score_fn(dump, fmt=fmt)
         )
         np.testing.assert_allclose(kern_null, kern_nan, rtol=1e-12, atol=1e-15)
 
@@ -366,7 +375,7 @@ def test_kernel_scoring_runs_unchanged_on_a_stream(spark, tmp_path, rows):
         rows, "entity_id long, indices array<int>, values array<double>"
     )
     df.write.parquet(src)
-    score = xgb.dump_score_fn(xgb.fixture_dump(), max_expr_nodes=0)  # kernel path
+    score = _kernel_score_fn(xgb.fixture_dump())  # kernel path
     batch = {
         r["entity_id"]: r["probs"]
         for r in P.predict(df, score_fn=score, loss=P.EQUAL_LOSS).collect()

@@ -2025,7 +2025,7 @@ def _pipeline_oracle_sql() -> str:
         "same_site": [pmb(f"same_site = '{c}'") for c in ("no_restriction", "lax", "strict")],
         "expiry": ["CAST(expiry AS DOUBLE)"],
         "expiry_extra": bucket_exprs,
-        # decoded-content natives (NATIVE_CAPABLE_PER_UPDATE): the
+        # decoded-content natives (built from the compiler's ``dec``): the
         # twin decodes branch-'8' escapes via the shared
         # EVENTS_VALUE_ESCAPES replace chain (== py_unquote on this
         # controlled domain), then applies the SAME reference regex

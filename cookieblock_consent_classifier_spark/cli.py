@@ -124,15 +124,11 @@ def main(argv: list[str] | None = None) -> None:
         # is in the fingerprint: a rewritten input recomputes
         src = pipe.stage("scan", lambda df: df, upstream=spark.read.parquet(args.input))
 
-    names_holder: list[list[str]] = []
-
-    def extract(df):
-        wide, names = compile_features(df, schema, res, training=training)
-        names_holder.append(names)
-        return wide
-
-    feat = pipe.stage("extract", extract, upstream=src.df, upstream_fingerprint="scan")
-    names = names_holder[0] if names_holder else schema.feature_names()
+    feat = pipe.stage(
+        "extract", lambda df: compile_features(df, schema, res, training=training)[0],
+        upstream=src.df, upstream_fingerprint="scan",
+    )
+    names = schema.feature_names()
 
     if args.mode == "train":
         # train -> dump -> (servable by --mode predict --model-dump):

@@ -115,22 +115,23 @@ def audio_features_udf(payload: pd.Series) -> pd.DataFrame:
                         index=payload.index)
 
 
-# Non-deterministic marking (opt guide §4.4): a filter on a feature
-# field (e.g. rms > 0.1) otherwise gets predicate-pushed BELOW the
-# projection, and Catalyst duplicates the whole decode+featurize chain
-# — two ArrowEvalPython nodes, every row decoded twice (observed in
-# the audio_pipeline plan). The function IS deterministic; the
-# marking only forbids the optimizer from duplicating/reordering it.
-audio_features_udf = audio_features_udf.asNondeterministic()
-
-
 def extract_audio_features(df: DataFrame) -> DataFrame:
     """Append the audio feature struct fields of the ``bytes`` column
     to the frame (the multimodal decode→featurize pass: one decode
     feeds every feature)."""
     from pyspark.sql import functions as F
 
-    out = df.withColumn("__af", audio_features_udf(F.col("bytes")))
+    # Non-deterministic marking at this call site only (opt guide
+    # §4.4): a filter on a feature field (e.g. rms > 0.1) otherwise
+    # gets predicate-pushed BELOW the projection, and Catalyst
+    # duplicates the whole decode+featurize chain — two
+    # ArrowEvalPython nodes, every row decoded twice. The function IS
+    # deterministic; the marking only forbids the optimizer from
+    # duplicating/reordering it here. asNondeterministic() mutates the
+    # UDF it is called on, so it gets a fresh one and the exported
+    # audio_features_udf stays deterministic.
+    udf = pandas_udf(audio_features_udf.func, audio_features_udf.returnType).asNondeterministic()
+    out = df.withColumn("__af", udf(F.col("bytes")))
     for f in AUDIO_FEATURE_FIELDS:
         out = out.withColumn(f.name, F.col("__af")[f.name])
     return out.drop("__af")

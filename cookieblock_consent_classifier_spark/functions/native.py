@@ -166,9 +166,11 @@ def hex_content(col: str | Column) -> Column:
     needs EVERY char numeric). Case (b) trailing '\\n': isnumeric is
     False (newline is not numeric) and strict NUM_PAT doesn't match
     either (\\z, no \\n allowance) — both sides say "not numeric", so
-    the feature fires +1 exactly like the reference. Kernel-parity
-    pinned incl. terminator cases (tests/test_native_entropy.py);
-    NATIVE_CAPABLE since round 6."""
+    the feature fires +1 exactly like the reference. So this form
+    equals the kernel's ``pm(dec ~ HEX_PAT and is_numeric == -1)`` on
+    every input, and it is the compiler's one hex_content builder on
+    both the kernel and the native path. Parity pinned incl.
+    terminator cases (tests/test_native_entropy.py)."""
     c = _c(col)
     return pm(c.rlike(HEX_PAT) & ~c.rlike(NUM_PAT))
 

@@ -402,6 +402,13 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
     path to a single batch pass. Each field's semantics are those of
     the scalar ``_py_*`` helpers above; the parity tests read the
     fields directly.
+
+    Two fields are the compiler's fork inputs: ``dec`` and
+    ``entropy``. When the kernel runs they replace the native
+    py_unquote / char_entropy columns; every feature built from them
+    (lengths, hex/url/date/uuid/timestamp regexes) is a native
+    expression on either path. Every other field is a genuinely-Python
+    computation with no native twin.
     """
     import re
 
@@ -414,11 +421,9 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
             # malformed %-escape — both diverge from Python unquote
             # (the reference decodes with unquote everywhere).
             T.StructField("dec", T.StringType()),
-            T.StructField("dec_len", T.DoubleType()),  # utf-8 bytes of dec
             T.StructField("zlib_len", T.DoubleType()),
             T.StructField("entropy", T.DoubleType()),
             T.StructField("b64_valid", T.BooleanType()),
-            T.StructField("is_empty", T.DoubleType()),
             T.StructField("js_obj", T.DoubleType()),
             T.StructField("bool_content", T.DoubleType()),
             T.StructField("is_numeric", T.DoubleType()),
@@ -461,8 +466,6 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
                 ent = -sum((c / n) * math.log2(c / n) for c in cnt.values())
             b64 = _py_b64_decodable(dec)
             pm = lambda b: 1.0 if b else -1.0  # noqa: E731
-            # feature_empty_content (processor.py:1376-1384): RAW value
-            empty = pm(not v or v.isspace())
             # ONE lenient base64 decode shared by the js-object shape
             # check and the js-content parse gate (each used to decode
             # independently)
@@ -509,7 +512,7 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
                 + [i for c, i in re_terms if c.search(dec)]
             )
             return (
-                dec, float(len(enc)), zl, ent, b64, empty, jso, boolc,
+                dec, zl, ent, b64, jso, boolc,
                 pm(dec.isnumeric()), pm(dec.isalpha()), pm(dec.isupper()),
                 pm(dec.islower()),
                 pm(dec.isidentifier() and not dec.isalpha() and not dec.isnumeric()),

@@ -24,7 +24,7 @@ Feature semantics cite /root/reference/feature_extraction/*.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -53,7 +53,6 @@ class Block:
     order. Either ``fixed`` (width scalar columns; NULL → absent) or
     ``ranks`` (array<int> of fired offsets, each valued 1.0)."""
 
-    name: str
     width: int
     kind: str = "fixed"  # "fixed" | "ranks"
     cols: list[Column] = field(default_factory=list)
@@ -136,34 +135,23 @@ def default_schema(res: Resources, num_updates: int = 1, num_diffs: int = 1) -> 
 # (NULL = absent = sparse zero). Encoding: true→1.0 false→−1.0.
 # ---------------------------------------------------------------------------
 
-def _per_update_builders(
-    use_kernel: bool = True,
-) -> dict[str, Callable[[dict], list[Column] | Column]]:
+def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]:
     """Maps spec name → builder(ctx). ``ctx`` carries the raw update
-    columns plus ``k`` — the FUSED Python kernel struct
-    (vectorized.content_kernel_udf): one Arrow round-trip computes
-    every non-native metric, builders just project its fields. A
-    builder returns a list of fixed Columns, or for rank-multihot
-    features a single array<int> Column.
+    columns, the two per-value inputs that compile_features sources
+    from either physical path — ``dec`` (the Python-unquote decoded
+    value) and ``entropy`` (its char entropy) — and ``k``, the FUSED
+    Python kernel struct (vectorized.content_kernel_udf) that the
+    KERNEL_ONLY_PER_UPDATE builders project. One builder per feature,
+    whichever path supplies ``dec`` and ``entropy``. A builder returns
+    a list of fixed Columns, or for rank-multihot features a single
+    array<int> Column.
 
-    ``use_kernel=False`` swaps each NATIVE_CAPABLE_PER_UPDATE builder
-    for its pure-Catalyst form (ctx's ``nat_entropy`` column, computed
-    once in stage 0) — chosen by compile_features when no enabled
-    feature needs the Arrow kernel, so the plan stays zero-Python."""
+    ``dec`` has Python-unquote semantics — NOT F.try_url_decode (Java
+    URLDecoder: '+'→space, malformed %-escape→NULL; both diverge from
+    the reference's unquote)."""
     v = lambda c: c["value"]  # noqa: E731
     k = lambda c: c["k"]  # noqa: E731
-
-    def decoded(c):
-        # Python-unquote semantics — NOT F.try_url_decode (Java
-        # URLDecoder: '+'→space, malformed %-escape→NULL; both diverge
-        # from the reference's unquote). Sourced from the fused
-        # kernel's dec field when the kernel exists, else from the
-        # stage-0 native.py_unquote column (byte-exact CPython twin).
-        return k(c)["dec"] if use_kernel else c["nat_dec"]
-
-    def compressed(c):
-        # compressed size + reduction (processor.py:1061-1081)
-        return [k(c)["zlib_len"], (k(c)["dec_len"] - k(c)["zlib_len"]).cast("double")]
+    dec = lambda c: c["dec"]  # noqa: E731
 
     def delimiter_sep(c):
         # 9-wide: chosen delimiter slot = token count, others −1
@@ -174,29 +162,6 @@ def _per_update_builders(
             for i in range(len(V.DELIMITERS))
         ]
 
-    entropy_builder = (
-        (lambda c: [k(c)["entropy"]]) if use_kernel
-        else (lambda c: [c["nat_entropy"]])
-    )
-    content_length_builder = (
-        (lambda c: [k(c)["dec_len"]]) if use_kernel
-        else (lambda c: [F.octet_length(c["nat_dec"]).cast("double")])
-    )
-    # RAW-value isspace() semantics (processor.py:1376-1384); native
-    # form is reference-exact (translate over the closed PY_WS set)
-    empty_builder = (
-        (lambda c: [k(c)["is_empty"]]) if use_kernel
-        else (lambda c: [native.empty_content_ref(v(c))])
-    )
-    # all-hex AND not unicode-numeric (processor.py:1317-1326); the
-    # native form's ASCII decimal guard is exact under the hex-regex
-    # conjunction (native.hex_content docstring)
-    hex_builder = (
-        (lambda c: [
-            native.pm(decoded(c).rlike(native.HEX_PAT) & (k(c)["is_numeric"] == -1.0))
-        ]) if use_kernel
-        else (lambda c: [native.hex_content(decoded(c))])
-    )
     return {
         "http_only": lambda c: [native.pm_flag(c["http_only"])],
         "secure": lambda c: [native.pm_flag(c["secure"])],
@@ -204,11 +169,15 @@ def _per_update_builders(
         "same_site": lambda c: native.one_hot(c["same_site"], ["no_restriction", "lax", "strict"]),
         "expiry": lambda c: [c["expiry"].cast("double")],
         "expiry_extra": lambda c: native.expiry_buckets(c["expiry"]),
-        "content_length": content_length_builder,
-        "compressed_length": compressed,
-        "shannon_entropy": entropy_builder,
+        # utf-8 bytes of the decoded value
+        "content_length": lambda c: [F.octet_length(dec(c)).cast("double")],
+        # compressed size + reduction (processor.py:1061-1081)
+        "compressed_length": lambda c: [
+            k(c)["zlib_len"], (F.octet_length(dec(c)) - k(c)["zlib_len"]).cast("double")
+        ],
+        "shannon_entropy": lambda c: [c["entropy"]],
         # value != unquote(value) → ±1 (processor.py:1101-1113)
-        "url_encoding": lambda c: [native.pm(v(c) != decoded(c))],
+        "url_encoding": lambda c: [native.pm(v(c) != dec(c))],
         "delimiter_sep": delimiter_sep,
         "base64_encoded": lambda c: [native.pm(k(c)["b64_valid"])],
         # shape-regex + base64 fallback, in the kernel (processor.py:1148-1162)
@@ -218,72 +187,52 @@ def _per_update_builders(
                                    ["csv_num", "csv_hex", "csv_alpha", "csv_alnum", "csv_bool"]],
         "js_contents": lambda c: [k(c)[f] for f in V.JS_CONTENT_FIELDS],
         "numerical_content": lambda c: [k(c)["is_numeric"]],
-        "hex_content": hex_builder,
+        # all-hex AND not unicode-numeric (processor.py:1317-1326); the
+        # ASCII decimal guard is exact under the hex-regex conjunction
+        # (native.hex_content docstring)
+        "hex_content": lambda c: [native.hex_content(dec(c))],
         "alpha_content": lambda c: [k(c)["is_alpha"]],
         "is_identifier": lambda c: [k(c)["is_ident"]],
         "all_uppercase": lambda c: [k(c)["is_upper"]],
         "all_lowercase": lambda c: [k(c)["is_lower"]],
-        "empty_content": empty_builder,
+        # RAW-value isspace() semantics (processor.py:1376-1384):
+        # translate over the closed PY_WS set
+        "empty_content": lambda c: [native.empty_content_ref(v(c))],
         # Python \b is unicode-aware, Java's is ASCII — kernel field
         "boolean_content": lambda c: [k(c)["bool_content"]],
-        "timestamp_content": lambda c: [native.pm(decoded(c).rlike(native.TIMESTAMP_PAT))],
-        "date_content": lambda c: [native.date_content_ref(decoded(c))],
-        "contains_uuid": lambda c: native.uuid_version_onehot_ref(decoded(c)),
-        "url_content": lambda c: [native.url_content_ref(decoded(c))],
+        "timestamp_content": lambda c: [native.pm(dec(c).rlike(native.TIMESTAMP_PAT))],
+        "date_content": lambda c: [native.date_content_ref(dec(c))],
+        "contains_uuid": lambda c: native.uuid_version_onehot_ref(dec(c)),
+        "url_content": lambda c: [native.url_content_ref(dec(c))],
     }
 
 
 RANK_FEATURES = {"content_eng_terms", "top_names", "top_domains", "pattern_names", "name_tokens"}
 
-# per-update features whose builders read the fused Arrow kernel
-# struct (__k) — everything content-derived. The complement (flag /
-# expiry features) compiles to pure Catalyst expressions, so a schema
-# that enables none of these skips the kernel projection entirely
-# (zero Python nodes in the plan, not just a pruned one).
-KERNEL_PER_UPDATE = frozenset({
-    "content_length", "compressed_length", "shannon_entropy",
-    "url_encoding", "delimiter_sep", "base64_encoded", "contains_js_obj",
-    "content_eng_terms", "csv_contents", "js_contents",
-    "numerical_content", "hex_content", "alpha_content", "is_identifier",
-    "all_uppercase", "all_lowercase", "empty_content", "boolean_content",
-    "timestamp_content", "date_content", "contains_uuid", "url_content",
+# per-update features whose builders read the fused Arrow kernel struct
+# (__k) for a genuinely-Python computation: zlib (compressed_length),
+# csv.Sniffer (csv/delimiter), js2py (js_contents), base64 decode
+# heuristics, and open-ended Python unicode semantics
+# (isnumeric/isalpha/isidentifier/case/\b). Every other per-update
+# feature is pure Catalyst over the raw columns, ``dec`` and
+# ``entropy``, so a schema that enables none of these (and not
+# complength_total) compiles without the kernel: zero Python nodes in
+# the plan, not just a pruned one.
+KERNEL_ONLY_PER_UPDATE = frozenset({
+    "compressed_length", "delimiter_sep", "base64_encoded", "contains_js_obj",
+    "content_eng_terms", "csv_contents", "js_contents", "numerical_content",
+    "alpha_content", "is_identifier", "all_uppercase", "all_lowercase",
+    "boolean_content",
 })
-
-# kernel features that ALSO have a pure-Catalyst form (same values —
-# kernel-parity test on the real fixtures in test_native_entropy.py).
-# They ride the fused kernel when it already exists (one more field on
-# the same Arrow pass is free) and fall back to the native expression
-# when nothing else needs the kernel, so schemas like native_schema may
-# include them and still compile to zero Python nodes. Most only ever
-# needed the kernel for the Python-unquote decoded string —
-# native.py_unquote (CPython-unquote byte-exact) supplies it natively,
-# and the regex/length/entropy logic on top was native all along.
-# Round 6 added the two with genuinely-Python predicates that turn out
-# closed-form: empty_content (str.isspace ⇔ the 29-codepoint PY_WS
-# translate) and hex_content (isnumeric ⇔ ^[0-9]+$ under the hex-regex
-# conjunction). The rest of KERNEL_PER_UPDATE stays kernel-only for
-# real reasons: zlib (compressed_length), csv.Sniffer (csv/delimiter),
-# js2py (js_contents), base64 decode heuristics, and open-ended Python
-# unicode semantics (isnumeric/isalpha/isidentifier/case/\b).
-NATIVE_CAPABLE_PER_UPDATE = frozenset({
-    "shannon_entropy", "content_length", "url_encoding",
-    "timestamp_content", "date_content", "contains_uuid", "url_content",
-    "hex_content", "empty_content",
-})
-# native-capable features whose native form reads the RAW value (no
-# decoded string) — they must not force the stage-0 nat_dec column
-NATIVE_RAW_VALUE_PER_UPDATE = frozenset({"empty_content"})
-KERNEL_ONLY_PER_UPDATE = KERNEL_PER_UPDATE - NATIVE_CAPABLE_PER_UPDATE
 
 
 def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> FeatureSchema:
-    """The SQL-expressible subset of ``default_schema``: every feature
-    whose compiled form is pure Catalyst expressions — no Arrow kernel
-    (zlib / unquote / csv.Sniffer / js2py), no Python regex-list UDFs
-    (pattern_names / name_tokens), no difflib gestalt. Declaration
-    order and per-feature semantics are IDENTICAL to the same specs in
-    the full schema (same builders, same widths, same assembler) —
-    this is a sub-schema, not a variant implementation.
+    """``default_schema`` filtered to the features whose compiled form
+    is pure Catalyst expressions — no Arrow kernel field
+    (KERNEL_ONLY_PER_UPDATE, complength_total's zlib), no Python
+    regex-list UDFs (pattern_names / name_tokens), no difflib gestalt.
+    Declaration order, widths and builders are those of the full
+    schema: a sub-schema, not a variant implementation.
 
     Purpose: the driver's oracled end-to-end pipeline query — the full
     composition (label filter → per-update exprs → lag window → one
@@ -292,51 +241,17 @@ def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> F
     exact DuckDB twin over this subset, turning the pipeline row from
     rows-only into a value-exact green gate row (VERDICT r4 item 1).
     """
-    pe = [
-        FeatureSpec("top_names", vector_size=len(res.top_names)),
-        FeatureSpec("top_domains", vector_size=len(res.top_domains)),
-        FeatureSpec("iab_vendor"),
-        FeatureSpec("domain_period"),
-        FeatureSpec("host_only"),
-        FeatureSpec("third_party"),
-        FeatureSpec("non_root_path"),
-        FeatureSpec("update_count"),
-        FeatureSpec("http_only_changed"),
-        FeatureSpec("secure_changed"),
-        FeatureSpec("same_site_changed"),
-        FeatureSpec("session_changed"),
-        FeatureSpec("content_changed"),
-        FeatureSpec("expiry_changed"),
-        FeatureSpec("levenshtein_total", vector_size=2),
-        FeatureSpec("contlength_total", vector_size=2),
-        FeatureSpec("entropy_total", vector_size=2),
-    ]
-    pu = [
-        FeatureSpec("http_only"),
-        FeatureSpec("secure"),
-        FeatureSpec("session"),
-        FeatureSpec("same_site", vector_size=3),
-        FeatureSpec("expiry"),
-        FeatureSpec("expiry_extra", vector_size=8),
-        FeatureSpec("content_length"),
-        FeatureSpec("shannon_entropy"),
-        FeatureSpec("url_encoding"),
-        FeatureSpec("hex_content"),
-        FeatureSpec("empty_content"),
-        FeatureSpec("timestamp_content"),
-        FeatureSpec("date_content"),
-        FeatureSpec("contains_uuid", vector_size=6),
-        FeatureSpec("url_content"),
-    ]
-    pd_ = [
-        FeatureSpec("time_difference"),
-        FeatureSpec("lev_distance"),
-    ]
-    assert not any(s.name in KERNEL_ONLY_PER_UPDATE for s in pu)
-    return FeatureSchema(
-        num_updates=num_updates, num_diffs=num_diffs,
-        per_entity=tuple(pe), per_update=tuple(pu), per_diff=tuple(pd_),
-    )
+    python = KERNEL_ONLY_PER_UPDATE | {
+        "complength_total", "pattern_names", "name_tokens", "gestalt_total",
+        "gestalt_similarity",
+    }
+    full = default_schema(res, num_updates, num_diffs)
+
+    def keep(specs):
+        return tuple(s for s in specs if s.name not in python)
+
+    return replace(full, per_entity=keep(full.per_entity),
+                   per_update=keep(full.per_update), per_diff=keep(full.per_diff))
 
 
 # ---------------------------------------------------------------------------
@@ -404,47 +319,37 @@ def compile_features(
                      if s.name == "delimiter_sep"), 1)
     csv_ms = next((s.args.get("min_seps", 2) for s in schema.per_update
                    if s.name == "csv_contents"), 2)
+    # THE kernel/native fork, decided from the schema: it chooses only
+    # where ``dec`` and ``entropy`` come from; every builder is the same
+    # on both sides. With any kernel-only feature enabled the fused
+    # Arrow kernel runs anyway, so its dec/entropy fields are free.
+    # Otherwise the plan stays zero-Python: the Python-unquote decoded
+    # string (native.py_unquote, a byte-exact CPython twin) and the
+    # entropy HOF over it are each materialized ONCE in stage 0 (several
+    # builders and the entropy_total aggregate share them; both are
+    # non-cheap and multiply-referenced, so CollapseProject keeps the
+    # projections). A schema that reads neither gets both pruned.
     need_kernel = any(
         s.enabled and s.name in KERNEL_ONLY_PER_UPDATE for s in schema.per_update
     ) or "complength_total" in enabled_pe
-    enabled_pu = {s.name for s in schema.per_update if s.enabled}
-    need_nat_entropy = not need_kernel and (
-        "shannon_entropy" in enabled_pu or "entropy_total" in enabled_pe
-    )
-    need_nat_dec = not need_kernel and (
-        bool((NATIVE_CAPABLE_PER_UPDATE - NATIVE_RAW_VALUE_PER_UPDATE) & enabled_pu)
-        or need_nat_entropy
-    )
-    builders = _per_update_builders(use_kernel=need_kernel)
     if need_kernel:
         kernel = V.content_kernel_udf(
             res.content_terms, delim_min_seps=delim_ms, csv_min_seps=csv_ms
         )
         staged = df.select("*", kernel(F.col("value")).alias("__k"))
-    elif need_nat_dec:
-        # NATIVE_CAPABLE features without the kernel: the Python-
-        # unquote decoded string is materialized ONCE (several
-        # builders reference it), then the entropy HOF over it is
-        # materialized ONCE more (the per-update slot and the
-        # entropy_total aggregate share one evaluation per row).
-        # py_unquote is non-cheap and multiply-referenced, so
-        # CollapseProject keeps both projections materialized.
-        staged = df.select("*", native.py_unquote("value").alias("__nat_dec"))
-        if need_nat_entropy:
-            staged = staged.select(
-                "*", native.char_entropy(F.col("__nat_dec")).alias("__nat_entropy")
-            )
+        dec, entropy = F.col("__k")["dec"], F.col("__k")["entropy"]
     else:
-        # purely-native schema: no kernel node at all — the plan is
-        # 100% whole-stage-codegen expressions
-        staged = df
+        staged = df.select("*", native.py_unquote("value").alias("__nat_dec")).select(
+            "*", native.char_entropy(F.col("__nat_dec")).alias("__nat_entropy")
+        )
+        dec, entropy = F.col("__nat_dec"), F.col("__nat_entropy")
 
+    builders = _per_update_builders()
     colmap = {
         "value": F.col("value"), "expiry": F.col("expiry"),
         "http_only": F.col("http_only"), "secure": F.col("secure"),
         "session": F.col("session"), "same_site": F.col("same_site"),
-        "host_only": F.col("host_only"), "k": F.col("__k"),
-        "nat_dec": F.col("__nat_dec"), "nat_entropy": F.col("__nat_entropy"),
+        "k": F.col("__k"), "dec": dec, "entropy": entropy,
     }
     stage0_cols: list[Column] = []
     upd_cols: dict[str, list[str] | str] = {}
@@ -473,10 +378,7 @@ def compile_features(
     if "complength_total" in enabled_pe:
         stage0_cols.append(F.col("__k")["zlib_len"].alias("__zlib_len"))
     if "entropy_total" in enabled_pe:
-        src_entropy = (
-            F.col("__k")["entropy"] if need_kernel else F.col("__nat_entropy")
-        )
-        stage0_cols.append(src_entropy.alias("__entropy"))
+        stage0_cols.append(entropy.alias("__entropy"))
     proj = staged.select("*", *stage0_cols)
 
     # ---- stage 1 (the ONE shuffle): window lag columns + change
@@ -708,21 +610,20 @@ def compile_features(
             continue
         expr = pe_exprs[spec.name]
         if spec.name in RANK_FEATURES:
-            blocks.append(Block(spec.name, spec.vector_size, "ranks", ranks=expr))
+            blocks.append(Block(spec.vector_size, "ranks", ranks=expr))
         else:
             assert len(expr) == spec.vector_size, spec.name
-            blocks.append(Block(spec.name, spec.vector_size, "fixed", cols=expr))
+            blocks.append(Block(spec.vector_size, "fixed", cols=expr))
     for spec in schema.per_update:
         if not spec.enabled:
             continue
         for u in range(schema.num_updates):
             pn = pivot_names[(spec.name, u)]
             if spec.name in RANK_FEATURES:
-                blocks.append(Block(f"update_{u}_{spec.name}", spec.vector_size, "ranks",
+                blocks.append(Block(spec.vector_size, "ranks",
                                     ranks=F.coalesce(F.col(pn), F.array().cast("array<int>"))))
             else:
-                blocks.append(Block(f"update_{u}_{spec.name}", spec.vector_size, "fixed",
-                                    cols=[F.col(c) for c in pn]))
+                blocks.append(Block(spec.vector_size, "fixed", cols=[F.col(c) for c in pn]))
     for spec in schema.per_diff:
         if not spec.enabled:
             continue
@@ -733,7 +634,7 @@ def compile_features(
                 col = F.try_element_at(F.col("__gs.diffs"), F.lit(d + 1))
             else:
                 col = F.col(diff_names[(spec.name, d)])
-            blocks.append(Block(f"diff_{d}_{spec.name}", spec.vector_size, "fixed", cols=[col]))
+            blocks.append(Block(spec.vector_size, "fixed", cols=[col]))
 
     total = sum(b.width for b in blocks)
     assert total == schema.total_width == len(names), (total, schema.total_width)

@@ -11,6 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _driver_memory() -> str:
+    """Driver heap for local mode: half of the host's physical memory,
+    capped at 48g. A heap larger than the host lets the JVM grow past
+    what the machine has, and the OS kills it before Spark would spill;
+    the other half is left to the Python workers and the OS."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 48 * 1024)}m"
+
+
 # Defaults chosen for the 100 TB target, not the local test rig:
 #  - AQE on: runtime coalescing + skew-join splitting replaces hand-tuned
 #    shuffle partition counts at every scale.
@@ -37,7 +47,7 @@ _BASE_CONF: dict[str, str] = {
     # local mode = driver-only JVM: driver memory IS executor memory
     # (must be set before JVM launch; ignored on a real cluster where
     # spark-submit provides it)
-    "spark.driver.memory": "48g",
+    "spark.driver.memory": _driver_memory(),
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # PySpark wraps EVERY DataFrame/Column API call with a call-site

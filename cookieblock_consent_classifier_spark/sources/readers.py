@@ -64,7 +64,7 @@ EVENTS_EXPIRY_CASES: dict[str, int] = {
 _HALF_NIBBLES = ("0", "1", "2", "3", "4", "5", "6", "7")
 
 # value branches keyed on md5 nibble 19: the adapter's value domain
-# exercises every NATIVE_CAPABLE decoded-content feature on real
+# exercises every decoded-content feature of native_schema on real
 # pipeline rows — url-encoded JSON (py_unquote does real work;
 # url_encoding fires +1), a unix-epoch 16xxxxxxxx string
 # (timestamp_content), a canonical UUID with an md5-driven version

@@ -70,3 +70,33 @@ def test_audio_udf_batch(spark):
     assert all(by[f"a{i}"]["duration_s"] == pytest.approx(0.25) for i in range(3))
     # zcr ranks with frequency
     assert by["a0"]["zcr"] < by["a1"]["zcr"] < by["a2"]["zcr"]
+
+
+def _wav_frame(spark):
+    rows = [(f"a{i}", bytearray(A.encode_wav_pcm16(A.synth_tone(f"a{i}", 220.0 * (i + 1)))))
+            for i in range(3)]
+    return spark.createDataFrame(rows, ["audio_id", "bytes"])
+
+
+def test_exported_audio_udf_stays_deterministic(spark):
+    """Only extract_audio_features' own call is marked
+    non-deterministic; the exported UDF, used anywhere else, is
+    deterministic (and stays so after that call)."""
+    from pyspark.sql import functions as F
+
+    df = _wav_frame(spark)
+    A.extract_audio_features(df)
+    assert A.audio_features_udf.deterministic
+    plan = df.select(A.audio_features_udf(F.col("bytes")).alias("af"))._jdf.queryExecution()
+    assert plan.analyzed().expressions().apply(0).deterministic()
+
+
+def test_audio_feature_filter_plans_one_python_node(spark):
+    """A filter on an audio feature field must not duplicate the
+    decode+featurize chain below itself: one ArrowEvalPython node."""
+    from pyspark.sql import functions as F
+
+    out = A.extract_audio_features(_wav_frame(spark)).filter(F.col("rms") > 0.1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert out.count() == 3

@@ -214,13 +214,14 @@ def test_regex_detectors(vals):
 
 def test_url_encoding_and_content_length(spark):
     # the compiler's forms: url_encoding = pm(value != dec),
-    # content_length = dec_len (utf-8 bytes of the unquoted value)
-    df = spark.createDataFrame([("a%20b",), ("plain",)], ["v"])
+    # content_length = octet_length(dec) (utf-8 bytes of the unquoted
+    # value)
+    df = spark.createDataFrame([("a%20b",), ("plain",), ("%e2%82%ac",)], ["v"])
     k = V.content_kernel_udf([])(F.col("v"))
     enc = collect_col(df, native.pm(F.col("v") != k["dec"]))
-    assert enc == [1.0, -1.0]
-    cl = kernel_field(df, "dec_len")
-    assert cl == [3.0, 5.0]  # "a b" is 3 utf-8 bytes
+    assert enc == [1.0, -1.0, 1.0]
+    cl = collect_col(df, F.octet_length(k["dec"]).cast("double"))
+    assert cl == [3.0, 5.0, 3.0]  # "a b" is 3 utf-8 bytes, so is "€"
 
 
 def test_uniform_domain(spark):

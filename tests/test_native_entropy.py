@@ -1,8 +1,8 @@
 """Native Python-unquote + Shannon entropy (functions/native.py:
 py_unquote / char_entropy) — the pure-Catalyst
 form of feature_shannon_entropy (processor.py:1083-1098) that lets
-compiler.native_schema carry the entropy slots with zero Python nodes
-(NATIVE_CAPABLE_PER_UPDATE). Pins:
+compiler.native_schema carry the entropy slots with zero Python nodes.
+Pins:
 
 1. py_unquote == urllib.parse.unquote byte-for-byte on edge cases AND
    a seeded fuzz corpus biased toward %-escapes / invalid UTF-8 (the
@@ -12,9 +12,11 @@ compiler.native_schema carry the entropy slots with zero Python nodes
 3. Native == kernel on every update value in BOTH shipped reference
    fixtures (real cookie data, %-encoded content included) — the
    golden-level evidence that the two physical strategies agree.
-4. compile_features picks the native builder exactly when no other
-   feature needs the kernel, and the native_schema plan stays
-   zero-Python (plan shape re-pinned in test_pipeline_oracle too).
+4. compile_features runs the kernel exactly when a kernel-only
+   feature is enabled, and the native_schema plan stays zero-Python
+   (plan shape re-pinned in test_pipeline_oracle too).
+5. native_schema and default_schema agree on every slot they share
+   over synthetic, edge-case, fuzz and NULL values.
 """
 
 from __future__ import annotations
@@ -177,19 +179,104 @@ def test_native_matches_kernel_on_real_fixtures(spark):
     assert worst < 1e-9, worst
 
 
-def test_builder_selection(res_fixture=None):
+def test_builder_selection(spark):
+    """The kernel/native fork decides only where ``dec`` and
+    ``entropy`` come from: every per-update feature has one builder,
+    and a native-only schema compiles without the kernel while one
+    kernel-only feature brings it in."""
     from cookieblock_consent_classifier_spark.plans.compiler import (
         KERNEL_ONLY_PER_UPDATE,
-        KERNEL_PER_UPDATE,
-        NATIVE_CAPABLE_PER_UPDATE,
         _per_update_builders,
+        compile_features,
+        default_schema,
+        native_schema,
     )
+    from cookieblock_consent_classifier_spark.schema import FeatureSchema
+    from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
+    from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
 
-    assert NATIVE_CAPABLE_PER_UPDATE <= KERNEL_PER_UPDATE
-    assert "shannon_entropy" not in KERNEL_ONLY_PER_UPDATE
-    k = _per_update_builders(use_kernel=True)
-    n = _per_update_builders(use_kernel=False)
-    assert set(k) == set(n)
+    res = fixture_resources()
+    full = default_schema(res)
+    assert set(_per_update_builders()) == {s.name for s in full.per_update}
+    assert KERNEL_ONLY_PER_UPDATE < set(_per_update_builders())
+    nat = native_schema(res)
+    assert not any(s.name in KERNEL_ONLY_PER_UPDATE for s in nat.per_update)
+    src = synth_cookie_updates(spark, num_entities=4, updates_per_entity=2)
+
+    def python_nodes(schema):
+        wide, _ = compile_features(src, schema, res, training=False)
+        return wide._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython")
+
+    assert python_nodes(nat) == 0
+    one_kernel = FeatureSchema(
+        num_updates=nat.num_updates, num_diffs=nat.num_diffs, per_entity=nat.per_entity,
+        per_update=nat.per_update + (next(s for s in full.per_update if s.name == "base64_encoded"),),
+        per_diff=nat.per_diff,
+    )
+    assert python_nodes(one_kernel) == 1
+
+
+def _parity_input(spark):
+    """synth_cookie_updates rows whose values are replaced, two per
+    entity, by the unquote edge cases, both fuzz corpora and NULLs
+    (whole entities of NULL values included)."""
+    from cookieblock_consent_classifier_spark.schema import COOKIE_UPDATE_SCHEMA
+    from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
+
+    extras = EDGE_CASES + _fuzz_corpus(150) + _ws_hex_fuzz(100) + [None] * 8
+    n_base = 60
+    rows = synth_cookie_updates(
+        spark, num_entities=n_base + (len(extras) + 1) // 2, updates_per_entity=2
+    ).orderBy("entity_id", "update_idx").collect()
+    out = [r.asDict() for r in rows]
+    for i, v in enumerate(extras):
+        out[2 * n_base + i]["value"] = v
+    return spark.createDataFrame(out, COOKIE_UPDATE_SCHEMA)
+
+
+def _dense(wide, width):
+    """entity_id → dense vector, NaN where the slot is absent."""
+    import numpy as np
+
+    out = {}
+    for r in wide.select("entity_id", "indices", "values").collect():
+        vec = np.full(width, np.nan)
+        vec[list(r.indices)] = list(r.values)
+        out[r.entity_id] = vec
+    return out
+
+
+def test_native_schema_slots_match_default_schema(spark):
+    """Native vs. kernel parity: native_schema compiles without the
+    Arrow kernel, default_schema through it. Over the same input, every
+    slot both schemas name carries the same value (absent included) on
+    every entity — the two paths differ only in where ``dec`` and
+    ``entropy`` come from."""
+    import numpy as np
+
+    from cookieblock_consent_classifier_spark.plans.compiler import (
+        compile_features, default_schema, native_schema,
+    )
+    from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
+
+    res = fixture_resources()
+    src = _parity_input(spark).cache()
+    full, nat = default_schema(res, 2, 2), native_schema(res, 2, 2)
+    full_names, nat_names = full.feature_names(), nat.feature_names()
+    shared = [n for n in nat_names if n in set(full_names)]
+    assert len(shared) == len(nat_names) == 120
+    fi = np.array([full_names.index(n) for n in shared])
+    ni = np.array([nat_names.index(n) for n in shared])
+    kernel_rows = _dense(compile_features(src, full, res, training=False)[0], len(full_names))
+    native_rows = _dense(compile_features(src, nat, res, training=False)[0], len(nat_names))
+    assert kernel_rows.keys() == native_rows.keys() and len(kernel_rows) > 200
+    bad = set()
+    for eid, kv in kernel_rows.items():
+        a, b = kv[fi], native_rows[eid][ni]
+        if not np.allclose(a, b, rtol=0, atol=1e-9, equal_nan=True):
+            close = np.isclose(a, b, rtol=0, atol=1e-9, equal_nan=True)
+            bad.update(shared[j] for j in np.flatnonzero(~close))
+    assert not bad, sorted(bad)
 
 
 def test_native_schema_pipeline_entropy_values(spark, events):

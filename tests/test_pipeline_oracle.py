@@ -57,8 +57,8 @@ def test_native_schema_is_a_sub_schema(res):
         for s in fam:
             assert full_specs[s.name] == s.vector_size, s.name
     # and none of its per-update specs REQUIRES the Arrow kernel
-    # (shannon_entropy is kernel-resident in the full schema but
-    # native-capable — NATIVE_CAPABLE_PER_UPDATE)
+    # (shannon_entropy reads the kernel's entropy field in the full
+    # schema and native char_entropy here: the same builder)
     assert not any(s.name in KERNEL_ONLY_PER_UPDATE for s in sub.per_update)
 
 

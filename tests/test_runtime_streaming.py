@@ -136,7 +136,7 @@ def test_streaming_per_update_feature_extraction(spark, tmp_path: Path):
             "entity_id", "update_idx", k
         ).select(
             "entity_id", "update_idx",
-            F.col("k")["dec_len"].alias("dec_len"),
+            F.octet_length(F.col("k")["dec"]).alias("dec_len"),
             F.col("k")["entropy"].alias("entropy"),
             F.col("k")["is_numeric"].alias("is_numeric"),
             F.col("k")["js_len"].alias("js_len"),

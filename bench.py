@@ -248,7 +248,8 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark(
-        app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
+        app_name="bench", master=f"local[{cpus}]",
+        extra_conf={"spark.sql.shuffle.partitions": str(int(cpus))},
     )
     _warm(spark, int(cpus), sf_dir)
 

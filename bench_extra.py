@@ -54,7 +54,7 @@ def main() -> None:
     spark = get_spark(
         app_name=f"bench-extra-{args.tag}",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        extra_conf={"spark.sql.shuffle.partitions": str(int(cpus))},
     )
     qs = entrymod.queries()
     names = args.queries or [n for n in __import__("bench").BENCH_QUERIES]

@@ -227,13 +227,11 @@ def train_gbdt(
             tree = _emit_tree(splits, leaves)
             round_trees.append(tree)
 
-            # margin update for class c: node-indexed when-chain —
-            # row-local, mirrors the scorer's walk exactly
-            delta = F.lit(0.0)
-            for n, wgt in leaves.items():
-                cond = _node_path_cond(n, splits, feat_val)
-                delta = F.when(cond, F.lit(wgt)).otherwise(delta)
-            new_margin_exprs.append(F.element_at("margins", c + 1) + delta)
+            # margin update for class c: the dump scorer's own CASE
+            # tree over the tree just emitted — row-local, train == score
+            new_margin_exprs.append(
+                F.element_at("margins", c + 1) + xgb.tree_expr_full(tree, _lookup)
+            )
 
         model_dump.extend(round_trees)
         rows = rows.select(
@@ -320,21 +318,6 @@ def _best_splits(frontier, feats, edges, hist, totals, np):
         if best[1] is not None:
             out[n] = (best[1], best[2])
     return out
-
-
-def _node_path_cond(leaf: int, splits: dict, feat_val):
-    """Conjunction of branch predicates from root to `leaf` (heap
-    numbering: parent (n-1)//2, left iff odd)."""
-    cond = F.lit(True)
-    n = leaf
-    while n != 0:
-        parent = (n - 1) // 2
-        fidx, c = splits[parent]
-        v = feat_val(fidx)
-        left = (v == F.lit(0.0)) | (v < F.lit(c))
-        cond = cond & (left if n % 2 == 1 else ~left)
-        n = parent
-    return cond
 
 
 def _emit_tree(splits: dict, leaves: dict) -> dict:

@@ -14,9 +14,22 @@ no Python, no shuffle beyond the compiler's single groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from dataclasses import dataclass, field
 
-from cookieblock_consent_classifier_spark.plans.compiler import Block
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+@dataclass
+class Block:
+    """One declared feature's contribution to the output vector:
+    ``width`` slots starting at a base offset assigned by declaration
+    order. Either ``fixed`` (width scalar columns; NULL → absent) or
+    ``ranks`` (array<int> of fired offsets, each valued 1.0)."""
+
+    width: int
+    kind: str = "fixed"  # "fixed" | "ranks"
+    cols: list[Column] = field(default_factory=list)
+    ranks: Column | None = None
 
 
 def class_weights(df: DataFrame) -> DataFrame:

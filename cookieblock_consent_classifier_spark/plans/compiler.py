@@ -24,12 +24,14 @@ Feature semantics cite /root/reference/feature_extraction/*.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import replace
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from cookieblock_consent_classifier_spark.functions import native, vectorized as V
+from cookieblock_consent_classifier_spark.plans import assemble
+from cookieblock_consent_classifier_spark.plans.assemble import Block
 from cookieblock_consent_classifier_spark.schema import NUM_CLASSES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df, sql_literal
 
@@ -44,19 +46,6 @@ from cookieblock_consent_classifier_spark.sources.resources import Resources, ra
 # num_updates/num_diffs slot caps. Every other per-entity aggregate is
 # algebraic and stays exact at any count.
 GESTALT_MAX_UPDATES = 10_000
-
-
-@dataclass
-class Block:
-    """One declared feature's contribution to the output vector:
-    ``width`` slots starting at a base offset assigned by declaration
-    order. Either ``fixed`` (width scalar columns; NULL → absent) or
-    ``ranks`` (array<int> of fired offsets, each valued 1.0)."""
-
-    width: int
-    kind: str = "fixed"  # "fixed" | "ranks"
-    cols: list[Column] = field(default_factory=list)
-    ranks: Column | None = None
 
 
 # ---------------------------------------------------------------------------
@@ -328,7 +317,10 @@ def compile_features(
     # entropy HOF over it are each materialized ONCE in stage 0 (several
     # builders and the entropy_total aggregate share them; both are
     # non-cheap and multiply-referenced, so CollapseProject keeps the
-    # projections). A schema that reads neither gets both pruned.
+    # projections). A schema that reads neither gets both pruned. Both
+    # stay: native dec/entropy on every schema kept perfbench hot's
+    # output but raised its job_cpu_s in 3/3 pairs on 4 cores (5.52→5.92,
+    # 5.20→6.02, 5.30→6.08 s): the Arrow batch beats the JVM HOF there.
     need_kernel = any(
         s.enabled and s.name in KERNEL_ONLY_PER_UPDATE for s in schema.per_update
     ) or "complength_total" in enabled_pe
@@ -352,23 +344,19 @@ def compile_features(
         "k": F.col("__k"), "dec": dec, "entropy": entropy,
     }
     stage0_cols: list[Column] = []
-    upd_cols: dict[str, list[str] | str] = {}
+    # spec name → stage-0 columns (one array<int> for a rank feature)
+    upd_cols: dict[str, list[str]] = {}
     for spec in schema.per_update:
         if not spec.enabled:
             continue
         built = builders[spec.name](colmap)
         if spec.name in RANK_FEATURES:
-            cname = f"u__{spec.name}"
-            stage0_cols.append(built.alias(cname))
-            upd_cols[spec.name] = cname
+            built = [built]
         else:
             assert len(built) == spec.vector_size, spec.name
-            cnames = []
-            for i, col in enumerate(built):
-                cname = f"u__{spec.name}__{i}"
-                stage0_cols.append(col.cast("double").alias(cname))
-                cnames.append(cname)
-            upd_cols[spec.name] = cnames
+            built = [col.cast("double") for col in built]
+        upd_cols[spec.name] = [f"u__{spec.name}__{i}" for i in range(len(built))]
+        stage0_cols += [col.alias(c) for col, c in zip(built, upd_cols[spec.name])]
 
     # aggregate inputs only when their consuming per-entity feature is
     # enabled: an unreferenced __k field lets Catalyst column-prune the
@@ -421,46 +409,22 @@ def compile_features(
     # collapse to num_updates+num_diffs. Synthetic A/B (60 numeric
     # pivots, 100k rows, 32 cores): 1.63 s → 0.56 s, values
     # pandas-identical; the real pipeline is pinned by the DuckDB
-    # oracle + golden tests. Field unpack after the agg is a
-    # codegen'd row-wise projection.
+    # oracle + golden tests. Stage 4 reads each value straight from
+    # its slot struct (``__pus_{u}[field]``, ``__pds_{d}[field]``);
+    # the field accesses fold into the assembly projection.
     aggs: list[Column] = []
-    post_agg_pivots: list[tuple[str, str, str]] = []  # (struct_col, field, out)
 
-    # per-update pivots (feature-major order like the output vector)
-    pivot_names: dict[tuple[str, int], list[str] | str] = {}
-    pu_fields: list[str] = []
-    for spec in schema.per_update:
-        if not spec.enabled:
-            continue
-        if spec.name in RANK_FEATURES:
-            pu_fields.append(upd_cols[spec.name])
-        else:
-            pu_fields.extend(upd_cols[spec.name])
+    # per-update slot structs: __pus_u holds update u's stage-0 columns
+    pu_fields = [c for cols in upd_cols.values() for c in cols]
     if pu_fields:
         pu_struct = F.struct(*[F.col(c).alias(c) for c in pu_fields])
         for u in range(schema.num_updates):
             aggs.append(
                 F.max(F.when(F.col("__slot") == u, pu_struct)).alias(f"__pus_{u}")
             )
-    for spec in schema.per_update:
-        if not spec.enabled:
-            continue
-        for u in range(schema.num_updates):
-            if spec.name in RANK_FEATURES:
-                out = f"pu__{spec.name}__{u}"
-                post_agg_pivots.append((f"__pus_{u}", upd_cols[spec.name], out))
-                pivot_names[(spec.name, u)] = out
-            else:
-                outs = []
-                for i, cname in enumerate(upd_cols[spec.name]):
-                    out = f"pu__{spec.name}__{u}__{i}"
-                    post_agg_pivots.append((f"__pus_{u}", cname, out))
-                    outs.append(out)
-                pivot_names[(spec.name, u)] = outs
 
-    # per-diff pivots: diff d lives on the row with __slot == d+1;
+    # per-diff slot structs: diff d lives on the row with __slot == d+1;
     # gestalt comes from the post-agg kernel instead
-    diff_names: dict[tuple[str, int], str] = {}
     pd_fields = [
         f"d__{spec.name}"
         for spec in schema.per_diff
@@ -472,13 +436,6 @@ def compile_features(
             aggs.append(
                 F.max(F.when(F.col("__slot") == d + 1, pd_struct)).alias(f"__pds_{d}")
             )
-    for spec in schema.per_diff:
-        if not spec.enabled or spec.name == "gestalt_similarity":
-            continue
-        for d in range(schema.num_diffs):
-            out = f"pd__{spec.name}__{d}"
-            post_agg_pivots.append((f"__pds_{d}", f"d__{spec.name}", out))
-            diff_names[(spec.name, d)] = out
 
     # entity attrs (constant per entity)
     for attr in ("name", "domain", "path", "first_party_domain", "label", "cmp_origin"):
@@ -536,14 +493,6 @@ def compile_features(
         )
 
     ent = proj.groupBy("entity_id").agg(*aggs)
-    if post_agg_pivots:
-        # unpack the packed slot structs back into the named pivot
-        # columns (row-wise, codegen'd; NULL struct → NULL fields)
-        struct_cols = {sc for sc, _f, _o in post_agg_pivots}
-        ent = ent.select(
-            *[c for c in ent.columns if c not in struct_cols],
-            *[F.col(sc)[f].alias(out) for sc, f, out in post_agg_pivots],
-        )
 
     if need_gestalt:
         # post-agg gestalt kernel: one Arrow batch per entity row
@@ -551,8 +500,6 @@ def compile_features(
             F.transform(F.col("__vals"), lambda x: x["v"])
         )
         ent = ent.withColumn("__gs", gs)
-        ent = ent.withColumn("e__gestalt_mean", F.col("__gs.mean"))
-        ent = ent.withColumn("e__gestalt_std", F.col("__gs.std"))
 
     # ---- stage 3: broadcast lookups on the per-entity side
     # snapshot the pre-join frame: the class-weight counts branch runs
@@ -597,7 +544,7 @@ def compile_features(
         "session_changed": [F.col("e__session_changed")],
         "content_changed": [F.col("e__content_changed")],
         "expiry_changed": [F.col("e__expiry_changed")],
-        "gestalt_total": [F.col("e__gestalt_mean"), F.col("e__gestalt_std")],
+        "gestalt_total": [F.col("__gs.mean"), F.col("__gs.std")],
         "levenshtein_total": [F.col("e__levenshtein_mean"), F.col("e__levenshtein_std")],
         "contlength_total": [F.col("e__contlength_mean"), F.col("e__contlength_std")],
         "complength_total": [F.col("e__complength_mean"), F.col("e__complength_std")],
@@ -618,12 +565,12 @@ def compile_features(
         if not spec.enabled:
             continue
         for u in range(schema.num_updates):
-            pn = pivot_names[(spec.name, u)]
+            vals = [F.col(f"__pus_{u}")[c] for c in upd_cols[spec.name]]
             if spec.name in RANK_FEATURES:
                 blocks.append(Block(spec.vector_size, "ranks",
-                                    ranks=F.coalesce(F.col(pn), F.array().cast("array<int>"))))
+                                    ranks=F.coalesce(vals[0], F.array().cast("array<int>"))))
             else:
-                blocks.append(Block(spec.vector_size, "fixed", cols=[F.col(c) for c in pn]))
+                blocks.append(Block(spec.vector_size, "fixed", cols=vals))
     for spec in schema.per_diff:
         if not spec.enabled:
             continue
@@ -633,13 +580,12 @@ def compile_features(
                 # (ANSI element_at throws out-of-bounds)
                 col = F.try_element_at(F.col("__gs.diffs"), F.lit(d + 1))
             else:
-                col = F.col(diff_names[(spec.name, d)])
+                col = F.col(f"__pds_{d}")[f"d__{spec.name}"]
             blocks.append(Block(spec.vector_size, "fixed", cols=[col]))
 
     total = sum(b.width for b in blocks)
     assert total == schema.total_width == len(names), (total, schema.total_width)
 
-    from cookieblock_consent_classifier_spark.plans.assemble import assemble_sparse
-
-    wide = assemble_sparse(ent, blocks, ent_pre_join, with_weights=training)
+    # through the module: tests swap assemble_sparse for a spy
+    wide = assemble.assemble_sparse(ent, blocks, ent_pre_join, with_weights=training)
     return wide, names

@@ -100,7 +100,7 @@ class FeatureSchema:
     def feature_names(self) -> list[str]:
         """Positional feature names, matching
         retrieve_feature_names_as_list (processor.py:276-298) modulo
-        the index prefix and type suffix (see feature_map_lines):
+        the index prefix and type suffix (see sinks.write_feature_map):
         per-entity `{name}-{i}`, per-update `update_{u}_{name}-{i}`,
         per-diff `diff_{u}_{name}-{i}` — the reference appends `-{i}`
         even for width-1 blocks, so we do too."""
@@ -124,10 +124,3 @@ class FeatureSchema:
                 block(s, f"diff_{d}_")
         assert len(out) == self.total_width
         return out
-
-    def feature_map_lines(self) -> list[str]:
-        """Byte-exact reference feature-map lines
-        (retrieve_feature_names_as_list, processor.py:276-298 /
-        dump_feature_map, :382-391): `"{idx} {name}-{i} i"` — space
-        separators, global column index prefix, type char `i`."""
-        return [f"{idx} {name} i" for idx, name in enumerate(self.feature_names())]

@@ -34,6 +34,7 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.shuffle.partitions": "32",
     # our post-shuffle stages are CPU-bound (feature kernels, sparse
     # assembly), not IO-bound: the 64 MB default advisory size makes
     # AQE coalesce them below core count on mid-size inputs; 16 MB
@@ -63,7 +64,6 @@ _BASE_CONF: dict[str, str] = {
 def get_spark(
     app_name: str = "cookieblock_consent_classifier_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -77,10 +77,6 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_BASE_CONF)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    else:
-        conf.setdefault("spark.sql.shuffle.partitions", "32")
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

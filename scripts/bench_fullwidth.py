@@ -48,7 +48,7 @@ def main() -> None:
     n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
     cpus = sys.argv[2] if len(sys.argv) > 2 else "32"
     spark = get_spark(app_name="bench-fullwidth", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+                      extra_conf={"spark.sql.shuffle.partitions": str(int(cpus))})
     df = synth_cookie_updates(spark, n_entities, updates_per_entity=3)
     df = df.localCheckpoint()  # pin the input so both runs read identical data
 

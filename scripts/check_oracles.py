@@ -33,7 +33,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="oracle-check", shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-check", extra_conf={"spark.sql.shuffle.partitions": "16"})
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -31,7 +31,7 @@ from cookieblock_consent_classifier_spark.session import get_spark
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="freeze-gbdt", shuffle_partitions=16)
+    spark = get_spark(app_name="freeze-gbdt", extra_conf={"spark.sql.shuffle.partitions": "16"})
     _, dump = entrymod.gbdt_train_rows_and_dump(spark, sf_dir)
     os.makedirs(os.path.dirname(entrymod._GBDT_DUMP_PATH), exist_ok=True)
     with open(entrymod._GBDT_DUMP_PATH, "w", encoding="utf-8") as fd:

@@ -67,7 +67,8 @@ def audit(plan: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="plan-audit", master="local[8]",
+                      extra_conf={"spark.sql.shuffle.partitions": "8"})
     qs = entrymod.queries()
     rows = []
     for name, fn in sorted(qs.items()):

@@ -9,7 +9,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark(app_name="tests", master="local[4]",
+                  extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
 
 

@@ -26,6 +26,7 @@ import numpy as np
 import pytest
 
 import ref_shims
+from cookieblock_consent_classifier_spark import sinks
 from cookieblock_consent_classifier_spark.plans.compiler import compile_features
 from cookieblock_consent_classifier_spark.schema import COOKIE_UPDATE_SCHEMA
 from cookieblock_consent_classifier_spark.sources.config import load_features_config
@@ -72,10 +73,12 @@ def test_declared_width_1689(ref_module, abs_config, engine_config):
     assert schema.total_width == 1689
 
 
-def test_feature_names_byte_exact(ref_module, abs_config, engine_config):
+def test_feature_names_byte_exact(ref_module, abs_config, engine_config, tmp_path):
     proc = _new_processor(ref_module, abs_config)
     schema, _ = engine_config
-    assert schema.feature_map_lines() == proc.retrieve_feature_names_as_list()
+    fmap = tmp_path / "featmap.txt"
+    sinks.write_feature_map(schema.feature_names(), str(fmap))
+    assert fmap.read_text(encoding="utf-8").splitlines() == proc.retrieve_feature_names_as_list()
 
 
 def _engine_dense(spark, data, schema, res):

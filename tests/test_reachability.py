@@ -1,16 +1,20 @@
-"""Every top-level engine definition is reached from a production root.
+"""Every engine definition is reached from a production root.
 
 An ``ast`` walk, no imports: the roots are ``cli.py``,
 ``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``. A
 definition (function, class or assigned name at module level of
-``cookieblock_consent_classifier_spark/``) is reached when its name is
+``cookieblock_consent_classifier_spark/``, or a non-dunder method of
+such a class, keyed ``Class.method``) is reached when its name is
 referenced from a root, or from the body of a definition that is
-reached. Names are matched without their module (``x.foo`` and ``foo``
-both reach every ``foo``), so the walk can only over-approximate what
-production uses; what it still reports is code only tests call.
+reached. Names are matched without their module or class (``x.foo``
+and ``foo`` both reach every ``foo``), so the walk can only
+over-approximate what production uses; what it still reports is code
+only tests call. A class's own body covers its dunder methods and
+class attributes but not its other methods: each of those is reached
+by its own name.
 
 A definition that production does not reach but that must stay is
-listed in ``KEEP`` with the reason.
+listed in ``KEEP`` with the reason; a kept class keeps its methods.
 """
 
 from __future__ import annotations
@@ -78,6 +82,23 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
     return [t.id for t in targets if isinstance(t, ast.Name)]
 
 
+def _is_method(stmt: ast.stmt) -> bool:
+    return isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) and not stmt.name.startswith("__")
+
+
+def _definitions(stmt: ast.stmt) -> list[tuple[str, list]]:
+    """(name, nodes whose references it makes) for each definition in a
+    module-level statement: its names, then a class's methods."""
+    names = [n for n in _defined_names(stmt) if not n.startswith("__")]
+    if not isinstance(stmt, ast.ClassDef):
+        return [(n, [stmt]) for n in names]
+    own = [*stmt.decorator_list, *stmt.bases, *stmt.keywords]
+    own += [s for s in stmt.body if not _is_method(s)]
+    return [(stmt.name, own)] + [
+        (f"{stmt.name}.{m.name}", [m]) for m in stmt.body if _is_method(m)
+    ]
+
+
 def _parse(path: str) -> ast.Module:
     with open(path, encoding="utf-8") as fd:
         return ast.parse(fd.read(), path)
@@ -99,13 +120,12 @@ def unreached() -> list[str]:
         if os.path.basename(path) == "__init__.py":
             continue  # re-exports only
         for stmt in _parse(path).body:
-            names = [n for n in _defined_names(stmt) if not n.startswith("__")]
-            if names:
-                for n in names:
-                    key = f"{rel}:{n}"
-                    defs.setdefault(key, []).append(stmt)
-                    by_name.setdefault(n, []).append(key)
-            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            found = _definitions(stmt)
+            for name, nodes in found:
+                key = f"{rel}:{name}"
+                defs.setdefault(key, []).extend(nodes)
+                by_name.setdefault(name.split(".")[-1], []).append(key)
+            if not found and not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 module_code.append(stmt)
     root_trees = [_parse(p) for p in production_roots()]
 
@@ -121,7 +141,11 @@ def unreached() -> list[str]:
             if key not in reached:
                 reached.add(key)
                 todo.extend(_refs(defs[key]))
-    return sorted(k for k in defs if k not in reached and k not in KEEP)
+    def kept(key: str) -> bool:
+        rel, name = key.split(":")
+        return f"{rel}:{name.split('.')[0]}" in KEEP
+
+    return sorted(k for k in defs if k not in reached and not kept(k))
 
 
 def test_every_engine_definition_is_reached_or_kept():
@@ -134,6 +158,6 @@ def test_keep_list_names_existing_definitions():
     for key in KEEP:
         rel, name = key.split(":")
         tree = _parse(os.path.join(ROOT, PKG, rel))
-        if not any(name in _defined_names(s) for s in tree.body):
+        if not any(name == n for s in tree.body for n, _ in _definitions(s)):
             gone.append(key)
     assert gone == []

@@ -270,9 +270,9 @@ def q_asof_join_orders(spark, sf_dir):
     order state at each event, zero leakage, deterministic tie-break
     by orderkey — inclusive, strict (exclusive), AND 30-day-staleness-
     tolerance (pandas merge_asof tolerance analogue) semantics all
-    from the same SINGLE union+window shuffle (also_strict_suffix:
-    one exchange, two sort orders; also_tolerance_suffix: a row-local
-    age predicate over the filled state — zero extra sorts). Folded
+    from the same SINGLE union+window shuffle (strict: one exchange,
+    two sort orders; tolerance_seconds: a row-local age predicate over
+    the filled state — zero extra sorts). Folded
     from the former separate asof_join_tolerance oracle query (round
     5) to free a correctness-snapshot slot; value coverage unchanged
     — the tolerance columns are the old query's columns."""
@@ -281,8 +281,7 @@ def q_asof_join_orders(spark, sf_dir):
     out = asof.asof_join(
         ev, orders, on="user_id", fact_ts="ts", dim_ts="o_orderdate",
         payload=["o_orderkey", "o_totalprice"], dim_order=["o_orderkey"],
-        also_strict_suffix="_strict",
-        tolerance_seconds=30 * 86400, also_tolerance_suffix="_tol",
+        strict=True, tolerance_seconds=30 * 86400,
     )
     return out.select(
         "event_id",

@@ -25,8 +25,7 @@ their own update counts (the window state is O(1) per row: running
 
 Tie semantics: at equal timestamps, dim sorts BEFORE fact (tag order),
 so a dim update effective exactly at fact.ts IS visible (inclusive);
-the ``also_strict_suffix`` columns sort dim after fact for exclusive
-semantics.
+the ``strict`` columns sort dim after fact for exclusive semantics.
 Among multiple dim rows at the same (entity, ts), the one greatest by
 ``dim_order`` wins (deterministic).
 """
@@ -47,36 +46,25 @@ def asof_join(
     payload: Sequence[str] = (),
     dim_order: Sequence[str] = (),
     tolerance_seconds: float | None = None,
-    also_strict_suffix: str | None = None,
-    also_tolerance_suffix: str | None = None,
+    strict: bool = False,
 ) -> DataFrame:
     """Return ``fact`` with ``<payload>_asof`` columns attached
     point-in-time-correctly. Facts with no prior dim state get nulls.
 
+    ``strict``: additionally attach ``<payload>_strict`` columns with
+    STRICT (exclusive) semantics in the same pass. Both modes share
+    the one hash exchange; only a second sort order differs
+    (dim-after-fact at equal ts), so the plan is Exchange → Sort →
+    Window → Sort → Window — still a single shuffle.
+
     ``tolerance_seconds`` (pandas merge_asof ``tolerance`` analogue):
-    a matched dim row older than the tolerance yields nulls instead —
-    same single-shuffle plan, the staleness check is a row-local
-    predicate on the forward-filled dim timestamp. Without
-    ``also_tolerance_suffix`` the cut applies in place to the
-    ``_asof`` columns; the strict columns are never cut. Assumes non-null
-    dim payload values (each payload column is forward-filled
+    additionally attach ``<payload>_tol`` columns, the inclusive match
+    or null where the matched dim row is older than the tolerance. The
+    staleness check is a row-local predicate on the forward-filled dim
+    timestamp, so it adds zero sorts and zero shuffles (inclusive +
+    strict + tolerance all come from the ONE exchange). Assumes
+    non-null dim payload values (each payload column is forward-filled
     independently, like the base join).
-
-    ``also_strict_suffix``: additionally attach
-    ``<payload><also_strict_suffix>`` columns with STRICT (exclusive)
-    semantics in the same pass. Both modes share the one hash
-    exchange; only a second sort order differs (dim-after-fact at
-    equal ts), so the plan is Exchange → Sort → Window → Sort →
-    Window — still a single shuffle.
-
-    ``also_tolerance_suffix``: attach
-    ``<payload><also_tolerance_suffix>`` columns carrying the
-    staleness-cut variant of ``tolerance_seconds`` ALONGSIDE the raw
-    inclusive columns (the tolerance check is a row-local predicate
-    over the already-filled state, so this adds zero sorts and zero
-    shuffles); composes with ``also_strict_suffix`` (inclusive +
-    strict + tolerance, all from the ONE exchange). The suffixes must
-    differ from each other and from ``_asof``.
     """
     if not payload:
         raise ValueError("payload columns required")
@@ -116,7 +104,7 @@ def asof_join(
         filled = filled.withColumn(
             f"{p}_asof", F.last(f"__dim_{p}", ignorenulls=True).over(w)
         )
-    if also_strict_suffix is not None:
+    if strict:
         # same partition key, reversed tag order: fact sorts BEFORE a
         # dim update effective at exactly fact.ts, so that dim state
         # is NOT yet visible (exclusive). Catalyst reuses the single
@@ -131,7 +119,7 @@ def asof_join(
         )
         for p in payload:
             filled = filled.withColumn(
-                f"{p}{also_strict_suffix}",
+                f"{p}_strict",
                 F.last(f"__dim_{p}", ignorenulls=True).over(w_strict),
             )
     if tolerance_seconds is not None:
@@ -143,15 +131,11 @@ def asof_join(
             F.unix_micros(F.col(fact_ts).cast("timestamp"))
             - F.unix_micros(F.col("__asof_ts").cast("timestamp"))
         ) <= F.lit(int(tolerance_seconds * 1_000_000))
-        # named tolerance columns when requested, else cut in place
-        out_suffix = also_tolerance_suffix or "_asof"
         for p in payload:
-            filled = filled.withColumn(
-                f"{p}{out_suffix}", F.when(age_ok, F.col(f"{p}_asof"))
-            )
+            filled = filled.withColumn(f"{p}_tol", F.when(age_ok, F.col(f"{p}_asof")))
     out_cols = fact_cols + [f"{p}_asof" for p in payload]
-    if also_strict_suffix is not None:
-        out_cols += [f"{p}{also_strict_suffix}" for p in payload]
-    if also_tolerance_suffix is not None:
-        out_cols += [f"{p}{also_tolerance_suffix}" for p in payload]
+    if strict:
+        out_cols += [f"{p}_strict" for p in payload]
+    if tolerance_seconds is not None:
+        out_cols += [f"{p}_tol" for p in payload]
     return filled.filter(F.col("__tag") == 1).select(*out_cols)

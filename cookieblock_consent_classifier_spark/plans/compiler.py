@@ -15,9 +15,14 @@ compiler emits ONE Catalyst DAG for the whole schema:
 
 Physical shape: exactly one hash-exchange on entity_id plus N tiny
 broadcast exchanges; every row-wise expression is codegen'd or
-Arrow-batched. Disabled features are simply not emitted — Catalyst
-then prunes their input columns from the scan (the reference's
-`enabled`-flag pruning, processor.py:95-121, for free).
+Arrow-batched. Disabled features are not emitted. Their native
+inputs (per-entity aggregates, decoded value, entropy, the shared
+domain column) are built on every schema and nothing reads them, so
+Catalyst prunes them, and their input columns, from the plan (the
+reference's `enabled`-flag pruning, processor.py:95-121, for free).
+Only what costs more than an expression stays behind a check: the
+Arrow kernel (any enabled ``kernel`` row of schema.FEATURES), the
+gestalt and regex-list pandas UDFs, and the broadcast rank joins.
 
 Feature semantics cite /root/reference/feature_extraction/*.
 """
@@ -32,7 +37,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from cookieblock_consent_classifier_spark.functions import native, vectorized as V
 from cookieblock_consent_classifier_spark.plans import assemble
 from cookieblock_consent_classifier_spark.plans.assemble import Block
-from cookieblock_consent_classifier_spark.schema import NUM_CLASSES, FeatureSchema, FeatureSpec
+from cookieblock_consent_classifier_spark.schema import FEATURES, NUM_CLASSES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df, sql_literal
 
 # Bound on the ONE collected sequence in the plan: the ordered values
@@ -49,74 +54,21 @@ GESTALT_MAX_UPDATES = 10_000
 
 
 # ---------------------------------------------------------------------------
-# default schema: mirrors the reference's shipped features.json order
-# and widths (features.json:1-417); resource-backed widths are
-# parameterized so tests can run with small fixture resources.
+# default schema: schema.FEATURES, the reference's shipped features.json
+# order and widths; resource-backed widths come from ``res`` so tests can
+# run with small fixture resources.
 # ---------------------------------------------------------------------------
 
 def default_schema(res: Resources, num_updates: int = 1, num_diffs: int = 1) -> FeatureSchema:
-    pe = [
-        FeatureSpec("top_names", vector_size=len(res.top_names)),
-        FeatureSpec("top_domains", vector_size=len(res.top_domains)),
-        FeatureSpec("pattern_names", vector_size=len(res.name_patterns)),
-        FeatureSpec("name_tokens", vector_size=len(res.name_tokens)),
-        FeatureSpec("iab_vendor"),
-        FeatureSpec("domain_period"),
-        FeatureSpec("host_only"),
-        FeatureSpec("third_party"),
-        FeatureSpec("non_root_path"),
-        FeatureSpec("update_count"),
-        FeatureSpec("http_only_changed"),
-        FeatureSpec("secure_changed"),
-        FeatureSpec("same_site_changed"),
-        FeatureSpec("session_changed"),
-        FeatureSpec("content_changed"),
-        FeatureSpec("expiry_changed"),
-        FeatureSpec("gestalt_total", vector_size=2),
-        FeatureSpec("levenshtein_total", vector_size=2),
-        FeatureSpec("contlength_total", vector_size=2),
-        FeatureSpec("complength_total", vector_size=2),
-        FeatureSpec("entropy_total", vector_size=2),
-    ]
-    pu = [
-        FeatureSpec("http_only"),
-        FeatureSpec("secure"),
-        FeatureSpec("session"),
-        FeatureSpec("same_site", vector_size=3),
-        FeatureSpec("expiry"),
-        FeatureSpec("expiry_extra", vector_size=8),
-        FeatureSpec("content_length"),
-        FeatureSpec("compressed_length", vector_size=2),
-        FeatureSpec("shannon_entropy"),
-        FeatureSpec("url_encoding"),
-        FeatureSpec("delimiter_sep", vector_size=9, args={"min_seps": 1}),
-        FeatureSpec("base64_encoded"),
-        FeatureSpec("contains_js_obj"),
-        FeatureSpec("content_eng_terms", vector_size=len(res.content_terms)),
-        FeatureSpec("csv_contents", vector_size=5, args={"min_seps": 2}),
-        FeatureSpec("js_contents", vector_size=11),
-        FeatureSpec("numerical_content"),
-        FeatureSpec("hex_content"),
-        FeatureSpec("alpha_content"),
-        FeatureSpec("is_identifier"),
-        FeatureSpec("all_uppercase"),
-        FeatureSpec("all_lowercase"),
-        FeatureSpec("empty_content"),
-        FeatureSpec("boolean_content"),
-        FeatureSpec("timestamp_content"),
-        FeatureSpec("date_content"),
-        FeatureSpec("contains_uuid", vector_size=6),
-        FeatureSpec("url_content"),
-    ]
-    pd_ = [
-        FeatureSpec("time_difference"),
-        FeatureSpec("gestalt_similarity"),
-        FeatureSpec("lev_distance"),
-    ]
-    return FeatureSchema(
-        num_updates=num_updates, num_diffs=num_diffs,
-        per_entity=tuple(pe), per_update=tuple(pu), per_diff=tuple(pd_),
-    )
+    def specs(family: str) -> tuple[FeatureSpec, ...]:
+        return tuple(
+            FeatureSpec(f.name, args=dict(f.args),
+                        vector_size=len(getattr(res, f.width)) if isinstance(f.width, str) else f.width)
+            for f in FEATURES if f.family == family
+        )
+
+    return FeatureSchema(num_updates=num_updates, num_diffs=num_diffs, per_entity=specs("entity"),
+                         per_update=specs("update"), per_diff=specs("diff"))
 
 
 # ---------------------------------------------------------------------------
@@ -189,37 +141,33 @@ def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]
         "empty_content": lambda c: [native.empty_content_ref(v(c))],
         # Python \b is unicode-aware, Java's is ASCII — kernel field
         "boolean_content": lambda c: [k(c)["bool_content"]],
-        "timestamp_content": lambda c: [native.pm(dec(c).rlike(native.TIMESTAMP_PAT))],
+        "timestamp_content": lambda c: [native.timestamp_content(dec(c))],
         "date_content": lambda c: [native.date_content_ref(dec(c))],
         "contains_uuid": lambda c: native.uuid_version_onehot_ref(dec(c)),
         "url_content": lambda c: [native.url_content_ref(dec(c))],
     }
 
 
-RANK_FEATURES = {"content_eng_terms", "top_names", "top_domains", "pattern_names", "name_tokens"}
+# multi-hot rank features: their width is a resource list's length
+RANK_FEATURES = frozenset(f.name for f in FEATURES if isinstance(f.width, str))
 
-# per-update features whose builders read the fused Arrow kernel struct
-# (__k) for a genuinely-Python computation: zlib (compressed_length),
-# csv.Sniffer (csv/delimiter), js2py (js_contents), base64 decode
-# heuristics, and open-ended Python unicode semantics
-# (isnumeric/isalpha/isidentifier/case/\b). Every other per-update
-# feature is pure Catalyst over the raw columns, ``dec`` and
-# ``entropy``, so a schema that enables none of these (and not
-# complength_total) compiles without the kernel: zero Python nodes in
-# the plan, not just a pruned one.
-KERNEL_ONLY_PER_UPDATE = frozenset({
-    "compressed_length", "delimiter_sep", "base64_encoded", "contains_js_obj",
-    "content_eng_terms", "csv_contents", "js_contents", "numerical_content",
-    "alpha_content", "is_identifier", "all_uppercase", "all_lowercase",
-    "boolean_content",
-})
+# features whose builders read the fused Arrow kernel struct (__k) for a
+# genuinely-Python computation: zlib (compressed_length,
+# complength_total), csv.Sniffer (csv/delimiter), js2py (js_contents),
+# base64 decode heuristics, and open-ended Python unicode semantics
+# (isnumeric/isalpha/isidentifier/case/\b). Every other feature is
+# Catalyst over the raw columns, ``dec`` and ``entropy``, or its own
+# Python UDF, so a schema that enables none of these compiles without
+# the kernel: no kernel node in the plan, not just a pruned one.
+_KERNEL_FEATURES = frozenset(f.name for f in FEATURES if f.path == "kernel")
+KERNEL_ONLY_PER_UPDATE = frozenset(f.name for f in FEATURES
+                                   if f.path == "kernel" and f.family == "update")
 
 
 def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> FeatureSchema:
-    """``default_schema`` filtered to the features whose compiled form
-    is pure Catalyst expressions — no Arrow kernel field
-    (KERNEL_ONLY_PER_UPDATE, complength_total's zlib), no Python
-    regex-list UDFs (pattern_names / name_tokens), no difflib gestalt.
+    """``default_schema`` filtered to its ``catalyst`` rows (schema.FEATURES):
+    the features whose compiled form is pure Catalyst expressions — no
+    Arrow kernel field, no regex-list UDF, no difflib gestalt.
     Declaration order, widths and builders are those of the full
     schema: a sub-schema, not a variant implementation.
 
@@ -230,14 +178,11 @@ def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> F
     exact DuckDB twin over this subset, turning the pipeline row from
     rows-only into a value-exact green gate row (VERDICT r4 item 1).
     """
-    python = KERNEL_ONLY_PER_UPDATE | {
-        "complength_total", "pattern_names", "name_tokens", "gestalt_total",
-        "gestalt_similarity",
-    }
+    catalyst = {f.name for f in FEATURES if f.path == "catalyst"}
     full = default_schema(res, num_updates, num_diffs)
 
     def keep(specs):
-        return tuple(s for s in specs if s.name not in python)
+        return tuple(s for s in specs if s.name in catalyst)
 
     return replace(full, per_entity=keep(full.per_entity),
                    per_update=keep(full.per_update), per_diff=keep(full.per_diff))
@@ -310,7 +255,7 @@ def compile_features(
                    if s.name == "csv_contents"), 2)
     # THE kernel/native fork, decided from the schema: it chooses only
     # where ``dec`` and ``entropy`` come from; every builder is the same
-    # on both sides. With any kernel-only feature enabled the fused
+    # on both sides. With any kernel feature enabled the fused
     # Arrow kernel runs anyway, so its dec/entropy fields are free.
     # Otherwise the plan stays zero-Python: the Python-unquote decoded
     # string (native.py_unquote, a byte-exact CPython twin) and the
@@ -322,8 +267,9 @@ def compile_features(
     # output but raised its job_cpu_s in 3/3 pairs on 4 cores (5.52→5.92,
     # 5.20→6.02, 5.30→6.08 s): the Arrow batch beats the JVM HOF there.
     need_kernel = any(
-        s.enabled and s.name in KERNEL_ONLY_PER_UPDATE for s in schema.per_update
-    ) or "complength_total" in enabled_pe
+        s.enabled and s.name in _KERNEL_FEATURES
+        for s in schema.per_entity + schema.per_update + schema.per_diff
+    )
     if need_kernel:
         kernel = V.content_kernel_udf(
             res.content_terms, delim_min_seps=delim_ms, csv_min_seps=csv_ms
@@ -358,15 +304,12 @@ def compile_features(
         upd_cols[spec.name] = [f"u__{spec.name}__{i}" for i in range(len(built))]
         stage0_cols += [col.alias(c) for col, c in zip(built, upd_cols[spec.name])]
 
-    # aggregate inputs only when their consuming per-entity feature is
-    # enabled: an unreferenced __k field lets Catalyst column-prune the
-    # whole Arrow kernel out of slim schemas (e.g. native-only configs)
-    if "contlength_total" in enabled_pe:
-        stage0_cols.append(F.octet_length("value").cast("double").alias("__byte_len"))
-    if "complength_total" in enabled_pe:
+    # per-entity aggregate inputs: the aggregates of a disabled feature
+    # are never read, so Catalyst prunes them and these inputs
+    stage0_cols.append(F.octet_length("value").cast("double").alias("__byte_len"))
+    if need_kernel:
         stage0_cols.append(F.col("__k")["zlib_len"].alias("__zlib_len"))
-    if "entropy_total" in enabled_pe:
-        stage0_cols.append(entropy.alias("__entropy"))
+    stage0_cols.append(entropy.alias("__entropy"))
     proj = staged.select("*", *stage0_cols)
 
     # ---- stage 1 (the ONE shuffle): window lag columns + change
@@ -469,13 +412,11 @@ def compile_features(
         ).alias("e__expiry_changed"),
         F.when(F.min_by("host_only", F.struct("ts", "update_idx")), F.lit(1.0)).alias("e__host_only"),
         *mean_std("d__lev_distance", "e__levenshtein"),
+        *mean_std("__byte_len", "e__contlength"),
     ]
-    if "contlength_total" in enabled_pe:
-        aggs += mean_std("__byte_len", "e__contlength")
-    if "complength_total" in enabled_pe:
+    if need_kernel:
         aggs += mean_std("__zlib_len", "e__complength")
-    if "entropy_total" in enabled_pe:
-        aggs += mean_std("__entropy", "e__entropy")
+    aggs += mean_std("__entropy", "e__entropy")
     if need_gestalt:
         # ordered value sequence for the post-agg gestalt kernel,
         # bounded at GESTALT_MAX_UPDATES (collect_list drops NULLs, so
@@ -510,10 +451,9 @@ def compile_features(
     if "top_names" in enabled_pe:
         tn = rank_df(spark, res.top_names, "name").withColumnRenamed("rank", "__tn_rank")
         ent = ent.join(F.broadcast(tn), "name", "left")
-    if "top_domains" in enabled_pe or "iab_vendor" in enabled_pe:
-        # shared by the top_domains rank join and the iab_vendor
-        # membership probe (same uniform_domain expression)
-        ent = ent.withColumn("__udom", native.uniform_domain("domain"))
+    # shared by the top_domains rank join and the iab_vendor
+    # membership probe (same uniform_domain expression)
+    ent = ent.withColumn("__udom", native.uniform_domain("domain"))
     if "top_domains" in enabled_pe:
         td = rank_df(spark, res.top_domains, "__udom").withColumnRenamed("rank", "__td_rank")
         ent = ent.join(F.broadcast(td), "__udom", "left")
@@ -528,10 +468,10 @@ def compile_features(
 
     # ---- stage 4: named feature columns in declared order
     pe_exprs: dict[str, list[Column] | Column] = {
-        "top_names": F.when(F.col("__tn_rank").isNotNull(), F.array(F.col("__tn_rank"))).otherwise(F.array().cast("array<int>")) if "top_names" in enabled_pe else None,
-        "top_domains": F.when(F.col("__td_rank").isNotNull(), F.array(F.col("__td_rank"))).otherwise(F.array().cast("array<int>")) if "top_domains" in enabled_pe else None,
-        "pattern_names": F.col("__pat_ranks") if "pattern_names" in enabled_pe else None,
-        "name_tokens": F.col("__tok_ranks") if "name_tokens" in enabled_pe else None,
+        "top_names": F.when(F.col("__tn_rank").isNotNull(), F.array(F.col("__tn_rank"))).otherwise(F.array().cast("array<int>")),
+        "top_domains": F.when(F.col("__td_rank").isNotNull(), F.array(F.col("__td_rank"))).otherwise(F.array().cast("array<int>")),
+        "pattern_names": F.col("__pat_ranks"),
+        "name_tokens": F.col("__tok_ranks"),
         "iab_vendor": [F.when(_sql_in_set("__udom", res.iab_vendors), F.lit(1.0))],
         "domain_period": [native.domain_period("domain")],
         "host_only": [F.col("e__host_only")],

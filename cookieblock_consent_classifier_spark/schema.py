@@ -4,15 +4,17 @@ The reference's output schema is *declared, not inferred* in
 ``features.json`` (reference: feature_extraction/processor.py:5-27,
 77-125): three feature families (per-cookie / per-update / per-diff),
 each feature a named function with a fixed ``vector_size``, JSON order
-= column order. We mirror that contract with dataclasses; the plan
-compiler (plans/compiler.py) turns a ``FeatureSchema`` into one lazy
-DataFrame DAG, and the assembler enforces the same width invariant the
-reference asserts per row (processor.py:197-200).
+= column order. We mirror that contract with dataclasses; ``FEATURES``
+declares the shipped 52 features once. The plan compiler
+(plans/compiler.py) turns a ``FeatureSchema`` into one lazy DataFrame
+DAG, and the assembler enforces the same width invariant the reference
+asserts per row (processor.py:197-200).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import types as T
 
@@ -78,24 +80,9 @@ class FeatureSchema:
     per_update: tuple[FeatureSpec, ...] = ()
     per_diff: tuple[FeatureSpec, ...] = ()
 
-    def _enabled(self, specs: tuple[FeatureSpec, ...]) -> list[FeatureSpec]:
-        return [s for s in specs if s.enabled]
-
-    @property
-    def per_entity_width(self) -> int:
-        return sum(s.vector_size for s in self._enabled(self.per_entity))
-
-    @property
-    def per_update_width(self) -> int:
-        return sum(s.vector_size for s in self._enabled(self.per_update)) * self.num_updates
-
-    @property
-    def per_diff_width(self) -> int:
-        return sum(s.vector_size for s in self._enabled(self.per_diff)) * self.num_diffs
-
     @property
     def total_width(self) -> int:
-        return self.per_entity_width + self.per_update_width + self.per_diff_width
+        return len(self.feature_names())
 
     def feature_names(self) -> list[str]:
         """Positional feature names, matching
@@ -114,13 +101,90 @@ class FeatureSchema:
         # across all its update/diff slots before moving to the next
         # feature (processor.py:411-451), so columns group as
         # feature × slot, not slot × feature.
-        for s in self._enabled(self.per_entity):
-            block(s, "")
-        for s in self._enabled(self.per_update):
-            for u in range(self.num_updates):
-                block(s, f"update_{u}_")
-        for s in self._enabled(self.per_diff):
-            for d in range(self.num_diffs):
-                block(s, f"diff_{d}_")
-        assert len(out) == self.total_width
+        for s in self.per_entity:
+            if s.enabled:
+                block(s, "")
+        for s in self.per_update:
+            if s.enabled:
+                for u in range(self.num_updates):
+                    block(s, f"update_{u}_")
+        for s in self.per_diff:
+            if s.enabled:
+                for d in range(self.num_diffs):
+                    block(s, f"diff_{d}_")
         return out
+
+
+class Feature(NamedTuple):
+    """One row of FEATURES."""
+
+    family: str     # "entity" | "update" | "diff" (features.json section)
+    function: str   # the reference's processor.py method
+    name: str       # engine spec name (plans/compiler.py builders)
+    width: int | str  # a str names the Resources list whose length it is
+    path: str       # "catalyst" | "kernel" | "python"
+    args: dict      # keyword args of the reference function
+
+
+# The reference's 52 features in its shipped features.json order
+# (features.json:1-417; per-cookie, per-update, per-diff). The ONE
+# declaration: default_schema, native_schema, the rank/kernel sets of
+# plans/compiler.py and the features.json loader's function map are
+# all derived from it. Compute path: "catalyst" compiles to native
+# expressions only; "kernel" reads a field of the fused Arrow kernel
+# (functions/vectorized.content_kernel_udf); "python" runs its own
+# pandas UDF (regex-list ranks, difflib gestalt).
+FEATURES: tuple[Feature, ...] = tuple(Feature(*row) for row in (
+    ("entity", "feature_top_names", "top_names", "top_names", "catalyst", {}),
+    ("entity", "feature_top_domains", "top_domains", "top_domains", "catalyst", {}),
+    ("entity", "feature_pattern_names", "pattern_names", "name_patterns", "python", {}),
+    ("entity", "feature_name_tokens", "name_tokens", "name_tokens", "python", {}),
+    ("entity", "feature_iab_vendor", "iab_vendor", 1, "catalyst", {}),
+    ("entity", "feature_domain_period", "domain_period", 1, "catalyst", {}),
+    ("entity", "feature_host_only_first_update", "host_only", 1, "catalyst", {}),
+    ("entity", "feature_is_third_party", "third_party", 1, "catalyst", {}),
+    ("entity", "feature_non_root_path", "non_root_path", 1, "catalyst", {}),
+    ("entity", "feature_update_count", "update_count", 1, "catalyst", {}),
+    ("entity", "feature_http_only_changed", "http_only_changed", 1, "catalyst", {}),
+    ("entity", "feature_secure_changed", "secure_changed", 1, "catalyst", {}),
+    ("entity", "feature_same_site_changed", "same_site_changed", 1, "catalyst", {}),
+    ("entity", "feature_is_session_changed", "session_changed", 1, "catalyst", {}),
+    ("entity", "feature_content_changed", "content_changed", 1, "catalyst", {}),
+    ("entity", "feature_expiry_changed", "expiry_changed", 1, "catalyst", {}),
+    ("entity", "feature_gestalt_mean_and_stddev", "gestalt_total", 2, "python", {}),
+    ("entity", "feature_levenshtein_mean_and_stddev", "levenshtein_total", 2, "catalyst", {}),
+    ("entity", "feature_content_length_mean_and_stddev", "contlength_total", 2, "catalyst", {}),
+    ("entity", "feature_compressed_length_mean_and_stddev", "complength_total", 2, "kernel", {}),
+    ("entity", "feature_entropy_mean_and_stddev", "entropy_total", 2, "catalyst", {}),
+    ("update", "feature_http_only", "http_only", 1, "catalyst", {}),
+    ("update", "feature_secure", "secure", 1, "catalyst", {}),
+    ("update", "feature_session", "session", 1, "catalyst", {}),
+    ("update", "feature_same_site", "same_site", 3, "catalyst", {}),
+    ("update", "feature_expiry", "expiry", 1, "catalyst", {}),
+    ("update", "feature_expiry_extra", "expiry_extra", 8, "catalyst", {}),
+    ("update", "feature_content_length", "content_length", 1, "catalyst", {}),
+    ("update", "feature_compressed_content", "compressed_length", 2, "kernel", {}),
+    ("update", "feature_shannon_entropy", "shannon_entropy", 1, "catalyst", {}),
+    ("update", "feature_url_encoding", "url_encoding", 1, "catalyst", {}),
+    ("update", "feature_delimiter_separated", "delimiter_sep", 9, "kernel", {"min_seps": 1}),
+    ("update", "feature_base64_encoded", "base64_encoded", 1, "kernel", {}),
+    ("update", "feature_contains_javascript_object", "contains_js_obj", 1, "kernel", {}),
+    ("update", "feature_english_terms_in_content", "content_eng_terms", "content_terms", "kernel", {}),
+    ("update", "feature_csv_content", "csv_contents", 5, "kernel", {"min_seps": 2}),
+    ("update", "feature_js_content", "js_contents", 11, "kernel", {}),
+    ("update", "feature_numerical_content", "numerical_content", 1, "kernel", {}),
+    ("update", "feature_hex_content", "hex_content", 1, "catalyst", {}),
+    ("update", "feature_alpha_content", "alpha_content", 1, "kernel", {}),
+    ("update", "feature_is_identifier", "is_identifier", 1, "kernel", {}),
+    ("update", "feature_all_uppercase_content", "all_uppercase", 1, "kernel", {}),
+    ("update", "feature_all_lowercase_content", "all_lowercase", 1, "kernel", {}),
+    ("update", "feature_empty_content", "empty_content", 1, "catalyst", {}),
+    ("update", "feature_boolean_content", "boolean_content", 1, "kernel", {}),
+    ("update", "feature_timestamp_content", "timestamp_content", 1, "catalyst", {}),
+    ("update", "feature_date_content", "date_content", 1, "catalyst", {}),
+    ("update", "feature_canonical_uuid", "contains_uuid", 6, "catalyst", {}),
+    ("update", "feature_url_content", "url_content", 1, "catalyst", {}),
+    ("diff", "feature_time_diff", "time_difference", 1, "catalyst", {}),
+    ("diff", "feature_gestalt_pattern_ratio", "gestalt_similarity", 1, "python", {}),
+    ("diff", "feature_levenshtein_dist", "lev_distance", 1, "catalyst", {}),
+))

@@ -7,8 +7,8 @@ width-counted at :91-125) into the engine's ``FeatureSchema`` plus a
 sources/resources.py (setup_* dispatch, processor.py:180-190).
 
 The JSON shape (per entry): name, desc, function, enabled,
-vector_size, args, and optionally setup + source. Feature ``name``s
-map 1:1 onto the engine's spec names (plans/compiler.py builders);
+vector_size, args, and optionally setup + source. Each ``function``
+maps onto its engine spec name through ``schema.FEATURES``;
 ``function``/``setup`` names are validated against the known mapping
 so a config that the engine cannot honor fails loudly instead of
 silently dropping features.
@@ -19,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 
-from cookieblock_consent_classifier_spark.schema import FeatureSchema, FeatureSpec
+from cookieblock_consent_classifier_spark.schema import FEATURES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import (
     Resources,
     load_pattern_csv,
@@ -27,65 +27,8 @@ from cookieblock_consent_classifier_spark.sources.resources import (
     load_vendor_txt,
 )
 
-# reference function name -> engine spec name (processor.py feature_*
-# methods; the shipped features.json uses exactly these)
-KNOWN_FUNCTIONS = {
-    # per-cookie
-    "feature_top_names": "top_names",
-    "feature_top_domains": "top_domains",
-    "feature_pattern_names": "pattern_names",
-    "feature_name_tokens": "name_tokens",
-    "feature_iab_vendor": "iab_vendor",
-    "feature_domain_period": "domain_period",
-    "feature_host_only_first_update": "host_only",
-    "feature_is_third_party": "third_party",
-    "feature_non_root_path": "non_root_path",
-    "feature_update_count": "update_count",
-    "feature_http_only_changed": "http_only_changed",
-    "feature_secure_changed": "secure_changed",
-    "feature_same_site_changed": "same_site_changed",
-    "feature_is_session_changed": "session_changed",
-    "feature_content_changed": "content_changed",
-    "feature_expiry_changed": "expiry_changed",
-    "feature_gestalt_mean_and_stddev": "gestalt_total",
-    "feature_levenshtein_mean_and_stddev": "levenshtein_total",
-    "feature_content_length_mean_and_stddev": "contlength_total",
-    "feature_compressed_length_mean_and_stddev": "complength_total",
-    "feature_entropy_mean_and_stddev": "entropy_total",
-    # per-update
-    "feature_http_only": "http_only",
-    "feature_secure": "secure",
-    "feature_session": "session",
-    "feature_same_site": "same_site",
-    "feature_expiry": "expiry",
-    "feature_expiry_extra": "expiry_extra",
-    "feature_content_length": "content_length",
-    "feature_compressed_content": "compressed_length",
-    "feature_shannon_entropy": "shannon_entropy",
-    "feature_url_encoding": "url_encoding",
-    "feature_delimiter_separated": "delimiter_sep",
-    "feature_base64_encoded": "base64_encoded",
-    "feature_contains_javascript_object": "contains_js_obj",
-    "feature_english_terms_in_content": "content_eng_terms",
-    "feature_csv_content": "csv_contents",
-    "feature_js_content": "js_contents",
-    "feature_numerical_content": "numerical_content",
-    "feature_hex_content": "hex_content",
-    "feature_alpha_content": "alpha_content",
-    "feature_is_identifier": "is_identifier",
-    "feature_all_uppercase_content": "all_uppercase",
-    "feature_all_lowercase_content": "all_lowercase",
-    "feature_empty_content": "empty_content",
-    "feature_boolean_content": "boolean_content",
-    "feature_timestamp_content": "timestamp_content",
-    "feature_date_content": "date_content",
-    "feature_canonical_uuid": "contains_uuid",
-    "feature_url_content": "url_content",
-    # per-diff
-    "feature_time_diff": "time_difference",
-    "feature_gestalt_pattern_ratio": "gestalt_similarity",
-    "feature_levenshtein_dist": "lev_distance",
-}
+# reference function name -> engine spec name, in features.json order
+KNOWN_FUNCTIONS = {f.function: f.name for f in FEATURES}
 
 # setup fn -> which Resources field it fills + which loader semantics
 _SETUPS = {
@@ -103,7 +46,7 @@ def load_features_config(config_path: str, base_dir: str | None = None) -> tuple
 
     ``base_dir`` resolves relative ``source`` paths (the reference
     resolves them against its repo root); defaults to the config
-    file's directory's parent layout — pass it explicitly for clarity.
+    file's directory.
     """
     with open(config_path, encoding="utf-8") as fd:
         cfg = json.load(fd)

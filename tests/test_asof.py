@@ -65,7 +65,7 @@ def test_asof_strict_excludes_same_instant(spark, fact, dim):
     out = {
         r["fid"]: r["state_strict"]
         for r in asof_join(
-            fact, dim, on="entity", payload=["state"], also_strict_suffix="_strict"
+            fact, dim, on="entity", payload=["state"], strict=True
         ).collect()
     }
     assert out[1] == "v5"  # v20 at the same instant NOT visible
@@ -130,8 +130,9 @@ def test_asof_matches_naive_range_join_on_real_data(spark, events, orders):
 
 
 def test_asof_tolerance_nulls_stale_matches(spark, events, orders):
-    """tolerance must null exactly the matches older than the bound
-    (verified against the plain as-of + an explicit age check)."""
+    """the ``_tol`` columns must null exactly the matches older than
+    the bound (verified against the plain as-of + an explicit age
+    check), next to unchanged ``_asof`` columns."""
     ords = orders.withColumnRenamed("o_custkey", "user_id")
     plain = asof_join(
         events, ords, on="user_id", fact_ts="ts", dim_ts="o_orderdate",
@@ -144,8 +145,12 @@ def test_asof_tolerance_nulls_stale_matches(spark, events, orders):
         tolerance_seconds=tol,
     )
     p = {r["event_id"]: r for r in plain.collect()}
-    t = {r["event_id"]: r["o_orderkey_asof"] for r in with_tol.collect()}
+    tol_rows = with_tol.collect()
+    t = {r["event_id"]: r["o_orderkey_tol"] for r in tol_rows}
     assert set(p) == set(t)
+    assert {r["event_id"]: r["o_orderkey_asof"] for r in tol_rows} == {
+        eid: row["o_orderkey_asof"] for eid, row in p.items()
+    }
     n_stale = 0
     for eid, row in p.items():
         if row["o_orderkey_asof"] is None:
@@ -162,13 +167,13 @@ def test_asof_tolerance_nulls_stale_matches(spark, events, orders):
 
 
 def test_asof_also_strict_single_pass(spark, fact, dim):
-    """also_strict_suffix: inclusive + strict columns from ONE
+    """strict=True: inclusive + strict columns from ONE
     union+window pass — values match a separate inclusive run and the
     naive strict oracle, and the plan carries exactly one hash
     exchange (two sorts share it)."""
     both = asof_join(
         fact, dim, on="entity", fact_ts="ts", dim_ts="ts",
-        payload=["state"], also_strict_suffix="_strict",
+        payload=["state"], strict=True,
     )
     incl = asof_join(fact, dim, on="entity", fact_ts="ts", dim_ts="ts", payload=["state"])
     got = {r["fid"]: (r["state_asof"], r["state_strict"]) for r in both.collect()}
@@ -186,14 +191,13 @@ def test_asof_also_strict_single_pass(spark, fact, dim):
 
 def test_asof_triple_mode_single_pass(spark, fact, dim):
     """inclusive + strict + tolerance columns from ONE pass
-    (also_strict_suffix + also_tolerance_suffix): values match three
-    separate runs (the strict one: the naive oracle) and the plan still
-    carries exactly one exchange."""
+    (strict + tolerance_seconds): values match three separate runs
+    (the strict and tolerance ones: the naive oracle too) and the plan
+    still carries exactly one exchange."""
     tol = 12.0  # seconds: ts=30 fact vs dim at 25 ok (5s), vs 5 stale
     combo = asof_join(
         fact, dim, on="entity", fact_ts="ts", dim_ts="ts",
-        payload=["state"], also_strict_suffix="_strict",
-        tolerance_seconds=tol, also_tolerance_suffix="_tol",
+        payload=["state"], strict=True, tolerance_seconds=tol,
     )
     incl = asof_join(fact, dim, on="entity", payload=["state"])
     tol_only = asof_join(
@@ -208,15 +212,14 @@ def test_asof_triple_mode_single_pass(spark, fact, dim):
     }
     assert {k: v[1] for k, v in got.items()} == _naive(fact, dim, strict=True)
     assert {k: v[2] for k, v in got.items()} == {
-        r["fid"]: r["state_asof"] for r in tol_only.collect()
-    }
+        r["fid"]: r["state_tol"] for r in tol_only.collect()
+    } == _naive(fact, dim, tol=tol)
     # the tolerance column must differ from the raw inclusive one
     # somewhere (fid=0: v5 at age 5s <= 12s ok; fid=1: v20 age 0 ok;
     # fid=2: v25 age 5 ok — adjust tol to force a stale cut)
     tight = asof_join(
         fact, dim, on="entity", payload=["state"],
-        also_strict_suffix="_strict",
-        tolerance_seconds=3.0, also_tolerance_suffix="_tol",
+        strict=True, tolerance_seconds=3.0,
     )
     trow = {r["fid"]: (r["state_asof"], r["state_tol"]) for r in tight.collect()}
     assert trow[0] == ("v5", None)      # age 5s > 3s: tol nulls, incl keeps

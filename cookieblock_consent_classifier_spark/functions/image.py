@@ -13,18 +13,20 @@ Codecs:
   stdlib): 8x8 DCT, quality-scaled Annex K quantization, standard
   huffman entropy coding, full marker stream. The decoder reads quant
   and huffman tables from the stream (DQT/DHT), so any standard
-  baseline grayscale JPEG decodes; default quality 95
-  (jpeg.DEFAULT_QUALITY — chosen so the worst case, the mod-256
-  sawtooth corpus, stays ≥ 40 dB PSNR with margin; see the note in
-  jpeg.py) keeps the decoded pixels ≥ 40 dB on the synthetic corpus
-  (the input_hint lossy invariant, pinned in tests/test_jpeg.py). No external decoder
-  exists in this container to cross-check against — the structural
-  markers are asserted in tests and the table-from-stream design
-  keeps the decoder general.
+  baseline grayscale JPEG decodes. Default quality 95
+  (jpeg.DEFAULT_QUALITY) keeps the decoded pixels >= 40 dB PSNR on the
+  synthetic corpus, its mod-256 sawtooth worst case included (the
+  input_hint lossy invariant, pinned in tests/test_jpeg.py). No
+  external decoder exists to cross-check against; the tests assert
+  the structural markers byte-level.
 
-Everything Spark-side — binary column handling, Arrow batch shapes,
-pandas-UDF signatures, per-entity phash-delta windows, PSNR
-verification — is real and tested either way.
+Each image encodes on its own (encode_image); at the 32x32 thumbnails
+of the synthetic table the JPEG codec's cost is its per-symbol
+entropy walk (jpeg.py).
+
+Everything Spark-side — binary column handling, pandas-UDF
+signatures, per-entity phash-delta windows, PSNR verification — is
+real and tested either way.
 """
 
 from __future__ import annotations
@@ -36,13 +38,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
-
-try:  # real codecs if ever available — plumbing is codec-agnostic
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:
-    HAVE_PIL = False
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -175,27 +170,6 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
 
         return jpeg.encode_jpeg_gray(pixels)  # REAL baseline JFIF
     raise NotImplementedError(f"codec for fmt={fmt!r} not available in this container")
-
-
-def encode_image_batch(pixels_list: list, fmts: list) -> list:
-    """Arrow-batch encode path: all jpeg images in the batch encode in
-    ONE vectorized pass (jpeg.encode_jpeg_gray_batch — one DCT matmul
-    + one entropy-coder call across every block of every image;
-    byte-identical to per-image encode_image). PNG and other formats
-    stay per-image: their cost is zlib, not numpy dispatch. This is
-    the call shape every encoding pandas UDF should use."""
-    out: list = [None] * len(pixels_list)
-    jpeg_idx = [i for i, f in enumerate(fmts) if f == "jpeg"]
-    if jpeg_idx:
-        from cookieblock_consent_classifier_spark.functions import jpeg  # noqa: PLC0415
-
-        encs = jpeg.encode_jpeg_gray_batch([pixels_list[i] for i in jpeg_idx])
-        for i, e in zip(jpeg_idx, encs):
-            out[i] = e
-    for i, (px, f) in enumerate(zip(pixels_list, fmts)):
-        if out[i] is None:
-            out[i] = encode_image(px, f)
-    return out
 
 
 def decode_image(payload: bytes) -> np.ndarray:

@@ -1,7 +1,6 @@
 """Baseline JFIF (ITU-T T.81) grayscale codec — pure numpy + stdlib.
 
-A REAL lossy JPEG implementation, replacing the round-1..3
-"deterministic lossy stand-in" for fmt='jpeg' (functions/image.py):
+A real lossy JPEG implementation for fmt='jpeg' (functions/image.py):
 8x8 block DCT-II, quality-scaled Annex K.1 luminance quantization,
 zigzag scan, differential DC, run/size AC huffman entropy coding with
 the Annex K.3 standard tables, JFIF marker stream (SOI APP0 DQT SOF0
@@ -24,45 +23,23 @@ a 112-case sweep incl. the mod-256 sawtooth edges), plus an
 encode-once determinism pin and a non-multiple-of-8 edge-padding
 round trip.
 
-Performance note (round 5, measured interleaved-A/B on the 112-case
-PSNR corpus — BENCH/BASELINE.md §R5): the DCT/quant/dequant/IDCT
-stages are batched BLAS matmuls over all blocks of all images at once
-(the naive einsum contraction was 10x slower), and the ENCODE entropy
-stage is fully vectorized — run lengths by neighbor comparison over
-the nonzero scan, category/amplitude/huffman as table lookups, stream
-positions computed directly (no sort), bit packing as a
-cumsum-over-code-lengths + reduceat byte-lane scatter, byte stuffing
-as a duplicate-and-zero pass (~4x the per-symbol loop on the corpus;
-bit-identical — the loop is retained as _encode_entropy_loop, the
-parity target). encode_jpeg_gray_batch amortizes numpy dispatch over
-an Arrow batch: end-to-end corpus encode is ~4.4x round 4. The
-remaining floor is numpy pass overhead (~25 array passes); the
-DECODER's huffman walk is table-driven since round 6
-(_decode_entropy_fast: one vectorized unstuff pass, a 32-bit window
-per byte so any 16-bit peek is one shift+mask, flat 2^16
-(len<<8|sym) decode tables cached by table content, one vectorized
-coefficient scatter) — still fully spec-driven (tables parsed from
-the DHT segments) and pinned identical to the retained per-symbol
-spec reader (_decode_entropy_loop) on the corpus + fuzz. That
-byte-identical claim is scoped to WELL-FORMED (prefix-free, depth
-<= 16) huffman tables: on a corrupt non-prefix-free DHT the flat
-table resolves overlapping codes to the longest while the spec
-reader's ascending-length probe picks the shortest, and a hostile
-size symbol > 16 raises in the fast path where the loop decodes
-garbage — divergence only on invalid streams, never on anything this
-encoder (or a conforming one) writes. Memory note: _DECODE16_CACHE
-holds up to 64 flat 2^16 Python-int lists (~1.8 MB each boxed, so
-~115 MB/executor worst case under diverse fuzzed DHTs; one entry for
-the standard tables in practice) — bounded and intentional, the
-Python-int indexing is the fast path's win. A production 10^12-image
-run would still swap this module for a native codec; every interface
-it exposes (bytes in, uint8 array out) stays the same.
+One implementation per direction: the encoder is the spec-literal
+T.81 F.1.2 per-symbol walk (_encode_entropy_loop) and the decoder the
+F.2.2 per-symbol reader (_decode_entropy_loop), each raising
+ValueError on input outside 8-bit baseline (coefficient magnitude
+>= 2^15, DC category > 11, AC size > 10 or a run/size symbol outside
+the table). The DCT, quantization and IDCT are batched BLAS matmuls
+over all blocks of one image. The engine reaches the codec only
+through the synthetic image table and the image_pipeline and
+phash_delta queries (32x32 thumbnails), where the per-symbol walks
+cost about 0.5 ms per encode and 1 ms per decode (4-core x86 host); a
+corpus at scale would swap this module for a native codec behind the
+same interface (bytes in, uint8 array out).
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Sequence
 
 import numpy as np
 
@@ -158,11 +135,6 @@ def _build_decode(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int
     return {(ln, code): sym for sym, (code, ln) in _build_codes(bits, vals).items()}
 
 
-def _category(v: int) -> int:
-    """Size (bit-length of |v|) — DC/AC amplitude category."""
-    return int(v).bit_length() if v >= 0 else int(-v).bit_length()
-
-
 class _BitWriter:
     def __init__(self) -> None:
         self.out = bytearray()
@@ -190,58 +162,35 @@ class _BitWriter:
 
 def _amplitude_bits(v: int) -> tuple[int, int]:
     """Ones-complement amplitude encoding (F.1.2.1): returns
-    (bits, size); negative v encodes as v - 1 in `size` low bits."""
-    size = _category(v)
+    (bits, size), size = bit length of |v| (the category); negative v
+    encodes as v - 1 in `size` low bits. The largest quantized
+    coefficient or DC difference of 8-bit input is ~2x1016, so
+    |v| >= 2^15 is corrupt input."""
+    size = abs(v).bit_length()
+    if size > 15:
+        raise ValueError("coefficient magnitude out of baseline range")
     if v < 0:
         v = v + (1 << size) - 1
     return v & ((1 << size) - 1), size
 
 
-# -- vectorized entropy encoder ---------------------------------------
-
-# bit_length lookup for |v| < 2^15 (largest possible quantized
-# coefficient / DC diff magnitude is ~2x1016): one uint8 gather beats
-# a 16-way binary search per element
-_SIZE_LUT = np.zeros(1 << 15, dtype=np.int64)
-for _b in range(1, 16):
-    _SIZE_LUT[1 << (_b - 1): 1 << _b] = _b
 _DC_CODES = _build_codes(DC_LUM_BITS, DC_LUM_VALS)
 _AC_CODES = _build_codes(AC_LUM_BITS, AC_LUM_VALS)
-_DC_CODE = np.array([_DC_CODES[s][0] for s in range(12)], dtype=np.int64)
-_DC_LEN = np.array([_DC_CODES[s][1] for s in range(12)], dtype=np.int64)
-_AC_CODE = np.full(256, -1, dtype=np.int64)
-_AC_LEN = np.zeros(256, dtype=np.int64)
-for _s, (_c, _l) in _AC_CODES.items():
-    _AC_CODE[_s] = _c
-    _AC_LEN[_s] = _l
-
-
-def _vec_size(a: np.ndarray) -> np.ndarray:
-    """bit_length(|v|) per element (amplitude category, F.1.2.1.2) —
-    exact integer table lookup (no float log2)."""
-    ab = np.abs(a)
-    if ab.size and int(ab.max()) >= _SIZE_LUT.size:
-        raise ValueError("coefficient magnitude out of baseline range")
-    return _SIZE_LUT[ab]
-
-
-def _vec_amp(v: np.ndarray, size: np.ndarray) -> np.ndarray:
-    """Ones-complement amplitude bits (vectorized _amplitude_bits)."""
-    return np.where(v < 0, v + (1 << size) - 1, v) & ((1 << size) - 1)
 
 
 def _encode_entropy_loop(zz: np.ndarray) -> bytes:
-    """Spec-literal per-symbol twin of _encode_entropy (the original
-    T.81 F.1.2 sequential walk). Retained as the parity target: the
-    vectorized coder must be BIT-IDENTICAL to this on every input
-    (tests/test_jpeg.py round-trips + hypothesis fuzz + direct
-    byte-equality). Not used on the hot path."""
+    """(nblocks, 64) zigzag-ordered quantized coefficients of ONE image
+    → its entropy-coded segment (stuffed bytes, 1-fill padded): the
+    T.81 F.1.2 sequential walk, symbol by symbol, with the standard
+    Annex K.3 tables."""
     bw = _BitWriter()
     prev_dc = 0
     for row in zz:
         diff = int(row[0]) - prev_dc
         prev_dc = int(row[0])
         bits, size = _amplitude_bits(diff)
+        if size > 11:
+            raise ValueError("DC difference category > 11")
         c, ln = _DC_CODES[size]
         bw.write(c, ln)
         if size:
@@ -259,8 +208,10 @@ def _encode_entropy_loop(zz: np.ndarray) -> bytes:
                 bw.write(c, ln)
                 run -= 16
             bits, size = _amplitude_bits(v)
-            c, ln = _AC_CODES[(run << 4) | size]
-            bw.write(c, ln)
+            code = _AC_CODES.get((run << 4) | size)
+            if code is None:
+                raise ValueError("AC run/size symbol outside the standard table")
+            bw.write(*code)
             bw.write(bits, size)
             run = 0
         if last < 63:
@@ -268,165 +219,6 @@ def _encode_entropy_loop(zz: np.ndarray) -> bytes:
             bw.write(c, ln)
     bw.flush()
     return bytes(bw.out)
-
-
-def _encode_entropy(zz: np.ndarray) -> bytes:
-    """(nblocks, 64) zigzag-ordered quantized coefficients of ONE image
-    → its entropy-coded segment (stuffed bytes, 1-fill padded)."""
-    return _encode_entropy_multi(zz, np.array([zz.shape[0]]))[0]
-
-
-def _encode_entropy_multi(zz: np.ndarray, img_blocks: np.ndarray) -> list[bytes]:
-    """Vectorized entropy coder over the concatenated blocks of MANY
-    images at once — ``img_blocks[i]`` blocks belong to image i, in
-    order. Returns one independent entropy-coded segment per image
-    (DC prediction resets at every image boundary; padding, byte
-    stuffing, and stream bytes are per image — each output is exactly
-    what the single-image coder would emit). Batching exists because
-    the single-image call is dominated by fixed numpy-dispatch
-    overhead at thumbnail sizes; one call over an Arrow batch of
-    images amortizes it (module docstring, Performance note).
-
-    Mechanics, fully vectorized:
-
-    - runs of zeros before each nonzero AC coefficient come from
-      comparing each nonzero's zigzag position with its predecessor's
-      (same block → previous nonzero, block start otherwise) over the
-      row-major np.nonzero order — no full-grid pass;
-    - every emitted unit (DC size code, DC amplitude, ZRL repeats, AC
-      run/size code, AC amplitude, EOB) gets its stream position
-      computed DIRECTLY — per-block unit counts (2 DC units + ZRLs +
-      2 per nonzero + EOB) cumsum into block bases, each nonzero's
-      within-block offset falls out of a prefix sum of its unit
-      weight — and codes/lengths scatter into preallocated arrays, no
-      sort anywhere;
-    - bit packing: bit offsets from one cumsum over code lengths; each
-      ≤16-bit code shifts into a 32-bit window anchored at its start
-      byte, and the four byte lanes scatter-add via np.bincount —
-      units share bytes but never bits, so byte-wise addition has no
-      carries; byte stuffing doubles 0xFF slots and leaves the
-      inserted slot 0x00.
-
-    Bit-identical to T.81 F.1.2 sequential encoding (the retired
-    per-symbol loop); pinned by the round-trip + fuzz suites.
-    """
-    nb = zz.shape[0]
-    img_blocks = np.asarray(img_blocks, dtype=np.int64)
-    nimg = len(img_blocks)
-    img_first = np.cumsum(img_blocks) - img_blocks  # first block per image
-
-    # DC: differential, category, amplitude (F.1.2.1); the predictor
-    # resets to 0 at each image's first block
-    dc = zz[:, 0]
-    prev_dc = np.concatenate(([0], dc[:-1]))
-    prev_dc[img_first] = 0
-    diff = dc - prev_dc
-    dsz = _vec_size(diff)
-    if dsz.max(initial=0) > 11:
-        raise ValueError("DC difference category > 11")
-    damp = _vec_amp(diff, dsz)
-
-    # AC: run lengths by neighbor comparison over the row-major
-    # nonzero order (F.1.2.2) — previous nonzero position if the
-    # predecessor is in the same block, else the block start
-    # scan the full 64-wide grid (shift/mask beats //63 div/mod), then
-    # drop the DC column
-    flat = np.ascontiguousarray(zz).ravel()
-    nzi = np.flatnonzero(flat)
-    nzi = nzi[(nzi & 63) != 0]
-    v = flat[nzi]
-    bi = nzi >> 6
-    k = nzi & 63
-    prev_k = np.zeros(len(k), dtype=np.int64)
-    prev_k[1:] = np.where(bi[1:] == bi[:-1], k[:-1], 0)
-    run = k - prev_k - 1
-    nzrl = run >> 4  # ZRL (16-zero) symbols before this coefficient
-    sz = _vec_size(v)
-    sym = ((run & 15) << 4) | sz
-    if np.any(_AC_CODE[sym] < 0):
-        raise ValueError("AC run/size symbol outside the standard table")
-    amp = _vec_amp(v, sz)
-    lastk = np.zeros(nb, dtype=np.int64)
-    # nzi is ascending, so the last k per block is also the max; use
-    # ufunc.at (guaranteed per-element application) rather than fancy
-    # assignment, whose duplicate-index write order numpy documents as
-    # unspecified under buffering
-    np.maximum.at(lastk, bi, k)
-
-    # direct stream positions — no sort. Unit weight per nonzero =
-    # nzrl + 2 (ZRLs, then sym, then amp); per block: 2 DC units,
-    # the block's nonzero units, then EOB if emitted.
-    eob_flag = (lastk < 63).astype(np.int64)
-    w_nz = nzrl + 2
-    cnt_nz = np.bincount(bi, minlength=nb)
-    sum_zrl = np.bincount(bi, weights=nzrl, minlength=nb).astype(np.int64)
-    t_blk = 2 + 2 * cnt_nz + sum_zrl + eob_flag  # units per block
-    blk_u0 = np.cumsum(t_blk) - t_blk            # unit base per block
-    n_units = int(blk_u0[-1] + t_blk[-1]) if nb else 0
-    g_nz = np.cumsum(w_nz) - w_nz                # global nz-unit prefix
-    base_w = np.cumsum(2 * cnt_nz + sum_zrl)     # nz units in blocks <= b
-    base_w = base_w - (2 * cnt_nz + sum_zrl)     # ... in blocks < b
-    sym_pos = blk_u0[bi] + 2 + (g_nz - base_w[bi]) + nzrl
-    zpos = np.repeat(sym_pos - nzrl, nzrl) + (
-        np.arange(int(nzrl.sum()), dtype=np.int64)
-        - np.repeat(np.cumsum(nzrl) - nzrl, nzrl)
-    )
-    codes = np.empty(n_units, dtype=np.int64)
-    lens = np.empty(n_units, dtype=np.int64)
-    codes[blk_u0] = _DC_CODE[dsz]
-    lens[blk_u0] = _DC_LEN[dsz]
-    codes[blk_u0 + 1] = damp
-    lens[blk_u0 + 1] = dsz
-    codes[zpos] = _AC_CODES[0xF0][0]
-    lens[zpos] = _AC_CODES[0xF0][1]
-    codes[sym_pos] = _AC_CODE[sym]
-    lens[sym_pos] = _AC_LEN[sym]
-    codes[sym_pos + 1] = amp
-    lens[sym_pos + 1] = sz
-    eob_pos = (blk_u0 + t_blk - 1)[eob_flag == 1]
-    codes[eob_pos] = _AC_CODES[0x00][0]
-    lens[eob_pos] = _AC_CODES[0x00][1]
-
-    # per-image bit layout: every image's stream starts byte-aligned;
-    # image i's units span [blk_u0[img_first[i]], next image's base)
-    g = np.cumsum(lens) - lens  # global exclusive bit prefix
-    total = int(lens.sum())
-    base_g = g[blk_u0[img_first]]
-    img_bits = np.concatenate([base_g[1:], [total]]) - base_g
-    img_bytes = (img_bits + 7) >> 3
-    byte_base = np.cumsum(img_bytes) - img_bytes
-    units_per_img = np.diff(np.concatenate([blk_u0[img_first], [n_units]]))
-    shift_img = (byte_base << 3) - base_g  # bit rebase per image
-    starts = g + np.repeat(shift_img, units_per_img)
-
-    # bit packing without per-bit arrays: every code (<=16 bits) shifts
-    # into a 32-bit big-endian window anchored at its start byte.
-    # Start bytes are NON-DECREASING (starts are increasing), so each
-    # byte lane reduces contiguous runs via np.add.reduceat and
-    # scatters to unique byte targets — integer math throughout (units
-    # share bytes but never bits → byte-wise addition has no carries).
-    val = codes << (32 - (starts & 7) - lens)
-    b0 = starts >> 3
-    nbytes = int(img_bytes.sum())
-    seg = np.flatnonzero(np.diff(b0, prepend=-1))  # run starts in b0
-    ub = b0[seg]  # unique target bytes, ascending
-    acc = np.zeros(nbytes + 4, dtype=np.int64)
-    for lane in range(4):
-        acc[ub + lane] += np.add.reduceat((val >> (8 * (3 - lane))) & 0xFF, seg)
-    packed = acc[:nbytes].astype(np.uint8)
-    # per-image 1-fill padding (F.1.2.3)
-    pad = (img_bytes << 3) - img_bits
-    packed[byte_base + img_bytes - 1] |= ((1 << pad) - 1).astype(np.uint8)
-
-    # byte stuffing (B.1.1.5): 0xFF → 0xFF 0x00
-    counts = np.where(packed == 0xFF, 2, 1)
-    out = np.zeros(int(counts.sum()), dtype=np.uint8)
-    out[np.cumsum(counts) - counts] = packed
-    # stuffed offset of original byte i = i + (#0xFF before i)
-    off = np.concatenate(([0], np.cumsum(packed == 0xFF)))
-    lo = byte_base + off[byte_base]
-    hi = byte_base + img_bytes + off[byte_base + img_bytes]
-    return [out[a:b].tobytes() for a, b in zip(lo, hi)]
 
 
 def _level_blocks(pixels: np.ndarray) -> np.ndarray:
@@ -468,37 +260,14 @@ def _frame_jfif(scan: bytes, h: int, w: int, qt: np.ndarray) -> bytes:
     return bytes(out)
 
 
-def encode_jpeg_gray_batch(
-    images: list[np.ndarray], quality: int = DEFAULT_QUALITY
-) -> list[bytes]:
-    """MANY uint8 (h, w) grayscale images → baseline JFIF bytes each,
-    in ONE vectorized pass: the 8x8 blocks of every image concatenate
-    into a single batched-matmul DCT/quantize and one entropy-coder call
-    (_encode_entropy_multi keeps the streams independent). This is the
-    Arrow-batch shape — per-image numpy dispatch overhead dominates
-    thumbnail-scale encodes, so batching is where the >=10x entropy
-    speedup actually lands end-to-end (BENCH/BASELINE.md §R5).
-    Byte-identical to per-image encode_jpeg_gray calls."""
-    if not images:
-        return []
-    qt = quality_qt(quality)
-    blocks = [_level_blocks(px) for px in images]
-    counts = np.array([len(b) for b in blocks], dtype=np.int64)
-    allb = np.concatenate(blocks)
-    # batched matmul (BLAS) — ~10x the equivalent einsum contraction
-    coef = (_DCT_T @ allb) @ _DCT_T.T
-    qcoef = np.round(coef / qt.reshape(8, 8)).astype(np.int64)
-    zz = qcoef.reshape(-1, 64)[:, ZIGZAG]
-    scans = _encode_entropy_multi(zz, counts)
-    return [
-        _frame_jfif(scan, px.shape[0], px.shape[1], qt)
-        for scan, px in zip(scans, images)
-    ]
-
-
 def encode_jpeg_gray(pixels: np.ndarray, quality: int = DEFAULT_QUALITY) -> bytes:
     """uint8 (h, w) grayscale → baseline JFIF bytes."""
-    return encode_jpeg_gray_batch([pixels], quality)[0]
+    qt = quality_qt(quality)
+    # batched matmul (BLAS) over all blocks — ~10x the einsum contraction
+    coef = (_DCT_T @ _level_blocks(pixels)) @ _DCT_T.T
+    qcoef = np.round(coef / qt.reshape(8, 8)).astype(np.int64)
+    zz = qcoef.reshape(-1, 64)[:, ZIGZAG]
+    return _frame_jfif(_encode_entropy_loop(zz), pixels.shape[0], pixels.shape[1], qt)
 
 
 class _BitReader:
@@ -555,165 +324,27 @@ def _extend(v: int, size: int) -> int:
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
 
 
-_DECODE16_CACHE: dict[tuple[bytes, bytes], list[int]] = {}
-
-
-def _build_decode16(bits: Sequence[int], vals: Sequence[int]) -> list[int]:
-    """Flat 2^16 decode table: entry[w] for a 16-bit window w whose
-    prefix is a canonical code of length L for symbol s is
-    ``(L << 8) | s``; windows matching no code are 0 (codes are
-    prefix-free and len>=1, so 0 can't collide with a valid entry —
-    a valid entry always has L>=1 in the high byte). ONE list index
-    replaces the per-bit dict probes of the spec reader (up to 16
-    lookups/symbol). Cached by table content: standard-table streams
-    (everything this encoder writes) build it exactly once per
-    process."""
-    key = (bytes(bits), bytes(vals))
-    cached = _DECODE16_CACHE.pop(key, None)
-    if cached is None:
-        packed = np.zeros(1 << 16, dtype=np.int32)
-        for sym, (code, ln) in _build_codes(list(bits), list(vals)).items():
-            lo = code << (16 - ln)
-            packed[lo:lo + (1 << (16 - ln))] = (ln << 8) | sym
-        cached = packed.tolist()
-        if len(_DECODE16_CACHE) >= 64:  # corrupt-stream fuzzing guard
-            # LRU: hits re-insert at the end (pop above), so the
-            # front is the least-recently-used entry — never the hot
-            # standard tables a fuzz workload would otherwise churn
-            _DECODE16_CACHE.pop(next(iter(_DECODE16_CACHE)))
-    _DECODE16_CACHE[key] = cached  # (re-)insert at MRU position
-    return cached
-
-
-def _unstuff_scan(scan: bytes) -> bytes:
-    """Entropy-coded segment → raw huffman bytes: cut at the first
-    real marker (0xFF followed by non-zero) and drop the stuffed 0x00
-    after each literal 0xFF (B.1.1.5), both as single vectorized
-    passes instead of the per-byte branch in _BitReader."""
-    arr = np.frombuffer(scan, dtype=np.uint8)
-    if arr.size == 0:
-        return b""
-    marker = np.flatnonzero((arr[:-1] == 0xFF) & (arr[1:] != 0x00))
-    if marker.size:
-        # the 0xFF is the marker's first byte, not entropy data — the
-        # spec reader never consumes it either (it raises if a decode
-        # actually needs bits from here, as does the fast path's
-        # truncation check)
-        arr = arr[: marker[0]]
-    if arr.size and arr[-1] == 0xFF:
-        # dangling 0xFF with nothing after: marker-start or truncation
-        # — the spec reader refuses to consume it too
-        arr = arr[:-1]
-    prev_ff = np.concatenate(([False], arr[:-1] == 0xFF))
-    return arr[~(prev_ff & (arr == 0))].tobytes()
-
-
-def _decode_entropy_fast(
-    scan: bytes,
-    dc_bv: tuple[Sequence[int], Sequence[int]],
-    ac_bv: tuple[Sequence[int], Sequence[int]],
-    nblocks: int,
-) -> np.ndarray:
-    """Table-driven huffman decode (the round-6 answer to the
-    per-symbol _BitReader walk, VERDICT r5 item 2): unstuff once,
-    precompute a 32-bit big-endian window per BYTE (so the 16-bit
-    peek at any BIT position is one shift+mask), and decode each
-    symbol with ONE flat-list lookup — ~4 int ops per symbol instead
-    of up-to-16 dict probes over per-bit accumulator updates.
-    Decoded (block, zigzag-k, value) triples scatter into the
-    coefficient matrix in one vectorized pass at the end.
-    Byte-identical output to _decode_entropy_loop (the retained spec
-    reader) for well-formed huffman tables — pinned on the round-trip
-    corpus + fuzz in tests/test_jpeg.py (see the module docstring for
-    the corrupt-DHT divergence scope)."""
-    data = _unstuff_scan(scan)
-    nbits = 8 * len(data)
-    # 8 pad bytes: the truncation check runs AFTER each symbol, so a
-    # window peek can legally index up to ~2 bytes past the data end
-    # on corrupt/truncated streams before the ValueError fires
-    b = np.frombuffer(data + b"\x00" * 8, dtype=np.uint8).astype(np.uint32)
-    u32 = ((b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]).tolist()
-    dc16 = _build_decode16(*dc_bv)
-    ac16 = _build_decode16(*ac_bv)
-
-    flat_idx: list[int] = []
-    flat_val: list[int] = []
-    append_i, append_v = flat_idx.append, flat_val.append
-    pos = 0
-    prev_dc = 0
-    for blk in range(nblocks):
-        # DC: size symbol, then `size` amplitude bits
-        w = (u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF
-        e = dc16[w]
-        if e == 0:
-            raise ValueError("invalid huffman code")
-        pos += e >> 8
-        size = e & 0xFF
-        if size:
-            a = ((u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF) >> (16 - size)
-            pos += size
-            if a < (1 << (size - 1)):
-                a += 1 - (1 << size)
-            prev_dc += a
-        if pos > nbits:
-            raise ValueError("truncated entropy-coded segment")
-        append_i(blk * 64)
-        append_v(prev_dc)
-        k = 1
-        while k < 64:
-            w = (u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF
-            e = ac16[w]
-            if e == 0:
-                raise ValueError("invalid huffman code")
-            pos += e >> 8
-            sym = e & 0xFF
-            if sym == 0x00:  # EOB
-                break
-            if sym == 0xF0:  # ZRL
-                k += 16
-                if pos > nbits:
-                    raise ValueError("truncated entropy-coded segment")
-                continue
-            k += sym >> 4
-            if k > 63:
-                raise ValueError("AC run past block end")
-            size = sym & 0x0F
-            if size:  # size-0 run symbols are non-standard but the
-                # spec reader tolerates them as value 0 — match it
-                a = ((u32[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF) >> (16 - size)
-                pos += size
-                if a < (1 << (size - 1)):
-                    a += 1 - (1 << size)
-            else:
-                a = 0
-            if pos > nbits:
-                raise ValueError("truncated entropy-coded segment")
-            append_i(blk * 64 + k)
-            append_v(a)
-            k += 1
-        if pos > nbits:
-            raise ValueError("truncated entropy-coded segment")
-    zz = np.zeros(nblocks * 64, dtype=np.int64)
-    zz[np.asarray(flat_idx, dtype=np.int64)] = flat_val
-    return zz.reshape(nblocks, 64)
-
-
 def _decode_entropy_loop(
     scan: bytes,
-    dc_bv: tuple[Sequence[int], Sequence[int]],
-    ac_bv: tuple[Sequence[int], Sequence[int]],
+    dc_bv: tuple[list[int], list[int]],
+    ac_bv: tuple[list[int], list[int]],
     nblocks: int,
 ) -> np.ndarray:
-    """Spec-transcription per-symbol reader (F.2.2) — the parity
-    target _decode_entropy_fast must match byte-for-byte; handles
-    stuffing/marker detection inline via _BitReader."""
-    dc_tbl = _build_decode(list(dc_bv[0]), list(dc_bv[1]))
-    ac_tbl = _build_decode(list(ac_bv[0]), list(ac_bv[1]))
+    """Per-symbol huffman reader (T.81 F.2.2) over one scan with the
+    DHT tables it was given: (nblocks, 64) zigzag-ordered quantized
+    coefficients. Stuffing and marker detection are inline in
+    _BitReader. A size symbol beyond the 8-bit baseline limits (DC
+    > 11, AC > 10), which only a hostile DHT can carry, raises
+    ValueError instead of reading past the amplitude range."""
+    dc_tbl = _build_decode(*dc_bv)
+    ac_tbl = _build_decode(*ac_bv)
     zz = np.zeros((nblocks, 64), dtype=np.int64)
     br = _BitReader(scan)
     prev_dc = 0
     for b in range(nblocks):
         size = br.read_symbol(dc_tbl)
+        if size > 11:
+            raise ValueError(f"DC size symbol {size} > 11")
         prev_dc += _extend(br.read_bits(size), size)
         zz[b, 0] = prev_dc
         k = 1
@@ -725,6 +356,8 @@ def _decode_entropy_loop(
                 k += 16
                 continue
             run, size = sym >> 4, sym & 0x0F
+            if size > 10:
+                raise ValueError(f"AC size {size} > 10")
             k += run
             if k > 63:
                 raise ValueError("AC run past block end")
@@ -735,8 +368,7 @@ def _decode_entropy_loop(
 
 def decode_jpeg_gray(payload: bytes) -> np.ndarray:
     """Baseline JFIF bytes → uint8 (h, w). Single-component baseline
-    only; SOF2 (progressive) and multi-component raise. The huffman
-    stage is the table-driven _decode_entropy_fast."""
+    only; SOF2 (progressive) and multi-component raise."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -804,7 +436,7 @@ def decode_jpeg_gray(payload: bytes) -> np.ndarray:
     qt = qts[comp_qt]
     nby, nbx = -(-h // 8), -(-w // 8)
     nblocks = nby * nbx
-    zz = _decode_entropy_fast(
+    zz = _decode_entropy_loop(
         payload[data_start:], huff[(0, comp_dc)], huff[(1, comp_ac)], nblocks
     )
 

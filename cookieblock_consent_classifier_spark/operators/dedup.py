@@ -19,9 +19,7 @@ Scale design:
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, DataFrame, functions as F
 
 from cookieblock_consent_classifier_spark.functions.text import hex_to_long, normalize_text
 
@@ -382,14 +380,17 @@ def jaccard_from_shingles(sa: Column, sb: Column) -> Column:
 SIMHASH_BITS = 48  # < 2^53: power-of-two double division stays exact
 
 
-def simhash48_native(text_col: str | Column) -> Column:
-    """Pure-Catalyst form of ``simhash48`` (one md5 per token, one
-    aggregate over the token array; bit extraction as unrolled integer
-    shifts). Interpreted-HOF bound: the per-token zip_with builds a
-    48-wide array per token with no subexpression elimination. Kept as
-    the zero-Python fallback and the parity target for the Arrow
-    kernel (test_dedup_similarity pins both paths value-identical);
-    the public ``simhash48`` uses the kernel."""
+def simhash48(text_col: str | Column) -> Column:
+    """48-bit SimHash of the token set: bit j of the fingerprint is the
+    sign of Σ_tokens (±1 by bit j of md5(token)).
+
+    Pure Catalyst: one md5 per distinct token, one aggregate over the
+    token array, bit extraction as unrolled integer shifts, so the
+    ``simhash`` query plans no Python node. The per-token zip_with
+    builds a 48-wide array per token and higher-order lambdas get no
+    subexpression elimination, so the cost grows with tokens per
+    document; the driver's document tables are 500 (sf0.01) to 5,000
+    (sf0.1) short documents."""
     toks = F.array_distinct(F.split(normalize_text(text_col), r"\s+"))
     hashes = F.transform(
         toks,
@@ -415,71 +416,6 @@ def simhash48_native(text_col: str | Column) -> Column:
         lambda v, j: F.when(v > 0, F.pow(F.lit(2.0), j.cast("double"))).otherwise(F.lit(0.0)),
     )
     return F.aggregate(weighted, F.lit(0.0), lambda acc, x: acc + x).cast("long")
-
-
-@pandas_udf(T.LongType())
-def _simhash48_kernel(hs: pd.Series) -> pd.Series:
-    """Arrow kernel of simhash48 over pre-hashed int64 token arrays:
-    per-doc bit votes via a (F, 48) bit matrix and one prefix-sum
-    difference per segment (zero-length segments fall out of the
-    cumsum arithmetic). int64 throughout — values bit-identical to
-    the native aggregate (whose sum of distinct powers of two < 2^53
-    was already exact in double form)."""
-    import numpy as np
-
-    arrays = hs.tolist()
-    n = len(arrays)
-    if n == 0:
-        return pd.Series([], dtype="Int64")
-    valid = np.array([a is not None for a in arrays])
-    counts = np.fromiter(
-        (0 if a is None else len(a) for a in arrays), dtype=np.int64, count=n
-    )
-    if counts.sum():
-        flat = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in arrays if a is not None and len(a)]
-        )
-    else:
-        flat = np.empty(0, dtype=np.int64)
-    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-    flatbits = ((flat[:, None] >> shifts) & 1).astype(np.int64)
-    csum = np.vstack(
-        [np.zeros((1, SIMHASH_BITS), dtype=np.int64), np.cumsum(flatbits, axis=0)]
-    )
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=offs[1:])
-    sums = csum[offs[1:]] - csum[offs[:-1]]
-    votes = 2 * sums - counts[:, None]
-    fp = ((votes > 0).astype(np.int64) << shifts[None, :]).sum(axis=1)
-    return pd.Series(
-        [int(fp[i]) if valid[i] else None for i in range(n)],
-        dtype="Int64",
-        index=hs.index,
-    )
-
-
-def simhash48(text_col: str | Column) -> Column:
-    """48-bit SimHash of the token set: bit j of the fingerprint is the
-    sign of Σ_tokens (±1 by bit j of md5(token)).
-
-    Round 7 (opt guide §4.2): tokenization AND the per-token md5 stay
-    native (Java regex semantics; the md5 transform is cheap), while
-    the bit-vote accumulation — natively a per-token interpreted
-    zip_with over a 48-wide array, the dominant cost — crosses to the
-    Arrow kernel above as int64 hash ARRAYS (8 bytes/token on the
-    boundary, no strings). simhash48_native remains the zero-Python
-    fallback and parity target. Interleaved A/B at sf1.0 (opt round
-    7): 127 -> 52 us/doc single-task (the saturated-task / at-scale
-    proxy), 0.532 -> 0.512 s min-of-5 at 32-way; an all-Python
-    variant (token strings + hashlib + batch token dedup in the
-    kernel) measured 47 us/doc but pays string serialization — int64
-    arrays keep the boundary thin for nearly the same win."""
-    toks = F.array_distinct(F.split(normalize_text(text_col), r"\s+"))
-    hashes = F.transform(
-        toks,
-        lambda t: hex_to_long(F.substring(F.md5(F.concat(F.lit("sh:"), t)), 1, 12)),
-    )
-    return _simhash48_kernel(hashes)
 
 
 def simhash_blocks(simhash_col: Column) -> list[Column]:

@@ -82,10 +82,10 @@ def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]
     from either physical path — ``dec`` (the Python-unquote decoded
     value) and ``entropy`` (its char entropy) — and ``k``, the FUSED
     Python kernel struct (vectorized.content_kernel_udf) that the
-    KERNEL_ONLY_PER_UPDATE builders project. One builder per feature,
-    whichever path supplies ``dec`` and ``entropy``. A builder returns
-    a list of fixed Columns, or for rank-multihot features a single
-    array<int> Column.
+    builders of schema.FEATURES' ``kernel`` rows project. One builder
+    per feature, whichever path supplies ``dec`` and ``entropy``. A
+    builder returns a list of fixed Columns, or for rank-multihot
+    features a single array<int> Column.
 
     ``dec`` has Python-unquote semantics — NOT F.try_url_decode (Java
     URLDecoder: '+'→space, malformed %-escape→NULL; both diverge from
@@ -160,8 +160,6 @@ RANK_FEATURES = frozenset(f.name for f in FEATURES if isinstance(f.width, str))
 # Python UDF, so a schema that enables none of these compiles without
 # the kernel: no kernel node in the plan, not just a pruned one.
 _KERNEL_FEATURES = frozenset(f.name for f in FEATURES if f.path == "kernel")
-KERNEL_ONLY_PER_UPDATE = frozenset(f.name for f in FEATURES
-                                   if f.path == "kernel" and f.family == "update")
 
 
 def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> FeatureSchema:

@@ -8,10 +8,11 @@ sources/resources.py (setup_* dispatch, processor.py:180-190).
 
 The JSON shape (per entry): name, desc, function, enabled,
 vector_size, args, and optionally setup + source. Each ``function``
-maps onto its engine spec name through ``schema.FEATURES``;
-``function``/``setup`` names are validated against the known mapping
-so a config that the engine cannot honor fails loudly instead of
-silently dropping features.
+maps onto its ``schema.FEATURES`` row. The loader raises ValueError,
+naming the entry, on an unknown ``function`` or ``setup``, on an entry
+in another family's section, and on a fixed-width entry whose
+``vector_size`` differs from the width its function computes: a
+config the engine cannot honor fails at load, not in the compiler.
 """
 
 from __future__ import annotations
@@ -27,8 +28,12 @@ from cookieblock_consent_classifier_spark.sources.resources import (
     load_vendor_txt,
 )
 
-# reference function name -> engine spec name, in features.json order
-KNOWN_FUNCTIONS = {f.function: f.name for f in FEATURES}
+# reference function name -> its FEATURES row, in features.json order
+KNOWN_FUNCTIONS = {f.function: f for f in FEATURES}
+
+# features.json section -> FEATURES family
+_SECTIONS = {"per_cookie_features": "entity", "per_update_features": "update",
+             "per_diff_features": "diff"}
 
 # setup fn -> which Resources field it fills + which loader semantics
 _SETUPS = {
@@ -57,11 +62,17 @@ def load_features_config(config_path: str, base_dir: str | None = None) -> tuple
         "name_tokens": [], "content_terms": [], "iab_vendors": frozenset(),
     }
 
-    def to_spec(entry: dict) -> FeatureSpec:
+    def to_spec(entry: dict, section: str) -> FeatureSpec:
         fn = entry["function"]
         if fn not in KNOWN_FUNCTIONS:
             raise ValueError(f"Unsupported feature function in config: {fn}")
-        name = KNOWN_FUNCTIONS[fn]
+        feature = KNOWN_FUNCTIONS[fn]
+        label = f"{section} entry {entry.get('name')!r} ({fn})"
+        if _SECTIONS[section] != feature.family:
+            raise ValueError(f"{label}: a per-{feature.family} feature")
+        vector_size = int(entry.get("vector_size", 1))
+        if isinstance(feature.width, int) and vector_size != feature.width:
+            raise ValueError(f"{label}: vector_size {vector_size}, the function computes {feature.width}")
         setup = entry.get("setup")
         source = entry.get("source")
         if entry.get("enabled", True) and setup:
@@ -76,9 +87,9 @@ def load_features_config(config_path: str, base_dir: str | None = None) -> tuple
             else:
                 res_fields[field_name] = load_vendor_txt(path)
         return FeatureSpec(
-            name=name,
+            name=feature.name,
             enabled=bool(entry.get("enabled", True)),
-            vector_size=int(entry.get("vector_size", 1)),
+            vector_size=vector_size,
             args=dict(entry.get("args", {})),
             # the reference's feature map prints the entry's own
             # "name" (retrieve_feature_names_as_list), which need not
@@ -87,12 +98,13 @@ def load_features_config(config_path: str, base_dir: str | None = None) -> tuple
             display=entry.get("name"),
         )
 
+    specs = {fam: tuple(to_spec(e, sec) for e in cfg[sec]) for sec, fam in _SECTIONS.items()}
     schema = FeatureSchema(
         num_updates=int(cfg["num_updates"]),
         num_diffs=int(cfg["num_diffs"]),
-        per_entity=tuple(to_spec(e) for e in cfg["per_cookie_features"]),
-        per_update=tuple(to_spec(e) for e in cfg["per_update_features"]),
-        per_diff=tuple(to_spec(e) for e in cfg["per_diff_features"]),
+        per_entity=specs["entity"],
+        per_update=specs["update"],
+        per_diff=specs["diff"],
     )
     res = Resources(**res_fields)  # type: ignore[arg-type]
     return schema, res

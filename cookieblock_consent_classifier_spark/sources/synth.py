@@ -23,7 +23,8 @@ from pyspark.sql.functions import pandas_udf
 
 from cookieblock_consent_classifier_spark.functions.image import (
     average_phash,
-    encode_image_batch,
+    decode_image,
+    encode_image,
     synth_pixels,
 )
 
@@ -36,33 +37,17 @@ _CAPTION_WORDS = [
 ]
 
 
-@pandas_udf(T.BinaryType())
-def _encode_udf(image_id: pd.Series, update_idx: pd.Series, w: pd.Series,
-                h: pd.Series, fmt: pd.Series) -> pd.Series:
-    # batch path: every jpeg in the Arrow batch encodes in ONE
-    # vectorized codec call (encode_image_batch)
-    pxs = [
-        synth_pixels(iid, int(ui), int(ww), int(hh))
-        for iid, ui, ww, hh in zip(image_id, update_idx, w, h)
-    ]
-    return pd.Series(encode_image_batch(pxs, list(fmt)))
-
-
-@pandas_udf(T.LongType())
-def _phash_udf(image_id: pd.Series, update_idx: pd.Series, w: pd.Series,
-               h: pd.Series, fmt: pd.Series) -> pd.Series:
+@pandas_udf(T.StructType([T.StructField("bytes", T.BinaryType()), T.StructField("phash", T.LongType())]))
+def _image_udf(image_id: pd.Series, update_idx: pd.Series, w: pd.Series,
+               h: pd.Series, fmt: pd.Series) -> pd.DataFrame:
     # phash of the DECODED pixels (post-codec), so the stored column
     # satisfies the input_hint invariant phash == phash(decode(bytes))
     # for lossy formats too.
-    from cookieblock_consent_classifier_spark.functions.image import decode_image
-
-    pxs = [
-        synth_pixels(iid, int(ui), int(ww), int(hh))
-        for iid, ui, ww, hh in zip(image_id, update_idx, w, h)
+    encs = [
+        encode_image(synth_pixels(iid, int(ui), int(ww), int(hh)), f)
+        for iid, ui, ww, hh, f in zip(image_id, update_idx, w, h, fmt)
     ]
-    encs = encode_image_batch(pxs, list(fmt))
-    out = [average_phash(decode_image(e)) for e in encs]
-    return pd.Series(out, dtype="Int64")
+    return pd.DataFrame({"bytes": encs, "phash": [average_phash(decode_image(e)) for e in encs]})
 
 
 def synth_image_updates(
@@ -132,12 +117,9 @@ def synth_image_updates(
             upd.alias("update_idx"),
         )
     )
-    df = df.withColumn(
-        "phash", _phash_udf("image_id", "update_idx", "w", "h", "fmt")
-    )
-    df = df.withColumn("bytes", _encode_udf("image_id", "update_idx", "w", "h", "fmt"))
+    df = df.withColumn("__img", _image_udf("image_id", "update_idx", "w", "h", "fmt"))
     return df.select(
-        "image_id", "ts", "bytes", "w", "h", "fmt", "caption", "phash", "update_idx"
+        "image_id", "ts", "__img.bytes", "w", "h", "fmt", "caption", "__img.phash", "update_idx"
     )
 
 

@@ -95,6 +95,26 @@ def test_fixture_config_round_trip(tmp_path):
             _load(tmp_path, bad_cfg)
 
 
+def test_loader_rejects_wrong_section_and_width(tmp_path):
+    """An entry under another family's section, or a fixed-width entry
+    whose vector_size is not the width its function computes, raises
+    ValueError at load, naming the entry."""
+    cfg = _fixture_config(tmp_path)
+    http_only = next(e for e in cfg["per_update_features"] if e["name"] == "http_only")
+    moved = dict(cfg, per_cookie_features=cfg["per_cookie_features"] + [http_only])
+    with pytest.raises(ValueError, match=r"per_cookie_features entry 'http_only' "
+                                         r"\(feature_http_only\): a per-update feature"):
+        _load(tmp_path, moved)
+
+    narrow = dict(next(e for e in cfg["per_update_features"] if e["name"] == "same_site"),
+                  vector_size=2)
+    resized = dict(cfg, per_update_features=[narrow if e["name"] == "same_site" else e
+                                             for e in cfg["per_update_features"]])
+    with pytest.raises(ValueError, match=r"'same_site' \(feature_same_site\): "
+                                         r"vector_size 2, the function computes 3"):
+        _load(tmp_path, resized)
+
+
 def test_feature_table_is_the_one_declaration():
     """FEATURES' update rows are exactly the compiler's per-update
     builders, in order, and each reference function name is written

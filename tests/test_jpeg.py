@@ -8,7 +8,6 @@ constants), and the marker structure is asserted here byte-level."""
 from __future__ import annotations
 
 import struct
-from unittest import mock
 
 import numpy as np
 import pytest
@@ -143,22 +142,30 @@ def test_fuzz_round_trip_never_crashes_and_bounds_error(h, w, seed, quality):
     seed=st.integers(0, 2**31 - 1),
     quality=st.integers(30, 100),
 )
-def test_vectorized_entropy_coder_is_bit_identical_to_spec_loop(h, w, seed, quality):
-    """The round-5 vectorized entropy coder (_encode_entropy:
-    neighbor-comparison run lengths, direct stream-position
-    computation, cumsum + reduceat bit packing) must be BYTE-IDENTICAL
-    to the retained spec-literal per-symbol walk (_encode_entropy_loop)
-    on arbitrary content — same huffman codes, same ZRL/EOB placement,
-    same 1-fill padding, same byte stuffing."""
+def test_entropy_coder_round_trips_coefficients(h, w, seed, quality):
+    """The entropy coder and decoder are exact inverses on arbitrary
+    content: decoding the coded scan with the standard tables returns
+    every quantized coefficient — same huffman codes, ZRL/EOB
+    placement, 1-fill padding and byte stuffing on both sides."""
     rng = np.random.default_rng(seed)
     px = rng.integers(0, 256, (h, w)).astype(np.uint8)
     zz = _quantized_zigzag(px, quality)
-    assert jpeg._encode_entropy(zz) == jpeg._encode_entropy_loop(zz)
+    assert np.array_equal(_round_trip(zz), zz)
+
+
+def _round_trip(zz: np.ndarray) -> np.ndarray:
+    """Entropy-decode the entropy-coded zz with the standard tables."""
+    return jpeg._decode_entropy_loop(
+        jpeg._encode_entropy_loop(zz),
+        (jpeg.DC_LUM_BITS, jpeg.DC_LUM_VALS),
+        (jpeg.AC_LUM_BITS, jpeg.AC_LUM_VALS),
+        zz.shape[0],
+    )
 
 
 def _quantized_zigzag(px: np.ndarray, quality: int) -> np.ndarray:
     """Reproduce encode_jpeg_gray's DCT→quant→zigzag front end so the
-    entropy coders can be compared in isolation."""
+    entropy coder is tested in isolation."""
     h, w = px.shape
     qt = jpeg.quality_qt(quality)
     ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
@@ -171,10 +178,11 @@ def _quantized_zigzag(px: np.ndarray, quality: int) -> np.ndarray:
 
 def test_entropy_coder_edge_patterns_bit_identical():
     """Deterministic adversarial coefficient patterns aimed at the
-    coder's branch structure: all-zero blocks (DC+EOB only), a lone
-    coefficient at k=63 (run 62 -> 3xZRL + run 14), long interior zero
-    runs at exact ZRL multiples (16/32/48), negative amplitudes, and
-    the mod-256 sawtooth corpus."""
+    coder's branch structure decode back bit-identical: all-zero
+    blocks (DC+EOB only), a lone coefficient at k=63 (run 62 -> 3xZRL
+    + run 14), long interior zero runs at exact ZRL multiples
+    (16/32/48), negative amplitudes, and the mod-256 sawtooth
+    corpus."""
     cases = []
     z = np.zeros((3, 64), dtype=np.int64)
     z[1, 0] = -7
@@ -192,128 +200,12 @@ def test_entropy_coder_edge_patterns_bit_identical():
     cases.append(_quantized_zigzag(saw, 95))
     cases.append(_quantized_zigzag(saw, 30))
     for zz in cases:
-        assert jpeg._encode_entropy(zz) == jpeg._encode_entropy_loop(zz)
+        assert np.array_equal(_round_trip(zz), zz)
 
 
-def _psnr_corpus():
-    """The 112-case PSNR sweep class: 4 content seeds x 4 shapes x 7
-    qualities = 112 encode cases (incl. the mod-256 sawtooth and
-    non-multiple-of-8 shapes)."""
-    shapes = [(32, 32), (29, 37), (64, 48), (16, 64)]
-    out = []
-    for s in range(4):
-        for h, w in shapes:
-            if s == 3:
-                px = (np.arange(h * w).reshape(h, w) % 256).astype(np.uint8)
-            else:
-                px = synth_pixels(f"corpus_{s}", s, w, h)
-            for q in (30, 50, 70, 80, 90, 95, 100):
-                out.append((px, q))
-    return out
-
-
-def test_batch_encode_is_byte_identical_to_single():
-    """encode_jpeg_gray_batch must emit EXACTLY the bytes of per-image
-    encode_jpeg_gray calls — per-image DC reset, padding, stuffing,
-    headers — across mixed shapes and contents."""
-    corpus = _psnr_corpus()
-    by_q: dict[int, list] = {}
-    for px, q in corpus:
-        by_q.setdefault(q, []).append(px)
-    for q, imgs in by_q.items():
-        batched = jpeg.encode_jpeg_gray_batch(imgs, quality=q)
-        single = [jpeg.encode_jpeg_gray(px, quality=q) for px in imgs]
-        assert batched == single, f"quality {q}"
-
-
-def test_vectorized_encode_speedup_on_corpus():
-    """VERDICT r4 item 4: the batched entropy coder (the Arrow-batch
-    shape image.py drives) vs the retired per-symbol loop over the
-    same quantized blocks of the 112-case corpus. Measured honestly
-    (interleaved A/B, min-of-runs, idle host) the stage ratio is ~4x
-    and end-to-end corpus encode ~4.4x round 4 (BENCH/BASELINE.md §R5
-    explains why the original >=10x bar was set against a
-    contention-inflated loop baseline and what the numpy floor is);
-    the test floor is 2.5x so host noise can't flake it. Interleaved
-    A/B: both sides see the same contention."""
-    import time
-
-    corpus = [_quantized_zigzag(px, q) for px, q in _psnr_corpus()]
-    counts = np.array([zz.shape[0] for zz in corpus])
-    allzz = np.concatenate(corpus)
-    # warm + bit-identity of the batched path vs the spec loop
-    batched = jpeg._encode_entropy_multi(allzz, counts)
-    for scan, zz in zip(batched, corpus):
-        assert scan == jpeg._encode_entropy_loop(zz)
-    t_vec = t_loop = 0.0
-    for _ in range(3):
-        t0 = time.perf_counter()
-        jpeg._encode_entropy_multi(allzz, counts)
-        t_vec += time.perf_counter() - t0
-        t0 = time.perf_counter()
-        for zz in corpus:
-            jpeg._encode_entropy_loop(zz)
-        t_loop += time.perf_counter() - t0
-    assert t_loop / t_vec >= 2.5, (t_loop, t_vec)
-
-
-def test_encode_image_batch_matches_per_image():
-    """image.encode_image_batch (the Arrow-batch call shape the synth
-    UDFs use) must be byte-identical to per-image encode_image for a
-    mixed png/jpeg batch."""
-    from cookieblock_consent_classifier_spark.functions.image import (
-        encode_image,
-        encode_image_batch,
-    )
-
-    pxs = [synth_pixels(f"mix_{i}", i, 24 + i, 16 + i) for i in range(6)]
-    fmts = ["png", "jpeg", "jpeg", "png", "jpeg", "png"]
-    batch = encode_image_batch(pxs, fmts)
-    single = [encode_image(px, f) for px, f in zip(pxs, fmts)]
-    assert batch == single
-
-
-def _decode_loop(enc: bytes) -> np.ndarray:
-    """decode_jpeg_gray with the per-symbol spec reader in place of
-    the table-driven huffman stage."""
-    with mock.patch.object(jpeg, "_decode_entropy_fast", jpeg._decode_entropy_loop):
-        return jpeg.decode_jpeg_gray(enc)
-
-
-def test_fast_entropy_decoder_identical_on_corpus():
-    """Round 6 (VERDICT r5 item 2): the table-driven entropy decoder
-    (_decode_entropy_fast: one vectorized unstuff pass, per-byte
-    32-bit windows, flat 2^16 (len<<8|sym) lookup tables, one scatter)
-    must produce IDENTICAL pixels to the retained per-symbol spec
-    reader (_decode_entropy_loop) on every stream of the 112-case
-    corpus — all contents, shapes (incl. non-multiple-of-8), and
-    qualities."""
-    for px, q in _psnr_corpus():
-        enc = jpeg.encode_jpeg_gray(px, quality=q)
-        fast = jpeg.decode_jpeg_gray(enc)
-        loop = _decode_loop(enc)
-        assert np.array_equal(fast, loop), (px.shape, q)
-
-
-@settings(max_examples=25, deadline=None, derandomize=True)
-@given(
-    h=st.integers(1, 48),
-    w=st.integers(1, 48),
-    seed=st.integers(0, 2**31 - 1),
-    quality=st.integers(30, 100),
-)
-def test_fast_entropy_decoder_fuzz_identical(h, w, seed, quality):
-    """Arbitrary noise content x shape x quality: fast == spec loop."""
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, (h, w)).astype(np.uint8)
-    enc = jpeg.encode_jpeg_gray(px, quality=quality)
-    assert np.array_equal(jpeg.decode_jpeg_gray(enc), _decode_loop(enc))
-
-
-def test_fast_decoder_rejects_truncated_scans():
-    """Truncating the entropy-coded segment must raise ValueError on
-    BOTH decode paths (the fast path's explicit pos>nbits check vs the
-    spec reader's fill/marker errors) — never return garbage pixels
+def test_decoder_rejects_truncated_scans():
+    """Truncating the entropy-coded segment raises ValueError (the bit
+    reader's fill/marker checks) — never returns garbage pixels
     silently."""
     px = synth_pixels("trunc", 7, 32, 32)
     enc = jpeg.encode_jpeg_gray(px, quality=80)
@@ -321,34 +213,53 @@ def test_fast_decoder_rejects_truncated_scans():
     assert sos > 0
     scan_start = sos + 2 + struct.unpack(">H", enc[sos + 2:sos + 4])[0]
     for cut in (scan_start + 2, scan_start + 8, len(enc) - 12):
-        mutant = enc[:cut] + b"\xff\xd9"
-        for decode in (jpeg.decode_jpeg_gray, _decode_loop):
-            with pytest.raises(ValueError):
-                decode(mutant)
+        with pytest.raises(ValueError):
+            jpeg.decode_jpeg_gray(enc[:cut] + b"\xff\xd9")
 
 
-def test_fast_decoder_speedup_on_corpus():
-    """The decode counterpart of the encode speedup pin: table-driven
-    decode vs the per-symbol spec walk over the full 112-case corpus,
-    interleaved A/B min-of-runs so both sides sample the same host
-    contention. Floor 2.5x (measured ~8-10x idle; see
-    BENCH/BASELINE.md §R6)."""
-    import time
+@pytest.mark.parametrize("k,v,msg", [
+    (5, 1 << 15, "coefficient magnitude out of baseline range"),
+    (0, 1 << 11, "DC difference category > 11"),
+    (1, 1 << 10, "AC run/size symbol outside the standard table"),
+])
+def test_entropy_coder_rejects_out_of_baseline_coefficients(k, v, msg):
+    """Coefficients 8-bit baseline cannot carry raise ValueError, not a
+    table KeyError: |v| >= 2^15, a DC difference of category 12, and an
+    AC amplitude of size 11 (no run/size symbol in Annex K.3)."""
+    zz = np.zeros((2, 64), dtype=np.int64)
+    zz[1, k] = v
+    with pytest.raises(ValueError, match=msg):
+        jpeg._encode_entropy_loop(zz)
 
-    streams = [jpeg.encode_jpeg_gray(px, quality=q) for px, q in _psnr_corpus()]
-    # warm both paths (decode-table cache, numpy)
-    for enc in streams[:4]:
-        jpeg.decode_jpeg_gray(enc)
-        _decode_loop(enc)
-    t_fast = t_loop = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        for enc in streams:
-            jpeg.decode_jpeg_gray(enc)
-        t_fast = min(t_fast, time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        with mock.patch.object(jpeg, "_decode_entropy_fast", jpeg._decode_entropy_loop):
-            for enc in streams:
-                jpeg.decode_jpeg_gray(enc)
-        t_loop = min(t_loop, time.perf_counter() - t0)
-    assert t_loop / t_fast >= 2.5, (t_loop, t_fast)
+
+def _jfif_with_tables(dc: tuple[list, list], ac: tuple[list, list], scan: bytes) -> bytes:
+    """An 8x8 baseline JFIF whose DHT segments carry the given
+    (BITS, HUFFVAL) tables, around a hand-made scan."""
+    def seg(marker: int, body: bytes) -> bytes:
+        return struct.pack(">HH", marker, len(body) + 2) + body
+
+    return (
+        b"\xff\xd8"
+        + seg(0xFFDB, bytes([0] + [1] * 64))
+        + seg(0xFFC0, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
+        + seg(0xFFC4, bytes([0x00, *dc[0], *dc[1]]))
+        + seg(0xFFC4, bytes([0x10, *ac[0], *ac[1]]))
+        + seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        + scan
+        + b"\xff\xd9"
+    )
+
+
+def test_decoder_rejects_size_symbols_beyond_baseline():
+    """A hostile DHT can map a code to a DC size above 11 or an AC size
+    above 10; with enough scan bits behind it the reader would decode
+    garbage pixels, so it raises ValueError instead."""
+    one_code = [1] + [0] * 15  # a single 1-bit code, "0"
+    std_dc = (jpeg.DC_LUM_BITS, jpeg.DC_LUM_VALS)
+    std_ac = (jpeg.AC_LUM_BITS, jpeg.AC_LUM_VALS)
+    zeros = bytes(128)  # bits for a whole block at any symbol size
+    assert jpeg.decode_jpeg_gray(_jfif_with_tables(std_dc, std_ac, zeros)).shape == (8, 8)
+    with pytest.raises(ValueError, match="DC size symbol 12 > 11"):
+        jpeg.decode_jpeg_gray(_jfif_with_tables((one_code, [12]), std_ac, zeros))
+    with pytest.raises(ValueError, match="AC size 11 > 10"):
+        jpeg.decode_jpeg_gray(_jfif_with_tables(std_dc, (one_code, [0x0B]), zeros))

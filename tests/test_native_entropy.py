@@ -185,22 +185,22 @@ def test_builder_selection(spark):
     and a native-only schema compiles without the kernel while one
     kernel-only feature brings it in."""
     from cookieblock_consent_classifier_spark.plans.compiler import (
-        KERNEL_ONLY_PER_UPDATE,
         _per_update_builders,
         compile_features,
         default_schema,
         native_schema,
     )
-    from cookieblock_consent_classifier_spark.schema import FeatureSchema
+    from cookieblock_consent_classifier_spark.schema import FEATURES, FeatureSchema
     from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
     from cookieblock_consent_classifier_spark.sources.synth import synth_cookie_updates
 
     res = fixture_resources()
     full = default_schema(res)
     assert set(_per_update_builders()) == {s.name for s in full.per_update}
-    assert KERNEL_ONLY_PER_UPDATE < set(_per_update_builders())
+    kernel_only = {f.name for f in FEATURES if f.path == "kernel" and f.family == "update"}
+    assert kernel_only < set(_per_update_builders())
     nat = native_schema(res)
-    assert not any(s.name in KERNEL_ONLY_PER_UPDATE for s in nat.per_update)
+    assert not any(s.name in kernel_only for s in nat.per_update)
     src = synth_cookie_updates(spark, num_entities=4, updates_per_entity=2)
 
     def python_nodes(schema):

@@ -18,11 +18,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from cookieblock_consent_classifier_spark.plans.compiler import (
-    KERNEL_ONLY_PER_UPDATE,
     compile_features,
     default_schema,
     native_schema,
 )
+from cookieblock_consent_classifier_spark.schema import FEATURES
 from cookieblock_consent_classifier_spark.sources.readers import (
     cookie_updates_from_events,
 )
@@ -59,7 +59,8 @@ def test_native_schema_is_a_sub_schema(res):
     # and none of its per-update specs REQUIRES the Arrow kernel
     # (shannon_entropy reads the kernel's entropy field in the full
     # schema and native char_entropy here: the same builder)
-    assert not any(s.name in KERNEL_ONLY_PER_UPDATE for s in sub.per_update)
+    kernel_only = {f.name for f in FEATURES if f.path == "kernel" and f.family == "update"}
+    assert not any(s.name in kernel_only for s in sub.per_update)
 
 
 def test_adapter_is_deterministic_and_schema_shaped(spark, events):

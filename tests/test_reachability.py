@@ -15,6 +15,8 @@ by its own name.
 
 A definition that production does not reach but that must stay is
 listed in ``KEEP`` with the reason; a kept class keeps its methods.
+An entry whose definition is gone, or that production reaches, is
+stale.
 """
 
 from __future__ import annotations
@@ -30,22 +32,10 @@ KEEP = {
     # the PSNR >= 40 dB lossy-codec invariant the image tests pin
     "functions/image.py:psnr": "test reference for the image codec's PSNR invariant",
     "functions/image.py:decode_psnr": "test reference for the image codec's PSNR invariant",
-    # the per-symbol JPEG entropy coder the vectorized one must equal
-    "functions/jpeg.py:_encode_entropy_loop": "bit-exact reference for the vectorized coder",
-    "functions/jpeg.py:_encode_entropy": "single-image form compared with the reference",
-    "functions/jpeg.py:_BitWriter": "bit writer of the reference coder",
-    "functions/jpeg.py:_amplitude_bits": "amplitude coding of the reference coder",
-    "functions/jpeg.py:_category": "size category of the reference coder",
-    # the per-symbol JPEG huffman reader the table-driven one must equal
-    "functions/jpeg.py:_decode_entropy_loop": "bit-exact reference for the table-driven decoder",
-    "functions/jpeg.py:_BitReader": "bit reader of the reference decoder",
-    "functions/jpeg.py:_build_decode": "code table of the reference decoder",
-    "functions/jpeg.py:_extend": "amplitude decoding of the reference decoder",
     # the pure-Python twin in tests/test_pipeline.py builds on these
     "functions/vectorized.py:_py_split_delimited": "pure-Python pipeline twin",
     "functions/vectorized.py:_py_csv_content_flags": "pure-Python pipeline twin",
     "functions/vectorized.py:_py_js_content": "pure-Python pipeline twin",
-    "operators/dedup.py:simhash48_native": "native twin the simhash kernel is checked against",
     "operators/dedup.py:word_shingles": "shingle builder the Jaccard tests compose with",
     "operators/similarity.py:lsh_near_dup_pairs": "LSH scale path for corpora too large for all-pairs",
     "sources/readers.py:read_entity_updates": "Iceberg branch of the entity-update scan",
@@ -53,8 +43,6 @@ KEEP = {
     "sources/readers.py:cookie_json_to_rows": "reference-JSON input adapter",
     "sources/synth.py:synth_label_dim": "as-of label dimension generator",
     "schema.py:COOKIE_UPDATE_SCHEMA": "the input contract perfbench/workloads.py writes",
-    # the compiler reads the kernel rows of schema.FEATURES as one set
-    "plans/compiler.py:KERNEL_ONLY_PER_UPDATE": "per-update kernel rows the builder-selection tests check",
 }
 
 
@@ -113,7 +101,9 @@ def production_roots() -> list[str]:
     return roots
 
 
-def unreached() -> list[str]:
+def _walk() -> tuple[dict[str, list], set[str]]:
+    """Every engine definition ("rel/path.py:name" -> the nodes whose
+    references it makes) and the keys production reaches."""
     defs: dict[str, list] = {}  # "rel/path.py:name" -> [stmt]
     by_name: dict[str, list[str]] = {}
     module_code: list = []  # engine statements that run at import
@@ -141,6 +131,12 @@ def unreached() -> list[str]:
             if key not in reached:
                 reached.add(key)
                 todo.extend(_refs(defs[key]))
+    return defs, reached
+
+
+def unreached() -> list[str]:
+    defs, reached = _walk()
+
     def kept(key: str) -> bool:
         rel, name = key.split(":")
         return f"{rel}:{name.split('.')[0]}" in KEEP
@@ -153,11 +149,7 @@ def test_every_engine_definition_is_reached_or_kept():
 
 
 def test_keep_list_names_existing_definitions():
-    """A KEEP entry whose definition is gone is stale."""
-    gone = []
-    for key in KEEP:
-        rel, name = key.split(":")
-        tree = _parse(os.path.join(ROOT, PKG, rel))
-        if not any(name == n for s in tree.body for n, _ in _definitions(s)):
-            gone.append(key)
-    assert gone == []
+    """A KEEP entry whose definition is gone, or that production
+    reaches, is stale."""
+    defs, reached = _walk()
+    assert sorted(key for key in KEEP if key not in defs or key in reached) == []

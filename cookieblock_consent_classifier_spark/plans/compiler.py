@@ -5,17 +5,22 @@ The reference interprets its declared feature schema row-at-a-time
 compiler emits ONE Catalyst DAG for the whole schema:
 
     scan → [optional label/sample filters]
-         → row-wise per-update projections (native exprs + pandas UDFs)
+         → row-wise per-update projections (native exprs + the fused
+           Arrow content kernel)
          → one (entity, ts) window pass: lag columns + slot ranks
          → groupBy(entity): per-entity aggregates + slot pivots
            (per-update and per-diff blocks pivot inside the SAME
            aggregation — one shuffle for everything)
+         → post-aggregation pandas UDFs (gestalt, regex-list ranks)
          → broadcast lookup joins (top-k ranks)
          → ordered sparse assembly (plans/assemble.py)
 
 Physical shape: exactly one hash-exchange on entity_id plus N tiny
 broadcast exchanges; every row-wise expression is codegen'd or
-Arrow-batched. Disabled features are not emitted. Their native
+Arrow-batched. The Python boundary is at most two ArrowEvalPython
+nodes: the content kernel below the shuffle, over ``value``, and one
+node after the aggregate holding every post-aggregation UDF.
+Disabled features are not emitted. Their native
 inputs (per-entity aggregates, decoded value, entropy, the shared
 domain column) are built on every schema and nothing reads them, so
 Catalyst prunes them, and their input columns, from the plan (the
@@ -245,8 +250,8 @@ def compile_features(
     # Window and the groupBy would force a second full exchange; below
     # the window shuffle they cost nothing extra. The only
     # pair-dependent Python kernel (gestalt) runs POST-aggregation
-    # over collected value arrays (one row per entity), keeping the
-    # plan at exactly one entity exchange.
+    # over collected value arrays (one row per entity, stage 3a),
+    # keeping the plan at exactly one entity exchange.
     delim_ms = next((s.args.get("min_seps", 1) for s in schema.per_update
                      if s.name == "delimiter_sep"), 1)
     csv_ms = next((s.args.get("min_seps", 2) for s in schema.per_update
@@ -433,18 +438,29 @@ def compile_features(
 
     ent = proj.groupBy("entity_id").agg(*aggs)
 
+    # ---- stage 3a: the post-aggregation Python UDFs, one row per
+    # entity: the gestalt kernel over the ordered values and the
+    # pattern/token regex ranks over the name. ONE select, so Catalyst
+    # plans ONE ArrowEvalPython node for all of them: each node costs
+    # every task a fixed Python-runner setup (pyspark's
+    # importlib.invalidate_caches: ~0.15 CPU s per runner on Python 3.11).
+    post_py = []
     if need_gestalt:
-        # post-agg gestalt kernel: one Arrow batch per entity row
-        gs = V.gestalt_stats_udf(schema.num_diffs)(
+        post_py.append(V.gestalt_stats_udf(schema.num_diffs)(
             F.transform(F.col("__vals"), lambda x: x["v"])
-        )
-        ent = ent.withColumn("__gs", gs)
+        ).alias("__gs"))
+    if "pattern_names" in enabled_pe:
+        post_py.append(V.regex_ranks_udf(res.name_patterns, mode="match")("name").alias("__pat_ranks"))
+    if "name_tokens" in enabled_pe:
+        post_py.append(V.regex_ranks_udf(res.name_tokens, mode="search")("name").alias("__tok_ranks"))
+    if post_py:
+        ent = ent.select("*", *post_py)
 
-    # ---- stage 3: broadcast lookups on the per-entity side
+    # ---- stage 3b: broadcast lookups on the per-entity side
     # snapshot the pre-join frame: the class-weight counts branch runs
     # over THIS (the rank joins are 1:1, so the label multiset is the
-    # same), letting Catalyst prune the joins and the name/domain
-    # aggregates out of that branch entirely
+    # same), letting Catalyst prune the joins, the Python UDFs and the
+    # name/domain aggregates out of that branch entirely
     ent_pre_join = ent
     if "top_names" in enabled_pe:
         tn = rank_df(spark, res.top_names, "name").withColumnRenamed("rank", "__tn_rank")
@@ -455,14 +471,6 @@ def compile_features(
     if "top_domains" in enabled_pe:
         td = rank_df(spark, res.top_domains, "__udom").withColumnRenamed("rank", "__td_rank")
         ent = ent.join(F.broadcast(td), "__udom", "left")
-    if "pattern_names" in enabled_pe:
-        ent = ent.withColumn(
-            "__pat_ranks", V.regex_ranks_udf(res.name_patterns, mode="match")("name")
-        )
-    if "name_tokens" in enabled_pe:
-        ent = ent.withColumn(
-            "__tok_ranks", V.regex_ranks_udf(res.name_tokens, mode="search")("name")
-        )
 
     # ---- stage 4: named feature columns in declared order
     pe_exprs: dict[str, list[Column] | Column] = {

@@ -10,6 +10,7 @@ import zlib
 from collections import Counter
 from urllib.parse import unquote
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -353,3 +354,55 @@ def test_sniff_fast_path_parity_fuzz():
                     # the reference path's shared except returns None
                     want = (None, None)
             assert V._py_split_delimited(txt, min_seps) == want, repr(txt)
+
+
+# a batch the way Arrow hands it to a pandas UDF, with what the per-batch
+# memo must keep apart: repeats, NULLs, "" vs whitespace, equal-looking
+# encoded and decoded forms, and an index that does not start at 0
+BATCH = ["a,b,c", None, "", "   ", "a,b,c", "x%20y", "x y", None, "", "   ",
+         '{"id": 1}', "dGVzdHN0cmluZw==", "a,b,c", "_ident_1", "٣٤٥", "x y"]
+
+
+def _null(x):
+    return None if not isinstance(x, list) and pd.isna(x) else x
+
+
+def _per_row(fn, batch):
+    """fn (a UDF's pandas body) applied to one-row batches."""
+    return [fn(pd.Series([v], dtype=object)) for v in batch]
+
+
+def test_content_kernel_matches_per_row_evaluation():
+    """One evaluation per distinct value, fanned out, gives every row
+    the fields a per-row evaluation gives it, at the batch's index."""
+    fn = V.content_kernel_udf(["a", "test", "y"]).func
+    s = pd.Series(BATCH, index=range(50, 50 + len(BATCH)), dtype=object)
+    got = fn(s)
+    assert list(got.index) == list(s.index)
+    for (i, row), want in zip(got.iterrows(), _per_row(fn, BATCH)):
+        for f in got.columns:
+            assert _null(row[f]) == _null(want[f].iloc[0]), (i, s[i], f)
+
+
+def test_regex_ranks_match_per_row_evaluation():
+    for mode in ("match", "search"):
+        fn = V.regex_ranks_udf(["a", "x", r"\d", " "], mode).func
+        s = pd.Series(BATCH, index=range(50, 50 + len(BATCH)), dtype=object)
+        got = fn(s)
+        assert list(got.index) == list(s.index)
+        assert [_null(g) for g in got] == [_null(w.iloc[0]) for w in _per_row(fn, BATCH)], mode
+
+
+def test_content_kernel_sniffs_each_distinct_value_once(monkeypatch):
+    calls = Counter()
+    sniff = V._sniff_delim
+
+    def counting(txt):
+        calls[txt] += 1
+        return sniff(txt)
+
+    monkeypatch.setattr(V, "_sniff_delim", counting)
+    V.content_kernel_udf([]).func(pd.Series(BATCH, dtype=object))
+    distinct = {v for v in BATCH if v is not None}
+    assert sum(calls.values()) == len(distinct) == 9
+    assert set(calls) == {unquote(v) for v in distinct}

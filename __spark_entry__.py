@@ -446,18 +446,22 @@ def q_phash_delta(spark, sf_dir):
 
 @_q(
     "content_flags",
-    r"""
+    rf"""
     SELECT doc_id,
            CASE WHEN regexp_matches(lower(text), '\b(true|false|yes|no|0|1|on|off)\b') THEN 1.0 ELSE -1.0 END AS f_bool,
-           CASE WHEN regexp_matches(text, '16[0-9]{8}([0-9]{3})?') THEN 1.0 ELSE -1.0 END AS f_ts,
-           CASE WHEN regexp_matches(text, '[0-9]{1,4}[/.-][0-9]{1,2}[/.-][0-9]{1,4}')
-                     OR (regexp_matches(text, '(?i)(mon|tue|wed|thu|fri|sat|sun)')
-                         AND regexp_matches(text, '(?i)(jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec)'))
+           CASE WHEN regexp_matches(text, '{native.TIMESTAMP_PAT}') THEN 1.0 ELSE -1.0 END AS f_ts,
+           CASE WHEN regexp_matches(text, '{native.REF_DATE_YMD}')
+                     OR regexp_matches(text, '{native.REF_DATE_DMY}')
+                     OR regexp_matches(text, '{native.REF_DATE_MDY}')
+                     OR (regexp_matches(text, '{native.REF_DAYS3}')
+                         AND regexp_matches(text, '{native.REF_MONTHS3}'))
                 THEN 1.0 ELSE -1.0 END AS f_date,
-           CASE WHEN regexp_matches(text, '(https?://.*\.|www[2-9]?\..*\.)') THEN 1.0 ELSE -1.0 END AS f_url,
+           CASE WHEN regexp_matches(text, '{native.REF_HTTP}') OR regexp_matches(text, '{native.REF_WWW}')
+                THEN 1.0 ELSE -1.0 END AS f_url,
            CASE WHEN regexp_matches(text, '^[0-9a-fA-F]+$') AND NOT regexp_matches(text, '^[0-9]+$')
                 THEN 1.0 ELSE -1.0 END AS f_hex,
-           CASE WHEN trim(text) = '' THEN 1.0 ELSE -1.0 END AS f_empty,
+           CASE WHEN translate(text, {" || ".join(f"chr({c})" for c in native.PY_WS_CODEPOINTS)}, '') = ''
+                THEN 1.0 ELSE -1.0 END AS f_empty,
            strlen(text)::BIGINT AS byte_len,
            len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
            CASE WHEN ver = '1' THEN 1.0 ELSE -1.0 END AS uuid_v1,
@@ -472,7 +476,7 @@ def q_phash_delta(spark, sf_dir):
                substr(md5(text), 1, 8) || '-' || substr(md5(text), 9, 4) || '-' ||
                substr(md5(text), 13, 4) || '-' || substr(md5(text), 17, 4) || '-' ||
                substr(md5(text), 21, 12),
-               '[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-([0-9a-fA-F])[0-9a-fA-F]{3}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}',
+               '[0-9a-fA-F]{{8}}-[0-9a-fA-F]{{4}}-([0-9a-fA-F])[0-9a-fA-F]{{3}}-[0-9a-fA-F]{{4}}-[0-9a-fA-F]{{12}}',
                1) AS ver
       FROM documents
     )
@@ -483,7 +487,11 @@ def q_content_flags(spark, sf_dir):
     (processor.py:1386-1470, 1052-1059) + feature_canonical_uuid
     version one-hot (processor.py:1430-1458) over md5-derived
     uuid-shaped strings (deterministic both engines) — all row-wise
-    native expressions over one documents scan."""
+    native expressions over one documents scan. The date, url, empty,
+    hex, timestamp and uuid columns are the compiler's own builders
+    (applied to the raw text, not the URL-decoded value); the DuckDB
+    twin spells the same reference patterns from ``native.REF_*`` and
+    ``native.PY_WS_CODEPOINTS``."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
     h = F.md5("text")
     fake_uuid = F.concat_ws(
@@ -491,7 +499,7 @@ def q_content_flags(spark, sf_dir):
         F.substring(h, 1, 8), F.substring(h, 9, 4), F.substring(h, 13, 4),
         F.substring(h, 17, 4), F.substring(h, 21, 12),
     )
-    uuid_cols = native.uuid_version_onehot_ref(fake_uuid)
+    uuid_cols = native.uuid_version_onehot(fake_uuid)
     uuid_names = ["uuid_v1", "uuid_v2", "uuid_v3", "uuid_v4", "uuid_v5", "uuid_other"]
     return docs.select(
         "doc_id",
@@ -1607,14 +1615,16 @@ def q_embedding_near_dup(spark, sf_dir):
     ).filter(F.col("cos_sim") >= 0.4)
 
 
-@_q("entropy_zlib")  # pandas-UDF kernels: no SQL twin
+@_q("entropy_zlib")  # zlib pandas UDF: no SQL twin
 def q_entropy_zlib(spark, sf_dir):
     """feature_shannon_entropy + feature_compressed_content
-    (processor.py:1061-1098) — Arrow-vectorized pandas UDFs."""
+    (processor.py:1061-1098): entropy is the extraction job's Catalyst
+    ``char_entropy(py_unquote(text))``, the compressed length an
+    Arrow-vectorized pandas UDF."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
     return docs.select(
         "doc_id",
-        F.round(V.shannon_entropy("text"), 6).alias("entropy"),
+        F.round(native.char_entropy(native.py_unquote("text")), 6).alias("entropy"),
         V.zlib_compressed_len("text").alias("zlib_len"),
     )
 
@@ -1633,14 +1643,18 @@ def q_entropy_zlib(spark, sf_dir):
 )
 def q_shannon_entropy(spark, sf_dir):
     """feature_shannon_entropy (processor.py:1083-1098) — value-exact
-    vs DuckDB's entropy() aggregate (log2, like the reference). The
-    filter pins both engines to the same input domain: the engine
-    kernel URL-decodes first (reference semantics), which DuckDB 1.0
-    cannot express, so %-containing and empty docs are excluded."""
+    vs DuckDB's entropy() aggregate (log2, like the reference), through
+    the extraction job's zero-Python builder
+    ``char_entropy(py_unquote(text))``. The filter pins both engines
+    to the same input domain: the engine URL-decodes first (reference
+    semantics), which DuckDB 1.0 cannot express, so %-containing and
+    empty docs are excluded."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
     return docs.filter(
         (F.length("text") > 0) & (~F.contains(F.col("text"), F.lit("%")))
-    ).select("doc_id", F.round(V.shannon_entropy("text"), 6).alias("entropy"))
+    ).select(
+        "doc_id", F.round(native.char_entropy(native.py_unquote("text")), 6).alias("entropy")
+    )
 
 
 @_q("gestalt_diff")  # difflib kernel: no SQL twin

@@ -88,14 +88,6 @@ def expiry_buckets(col: str | Column) -> list[Column]:
 
 BOOLEAN_PAT = r"\b(true|false|yes|no|0|1|on|off)\b"          # processor.py:154
 TIMESTAMP_PAT = r"16[0-9]{8}([0-9]{3})?"                      # processor.py:169
-DATE_NUM_PATS = [                                             # processor.py:157-159
-    r"[0-9]{1,4}[/.-][0-9]{1,2}[/.-][0-9]{1,4}",
-]
-DAY_PAT = r"(?i)(mon|tue|wed|thu|fri|sat|sun)"                # processor.py:162-165
-MONTH_PAT = (
-    r"(?i)(jan|feb|mar|apr|may|jun|jul|aug|sep|oct|nov|dec)"
-)
-URL_PAT = r"(https?://.*\.|www[2-9]?\..*\.)"                  # processor.py:172-173
 # the reference compiles "^[0-9a-f]+$" (IGNORECASE) and .match()es it
 # (processor.py:174,1317-1326). CPython '$' matches at end OR before
 # ONE trailing '\n' — while Java's '$' also accepts \r, \r\n,
@@ -116,8 +108,8 @@ NUM_PAT = r"\A[0-9]+\z"
 # CPython str.isspace()'s exact accept set: Unicode bidi classes
 # WS/B/S plus category Zs — a CLOSED 29-codepoint list, stable across
 # Python 3.x (enumerated from the unicodedata the reference runs on).
-# Shared by the Catalyst twin (empty_content_ref) and the DuckDB
-# pipeline-oracle twin so both engines test the identical set.
+# Shared by the Catalyst twin (empty_content) and the DuckDB
+# twins so both engines test the identical set.
 PY_WS_CODEPOINTS: tuple[int, ...] = (
     0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20,
     0x85, 0xA0, 0x1680,
@@ -129,10 +121,11 @@ PY_WS = "".join(map(chr, PY_WS_CODEPOINTS))
 
 def boolean_content(col: str | Column) -> Column:
     """feature_boolean_content (processor.py:1386-1395): word-bounded
-    true/false/yes/no/0/1/on/off anywhere in the value → ±1.
-    Engine-surface variant: Java \\b is ASCII-only while Python's is
-    unicode-aware — the reference-exact path is the fused kernel's
-    bool_content field, which the compiler uses."""
+    true/false/yes/no/0/1/on/off anywhere in the value → ±1. The only
+    Catalyst form of this feature; the content_flags query uses it.
+    Java \\b is ASCII-only while Python's is unicode-aware, so the
+    compiler reads the fused kernel's ``bool_content`` field instead
+    (the same BOOLEAN_PAT text, compiled by Python ``re``)."""
     return pm(F.lower(_c(col)).rlike(BOOLEAN_PAT))
 
 
@@ -140,19 +133,6 @@ def timestamp_content(col: str | Column) -> Column:
     """feature_timestamp_content (processor.py:1398-1409): unix-epoch
     window 16xxxxxxxx(xxx) → ±1."""
     return pm(_c(col).rlike(TIMESTAMP_PAT))
-
-
-def date_content(col: str | Column) -> Column:
-    """feature_date_content (processor.py:1411-1428): numeric date OR
-    (day-name AND month-name) → ±1."""
-    c = _c(col)
-    cond = c.rlike(DATE_NUM_PATS[0]) | (c.rlike(DAY_PAT) & c.rlike(MONTH_PAT))
-    return pm(cond)
-
-
-def url_content(col: str | Column) -> Column:
-    """feature_url_content (processor.py:1461-1470)."""
-    return pm(_c(col).rlike(URL_PAT))
 
 
 def hex_content(col: str | Column) -> Column:
@@ -175,9 +155,8 @@ def hex_content(col: str | Column) -> Column:
     return pm(c.rlike(HEX_PAT) & ~c.rlike(NUM_PAT))
 
 
-# --- reference-exact regex variants (used by the parity plan
-# compiler; the generic detectors above are the engine's own
-# query-surface versions) -------------------------------------------
+# --- the reference's date / url / uuid patterns (processor.py:157-173),
+# shared by the compiler, the content_flags query and both DuckDB twins
 
 REF_DATE_YMD = r"(19[7-9][0-9]|20[0-3][0-9]|[0-9][0-9])-[01][0-9]-[0-3][0-9]"  # processor.py:157
 REF_DATE_DMY = r"[0-3][0-9]-[01][0-9]-(19[7-9][0-9]|20[0-3][0-9]|[0-9][0-9])"  # processor.py:158
@@ -191,7 +170,7 @@ REF_UUID = (
 )  # processor.py:170
 
 
-def date_content_ref(col: str | Column) -> Column:
+def date_content(col: str | Column) -> Column:
     """feature_date_content exact (processor.py:1411-1428)."""
     c = _c(col)
     cond = (
@@ -203,14 +182,14 @@ def date_content_ref(col: str | Column) -> Column:
     return pm(cond)
 
 
-def url_content_ref(col: str | Column) -> Column:
+def url_content(col: str | Column) -> Column:
     """feature_url_content exact incl. the (2-9)? quirk
     (processor.py:1461-1470)."""
     c = _c(col)
     return pm(c.rlike(REF_HTTP) | c.rlike(REF_WWW))
 
 
-def uuid_version_onehot_ref(col: str | Column) -> list[Column]:
+def uuid_version_onehot(col: str | Column) -> list[Column]:
     """feature_canonical_uuid exact (case-insensitive pattern,
     processor.py:170,1430-1458)."""
     c = _c(col)
@@ -224,16 +203,6 @@ def uuid_version_onehot_ref(col: str | Column) -> list[Column]:
 
 
 def empty_content(col: str | Column) -> Column:
-    """feature_empty_content (processor.py:1376-1384): empty or
-    whitespace-only (no URL-decode) → ±1. Engine-surface variant:
-    F.trim strips ASCII space only, Python str.isspace() covers
-    tab/newline/unicode spaces — the reference-exact form is
-    empty_content_ref below (which the compiler uses)."""
-    c = _c(col)
-    return pm(F.trim(c) == F.lit(""))
-
-
-def empty_content_ref(col: str | Column) -> Column:
     """REFERENCE-EXACT feature_empty_content (processor.py:1376-1384):
     Python ``not v or v.isspace()`` ⇔ every char of v lies in
     str.isspace()'s closed 29-codepoint accept set (PY_WS) — the empty
@@ -333,9 +302,11 @@ def char_entropy(col: str | Column) -> Column:
     folds the algebra  H = log2(n) − Σ c·log2(c) / n  — identical to
     the reference's −Σ (c/n)·log2(c/n) (processor.py:1090-1096) up to
     float associativity (pinned ≤1e-9 abs in tests). Empty → 0.0,
-    NULL → NULL, both matching vectorized._py_entropy. The input
-    column is referenced exactly once, so callers can pass a whole
-    ``py_unquote`` expression without duplicating it in the plan."""
+    NULL → NULL. The input column is referenced exactly once, so
+    callers can pass a whole ``py_unquote`` expression without
+    duplicating it in the plan: the compiler's native path and the
+    ``shannon_entropy`` / ``entropy_zlib`` driver queries all build
+    ``char_entropy(py_unquote(value))``."""
     chars = F.array_sort(F.split(_c(col), ""))
 
     def run_term(run: Column) -> Column:

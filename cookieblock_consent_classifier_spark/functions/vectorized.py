@@ -22,9 +22,9 @@ import base64
 import csv
 import difflib
 import math
+import re
 import zlib
 from collections import Counter
-from functools import lru_cache
 from urllib.parse import unquote
 
 import pandas as pd
@@ -32,24 +32,12 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from cookieblock_consent_classifier_spark.functions.jsparse import try_split_json_like
+from cookieblock_consent_classifier_spark.functions.native import BOOLEAN_PAT
 
 
 # ---------------------------------------------------------------------------
 # scalar twins (test oracles + single source of the semantics)
 # ---------------------------------------------------------------------------
-
-def _py_entropy(s: str | None) -> float | None:
-    """Char-frequency Shannon entropy of the URL-decoded value
-    (feature_shannon_entropy, processor.py:1083-1098)."""
-    if s is None:
-        return None
-    v = unquote(s)
-    if len(v) == 0:
-        return 0.0
-    counts = Counter(v)
-    n = len(v)
-    return -sum((c / n) * math.log2(c / n) for c in counts.values())
-
 
 def _py_compressed_len(s: str | None) -> int | None:
     """zlib level-9 compressed byte length of the URL-decoded value
@@ -59,29 +47,11 @@ def _py_compressed_len(s: str | None) -> int | None:
     return len(zlib.compress(unquote(s).encode("utf-8", errors="replace"), 9))
 
 
-@lru_cache(maxsize=8192)
-def _gestalt_cached(a: str, b: str) -> float:
-    return difflib.SequenceMatcher(None, a, b).ratio()
-
-
-# short-string memo bound: 8192 entries x <=256 chars ~ 2 MB/worker
-_GESTALT_MEMO_MAX_LEN = 256
-
-
 def _py_gestalt(a: str | None, b: str | None) -> float | None:
     """difflib SequenceMatcher ratio (feature_gestalt_pattern_ratio,
-    processor.py:1485-1494).
-
-    Short pairs go through a bounded lru_cache: ratio() is a pure
-    function and real update streams repeat values heavily (the bench
-    events table: 0.5% distinct props — each distinct pair recomputed
-    ~200x at 23 us/pair), while a memo hit costs ~0.1 us. Long pairs
-    bypass the cache so it can never hold more than ~2 MB per worker
-    (opt guide §4.5: amortize per-task state, bound its memory)."""
+    processor.py:1485-1494); a NULL side has no ratio."""
     if a is None or b is None:
         return None
-    if len(a) + len(b) <= _GESTALT_MEMO_MAX_LEN:
-        return _gestalt_cached(a, b)
     return difflib.SequenceMatcher(None, a, b).ratio()
 
 
@@ -122,21 +92,24 @@ def _py_js_parse(txt: str, b64=_UNSET):
 # vectorized UDFs
 # ---------------------------------------------------------------------------
 
-@pandas_udf(T.DoubleType())
-def shannon_entropy(s: pd.Series) -> pd.Series:
-    return s.map(_py_entropy, na_action="ignore")
-
-
 @pandas_udf(T.LongType())
 def zlib_compressed_len(s: pd.Series) -> pd.Series:
     return s.map(_py_compressed_len, na_action="ignore")
 
 
+def _gestalt_each(pairs: list[tuple]) -> list[float | None]:
+    """``_py_gestalt`` of each ``(a, b)`` pair of one batch, evaluated
+    once per distinct pair (``_map_distinct``): update streams repeat
+    their consecutive pairs, and ratio() is the costliest call here."""
+    ratios, codes = _map_distinct(
+        lambda p: None if p is None else _py_gestalt(*p), pd.Series(pairs, dtype=object)
+    )
+    return [ratios[c] for c in codes]
+
+
 @pandas_udf(T.DoubleType())
 def gestalt_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_py_gestalt(x, y) for x, y in zip(a, b)], index=a.index, dtype="float64"
-    )
+    return pd.Series(_gestalt_each(list(zip(a, b))), index=a.index, dtype="float64")
 
 
 def gestalt_stats_udf(num_diffs: int):
@@ -150,7 +123,9 @@ def gestalt_stats_udf(num_diffs: int):
     Runs POST-aggregation so the expensive difflib kernel sees one
     Arrow batch per entity instead of sitting between the window and
     the groupBy (where a Python node would break partitioning reuse
-    and force a second shuffle)."""
+    and force a second shuffle). The consecutive pairs of every
+    sequence in the batch are evaluated together, once per distinct
+    pair (``_gestalt_each``); nothing is kept after the batch."""
     import statistics
 
     @pandas_udf(
@@ -163,14 +138,17 @@ def gestalt_stats_udf(num_diffs: int):
         )
     )
     def _udf(vals: pd.Series) -> pd.DataFrame:
-        rows = []
-        for seq in vals:
-            if seq is None or len(seq) < 2:
+        seqs = [() if seq is None else seq for seq in vals]
+        flat = _gestalt_each([p for seq in seqs for p in zip(seq, seq[1:])])
+        rows, at = [], 0
+        for seq in seqs:
+            if len(seq) < 2:
                 rows.append((-1.0, -1.0, []))
                 continue
+            ratios = flat[at:at + len(seq) - 1]
+            at += len(seq) - 1
             # a pair with a NULL side has no ratio: its diff slot is
             # absent and it stays out of the mean/std (as lev_distance)
-            ratios = [_py_gestalt(a, b) for a, b in zip(seq, seq[1:])]
             present = [r for r in ratios if r is not None]
             m = statistics.mean(present) if present else -1.0
             s = statistics.stdev(present) if len(present) > 1 else -1.0
@@ -286,22 +264,11 @@ def _py_b64_decode(s: str):
         return None
 
 
-_TRUTH_PAT = None  # compiled lazily per worker
-
-
-def _truth_pat():
-    global _TRUTH_PAT
-    if _TRUTH_PAT is None:
-        import re
-
-        _TRUTH_PAT = re.compile(r"\b(true|false|yes|no|0|1|on|off)\b", re.IGNORECASE)
-    return _TRUTH_PAT
-
-
-def _hex_pat():
-    import re
-
-    return re.compile("^[0-9a-f]+$", re.IGNORECASE)
+# Python \b is unicode-aware, so the kernel evaluates boolean_content
+# with the Catalyst builder's own pattern text (processor.py:154)
+_TRUTH_PAT = re.compile(BOOLEAN_PAT, re.IGNORECASE)
+_HEX_PAT = re.compile("^[0-9a-f]+$", re.IGNORECASE)  # processor.py:174
+_ID_PAT = re.compile("(id|ident)", re.IGNORECASE)    # feature_js_content key check
 
 
 def _py_csv_flags_from_tokens(toks):
@@ -310,14 +277,12 @@ def _py_csv_flags_from_tokens(toks):
     fused kernel (which reuses one sniff+split for both csv features)."""
     flags = [False] * 5
     if toks:
-        hx = _hex_pat()
-        tv = _truth_pat()
         for e in toks:
             flags[0] |= e.isnumeric()
-            flags[1] |= hx.match(e) is not None
+            flags[1] |= _HEX_PAT.match(e) is not None
             flags[2] |= e.isalpha()
             flags[3] |= e.isalnum()
-            flags[4] |= tv.match(e) is not None
+            flags[4] |= _TRUTH_PAT.match(e) is not None
     return tuple(1.0 if f else -1.0 for f in flags)
 
 
@@ -334,17 +299,12 @@ def _py_js_flags_tuple(data):
     """The 11-wide vector of feature_js_content from an ALREADY-parsed
     value — shared by _py_js_content and the fused kernel (which
     parses once per value)."""
-    import re
-
     flags = dict.fromkeys(
         ["id", "bool", "num", "str", "alpha", "alnum", "sub", "list", "none", "hex"], False
     )
     if isinstance(data, dict):
-        idpat = re.compile("(id|ident)", re.IGNORECASE)
-        hx = _hex_pat()
-        tv = _truth_pat()
         for key in data:
-            if isinstance(key, str) and idpat.search(key):
+            if isinstance(key, str) and _ID_PAT.search(key):
                 flags["id"] = True
         for val in data.values():
             # reference order: int/float first (excl. bool), then bool
@@ -354,11 +314,11 @@ def _py_js_flags_tuple(data):
                 flags["bool"] = True
             elif type(val) is str:
                 flags["str"] = True
-                if tv.match(val):
+                if _TRUTH_PAT.match(val):
                     flags["bool"] = True
                 elif val.isnumeric():
                     flags["num"] = True
-                elif hx.match(val):
+                elif _HEX_PAT.match(val):
                     flags["hex"] = True
                 if val.isalpha():
                     flags["alpha"] = True
@@ -395,8 +355,6 @@ def _rank_matcher(patterns: list[str], mode: str):
     50-term/500-token resources) take a prefix/substring fast path:
     semantically identical to matching the escaped literal, ~10×
     cheaper across a 500-pattern bank."""
-    import re
-
     lits = [(p, i) for i, p in enumerate(patterns) if p == re.escape(p)]
     regs = [(re.compile(p), i) for i, p in enumerate(patterns) if p != re.escape(p)]
     if mode == "match":
@@ -442,8 +400,6 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
     expression on either path. Every other field is a genuinely-Python
     computation with no native twin.
     """
-    import re
-
     fields = (
         [
             # `dec` is THE url-decoded value (urllib.parse.unquote
@@ -476,7 +432,6 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
     def _udf(s: pd.Series) -> pd.DataFrame:
         term_ranks = _rank_matcher(content_terms, "search")
         js_pat = re.compile(r"^\{.*}$")  # processor.py:175
-        truth = _truth_pat()
 
         def one(v):
             if v is None:
@@ -504,7 +459,7 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
                 jso = 1.0 if (mb and js_pat.search(mb)) else -1.0
             # feature_boolean_content (processor.py:1386-1395): Python
             # \b is unicode-aware (Java's is ASCII) — keep in Python
-            boolc = pm(truth.search(dec) is not None)
+            boolc = pm(_TRUTH_PAT.search(dec) is not None)
             # ONE sniff + ONE csv split serve BOTH delimiter_sep
             # (min_seps=delim_min_seps) and csv_contents
             # (min_seps=csv_min_seps): only the acceptance threshold

@@ -143,13 +143,13 @@ def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]
         "all_lowercase": lambda c: [k(c)["is_lower"]],
         # RAW-value isspace() semantics (processor.py:1376-1384):
         # translate over the closed PY_WS set
-        "empty_content": lambda c: [native.empty_content_ref(v(c))],
+        "empty_content": lambda c: [native.empty_content(v(c))],
         # Python \b is unicode-aware, Java's is ASCII — kernel field
         "boolean_content": lambda c: [k(c)["bool_content"]],
         "timestamp_content": lambda c: [native.timestamp_content(dec(c))],
-        "date_content": lambda c: [native.date_content_ref(dec(c))],
-        "contains_uuid": lambda c: native.uuid_version_onehot_ref(dec(c)),
-        "url_content": lambda c: [native.url_content_ref(dec(c))],
+        "date_content": lambda c: [native.date_content(dec(c))],
+        "contains_uuid": lambda c: native.uuid_version_onehot(dec(c)),
+        "url_content": lambda c: [native.url_content(dec(c))],
     }
 
 

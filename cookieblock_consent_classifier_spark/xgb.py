@@ -400,9 +400,12 @@ def to_sparse_format(model_dump: list[dict]) -> list[list[dict]]:
     converter): the full format routes an EXPLICIT 0.0 value down the
     missing path, the sparse format compares it (0.0 < c); they
     diverge only for rows carrying explicit zeros against splits with
-    c <= 0. The engine's assembled rows never store explicit zeros
-    (sparse zero = absent, plans/assemble.py), so scoring is
-    equivalent on engine data — pinned in tests/test_xgb.py."""
+    c <= 0. The engine's assembled rows DO store explicit zeros:
+    assemble_sparse drops only NULL slots, so e.g. the content_length
+    of "" and the lev_distance of a repeated value are stored as 0.0.
+    On such rows a converted dump can score differently from its full
+    dump; both the equivalence on zero-free rows and this divergence
+    are pinned in tests/test_xgb.py."""
     validate_full_dump(model_dump)
 
     def conv(node: dict) -> dict:

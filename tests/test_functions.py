@@ -56,15 +56,19 @@ def kernel_field(df, field):
 
 
 def test_entropy_matches_python(vals):
-    got = collect_col(vals, V.shannon_entropy("v"))
-    for v, g in zip(VALUES, got):
-        dec = unquote(v)
-        if len(dec) == 0:
-            exp = 0.0
-        else:
-            cnt = Counter(dec)
-            exp = -sum((c / len(dec)) * math.log2(c / len(dec)) for c in cnt.values())
-        assert g == pytest.approx(exp), v
+    """Both entropy builders the extraction job uses — the kernel's
+    ``entropy`` field and the Catalyst ``char_entropy(py_unquote(v))``
+    — equal the reference formula over the URL-decoded value."""
+    native_got = collect_col(vals, native.char_entropy(native.py_unquote("v")))
+    for got in (kernel_field(vals, "entropy"), native_got):
+        for v, g in zip(VALUES, got):
+            dec = unquote(v)
+            if len(dec) == 0:
+                exp = 0.0
+            else:
+                cnt = Counter(dec)
+                exp = -sum((c / len(dec)) * math.log2(c / len(dec)) for c in cnt.values())
+            assert g == pytest.approx(exp), v
 
 
 def test_zlib_len_matches_python(vals):
@@ -121,11 +125,15 @@ def test_unicode_digits_diverge_from_regex(spark):
 
 
 def test_gestalt_matches_difflib(spark):
-    pairs = [("abcdef", "abcxef"), ("", "x"), ("same", "same")]
-    df = spark.createDataFrame(pairs, ["a", "b"])
+    pairs = [("abcdef", "abcxef"), ("", "x"), ("same", "same"), (None, "x"),
+             ("abcdef", "abcxef")]
+    df = spark.createDataFrame(pairs, "a string, b string")
     got = collect_col(df, V.gestalt_ratio("a", "b"))
     for (a, b), g in zip(pairs, got):
-        assert g == pytest.approx(difflib.SequenceMatcher(None, a, b).ratio())
+        if a is None:
+            assert g is None
+        else:
+            assert g == pytest.approx(difflib.SequenceMatcher(None, a, b).ratio())
 
 
 def test_expiry_buckets_boundaries(spark):
@@ -158,7 +166,7 @@ def test_one_hot_unknown_all_minus(spark):
 
 def test_uuid_onehot(spark, vals):
     """feature_canonical_uuid one-hot (the compiler's and the
-    content_flags query's uuid_version_onehot_ref): case-insensitive
+    content_flags query's uuid_version_onehot): case-insensitive
     hex, version digit 1-5 or "other" (a letter version, either case),
     no match -> all -1; cross-checked against Python ``re``."""
     import re
@@ -174,7 +182,7 @@ def test_uuid_onehot(spark, vals):
         "hello world": None,
     }
     df = spark.createDataFrame([(v,) for v in want], ["v"]).unionByName(vals.select("v"))
-    cols = native.uuid_version_onehot_ref("v")
+    cols = native.uuid_version_onehot("v")
     rows = df.select(
         F.col("v"), *[c.alias(f"u{i}") for i, c in enumerate(cols)]
     ).collect()
@@ -194,8 +202,18 @@ def test_uuid_onehot(spark, vals):
             assert (None if m is None else expect.index(1.0)) == want[v], v
 
 
-def test_regex_detectors(vals):
-    rows = vals.select(
+def test_regex_detectors(spark, vals):
+    """The compiler's detectors, which the content_flags query applies
+    too, against Python ``re`` with the reference's own patterns
+    (processor.py:154-174) and ``str.isspace`` — including inputs where
+    a generic date or URL regex, or Spark's space-only ``trim``, would
+    disagree with the reference."""
+    import re
+
+    extra = ["03/04/2021", "www2.example.com.", "http://a.b", "\t\n", "\u3000",
+             "www.example.com.", "12-31-1999", "sun 7 dec"]
+    df = spark.createDataFrame([(v,) for v in extra], ["v"]).unionByName(vals.select("v"))
+    rows = df.select(
         "v",
         native.boolean_content("v").alias("bool"),
         native.timestamp_content("v").alias("tsc"),
@@ -205,12 +223,31 @@ def test_regex_detectors(vals):
         native.empty_content("v").alias("empty"),
     ).collect()
     by = {r["v"]: r for r in rows}
+    dates = [r"(19[7-9][0-9]|20[0-3][0-9]|[0-9][0-9])-[01][0-9]-[0-3][0-9]",
+             r"[0-3][0-9]-[01][0-9]-(19[7-9][0-9]|20[0-3][0-9]|[0-9][0-9])",
+             r"[01][0-9]-[0-3][0-9]-(19[7-9][0-9]|20[0-3][0-9])"]
+    for v, r in by.items():
+        want = {
+            "bool": re.search(r"\b(true|false|yes|no|0|1|on|off)\b", v, re.I),
+            "tsc": re.search(r"16[0-9]{8}([0-9]{3})?", v),
+            "date": any(re.search(p, v) for p in dates) or (
+                re.search("(Mon|Tue|Wed|Thu|Fri|Sat|Sun)", v, re.I)
+                and re.search("(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)", v, re.I)),
+            "url": re.search(r"http(s)?://.*\.", v) or re.search(r"www(2-9)?\..*\.", v),
+            "hex": re.match("^[0-9a-f]+$", v, re.I) and not v.isnumeric(),
+            "empty": not v or v.isspace(),
+        }
+        for f, w in want.items():
+            assert r[f] == (1.0 if w else -1.0), (v, f)
     assert by["true"]["bool"] == 1.0 and by["hello world"]["bool"] == -1.0
     assert by["1609459200123"]["tsc"] == 1.0
     assert by["2021-03-04"]["date"] == 1.0 and by["Mon, 01 Jan 2024"]["date"] == 1.0
-    assert by["https://example.com/x"]["url"] == 1.0
+    assert by["03/04/2021"]["date"] == -1.0 and by["12-31-1999"]["date"] == 1.0
+    assert by["https://example.com/x"]["url"] == 1.0 and by["http://a.b"]["url"] == 1.0
+    assert by["www2.example.com."]["url"] == -1.0 and by["www.example.com."]["url"] == 1.0
     assert by["deadbeef"]["hex"] == 1.0 and by["12345"]["hex"] == -1.0
     assert by[""]["empty"] == 1.0 and by["   "]["empty"] == 1.0
+    assert by["\t\n"]["empty"] == 1.0 and by["\u3000"]["empty"] == 1.0
 
 
 def test_url_encoding_and_content_length(spark):
@@ -406,3 +443,44 @@ def test_content_kernel_sniffs_each_distinct_value_once(monkeypatch):
     distinct = {v for v in BATCH if v is not None}
     assert sum(calls.values()) == len(distinct) == 9
     assert set(calls) == {unquote(v) for v in distinct}
+
+
+def test_gestalt_evaluates_each_distinct_pair_once_per_batch(monkeypatch):
+    """The gestalt UDF keeps one memo policy: each distinct non-NULL
+    consecutive pair of a batch is evaluated exactly once, whatever its
+    length and on every call (nothing is remembered across batches),
+    and every row equals plain difflib."""
+    import statistics
+
+    long_a, long_b = "x" * 200 + "abc", "x" * 200 + "abd"  # 406 chars a pair
+    seqs = [["a", "b", "a", "b"], ["a", "b"], [long_a, long_b, long_a, long_b],
+            ["q", None, "q", "r"], ["only"], [], None, [long_a, long_b], ["b", "a"]]
+
+    def expect(seq):
+        if seq is None or len(seq) < 2:
+            return -1.0, -1.0, []
+        rs = [None if a is None or b is None else difflib.SequenceMatcher(None, a, b).ratio()
+              for a, b in zip(seq, seq[1:])]
+        pr = [r for r in rs if r is not None]
+        return (statistics.mean(pr) if pr else -1.0,
+                statistics.stdev(pr) if len(pr) > 1 else -1.0, rs[:2])
+
+    want = [expect(s) for s in seqs]
+    calls = Counter()
+    ratio = difflib.SequenceMatcher.ratio
+
+    def counting(self):
+        calls[self.a, self.b] += 1
+        return ratio(self)
+
+    monkeypatch.setattr(difflib.SequenceMatcher, "ratio", counting)
+    fn = V.gestalt_stats_udf(2).func
+    batch = pd.Series(seqs, index=range(7, 7 + len(seqs)), dtype=object)
+    distinct = {("a", "b"), ("b", "a"), (long_a, long_b), (long_b, long_a), ("q", "r")}
+    for _ in range(2):
+        calls.clear()
+        got = fn(batch)
+        assert calls == Counter(dict.fromkeys(distinct, 1))
+        assert list(got.index) == list(batch.index)
+        for (_, row), w in zip(got.iterrows(), want):
+            assert (row["mean"], row["std"], list(row["diffs"])) == w

@@ -7,8 +7,9 @@ Pins:
 1. py_unquote == urllib.parse.unquote byte-for-byte on edge cases AND
    a seeded fuzz corpus biased toward %-escapes / invalid UTF-8 (the
    make_valid_utf8 substitution-policy parity the docstring claims).
-2. char entropy == the reference formula (vectorized._py_entropy is a
-   direct transcription of processor.py:1090-1096) within 1e-9.
+2. char entropy == the reference formula (test_pipeline._entropy, the
+   pure-Python twin's direct transcription of processor.py:1090-1096)
+   within 1e-9.
 3. Native == kernel on every update value in BOTH shipped reference
    fixtures (real cookie data, %-encoded content included) — the
    golden-level evidence that the two physical strategies agree.
@@ -30,7 +31,7 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from cookieblock_consent_classifier_spark.functions import native
-from cookieblock_consent_classifier_spark.functions.vectorized import _py_entropy
+from test_pipeline import _entropy
 
 REF = "/root/reference"
 FIXTURES = [
@@ -98,7 +99,7 @@ def _ws_hex_fuzz(n: int = 250) -> list[str]:
 
 
 def test_empty_hex_native_match_python(spark):
-    """empty_content_ref == raw-value `not v or v.isspace()` and
+    """empty_content == raw-value `not v or v.isspace()` and
     hex_content(py_unquote) == THE REFERENCE's own predicate —
     `re.compile("^[0-9a-f]+$", re.IGNORECASE).match(dec) and not
     dec.isnumeric()` (processor.py:174,1317-1326, with CPython's
@@ -119,7 +120,7 @@ def test_empty_hex_native_match_python(spark):
     df = spark.createDataFrame([(s,) for s in corpus], "v string")
     rows = df.select(
         "v",
-        native.empty_content_ref("v").alias("emp"),
+        native.empty_content("v").alias("emp"),
         native.hex_content(native.py_unquote("v")).alias("hx"),
     ).collect()
     for r in rows:
@@ -147,18 +148,19 @@ def test_char_entropy_matches_reference_formula(spark):
     df = spark.createDataFrame([(s,) for s in corpus] + [(None,)], "v string")
     rows = df.select("v", native.char_entropy(native.py_unquote("v")).alias("ent")).collect()
     for r in rows:
-        exp = _py_entropy(r.v)
-        if exp is None:
-            assert r.ent is None, r.v
+        if r.v is None:
+            assert r.ent is None
         else:
+            exp = _entropy(r.v)
             assert r.ent is not None and math.isclose(r.ent, exp, abs_tol=1e-9), (
                 r.v, r.ent, exp)
 
 
 def test_native_matches_kernel_on_real_fixtures(spark):
     """Every update value in both shipped reference fixtures: the
-    native expression equals the kernel's _py_entropy (which the
-    golden suite already pins against the real reference extractor).
+    native expression equals the reference formula (the kernel's
+    entropy field computes the same one; the golden suite pins it
+    against the real reference extractor).
     Real data includes %-encoded and unicode content."""
     values: set[str] = set()
     for path in FIXTURES:
@@ -173,7 +175,7 @@ def test_native_matches_kernel_on_real_fixtures(spark):
     rows = df.select("v", native.char_entropy(native.py_unquote("v")).alias("ent")).collect()
     worst = 0.0
     for r in rows:
-        exp = _py_entropy(r.v)
+        exp = _entropy(r.v)
         assert r.ent is not None
         worst = max(worst, abs(r.ent - exp))
     assert worst < 1e-9, worst
@@ -281,7 +283,7 @@ def test_native_schema_slots_match_default_schema(spark):
 
 def test_native_schema_pipeline_entropy_values(spark, events):
     """End-to-end through compile_features over native_schema: the
-    pivoted first-update entropy slot equals _py_entropy of the
+    pivoted first-update entropy slot equals the twin's _entropy of the
     first-update value (the DuckDB twin re-pins this via the driver
     gate; this is the in-repo unit)."""
     from cookieblock_consent_classifier_spark.plans.compiler import (
@@ -310,6 +312,6 @@ def test_native_schema_pipeline_entropy_values(spark, events):
     checked = 0
     for eid, ent in got.items():
         if eid in first_vals and ent is not None:
-            assert math.isclose(ent, _py_entropy(first_vals[eid]), abs_tol=1e-9)
+            assert math.isclose(ent, _entropy(first_vals[eid]), abs_tol=1e-9)
             checked += 1
     assert checked > 10

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import base64
 import difflib
+import json
 import math
 import statistics
 import zlib
@@ -16,7 +17,9 @@ from collections import Counter
 from datetime import datetime, timedelta
 from urllib.parse import unquote
 
+import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cookieblock_consent_classifier_spark.functions.vectorized import (
@@ -57,9 +60,9 @@ RES = fixture_resources()
 GAP = 600
 
 
-def _rows():
+def _rows(entities):
     rows = []
-    for ent, name, dom, path, fpd, label, ups in FIXTURE:
+    for ent, name, dom, path, fpd, label, ups in entities:
         for i, (val, exp, sess, ho, hso, sec, ss) in enumerate(ups):
             rows.append(
                 (ent, T0 + timedelta(seconds=i * GAP), name, dom, path, fpd, label, 0,
@@ -105,14 +108,15 @@ def _try_decode_base64(s):
         return None
 
 
-def twin_extract(schema, res):
-    """dense {feature_name: value} per entity, skipping absent slots
-    (so: exactly the nonzero CSR content)."""
+def twin_extract(schema, res, entities):
+    """dense {feature_name: value} per entity of ``entities`` (shaped
+    like FIXTURE), skipping absent slots (so: exactly the stored CSR
+    content)."""
     import re
 
     names = schema.feature_names()
     out = {}
-    for ent, name, dom, path, fpd, label, ups in FIXTURE:
+    for ent, name, dom, path, fpd, label, ups in entities:
         if not (0 <= label <= 3):
             continue
         vals: dict[str, float] = {}
@@ -290,7 +294,7 @@ def _levenshtein(a: str, b: str) -> int:
 
 @pytest.fixture(scope="module")
 def compiled(spark):
-    df = spark.createDataFrame(_rows(), COOKIE_UPDATE_SCHEMA)
+    df = spark.createDataFrame(_rows(FIXTURE), COOKIE_UPDATE_SCHEMA)
     schema = default_schema(RES, num_updates=2, num_diffs=1)
     wide, names = compile_features(df, schema, RES, training=True)
     return wide.collect(), names, schema
@@ -320,7 +324,7 @@ def test_indices_sorted_and_in_range(compiled):
 
 def test_values_match_python_twin(compiled):
     rows, names, schema = compiled
-    expected = twin_extract(schema, RES)
+    expected = twin_extract(schema, RES, FIXTURE)
     for r in rows:
         got = {names[i]: v for i, v in zip(r["indices"], r["values"])}
         exp = expected[r["entity_id"]]
@@ -330,6 +334,73 @@ def test_values_match_python_twin(compiled):
         assert not extra, (r["entity_id"], sorted(extra)[:10])
         for k in exp:
             assert got[k] == pytest.approx(exp[k], abs=1e-9), (r["entity_id"], k, got[k], exp[k])
+
+
+def _js_literal(d):
+    # a JS object literal: unquoted keys, single-quoted strings
+    def lit(v):
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        return "null" if v is None else repr(v)
+
+    return "{" + ", ".join(f"{k}: {lit(v)}" for k, v in d.items()) + "}"
+
+
+_SCALARS = st.one_of(st.integers(-99, 99), st.booleans(), st.none(), st.text("ab01", max_size=4))
+_KEYS = st.text("abdi_", min_size=1, max_size=4)
+# one drawn piece of a cookie value; a value joins one or two pieces
+_PIECES = st.one_of(
+    st.text(st.characters(codec="utf-8"), max_size=10),          # unicode
+    st.text("٣٤٥߂0129", min_size=1, max_size=5),                # unicode + ASCII digits
+    st.text("\"'\\ab", max_size=6),                              # quotes, backslashes
+    st.builds("%{}{}".format, st.text("09afAF%gz", max_size=2), st.text("ab", max_size=2)),
+    st.binary(min_size=6, max_size=18).map(lambda b: base64.b64encode(b).decode()),
+    st.dictionaries(_KEYS, _SCALARS, max_size=3).map(json.dumps),
+    st.dictionaries(_KEYS, _SCALARS, max_size=3).map(_js_literal),
+    st.builds(str.join, st.sampled_from(",|;:&"),
+              st.lists(st.text("ab12", max_size=3), min_size=2, max_size=5)),   # CSV-like
+    st.sampled_from(["", " ", "\t", "\n", "\t\n", "　", " 　\t"]),
+    st.text("abc xyz", min_size=130, max_size=180),   # two make a pair of > 256 chars
+)
+_VALUES = st.lists(_PIECES, min_size=1, max_size=2).map("".join)
+
+
+@st.composite
+def _entities(draw):
+    """≤ 8 FIXTURE-shaped entities whose update values come from one
+    small drawn pool, so values repeat within and across entities."""
+    pool = draw(st.lists(_VALUES, min_size=1, max_size=6))
+    out = []
+    for i in range(draw(st.integers(1, 8))):
+        _, name, dom, path, fpd, _, ups = FIXTURE[i % len(FIXTURE)]
+        picks = draw(st.lists(st.sampled_from(pool), min_size=1, max_size=4))
+        out.append((f"h{i}", name, dom, path, fpd, i % 4,
+                    [(v, *ups[j % len(ups)][1:]) for j, v in enumerate(picks)]))
+    return out
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+@given(entities=_entities())
+def test_drawn_values_match_python_twin(spark, entities):
+    """Differential test: every slot of the full default schema, on
+    drawn cookie values, equals the pure-Python twin (absent slots
+    included, as NaN)."""
+    schema = default_schema(RES, num_updates=2, num_diffs=2)
+    df = spark.createDataFrame(_rows(entities), COOKIE_UPDATE_SCHEMA)
+    wide, names = compile_features(df, schema, RES, training=False)
+    got = {}
+    for r in wide.collect():
+        got[r["entity_id"]] = vec = np.full(len(names), np.nan)
+        vec[list(r["indices"])] = list(r["values"])
+    expected = twin_extract(schema, RES, entities)
+    assert got.keys() == expected.keys()
+    for ent, vals in expected.items():
+        want = np.full(len(names), np.nan)
+        for k, v in vals.items():
+            want[names.index(k)] = v
+        close = np.isclose(got[ent], want, rtol=1e-12, atol=1e-9, equal_nan=True)
+        assert close.all(), [(names[i], got[ent][i], want[i]) for i in np.flatnonzero(~close)]
 
 
 def test_weights_inverse_class_frequency(compiled):
@@ -343,7 +414,7 @@ def test_weights_inverse_class_frequency(compiled):
 def test_single_entity_shuffle(spark):
     """The compiled plan must hash-exchange on entity exactly once
     (window + groupBy share the partitioning); broadcasts excluded."""
-    df = spark.createDataFrame(_rows(), COOKIE_UPDATE_SCHEMA)
+    df = spark.createDataFrame(_rows(FIXTURE), COOKIE_UPDATE_SCHEMA)
     schema = default_schema(RES)
     # training weights add a second (label-keyed) branch that re-reads
     # the same subtree; AQE reuses that exchange at runtime. The

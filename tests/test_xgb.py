@@ -366,6 +366,48 @@ def test_sparse_format_conversion_scores_identically(spark):
         np.testing.assert_allclose(p_full[r], ref_p, rtol=1e-12, atol=1e-15)
 
 
+def test_engine_rows_store_explicit_zeros_where_sparse_conversion_diverges(spark):
+    """compile_features stores an explicit 0.0 for the content_length
+    of "" and the lev_distance of a repeated value (assemble_sparse
+    drops only NULLs). A full dump splitting at c <= 0 on those slots
+    sends the 0.0 down the missing (yes) branch, while its
+    to_sparse_format conversion compares it and goes right: the
+    divergence to_sparse_format documents shows on engine output."""
+    from cookieblock_consent_classifier_spark.plans.compiler import (
+        compile_features, native_schema,
+    )
+    from cookieblock_consent_classifier_spark.schema import COOKIE_UPDATE_SCHEMA
+    from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
+    from test_pipeline import _rows
+
+    res = fixture_resources()
+    ups = [("", 3600, False, False, False, False, "lax")] * 2
+    df = spark.createDataFrame(
+        _rows([("z", "n", "d.com", "/", "d.com", 0, ups)]), COOKIE_UPDATE_SCHEMA
+    )
+    wide, names = compile_features(df, native_schema(res, 2, 2), res, training=False)
+    (row,) = wide.collect()
+    stored = dict(zip(row["indices"], row["values"]))
+    cl, lev = names.index("update_0_content_length-0"), names.index("diff_0_lev_distance-0")
+    assert stored[cl] == 0.0 and stored[lev] == 0.0
+
+    def node(split, cond):
+        return {"nodeid": 0, "split": split, "split_condition": cond, "yes": 1, "no": 2,
+                "missing": 1, "children": [{"nodeid": 1, "leaf": 1.0},
+                                           {"nodeid": 2, "leaf": -1.0}]}
+
+    full = [node(cl, 0.0), node(lev, -0.5), {"nodeid": 0, "leaf": 0.0},
+            {"nodeid": 0, "leaf": 0.0}]
+    sparse = xgb.to_sparse_format(full)
+    rows = wide.select("entity_id", "indices", "values")
+    p_full, _ = _engine_scored(rows, xgb.dump_score_fn(full))
+    p_conv, _ = _engine_scored(rows, xgb.dump_score_fn(sparse, fmt="sparse"))
+    e = np.exp([1.0, 1.0, 0.0, 0.0])
+    np.testing.assert_allclose(p_full[0], e / e.sum(), rtol=1e-12)
+    e = np.exp([-1.0, -1.0, 0.0, 0.0])
+    np.testing.assert_allclose(p_conv[0], e / e.sum(), rtol=1e-12)
+
+
 def test_kernel_scoring_runs_unchanged_on_a_stream(spark, tmp_path, rows):
     """The Arrow scoring kernel is a plain column over (indices,
     values), so model inference runs under readStream with batch-equal

@@ -444,18 +444,28 @@ def q_phash_delta(spark, sf_dir):
 # Row-wise native features (SURVEY §2.3)
 # =====================================================================
 
+def _duck_date_content(col: str) -> str:
+    """DuckDB twin of ``native.date_content`` over ``col``, as a boolean
+    SQL expression, for both DuckDB twins that read it. RE2's ``(?i)``
+    does not fold U+0130/U+0131 to ``i`` as Python ``re`` (and Spark's
+    ``(?iu)``) do, so the one ``i`` of the reference's day names is
+    spelled out here; ``native.REF_DAYS3`` stays as the reference
+    writes it, since Spark reads it too."""
+    days = native.REF_DAYS3.replace("Fri", "Fr[iıİ]")
+    return (f"(regexp_matches({col}, '{native.REF_DATE_YMD}') OR "
+            f"regexp_matches({col}, '{native.REF_DATE_DMY}') OR "
+            f"regexp_matches({col}, '{native.REF_DATE_MDY}') OR "
+            f"(regexp_matches({col}, '{days}') AND "
+            f"regexp_matches({col}, '{native.REF_MONTHS3}')))")
+
+
 @_q(
     "content_flags",
     rf"""
     SELECT doc_id,
            CASE WHEN regexp_matches(lower(text), '\b(true|false|yes|no|0|1|on|off)\b') THEN 1.0 ELSE -1.0 END AS f_bool,
            CASE WHEN regexp_matches(text, '{native.TIMESTAMP_PAT}') THEN 1.0 ELSE -1.0 END AS f_ts,
-           CASE WHEN regexp_matches(text, '{native.REF_DATE_YMD}')
-                     OR regexp_matches(text, '{native.REF_DATE_DMY}')
-                     OR regexp_matches(text, '{native.REF_DATE_MDY}')
-                     OR (regexp_matches(text, '{native.REF_DAYS3}')
-                         AND regexp_matches(text, '{native.REF_MONTHS3}'))
-                THEN 1.0 ELSE -1.0 END AS f_date,
+           CASE WHEN {_duck_date_content("text")} THEN 1.0 ELSE -1.0 END AS f_date,
            CASE WHEN regexp_matches(text, '{native.REF_HTTP}') OR regexp_matches(text, '{native.REF_WWW}')
                 THEN 1.0 ELSE -1.0 END AS f_url,
            CASE WHEN regexp_matches(text, '^[0-9a-fA-F]+$') AND NOT regexp_matches(text, '^[0-9]+$')
@@ -1930,8 +1940,7 @@ def q_ann_lsh_topk(spark, sf_dir):
 def _pipeline_oracle_sql() -> str:
     from cookieblock_consent_classifier_spark.functions.native import (
         EXPIRY_BUCKETS, HEX_PAT, NUM_PAT, PY_WS_CODEPOINTS,
-        REF_DATE_DMY, REF_DATE_MDY, REF_DATE_YMD, REF_DAYS3, REF_HTTP,
-        REF_MONTHS3, REF_UUID, REF_WWW, TIMESTAMP_PAT,
+        REF_HTTP, REF_UUID, REF_WWW, TIMESTAMP_PAT,
     )
     from cookieblock_consent_classifier_spark.plans.compiler import (
         RANK_FEATURES, native_schema,
@@ -2060,13 +2069,7 @@ def _pipeline_oracle_sql() -> str:
             + ", '') = ''"
         )],
         "timestamp_content": [pmb(f"regexp_matches(dec, '{TIMESTAMP_PAT}')")],
-        "date_content": [pmb(
-            f"(regexp_matches(dec, '{REF_DATE_YMD}') OR "
-            f"regexp_matches(dec, '{REF_DATE_DMY}') OR "
-            f"regexp_matches(dec, '{REF_DATE_MDY}') OR "
-            f"(regexp_matches(dec, '{REF_DAYS3}') AND "
-            f"regexp_matches(dec, '{REF_MONTHS3}')))"
-        )],
+        "date_content": [pmb(_duck_date_content("dec"))],
         "contains_uuid": (
             [pmb(f"uuid_ver = '{v}'") for v in ("1", "2", "3", "4", "5")]
             + [pmb("uuid_ver <> '' AND uuid_ver NOT IN ('1','2','3','4','5')")]

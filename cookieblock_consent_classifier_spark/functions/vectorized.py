@@ -97,65 +97,16 @@ def zlib_compressed_len(s: pd.Series) -> pd.Series:
     return s.map(_py_compressed_len, na_action="ignore")
 
 
-def _gestalt_each(pairs: list[tuple]) -> list[float | None]:
-    """``_py_gestalt`` of each ``(a, b)`` pair of one batch, evaluated
-    once per distinct pair (``_map_distinct``): update streams repeat
-    their consecutive pairs, and ratio() is the costliest call here."""
-    ratios, codes = _map_distinct(
-        lambda p: None if p is None else _py_gestalt(*p), pd.Series(pairs, dtype=object)
-    )
-    return [ratios[c] for c in codes]
-
-
 @pandas_udf(T.DoubleType())
 def gestalt_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(_gestalt_each(list(zip(a, b))), index=a.index, dtype="float64")
-
-
-def gestalt_stats_udf(num_diffs: int):
-    """Per-entity gestalt statistics from the ordered value sequence
-    (one row per entity, input = array<string> of update values):
-    mean/stdev of consecutive SequenceMatcher ratios with −1 sentinels
-    (feature_gestalt_mean_and_stddev, processor.py:812-841) plus the
-    first ``num_diffs`` ratios (feature_gestalt_pattern_ratio,
-    processor.py:1485-1494).
-
-    Runs POST-aggregation so the expensive difflib kernel sees one
-    Arrow batch per entity instead of sitting between the window and
-    the groupBy (where a Python node would break partitioning reuse
-    and force a second shuffle). The consecutive pairs of every
-    sequence in the batch are evaluated together, once per distinct
-    pair (``_gestalt_each``); nothing is kept after the batch."""
-    import statistics
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("mean", T.DoubleType()),
-                T.StructField("std", T.DoubleType()),
-                T.StructField("diffs", T.ArrayType(T.DoubleType())),
-            ]
-        )
+    """``_py_gestalt`` of each row's ``(a, b)`` pair, evaluated once per
+    distinct pair of the batch (``_map_distinct``): update streams
+    repeat their consecutive pairs, and ratio() is the costliest call
+    here. A pair with a NULL side has no ratio."""
+    ratios, codes = _map_distinct(
+        lambda p: None if p is None else _py_gestalt(*p), pd.Series(list(zip(a, b)), dtype=object)
     )
-    def _udf(vals: pd.Series) -> pd.DataFrame:
-        seqs = [() if seq is None else seq for seq in vals]
-        flat = _gestalt_each([p for seq in seqs for p in zip(seq, seq[1:])])
-        rows, at = [], 0
-        for seq in seqs:
-            if len(seq) < 2:
-                rows.append((-1.0, -1.0, []))
-                continue
-            ratios = flat[at:at + len(seq) - 1]
-            at += len(seq) - 1
-            # a pair with a NULL side has no ratio: its diff slot is
-            # absent and it stays out of the mean/std (as lev_distance)
-            present = [r for r in ratios if r is not None]
-            m = statistics.mean(present) if present else -1.0
-            s = statistics.stdev(present) if len(present) > 1 else -1.0
-            rows.append((m, s, ratios[:num_diffs]))
-        return pd.DataFrame(rows, columns=["mean", "std", "diffs"], index=vals.index)
-
-    return _udf
+    return pd.Series([ratios[c] for c in codes], index=a.index, dtype="float64")
 
 
 DELIMITERS = ",|#:;&_.-"  # processor.py:151

@@ -6,20 +6,25 @@ compiler emits ONE Catalyst DAG for the whole schema:
 
     scan → [optional label/sample filters]
          → row-wise per-update projections (native exprs + the fused
-           Arrow content kernel)
+           Arrow content kernel + the regex-list ranks over ``name``)
          → one (entity, ts) window pass: lag columns + slot ranks
+         → per-row pair ratio (gestalt of the previous and this value)
          → groupBy(entity): per-entity aggregates + slot pivots
            (per-update and per-diff blocks pivot inside the SAME
-           aggregation — one shuffle for everything)
-         → post-aggregation pandas UDFs (gestalt, regex-list ranks)
+           aggregation)
          → broadcast lookup joins (top-k ranks)
          → ordered sparse assembly (plans/assemble.py)
 
-Physical shape: exactly one hash-exchange on entity_id plus N tiny
-broadcast exchanges; every row-wise expression is codegen'd or
-Arrow-batched. The Python boundary is at most two ArrowEvalPython
-nodes: the content kernel below the shuffle, over ``value``, and one
-node after the aggregate holding every post-aggregation UDF.
+Physical shape: one row-sized hash-exchange on entity_id (it feeds
+the window) plus N tiny broadcast exchanges; every row-wise
+expression is codegen'd or Arrow-batched. The Python boundary is at
+most two ArrowEvalPython nodes: one below the shuffle holding the
+content kernel (over ``value``) and the regex ranks (over ``name``),
+and the gestalt ratio (over ``__prev_value, value``) after the
+window. That node declares no output partitioning, so the aggregate
+after it runs partial → a second entity_id exchange → final: the
+second exchange carries partial-aggregate buffers (at most one row
+per entity per task), never the entity rows.
 Disabled features are not emitted. Their native
 inputs (per-entity aggregates, decoded value, entropy, the shared
 domain column) are built on every schema and nothing reads them, so
@@ -28,6 +33,8 @@ reference's `enabled`-flag pruning, processor.py:95-121, for free).
 Only what costs more than an expression stays behind a check: the
 Arrow kernel (any enabled ``kernel`` row of schema.FEATURES), the
 gestalt and regex-list pandas UDFs, and the broadcast rank joins.
+Every per-entity aggregate is algebraic, so none is bounded by the
+entity's update count.
 
 Feature semantics cite /root/reference/feature_extraction/*.
 """
@@ -44,19 +51,6 @@ from cookieblock_consent_classifier_spark.plans import assemble
 from cookieblock_consent_classifier_spark.plans.assemble import Block
 from cookieblock_consent_classifier_spark.schema import FEATURES, NUM_CLASSES, FeatureSchema, FeatureSpec
 from cookieblock_consent_classifier_spark.sources.resources import Resources, rank_df, sql_literal
-
-# Bound on the ONE collected sequence in the plan: the ordered values
-# feeding the post-agg gestalt kernel (difflib is order-dependent and
-# cannot salt). Updates at slot >= the cap never enter the collected
-# cell, so a pathological hot entity (10^7+ updates) costs
-# O(cap x value_len) memory instead of OOM. Per-diff gestalt slots
-# live at slot <= num_diffs (far below the cap) and stay exact;
-# gestalt_total mean/std is then over the first cap updates — a
-# documented truncation, mirroring the reference's own fixed
-# num_updates/num_diffs slot caps. Every other per-entity aggregate is
-# algebraic and stays exact at any count.
-GESTALT_MAX_UPDATES = 10_000
-
 
 # ---------------------------------------------------------------------------
 # default schema: schema.FEATURES, the reference's shipped features.json
@@ -220,8 +214,10 @@ def compile_features(
     assembly. Returns (wide_df, feature_names).
 
     training=True applies the reference's label-range filter
-    (processor.py:473-478) and attaches the class weights. The gestalt
-    sequence is capped at GESTALT_MAX_UPDATES.
+    (processor.py:473-478) and attaches the class weights. Every
+    per-entity output is exact over all of an entity's updates: the
+    pair metrics (gestalt, Levenshtein, time difference) are per-row
+    columns after the window, aggregated like any other.
     """
     spark = df.sparkSession
     names = schema.feature_names()
@@ -234,24 +230,20 @@ def compile_features(
     need_gestalt = "gestalt_total" in enabled_pe or any(
         s.enabled and s.name == "gestalt_similarity" for s in schema.per_diff
     )
-    if need_gestalt and GESTALT_MAX_UPDATES <= schema.num_diffs:
-        raise ValueError(
-            f"GESTALT_MAX_UPDATES={GESTALT_MAX_UPDATES} must exceed "
-            f"num_diffs={schema.num_diffs} (per-diff gestalt slots live "
-            "at slot <= num_diffs)"
-        )
 
     # ---- stage 0 (PRE-shuffle): every row-local projection — all 28
     # per-update feature blocks and the per-entity sequence metrics —
     # built as TWO single select()s (a withColumn per feature means a
     # py4j analysis round-trip each; ~120 of them cost ~10s of serial
-    # driver time per job). Pandas-UDF nodes (ArrowEvalPython) do not
-    # report an outputPartitioning, so any UDF placed between the
-    # Window and the groupBy would force a second full exchange; below
-    # the window shuffle they cost nothing extra. The only
-    # pair-dependent Python kernel (gestalt) runs POST-aggregation
-    # over collected value arrays (one row per entity, stage 3a),
-    # keeping the plan at exactly one entity exchange.
+    # driver time per job). The row-local Python UDFs (the content
+    # kernel and the regex ranks over ``name``) share the FIRST
+    # select, so Catalyst plans ONE ArrowEvalPython node for them: each
+    # node costs every task a Python-runner setup and its own Arrow
+    # round trip. (The setup's importlib.invalidate_caches() took
+    # 0.15-0.27 CPU s per runner on Python 3.11 while workers imported
+    # pyspark.zip; runtime/pydaemon.py brings it to <= 0.001 s in local
+    # sessions.) ``name`` is constant per entity, so the ranks reach
+    # stage 4 through the aggregate as a min.
     delim_ms = next((s.args.get("min_seps", 1) for s in schema.per_update
                      if s.name == "delimiter_sep"), 1)
     csv_ms = next((s.args.get("min_seps", 2) for s in schema.per_update
@@ -273,14 +265,20 @@ def compile_features(
         s.enabled and s.name in _KERNEL_FEATURES
         for s in schema.per_entity + schema.per_update + schema.per_diff
     )
+    ranks: dict[str, Column] = {}
+    if "pattern_names" in enabled_pe:
+        ranks["__pat_ranks"] = V.regex_ranks_udf(res.name_patterns, mode="match")("name")
+    if "name_tokens" in enabled_pe:
+        ranks["__tok_ranks"] = V.regex_ranks_udf(res.name_tokens, mode="search")("name")
+    rank_cols = [col.alias(c) for c, col in ranks.items()]
     if need_kernel:
         kernel = V.content_kernel_udf(
             res.content_terms, delim_min_seps=delim_ms, csv_min_seps=csv_ms
         )
-        staged = df.select("*", kernel(F.col("value")).alias("__k"))
+        staged = df.select("*", kernel(F.col("value")).alias("__k"), *rank_cols)
         dec, entropy = F.col("__k")["dec"], F.col("__k")["entropy"]
     else:
-        staged = df.select("*", native.py_unquote("value").alias("__nat_dec")).select(
+        staged = df.select("*", *rank_cols, native.py_unquote("value").alias("__nat_dec")).select(
             "*", native.char_entropy(F.col("__nat_dec")).alias("__nat_entropy")
         )
         dec, entropy = F.col("__nat_dec"), F.col("__nat_entropy")
@@ -315,13 +313,11 @@ def compile_features(
     stage0_cols.append(entropy.alias("__entropy"))
     proj = staged.select("*", *stage0_cols)
 
-    # ---- stage 1 (the ONE shuffle): window lag columns + change
-    # flags + slot ranks — native expressions only from here to the
-    # aggregate, so the groupBy reuses the window's partitioning.
-    # (count_distinct change flags would be algebraically equivalent
-    # for non-null sequences, but N distinct aggs compile to an Expand
-    # + an extra shuffle on (entity, col, gid) — lag flags keep the
-    # plan at one exchange.)
+    # ---- stage 1 (the ONE row-sized shuffle): window lag columns +
+    # change flags + slot ranks. (count_distinct change flags would be
+    # algebraically equivalent for non-null sequences, but N distinct
+    # aggs compile to an Expand + an extra shuffle of rows on
+    # (entity, col, gid) — lag flags keep one row exchange.)
     prev_value = F.lag("value").over(w)
     prev_expiry = F.lag("expiry").over(w)
     window_cols = [
@@ -339,6 +335,16 @@ def compile_features(
             .alias(f"__chg_{flag}")
         )
     proj = proj.select("*", *window_cols)
+    # gestalt of each consecutive pair, per row like lev_distance (a
+    # NULL side has no ratio). Without gestalt the groupBy reuses the
+    # window's partitioning; with it, the Python node between them makes
+    # Spark exchange the partial aggregate once more (measured on Spark
+    # 4.1.2: Sort → partial SortAggregate → Exchange → final), one
+    # buffer per entity per task.
+    if need_gestalt:
+        proj = proj.select(
+            "*", V.gestalt_ratio(F.col("__prev_value"), F.col("value")).alias("d__gestalt_similarity")
+        )
 
     # ---- stage 2: single groupBy(entity): slot pivots + aggregates.
     # Slot pivots are STRUCT-PACKED (opt round 7): one
@@ -369,13 +375,8 @@ def compile_features(
                 F.max(F.when(F.col("__slot") == u, pu_struct)).alias(f"__pus_{u}")
             )
 
-    # per-diff slot structs: diff d lives on the row with __slot == d+1;
-    # gestalt comes from the post-agg kernel instead
-    pd_fields = [
-        f"d__{spec.name}"
-        for spec in schema.per_diff
-        if spec.enabled and spec.name != "gestalt_similarity"
-    ]
+    # per-diff slot structs: diff d lives on the row with __slot == d+1
+    pd_fields = [f"d__{spec.name}" for spec in schema.per_diff if spec.enabled]
     if pd_fields:
         pd_struct = F.struct(*[F.col(c).alias(c) for c in pd_fields])
         for d in range(schema.num_diffs):
@@ -384,7 +385,7 @@ def compile_features(
             )
 
     # entity attrs (constant per entity)
-    for attr in ("name", "domain", "path", "first_party_domain", "label", "cmp_origin"):
+    for attr in ("name", "domain", "path", "first_party_domain", "label", "cmp_origin", *ranks):
         aggs.append(F.min(attr).alias(attr))
 
     # per-entity aggregates (SURVEY §2.4)
@@ -421,44 +422,11 @@ def compile_features(
         aggs += mean_std("__zlib_len", "e__complength")
     aggs += mean_std("__entropy", "e__entropy")
     if need_gestalt:
-        # ordered value sequence for the post-agg gestalt kernel,
-        # bounded at GESTALT_MAX_UPDATES (collect_list drops NULLs, so
-        # slots past the cap never enter the cell — the hot-entity
-        # memory bound; see docstring)
-        aggs.append(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("__slot") < F.lit(GESTALT_MAX_UPDATES),
-                        F.struct(F.col("__slot").alias("s"), F.col("value").alias("v")),
-                    )
-                )
-            ).alias("__vals")
-        )
+        aggs += mean_std("d__gestalt_similarity", "e__gestalt")
 
     ent = proj.groupBy("entity_id").agg(*aggs)
 
-    # ---- stage 3a: the post-aggregation Python UDFs, one row per
-    # entity: the gestalt kernel over the ordered values and the
-    # pattern/token regex ranks over the name. ONE select, so Catalyst
-    # plans ONE ArrowEvalPython node for all of them: each node costs
-    # every task a fixed Python-runner setup and its own Arrow round
-    # trip. (The setup's importlib.invalidate_caches() took 0.15-0.27
-    # CPU s per runner on Python 3.11 while workers imported pyspark.zip;
-    # runtime/pydaemon.py brings it to <= 0.001 s in local sessions.)
-    post_py = []
-    if need_gestalt:
-        post_py.append(V.gestalt_stats_udf(schema.num_diffs)(
-            F.transform(F.col("__vals"), lambda x: x["v"])
-        ).alias("__gs"))
-    if "pattern_names" in enabled_pe:
-        post_py.append(V.regex_ranks_udf(res.name_patterns, mode="match")("name").alias("__pat_ranks"))
-    if "name_tokens" in enabled_pe:
-        post_py.append(V.regex_ranks_udf(res.name_tokens, mode="search")("name").alias("__tok_ranks"))
-    if post_py:
-        ent = ent.select("*", *post_py)
-
-    # ---- stage 3b: broadcast lookups on the per-entity side
+    # ---- stage 3: broadcast lookups on the per-entity side
     # snapshot the pre-join frame: the class-weight counts branch runs
     # over THIS (the rank joins are 1:1, so the label multiset is the
     # same), letting Catalyst prune the joins, the Python UDFs and the
@@ -492,7 +460,7 @@ def compile_features(
         "session_changed": [F.col("e__session_changed")],
         "content_changed": [F.col("e__content_changed")],
         "expiry_changed": [F.col("e__expiry_changed")],
-        "gestalt_total": [F.col("__gs.mean"), F.col("__gs.std")],
+        "gestalt_total": [F.col("e__gestalt_mean"), F.col("e__gestalt_std")],
         "levenshtein_total": [F.col("e__levenshtein_mean"), F.col("e__levenshtein_std")],
         "contlength_total": [F.col("e__contlength_mean"), F.col("e__contlength_std")],
         "complength_total": [F.col("e__complength_mean"), F.col("e__complength_std")],
@@ -523,13 +491,7 @@ def compile_features(
         if not spec.enabled:
             continue
         for d in range(schema.num_diffs):
-            if spec.name == "gestalt_similarity":
-                # try_element_at: missing diff slot → NULL → absent
-                # (ANSI element_at throws out-of-bounds)
-                col = F.try_element_at(F.col("__gs.diffs"), F.lit(d + 1))
-            else:
-                col = F.col(f"__pds_{d}")[f"d__{spec.name}"]
-            blocks.append(Block(spec.vector_size, "fixed", cols=[col]))
+            blocks.append(Block(spec.vector_size, "fixed", cols=[F.col(f"__pds_{d}")[f"d__{spec.name}"]]))
 
     total = sum(b.width for b in blocks)
     assert total == schema.total_width == len(names), (total, schema.total_width)

@@ -453,25 +453,19 @@ def test_content_kernel_sniffs_each_distinct_value_once(monkeypatch):
 
 def test_gestalt_evaluates_each_distinct_pair_once_per_batch(monkeypatch):
     """The gestalt UDF keeps one memo policy: each distinct non-NULL
-    consecutive pair of a batch is evaluated exactly once, whatever its
-    length and on every call (nothing is remembered across batches),
-    and every row equals plain difflib."""
-    import statistics
-
+    pair of a batch is evaluated exactly once, whatever its length and
+    on every call (nothing is remembered across batches), a pair with a
+    NULL side has no ratio and calls no difflib, and every row equals
+    plain difflib."""
     long_a, long_b = "x" * 200 + "abc", "x" * 200 + "abd"  # 406 chars a pair
-    seqs = [["a", "b", "a", "b"], ["a", "b"], [long_a, long_b, long_a, long_b],
-            ["q", None, "q", "r"], ["only"], [], None, [long_a, long_b], ["b", "a"]]
-
-    def expect(seq):
-        if seq is None or len(seq) < 2:
-            return -1.0, -1.0, []
-        rs = [None if a is None or b is None else difflib.SequenceMatcher(None, a, b).ratio()
-              for a, b in zip(seq, seq[1:])]
-        pr = [r for r in rs if r is not None]
-        return (statistics.mean(pr) if pr else -1.0,
-                statistics.stdev(pr) if len(pr) > 1 else -1.0, rs[:2])
-
-    want = [expect(s) for s in seqs]
+    # consecutive (previous, current) pairs of a few update streams, as
+    # the compiler feeds them: the first row of each has no previous
+    pairs = [(None, "a"), ("a", "b"), ("b", "a"), ("a", "b"),
+             (None, long_a), (long_a, long_b), (long_b, long_a), (long_a, long_b),
+             (None, "q"), ("q", None), (None, "q"), ("q", "r"),
+             (None, None), ("b", "a"), (long_a, long_b)]
+    want = [None if a is None or b is None else difflib.SequenceMatcher(None, a, b).ratio()
+            for a, b in pairs]
     calls = Counter()
     ratio = difflib.SequenceMatcher.ratio
 
@@ -480,13 +474,14 @@ def test_gestalt_evaluates_each_distinct_pair_once_per_batch(monkeypatch):
         return ratio(self)
 
     monkeypatch.setattr(difflib.SequenceMatcher, "ratio", counting)
-    fn = V.gestalt_stats_udf(2).func
-    batch = pd.Series(seqs, index=range(7, 7 + len(seqs)), dtype=object)
+    fn = V.gestalt_ratio.func
+    index = range(7, 7 + len(pairs))
+    a = pd.Series([p[0] for p in pairs], index=index, dtype=object)
+    b = pd.Series([p[1] for p in pairs], index=index, dtype=object)
     distinct = {("a", "b"), ("b", "a"), (long_a, long_b), (long_b, long_a), ("q", "r")}
     for _ in range(2):
         calls.clear()
-        got = fn(batch)
+        got = fn(a, b)
         assert calls == Counter(dict.fromkeys(distinct, 1))
-        assert list(got.index) == list(batch.index)
-        for (_, row), w in zip(got.iterrows(), want):
-            assert (row["mean"], row["std"], list(row["diffs"])) == w
+        assert list(got.index) == list(index)
+        assert [None if pd.isna(g) else g for g in got] == want

@@ -411,19 +411,42 @@ def test_weights_inverse_class_frequency(compiled):
         assert r["weight"] == pytest.approx(n / by_label[r["label"]])
 
 
+def _entity_exchanges(plan: str) -> list[tuple[list[str], str]]:
+    """(ancestors, child) operator lines of every entity_id hash
+    exchange in a tree-string plan, nearest ancestor first."""
+    lines = [(len(ln) - len(ln.lstrip(" :+-*")), ln.lstrip(" :+-*")) for ln in plan.splitlines()]
+    found = []
+    for i, (depth, text) in enumerate(lines):
+        if text.startswith("Exchange hashpartitioning(entity_id"):
+            ancestors = []
+            for d, t in reversed(lines[:i]):
+                if d < depth:
+                    ancestors.append(t)
+                    depth = d
+            found.append((ancestors, lines[i + 1][1]))
+    return found
+
+
 def test_single_entity_shuffle(spark):
-    """The compiled plan must hash-exchange on entity exactly once
-    (window + groupBy share the partitioning); broadcasts excluded."""
+    """The compiled plan moves entity ROWS through one hash exchange:
+    the one that feeds the window (through its sort). The gestalt node
+    between the window and the groupBy declares no output partitioning,
+    so the aggregate may exchange once more, but only its partial
+    buffers (at most one row per entity per task); broadcasts are
+    excluded."""
     df = spark.createDataFrame(_rows(FIXTURE), COOKIE_UPDATE_SCHEMA)
     schema = default_schema(RES)
     # training weights add a second (label-keyed) branch that re-reads
     # the same subtree; AQE reuses that exchange at runtime. The
-    # invariant we pin here: the CORE pipeline needs exactly one entity
-    # shuffle.
+    # invariant we pin here: the CORE pipeline shuffles its rows once.
     wide, _ = compile_features(df, schema, RES, training=False)
     plan = wide._jdf.queryExecution().executedPlan().toString()
-    n_hash_exchanges = plan.count("Exchange hashpartitioning(entity_id")
-    assert n_hash_exchanges == 1, plan[:2000]
+    found = _entity_exchanges(plan)
+    partial = [a for a, child in found if "partial_" in child]
+    rows = [a for a, child in found if "partial_" not in child]
+    assert len(rows) == 1, plan
+    assert rows[0][0].startswith("Sort [entity_id") and rows[0][1].startswith("Window ["), plan
+    assert len(partial) <= 1, plan
 
 
 def test_weight_counts_source_matches_output_under_duplicate_rank_keys(spark, monkeypatch):

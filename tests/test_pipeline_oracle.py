@@ -99,11 +99,11 @@ def test_native_pipeline_plan_is_pure_jvm_single_entity_exchange(pipeline):
 
 def test_default_pipeline_python_nodes_are_the_feature_udfs_only(events, res):
     """default_schema's Python boundary is exactly its feature UDFs in
-    two nodes: the fused Arrow content kernel (over ``value``) below the
-    shuffle, and ONE post-aggregation node holding the gestalt kernel
-    (over ``transform(__vals)``) and the two regex-rank UDFs (over
-    ``name``) — no other Python node and no ``Scan ExistingRDD`` leaf
-    (the rank lookup tables are LocalTableScans)."""
+    two nodes: one below the shuffle holding the fused Arrow content
+    kernel (over ``value``) and the two regex-rank UDFs (over ``name``),
+    and the gestalt ratio (over ``__prev_value, value``) after the
+    window — no other Python node and no ``Scan ExistingRDD`` leaf (the
+    rank lookup tables are LocalTableScans)."""
     wide, _ = compile_features(
         cookie_updates_from_events(events), default_schema(res, num_updates=2, num_diffs=2), res
     )
@@ -111,8 +111,9 @@ def test_default_pipeline_python_nodes_are_the_feature_udfs_only(events, res):
     nodes = re.findall(r"^[\s:+\-*()\d]*([A-Za-z]\w*)", plan, re.M)
     assert [n for n in nodes if re.search(r"Python|Pandas|InArrow", n)] == ["ArrowEvalPython"] * 2
     py_nodes = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
-    assert sorted(sorted(re.findall(r"_udf\((\w+)", line)) for line in py_nodes) == [
-        ["name", "name", "transform"], ["value"]]
+    # each node's UDF calls, by their input columns
+    assert sorted(sorted(re.sub(r"#\d+", "", args) for args in re.findall(r"\w+\(([\w#, ]+)\)#", line))
+                  for line in py_nodes) == [["__prev_value, value"], ["name", "name", "value"]]
     assert "Scan ExistingRDD" not in plan, "lookup table built as a Python RDD"
 
 
@@ -204,3 +205,30 @@ def test_oracle_sql_parses_and_matches_rowcount(spark, events):
     oracle_n = con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0]
     spark_n = entrymod.queries()["cookie_feature_pipeline"](spark, SF_DIR).count()
     assert oracle_n == spark_n > 0
+
+
+def test_duckdb_date_twins_read_day_names_as_python_re():
+    """Both DuckDB twins of date_content (the ``content_flags`` oracle
+    and the pipeline oracle) agree with the reference's Python ``re``
+    on day names whose ``i`` is U+0131 or U+0130: RE2's ``(?i)`` alone
+    does not fold them."""
+    import __spark_entry__ as entrymod
+    from cookieblock_consent_classifier_spark.functions import native
+
+    values = ["frı 7 jan", "FRİ 7 JAN", "fri 7 jan", "ſat 1 feb", "frx 7 jan",
+              "Mon only", "2024-01-07", "FRı 7 Dec", "frİday"]
+
+    def py_date(v):
+        return (any(re.search(p, v) for p in (native.REF_DATE_YMD, native.REF_DATE_DMY,
+                                              native.REF_DATE_MDY))
+                or bool(re.search(native.REF_DAYS3, v) and re.search(native.REF_MONTHS3, v)))
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(values)))
+    got = dict(con.execute(
+        f"SELECT doc_id, f_date FROM ({entrymod.oracle_sql()['content_flags']})").fetchall())
+    assert [got[i] for i in range(len(values))] == [1.0 if py_date(v) else -1.0 for v in values]
+    assert py_date("frı 7 jan") and py_date("FRİ 7 JAN")
+    # the pipeline twin reads the same predicate over the decoded value
+    assert entrymod._duck_date_content("dec") in entrymod._pipeline_oracle_sql()

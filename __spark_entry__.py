@@ -2275,8 +2275,10 @@ def q_cookie_feature_pipeline(spark, sf_dir):
         # aware output partitioning then rewrites the exchange's
         # partitioning to entity_id, so the compile_features window
         # adds no second exchange and the adapter's md5-derivation
-        # projection plus every stage-0 expression runs post-shuffle
-        # on all cores instead of inside the single scan task
+        # projection plus the stage-0 row inputs (decoded value,
+        # entropy, byte length) run post-shuffle on all cores instead
+        # of inside the single scan task; the per-update features are
+        # built later still, in the aggregate, on the slot rows alone
         ev = _fanout(
             _t(spark, sf_dir, "events"), F.col("user_id").cast("string")
         )

@@ -5,13 +5,15 @@ The reference interprets its declared feature schema row-at-a-time
 compiler emits ONE Catalyst DAG for the whole schema:
 
     scan → [optional label/sample filters]
-         → row-wise per-update projections (native exprs + the fused
-           Arrow content kernel + the regex-list ranks over ``name``)
+         → row-wise inputs every row needs (the fused Arrow content
+           kernel or native dec/entropy, the regex-list ranks over
+           ``name``, byte length)
          → one (entity, ts) window pass: lag columns + slot ranks
          → per-row pair ratio (gestalt of the previous and this value)
          → groupBy(entity): per-entity aggregates + slot pivots
            (per-update and per-diff blocks pivot inside the SAME
-           aggregation)
+           aggregation; the per-update features are built there, on
+           the at most num_updates rows that fill a slot)
          → broadcast lookup joins (top-k ranks)
          → ordered sparse assembly (plans/assemble.py)
 
@@ -84,7 +86,9 @@ def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]
     builders of schema.FEATURES' ``kernel`` rows project. One builder
     per feature, whichever path supplies ``dec`` and ``entropy``. A
     builder returns a list of fixed Columns, or for rank-multihot
-    features a single array<int> Column.
+    features a single array<int> Column. compile_features evaluates
+    the builders inside the slot-struct aggregate, after the window,
+    so only the rows that fill an update slot run them.
 
     ``dec`` has Python-unquote semantics — NOT F.try_url_decode (Java
     URLDecoder: '+'→space, malformed %-escape→NULL; both diverge from
@@ -169,8 +173,8 @@ def native_schema(res: Resources, num_updates: int = 2, num_diffs: int = 2) -> F
     schema: a sub-schema, not a variant implementation.
 
     Purpose: the driver's oracled end-to-end pipeline query — the full
-    composition (label filter → per-update exprs → lag window → one
-    entity groupBy with slot pivots + aggregates → broadcast rank
+    composition (label filter → lag window → one entity groupBy whose
+    slot pivots build the per-update features + aggregates → broadcast rank
     joins → ordered sparse assembly → inverse-class weights) has an
     exact DuckDB twin over this subset, turning the pipeline row from
     rows-only into a value-exact green gate row (VERDICT r4 item 1).
@@ -231,15 +235,16 @@ def compile_features(
         s.enabled and s.name == "gestalt_similarity" for s in schema.per_diff
     )
 
-    # ---- stage 0 (PRE-shuffle): every row-local projection — all 28
-    # per-update feature blocks and the per-entity sequence metrics —
-    # built as TWO single select()s (a withColumn per feature means a
-    # py4j analysis round-trip each; ~120 of them cost ~10s of serial
-    # driver time per job). The row-local Python UDFs (the content
-    # kernel and the regex ranks over ``name``) share the FIRST
-    # select, so Catalyst plans ONE ArrowEvalPython node for them: each
-    # node costs every task a Python-runner setup and its own Arrow
-    # round trip. (The setup's importlib.invalidate_caches() took
+    # ---- stage 0 (PRE-shuffle): only what every row needs — the
+    # kernel struct (or native dec), the regex ranks and the per-entity
+    # aggregate inputs. The per-update features are built in stage 2,
+    # on the slot rows alone. Built as single select()s (a withColumn
+    # per column means a py4j analysis round-trip each; ~120 of them
+    # cost ~10s of serial driver time per job). The row-local Python
+    # UDFs (the content kernel and the regex ranks over ``name``) share
+    # the FIRST select, so Catalyst plans ONE ArrowEvalPython node for
+    # them: each node costs every task a Python-runner setup and its
+    # own Arrow round trip. (The setup's importlib.invalidate_caches() took
     # 0.15-0.27 CPU s per runner on Python 3.11 while workers imported
     # pyspark.zip; runtime/pydaemon.py brings it to <= 0.001 s in local
     # sessions.) ``name`` is constant per entity, so the ranks reach
@@ -253,14 +258,18 @@ def compile_features(
     # on both sides. With any kernel feature enabled the fused
     # Arrow kernel runs anyway, so its dec/entropy fields are free.
     # Otherwise the plan stays zero-Python: the Python-unquote decoded
-    # string (native.py_unquote, a byte-exact CPython twin) and the
-    # entropy HOF over it are each materialized ONCE in stage 0 (several
-    # builders and the entropy_total aggregate share them; both are
-    # non-cheap and multiply-referenced, so CollapseProject keeps the
-    # projections). A schema that reads neither gets both pruned. Both
-    # stay: native dec/entropy on every schema kept perfbench hot's
-    # output but raised its job_cpu_s in 3/3 pairs on 4 cores (5.52→5.92,
-    # 5.20→6.02, 5.30→6.08 s): the Arrow batch beats the JVM HOF there.
+    # string (native.py_unquote, a byte-exact CPython twin) is
+    # materialized ONCE in stage 0 and the entropy HOF over it becomes
+    # ``__entropy`` (the entropy_total aggregate reads it on every row;
+    # the slot builders read both after the window). ``__nat_dec``
+    # rides the exchange: recomputing py_unquote inside the slot structs
+    # cut the row exchange's shuffle bytes (1.89 → 1.64 MB on perfbench
+    # native) but cost more CPU (job_cpu_s median 1.87 → 1.98 s, worse
+    # in 7/10 pairs on 4 cores). A schema that reads neither gets both
+    # pruned. Both paths stay: native dec/entropy on every schema kept
+    # perfbench hot's output but raised its job_cpu_s in 3/3 pairs on 4
+    # cores (5.52→5.92, 5.20→6.02, 5.30→6.08 s): the Arrow batch beats
+    # the JVM HOF there.
     need_kernel = any(
         s.enabled and s.name in _KERNEL_FEATURES
         for s in schema.per_entity + schema.per_update + schema.per_diff
@@ -278,36 +287,13 @@ def compile_features(
         staged = df.select("*", kernel(F.col("value")).alias("__k"), *rank_cols)
         dec, entropy = F.col("__k")["dec"], F.col("__k")["entropy"]
     else:
-        staged = df.select("*", *rank_cols, native.py_unquote("value").alias("__nat_dec")).select(
-            "*", native.char_entropy(F.col("__nat_dec")).alias("__nat_entropy")
-        )
-        dec, entropy = F.col("__nat_dec"), F.col("__nat_entropy")
-
-    builders = _per_update_builders()
-    colmap = {
-        "value": F.col("value"), "expiry": F.col("expiry"),
-        "http_only": F.col("http_only"), "secure": F.col("secure"),
-        "session": F.col("session"), "same_site": F.col("same_site"),
-        "k": F.col("__k"), "dec": dec, "entropy": entropy,
-    }
-    stage0_cols: list[Column] = []
-    # spec name → stage-0 columns (one array<int> for a rank feature)
-    upd_cols: dict[str, list[str]] = {}
-    for spec in schema.per_update:
-        if not spec.enabled:
-            continue
-        built = builders[spec.name](colmap)
-        if spec.name in RANK_FEATURES:
-            built = [built]
-        else:
-            assert len(built) == spec.vector_size, spec.name
-            built = [col.cast("double") for col in built]
-        upd_cols[spec.name] = [f"u__{spec.name}__{i}" for i in range(len(built))]
-        stage0_cols += [col.alias(c) for col, c in zip(built, upd_cols[spec.name])]
+        staged = df.select("*", *rank_cols, native.py_unquote("value").alias("__nat_dec"))
+        dec = F.col("__nat_dec")
+        entropy = native.char_entropy(dec)
 
     # per-entity aggregate inputs: the aggregates of a disabled feature
     # are never read, so Catalyst prunes them and these inputs
-    stage0_cols.append(F.octet_length("value").cast("double").alias("__byte_len"))
+    stage0_cols = [F.octet_length("value").cast("double").alias("__byte_len")]
     if need_kernel:
         stage0_cols.append(F.col("__k")["zlib_len"].alias("__zlib_len"))
     stage0_cols.append(entropy.alias("__entropy"))
@@ -366,10 +352,34 @@ def compile_features(
     # the field accesses fold into the assembly projection.
     aggs: list[Column] = []
 
-    # per-update slot structs: __pus_u holds update u's stage-0 columns
-    pu_fields = [c for cols in upd_cols.values() for c in cols]
-    if pu_fields:
-        pu_struct = F.struct(*[F.col(c).alias(c) for c in pu_fields])
+    # per-update slot structs: __pus_u holds update u's per-update
+    # features, built inside the CaseWhen, so only the row with
+    # __slot == u evaluates the builders (the kernel-field copies, the
+    # date/url/hex/timestamp/uuid regex tests, the one-hots). No row
+    # carries them through the exchange, the sort or the window.
+    builders = _per_update_builders()
+    colmap = {
+        "value": F.col("value"), "expiry": F.col("expiry"),
+        "http_only": F.col("http_only"), "secure": F.col("secure"),
+        "session": F.col("session"), "same_site": F.col("same_site"),
+        "k": F.col("__k"), "dec": dec, "entropy": F.col("__entropy"),
+    }
+    pu_cols: list[Column] = []
+    # spec name → slot-struct fields (one array<int> for a rank feature)
+    upd_cols: dict[str, list[str]] = {}
+    for spec in schema.per_update:
+        if not spec.enabled:
+            continue
+        built = builders[spec.name](colmap)
+        if spec.name in RANK_FEATURES:
+            built = [built]
+        else:
+            assert len(built) == spec.vector_size, spec.name
+            built = [col.cast("double") for col in built]
+        upd_cols[spec.name] = [f"u__{spec.name}__{i}" for i in range(len(built))]
+        pu_cols += [col.alias(c) for col, c in zip(built, upd_cols[spec.name])]
+    if pu_cols:
+        pu_struct = F.struct(*pu_cols)
         for u in range(schema.num_updates):
             aggs.append(
                 F.max(F.when(F.col("__slot") == u, pu_struct)).alias(f"__pus_{u}")

@@ -27,7 +27,7 @@ from cookieblock_consent_classifier_spark.functions.vectorized import (
     _py_js_content,
     _py_split_delimited,
 )
-from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema
+from cookieblock_consent_classifier_spark.plans.compiler import compile_features, default_schema, native_schema
 from cookieblock_consent_classifier_spark.schema import COOKIE_UPDATE_SCHEMA
 from cookieblock_consent_classifier_spark.sources.resources import fixture_resources
 
@@ -447,6 +447,21 @@ def test_single_entity_shuffle(spark):
     assert len(rows) == 1, plan
     assert rows[0][0].startswith("Sort [entity_id") and rows[0][1].startswith("Window ["), plan
     assert len(partial) <= 1, plan
+
+
+@pytest.mark.parametrize("make_schema", [default_schema, native_schema])
+def test_per_update_features_do_not_cross_the_exchange(spark, make_schema):
+    """The per-update features are built inside the slot-struct
+    aggregate, on the rows that fill an update slot: the row exchange
+    carries the kernel struct fields (or the decoded value) and the
+    aggregate inputs, never a ``u__`` feature column."""
+    df = spark.createDataFrame(_rows(FIXTURE), COOKIE_UPDATE_SCHEMA)
+    wide, _ = compile_features(df, make_schema(RES, 2, 2), RES, training=False)
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    rows = [child for _, child in _entity_exchanges(plan) if "partial_" not in child]
+    assert len(rows) == 1, plan
+    assert "u__" not in rows[0], rows[0]
+    assert "u__" in plan, plan
 
 
 def test_weight_counts_source_matches_output_under_duplicate_rank_keys(spark, monkeypatch):

@@ -1628,14 +1628,16 @@ def q_embedding_near_dup(spark, sf_dir):
 @_q("entropy_zlib")  # zlib pandas UDF: no SQL twin
 def q_entropy_zlib(spark, sf_dir):
     """feature_shannon_entropy + feature_compressed_content
-    (processor.py:1061-1098): entropy is the extraction job's Catalyst
-    ``char_entropy(py_unquote(text))``, the compressed length an
-    Arrow-vectorized pandas UDF."""
+    (processor.py:1061-1098): both columns come from the extraction
+    job's ``value_stats`` pandas UDF, one Python pass per distinct
+    text of a batch (the ``complength_total``/``entropy_total``
+    inputs)."""
     docs = _fanout(_t(spark, sf_dir, "documents"), "doc_id")
-    return docs.select(
+    stats = docs.select("doc_id", V.value_stats("text").alias("s"))
+    return stats.select(
         "doc_id",
-        F.round(native.char_entropy(native.py_unquote("text")), 6).alias("entropy"),
-        V.zlib_compressed_len("text").alias("zlib_len"),
+        F.round(F.col("s")["entropy"], 6).alias("entropy"),
+        F.col("s")["zlib_len"].cast("long").alias("zlib_len"),
     )
 
 
@@ -2278,7 +2280,9 @@ def q_cookie_feature_pipeline(spark, sf_dir):
         # projection plus the stage-0 row inputs (decoded value,
         # entropy, byte length) run post-shuffle on all cores instead
         # of inside the single scan task; the per-update features are
-        # built later still, in the aggregate, on the slot rows alone
+        # built later still, in the aggregate, on the slot rows alone.
+        # (A schema with Python UDFs runs them in one node after the
+        # window, so this stage stays pure JVM on either path.)
         ev = _fanout(
             _t(spark, sf_dir, "events"), F.col("user_id").cast("string")
         )

@@ -39,12 +39,19 @@ from cookieblock_consent_classifier_spark.functions.native import BOOLEAN_PAT
 # scalar twins (test oracles + single source of the semantics)
 # ---------------------------------------------------------------------------
 
-def _py_compressed_len(s: str | None) -> int | None:
-    """zlib level-9 compressed byte length of the URL-decoded value
-    (feature_compressed_content, processor.py:1061-1081)."""
-    if s is None:
-        return None
-    return len(zlib.compress(unquote(s).encode("utf-8", errors="replace"), 9))
+def _py_value_stats(v: str) -> tuple[str, float, float]:
+    """``(dec, zlib_len, entropy)`` of one raw value: its URL-decoded
+    form (urllib.parse.unquote, as the reference decodes everywhere),
+    the zlib level-9 compressed byte length of that form
+    (feature_compressed_content, processor.py:1061-1081) and its
+    per-character Shannon entropy in bits (feature_shannon_entropy,
+    processor.py:1083-1098; 0 for the empty string). The one
+    implementation behind ``value_stats`` and the fused kernel."""
+    dec = unquote(v)
+    zl = float(len(zlib.compress(dec.encode("utf-8", errors="replace"), 9)))
+    n = len(dec)
+    ent = -sum((c / n) * math.log2(c / n) for c in Counter(dec).values()) if n else 0.0
+    return dec, zl, ent
 
 
 def _py_gestalt(a: str | None, b: str | None) -> float | None:
@@ -92,9 +99,17 @@ def _py_js_parse(txt: str, b64=_UNSET):
 # vectorized UDFs
 # ---------------------------------------------------------------------------
 
-@pandas_udf(T.LongType())
-def zlib_compressed_len(s: pd.Series) -> pd.Series:
-    return s.map(_py_compressed_len, na_action="ignore")
+_STATS_FIELDS = ["zlib_len", "entropy"]
+
+
+@pandas_udf(T.StructType([T.StructField(f, T.DoubleType()) for f in _STATS_FIELDS]))
+def value_stats(s: pd.Series) -> pd.DataFrame:
+    """``(zlib_len, entropy)`` of ``_py_value_stats`` for each row,
+    evaluated once per distinct value of the batch: the two per-value
+    numbers the per-entity aggregates read on every update. A NULL
+    value has neither."""
+    rows, codes = _map_distinct(lambda v: (None, None) if v is None else _py_value_stats(v)[1:], s)
+    return pd.DataFrame(rows, columns=_STATS_FIELDS).take(codes).set_axis(s.index)
 
 
 @pandas_udf(T.DoubleType())
@@ -338,18 +353,21 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
     Separate pandas UDFs per feature would mean ~10 ArrowEvalPython
     evaluations per row batch, each re-decoding the value (measured
     ~2ms·core/row on the full schema); fusing them cuts the Python
-    path to a single batch pass. Within a batch the pipeline runs once
-    per distinct value (``_map_distinct``) and the rows are fanned out
-    from those results: the ``hot`` benchmark's 13,100 rows hold 2,653
+    path to a single batch pass. The compiler feeds it only the values
+    of the rows that fill an update slot (the others pass NULL), and
+    within a batch the pipeline runs once per distinct value
+    (``_map_distinct``), fanned out to the rows: the ``hot``
+    benchmark's 12,491 labelled rows hold 798 slot rows with 705
     distinct values. Each field's semantics are those of the scalar
     ``_py_*`` helpers above; the parity tests read the fields directly.
 
-    Two fields are the compiler's fork inputs: ``dec`` and
-    ``entropy``. When the kernel runs they replace the native
-    py_unquote / char_entropy columns; every feature built from them
-    (lengths, hex/url/date/uuid/timestamp regexes) is a native
-    expression on either path. Every other field is a genuinely-Python
-    computation with no native twin.
+    ``dec`` is the compiler's fork input: when the kernel runs it
+    replaces the native py_unquote column, and every feature built
+    from it (lengths, hex/url/date/uuid/timestamp regexes) is a native
+    expression on either path. ``dec``, ``zlib_len`` and ``entropy``
+    come from ``_py_value_stats``, the helper behind ``value_stats``.
+    Every other field is a genuinely-Python computation with no native
+    twin.
     """
     fields = (
         [
@@ -387,15 +405,7 @@ def content_kernel_udf(content_terms: list[str], delim_min_seps: int = 1,
         def one(v):
             if v is None:
                 return (None,) * len(fields)
-            dec = unquote(v)
-            enc = dec.encode("utf-8", errors="replace")
-            zl = float(len(zlib.compress(enc, 9)))
-            if len(dec) == 0:
-                ent = 0.0
-            else:
-                cnt = Counter(dec)
-                n = len(dec)
-                ent = -sum((c / n) * math.log2(c / n) for c in cnt.values())
+            dec, zl, ent = _py_value_stats(v)
             b64 = _py_b64_decodable(dec)
             pm = lambda b: 1.0 if b else -1.0  # noqa: E731
             # ONE lenient base64 decode shared by the js-object shape

@@ -5,11 +5,13 @@ The reference interprets its declared feature schema row-at-a-time
 compiler emits ONE Catalyst DAG for the whole schema:
 
     scan → [optional label/sample filters]
-         → row-wise inputs every row needs (the fused Arrow content
-           kernel or native dec/entropy, the regex-list ranks over
-           ``name``, byte length)
+         → row-wise JVM inputs every row needs (byte length; on the
+           native path the decoded value and its entropy)
          → one (entity, ts) window pass: lag columns + slot ranks
-         → per-row pair ratio (gestalt of the previous and this value)
+         → every Python UDF in one Arrow node: the gestalt of the
+           previous and this value, the fused content kernel over the
+           slot rows' values, the per-value zlib length and entropy,
+           the regex-list ranks over ``name``
          → groupBy(entity): per-entity aggregates + slot pivots
            (per-update and per-diff blocks pivot inside the SAME
            aggregation; the per-update features are built there, on
@@ -20,10 +22,9 @@ compiler emits ONE Catalyst DAG for the whole schema:
 Physical shape: one row-sized hash-exchange on entity_id (it feeds
 the window) plus N tiny broadcast exchanges; every row-wise
 expression is codegen'd or Arrow-batched. The Python boundary is at
-most two ArrowEvalPython nodes: one below the shuffle holding the
-content kernel (over ``value``) and the regex ranks (over ``name``),
-and the gestalt ratio (over ``__prev_value, value``) after the
-window. That node declares no output partitioning, so the aggregate
+most ONE ArrowEvalPython node, after the window, so the stage below
+the shuffle is pure JVM and the row exchange carries no Python
+result. That node declares no output partitioning, so the aggregate
 after it runs partial → a second entity_id exchange → final: the
 second exchange carries partial-aggregate buffers (at most one row
 per entity per task), never the entity rows.
@@ -154,14 +155,14 @@ def _per_update_builders() -> dict[str, Callable[[dict], list[Column] | Column]]
 # multi-hot rank features: their width is a resource list's length
 RANK_FEATURES = frozenset(f.name for f in FEATURES if isinstance(f.width, str))
 
-# features whose builders read the fused Arrow kernel struct (__k) for a
-# genuinely-Python computation: zlib (compressed_length,
-# complength_total), csv.Sniffer (csv/delimiter), js2py (js_contents),
-# base64 decode heuristics, and open-ended Python unicode semantics
-# (isnumeric/isalpha/isidentifier/case/\b). Every other feature is
-# Catalyst over the raw columns, ``dec`` and ``entropy``, or its own
-# Python UDF, so a schema that enables none of these compiles without
-# the kernel: no kernel node in the plan, not just a pruned one.
+# features that read a genuinely-Python computation of the kernel
+# path: zlib (compressed_length from the kernel struct __k,
+# complength_total from value_stats), csv.Sniffer (csv/delimiter), js2py
+# (js_contents), base64 decode heuristics, and open-ended Python unicode
+# semantics (isnumeric/isalpha/isidentifier/case/\b). Every other
+# feature is Catalyst over the raw columns, ``dec`` and ``entropy``, or
+# its own Python UDF, so a schema that enables none of these compiles
+# without the kernel: no kernel call in the plan, not just a pruned one.
 _KERNEL_FEATURES = frozenset(f.name for f in FEATURES if f.path == "kernel")
 
 
@@ -235,28 +236,21 @@ def compile_features(
         s.enabled and s.name == "gestalt_similarity" for s in schema.per_diff
     )
 
-    # ---- stage 0 (PRE-shuffle): only what every row needs — the
-    # kernel struct (or native dec), the regex ranks and the per-entity
-    # aggregate inputs. The per-update features are built in stage 2,
-    # on the slot rows alone. Built as single select()s (a withColumn
+    # ---- stage 0 (PRE-shuffle): only what every row needs, as JVM
+    # expressions: the per-entity aggregate inputs (and, on the native
+    # path, the decoded value and its entropy). Every Python UDF runs
+    # after the window (below). Built as single select()s (a withColumn
     # per column means a py4j analysis round-trip each; ~120 of them
-    # cost ~10s of serial driver time per job). The row-local Python
-    # UDFs (the content kernel and the regex ranks over ``name``) share
-    # the FIRST select, so Catalyst plans ONE ArrowEvalPython node for
-    # them: each node costs every task a Python-runner setup and its
-    # own Arrow round trip. (The setup's importlib.invalidate_caches() took
-    # 0.15-0.27 CPU s per runner on Python 3.11 while workers imported
-    # pyspark.zip; runtime/pydaemon.py brings it to <= 0.001 s in local
-    # sessions.) ``name`` is constant per entity, so the ranks reach
-    # stage 4 through the aggregate as a min.
+    # cost ~10s of serial driver time per job).
     delim_ms = next((s.args.get("min_seps", 1) for s in schema.per_update
                      if s.name == "delimiter_sep"), 1)
     csv_ms = next((s.args.get("min_seps", 2) for s in schema.per_update
                    if s.name == "csv_contents"), 2)
     # THE kernel/native fork, decided from the schema: it chooses only
     # where ``dec`` and ``entropy`` come from; every builder is the same
-    # on both sides. With any kernel feature enabled the fused
-    # Arrow kernel runs anyway, so its dec/entropy fields are free.
+    # on both sides. With any kernel feature enabled, Python runs after
+    # the window anyway, so ``dec`` is the kernel's field and
+    # ``__zlib_len``/``__entropy`` come from value_stats there.
     # Otherwise the plan stays zero-Python: the Python-unquote decoded
     # string (native.py_unquote, a byte-exact CPython twin) is
     # materialized ONCE in stage 0 and the entropy HOF over it becomes
@@ -274,30 +268,14 @@ def compile_features(
         s.enabled and s.name in _KERNEL_FEATURES
         for s in schema.per_entity + schema.per_update + schema.per_diff
     )
-    ranks: dict[str, Column] = {}
-    if "pattern_names" in enabled_pe:
-        ranks["__pat_ranks"] = V.regex_ranks_udf(res.name_patterns, mode="match")("name")
-    if "name_tokens" in enabled_pe:
-        ranks["__tok_ranks"] = V.regex_ranks_udf(res.name_tokens, mode="search")("name")
-    rank_cols = [col.alias(c) for c, col in ranks.items()]
+    byte_len = F.octet_length("value").cast("double").alias("__byte_len")
     if need_kernel:
-        kernel = V.content_kernel_udf(
-            res.content_terms, delim_min_seps=delim_ms, csv_min_seps=csv_ms
-        )
-        staged = df.select("*", kernel(F.col("value")).alias("__k"), *rank_cols)
-        dec, entropy = F.col("__k")["dec"], F.col("__k")["entropy"]
+        proj = df.select("*", byte_len)
+        dec = F.col("__k")["dec"]
     else:
-        staged = df.select("*", *rank_cols, native.py_unquote("value").alias("__nat_dec"))
+        nat_dec = df.select("*", native.py_unquote("value").alias("__nat_dec"))
         dec = F.col("__nat_dec")
-        entropy = native.char_entropy(dec)
-
-    # per-entity aggregate inputs: the aggregates of a disabled feature
-    # are never read, so Catalyst prunes them and these inputs
-    stage0_cols = [F.octet_length("value").cast("double").alias("__byte_len")]
-    if need_kernel:
-        stage0_cols.append(F.col("__k")["zlib_len"].alias("__zlib_len"))
-    stage0_cols.append(entropy.alias("__entropy"))
-    proj = staged.select("*", *stage0_cols)
+        proj = nat_dec.select("*", byte_len, native.char_entropy(dec).alias("__entropy"))
 
     # ---- stage 1 (the ONE row-sized shuffle): window lag columns +
     # change flags + slot ranks. (count_distinct change flags would be
@@ -321,16 +299,44 @@ def compile_features(
             .alias(f"__chg_{flag}")
         )
     proj = proj.select("*", *window_cols)
-    # gestalt of each consecutive pair, per row like lev_distance (a
-    # NULL side has no ratio). Without gestalt the groupBy reuses the
-    # window's partitioning; with it, the Python node between them makes
-    # Spark exchange the partial aggregate once more (measured on Spark
-    # 4.1.2: Sort → partial SortAggregate → Exchange → final), one
-    # buffer per entity per task.
+
+    # ---- every Python UDF, in ONE select after the window, so Catalyst
+    # plans ONE ArrowEvalPython node for them (each node costs every
+    # task a Python-runner setup and its own Arrow round trip) and the
+    # stage below the shuffle stays pure JVM:
+    # - the gestalt of each consecutive pair, per row like
+    #   lev_distance (a NULL side has no ratio);
+    # - the fused content kernel over the slot rows' values only: a
+    #   non-slot row passes NULL, which _map_distinct evaluates once per
+    #   batch, and only the slot builders read ``__k``;
+    # - value_stats (zlib length, entropy) once per distinct value: the
+    #   two numbers the aggregates read on every row;
+    # - the regex ranks over ``name``, constant per entity, so they
+    #   reach stage 4 through the aggregate as a min.
+    # The node declares no output partitioning, so the groupBy does not
+    # reuse the window's: Spark exchanges the partial aggregate once
+    # more (measured on Spark 4.1.2: Sort → partial SortAggregate →
+    # Exchange → final), one buffer per entity per task.
+    ranks: dict[str, Column] = {}
+    if "pattern_names" in enabled_pe:
+        ranks["__pat_ranks"] = V.regex_ranks_udf(res.name_patterns, mode="match")("name")
+    if "name_tokens" in enabled_pe:
+        ranks["__tok_ranks"] = V.regex_ranks_udf(res.name_tokens, mode="search")("name")
+    py_cols = [col.alias(c) for c, col in ranks.items()]
     if need_gestalt:
-        proj = proj.select(
-            "*", V.gestalt_ratio(F.col("__prev_value"), F.col("value")).alias("d__gestalt_similarity")
+        py_cols.append(
+            V.gestalt_ratio(F.col("__prev_value"), F.col("value")).alias("d__gestalt_similarity")
         )
+    if need_kernel:
+        kernel = V.content_kernel_udf(
+            res.content_terms, delim_min_seps=delim_ms, csv_min_seps=csv_ms
+        )
+        slot_value = F.when(F.col("__slot") < schema.num_updates, F.col("value"))
+        py_cols += [kernel(slot_value).alias("__k"), V.value_stats("value").alias("__stats")]
+    if py_cols:
+        proj = proj.select("*", *py_cols)
+    if need_kernel:
+        proj = proj.select("*", *[F.col("__stats")[f].alias(f"__{f}") for f in ("zlib_len", "entropy")])
 
     # ---- stage 2: single groupBy(entity): slot pivots + aggregates.
     # Slot pivots are STRUCT-PACKED (opt round 7): one

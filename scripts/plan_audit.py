@@ -5,6 +5,11 @@ Python (ArrowEvalPython) nodes, and flag anti-patterns:
 - CartesianProduct / BroadcastNestedLoopJoin on non-tiny inputs
 - more than the expected hash exchanges for simple agg/window shapes
 - row-at-a-time PythonUDF (BatchEvalPython) anywhere — Arrow only
+- an ArrowEvalPython node below a row-sized hash exchange (one with
+  no aggregate under it, so it moves input rows) in the queries that
+  run compile_features: their Python UDFs belong after the window, so
+  the stage below the entity shuffle stays pure JVM and the shuffled
+  rows carry no Python result
 - ``Scan ExistingRDD`` leaves over a Python RDD: a
   ``createDataFrame(list)`` table is pickled on the Python side, so
   every job that reads it starts Python workers just to deserialise
@@ -50,6 +55,24 @@ def python_rdd_scans(jplan) -> int:
     )
 
 
+# the queries whose plan is compile_features' extraction plan
+PIPELINE_QUERIES = ("cookie_feature_pipeline", "predict_pipeline")
+_AGGREGATES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
+
+
+def python_below_row_exchanges(jplan) -> int:
+    """ArrowEvalPython nodes under a hash exchange that moves rows: no
+    aggregate below it, so it does not carry partial buffers."""
+    count = 0
+    for n in _plan_nodes(jplan):
+        if n.nodeName() != "Exchange" or "hashpartitioning" not in n.outputPartitioning().toString():
+            continue
+        below = [m.nodeName() for m in _plan_nodes(n)]
+        if not any(b in _AGGREGATES for b in below):
+            count += below.count("ArrowEvalPython")
+    return count
+
+
 def audit(plan: str) -> dict:
     return {
         "hash_exchanges": len(re.findall(r"Exchange hashpartitioning", plan)),
@@ -78,6 +101,7 @@ def main() -> None:
             jplan = df._jdf.queryExecution().executedPlan()
             a = audit(jplan.toString())
             a["python_rdd_scans"] = python_rdd_scans(jplan)
+            a["python_below_row_exchange"] = python_below_row_exchanges(jplan)
             a["name"] = name
             rows.append(a)
         except Exception as exc:  # audit must cover everything or say why
@@ -87,16 +111,19 @@ def main() -> None:
         r for r in rows
         if r.get("rowwise_python", 0) > 0 or r.get("python_rdd_scans", 0) > 0
         or r.get("cartesian", 0) > 0
+        or (r["name"] in PIPELINE_QUERIES and r.get("python_below_row_exchange", 0) > 0)
     ]
     with open(os.path.join(ROOT, "PLAN_AUDIT.md"), "w", encoding="utf-8") as fd:
         fd.write(
             "# PLAN_AUDIT — AQE-final physical plans of every queries() entry\n\n"
             f"sf_dir: {sf_dir}. Node counts per query; flags: row-at-a-time\n"
             "Python (must be 0 — Arrow only), Python-RDD scans (`Scan\n"
-            "ExistingRDD`, pyRDD) and CartesianProduct (only the documented\n"
-            "test-only all-pairs oracle may carry one).\n\n"
-            "| query | hashEx | rangeEx | singleEx | bcast | scans | arrowPy | rowPy | pyRDD | cartesian | BNLJ |\n"
-            "|---|---|---|---|---|---|---|---|---|---|---|\n"
+            "ExistingRDD`, pyRDD), CartesianProduct (only the documented\n"
+            "test-only all-pairs oracle may carry one) and, in the\n"
+            f"extraction-plan queries ({', '.join(PIPELINE_QUERIES)}), Arrow\n"
+            "Python nodes below a row-sized hash exchange (pyBelowRowEx).\n\n"
+            "| query | hashEx | rangeEx | singleEx | bcast | scans | arrowPy | pyBelowRowEx | rowPy | pyRDD | cartesian | BNLJ |\n"
+            "|---|---|---|---|---|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             if "error" in r:
@@ -105,13 +132,17 @@ def main() -> None:
             fd.write(
                 f"| {r['name']} | {r['hash_exchanges']} | {r['range_exchanges']} | "
                 f"{r['single_exchanges']} | {r['broadcasts']} | {r['scans']} | "
-                f"{r['arrow_python']} | {r['rowwise_python']} | "
+                f"{r['arrow_python']} | {r['python_below_row_exchange']} | {r['rowwise_python']} | "
                 f"{r['python_rdd_scans']} | {r['cartesian']} | "
                 f"{r['bnl_joins']} |\n"
             )
         fd.write(
             "\nNotes:\n"
             "- rowPy must be 0 everywhere (no row-at-a-time Python UDFs).\n"
+            "- pyBelowRowEx counts Arrow Python nodes under a hash exchange\n"
+            "  with no aggregate below it (one that moves input rows); it\n"
+            "  must be 0 in the extraction-plan queries, whose Python UDFs\n"
+            "  run in one node after the window.\n"
             "- pyRDD: fixed lookup/parameter tables (rank tables, grid-search\n"
             "  params) are LocalTableScans. Known remaining Python-RDD scans\n"
             "  ship data-sized driver results, where a VALUES text would grow\n"

@@ -56,11 +56,13 @@ def kernel_field(df, field):
 
 
 def test_entropy_matches_python(vals):
-    """Both entropy builders the extraction job uses — the kernel's
-    ``entropy`` field and the Catalyst ``char_entropy(py_unquote(v))``
-    — equal the reference formula over the URL-decoded value."""
+    """Every entropy builder the extraction job uses — the kernel's
+    ``entropy`` field, ``value_stats``' and the Catalyst
+    ``char_entropy(py_unquote(v))`` — equals the reference formula over
+    the URL-decoded value."""
     native_got = collect_col(vals, native.char_entropy(native.py_unquote("v")))
-    for got in (kernel_field(vals, "entropy"), native_got):
+    stats_got = collect_col(vals, V.value_stats("v")["entropy"])
+    for got in (kernel_field(vals, "entropy"), stats_got, native_got):
         for v, g in zip(VALUES, got):
             dec = unquote(v)
             if len(dec) == 0:
@@ -72,9 +74,11 @@ def test_entropy_matches_python(vals):
 
 
 def test_zlib_len_matches_python(vals):
-    got = collect_col(vals, V.zlib_compressed_len("v"))
-    for v, g in zip(VALUES, got):
-        assert g == len(zlib.compress(unquote(v).encode(), 9)), v
+    """``value_stats``' and the kernel's zlib length: the level-9
+    compressed size of the URL-decoded value."""
+    for got in (collect_col(vals, V.value_stats("v")["zlib_len"]), kernel_field(vals, "zlib_len")):
+        for v, g in zip(VALUES, got):
+            assert g == len(zlib.compress(unquote(v).encode(), 9)), v
 
 
 def test_base64_validity(vals):
@@ -425,6 +429,29 @@ def test_content_kernel_matches_per_row_evaluation():
     for (i, row), want in zip(got.iterrows(), _per_row(fn, BATCH)):
         for f in got.columns:
             assert _null(row[f]) == _null(want[f].iloc[0]), (i, s[i], f)
+
+
+def test_value_stats_evaluate_each_distinct_value_once(monkeypatch):
+    """value_stats runs the shared unquote → zlib → entropy helper once
+    per distinct non-NULL value of the batch, gives every row the
+    fields a per-row evaluation gives it, at the batch's index, and a
+    NULL value neither field."""
+    calls = Counter()
+    stats = V._py_value_stats
+
+    def counting(v):
+        calls[v] += 1
+        return stats(v)
+
+    monkeypatch.setattr(V, "_py_value_stats", counting)
+    fn = V.value_stats.func
+    s = pd.Series(BATCH, index=range(50, 50 + len(BATCH)), dtype=object)
+    got = fn(s)
+    assert calls == Counter(dict.fromkeys({v for v in BATCH if v is not None}, 1))
+    assert list(got.index) == list(s.index)
+    for (i, row), v in zip(got.iterrows(), BATCH):
+        want = (None, None) if v is None else stats(v)[1:]
+        assert tuple(_null(row[f]) for f in ("zlib_len", "entropy")) == want, (i, v)
 
 
 def test_regex_ranks_match_per_row_evaluation():

@@ -57,8 +57,8 @@ def test_native_schema_is_a_sub_schema(res):
         for s in fam:
             assert full_specs[s.name] == s.vector_size, s.name
     # and none of its per-update specs REQUIRES the Arrow kernel
-    # (shannon_entropy reads the kernel's entropy field in the full
-    # schema and native char_entropy here: the same builder)
+    # (shannon_entropy reads value_stats' entropy in the full schema
+    # and native char_entropy here: the same builder)
     kernel_only = {f.name for f in FEATURES if f.path == "kernel" and f.family == "update"}
     assert not any(s.name in kernel_only for s in sub.per_update)
 
@@ -99,21 +99,41 @@ def test_native_pipeline_plan_is_pure_jvm_single_entity_exchange(pipeline):
 
 def test_default_pipeline_python_nodes_are_the_feature_udfs_only(events, res):
     """default_schema's Python boundary is exactly its feature UDFs in
-    two nodes: one below the shuffle holding the fused Arrow content
-    kernel (over ``value``) and the two regex-rank UDFs (over ``name``),
-    and the gestalt ratio (over ``__prev_value, value``) after the
-    window — no other Python node and no ``Scan ExistingRDD`` leaf (the
-    rank lookup tables are LocalTableScans)."""
-    wide, _ = compile_features(
-        cookie_updates_from_events(events), default_schema(res, num_updates=2, num_diffs=2), res
-    )
+    ONE node after the window: the gestalt ratio (over
+    ``__prev_value, value``), the fused Arrow content kernel over the
+    slot rows' values only, the per-value zlib length and entropy
+    (over ``value``) and the two regex-rank UDFs (over ``name``). No
+    Python node sits below the row-reading entity exchange, so the
+    stage before the shuffle is pure JVM; no other Python node and no
+    ``Scan ExistingRDD`` leaf (the rank lookup tables are
+    LocalTableScans)."""
+    schema = default_schema(res, num_updates=2, num_diffs=2)
+    wide, _ = compile_features(cookie_updates_from_events(events), schema, res)
     plan = wide._jdf.queryExecution().executedPlan().toString()
     nodes = re.findall(r"^[\s:+\-*()\d]*([A-Za-z]\w*)", plan, re.M)
-    assert [n for n in nodes if re.search(r"Python|Pandas|InArrow", n)] == ["ArrowEvalPython"] * 2
-    py_nodes = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
-    # each node's UDF calls, by their input columns
-    assert sorted(sorted(re.sub(r"#\d+", "", args) for args in re.findall(r"\w+\(([\w#, ]+)\)#", line))
-                  for line in py_nodes) == [["__prev_value, value"], ["name", "name", "value"]]
+    assert [n for n in nodes if re.search(r"Python|Pandas|InArrow", n)] == ["ArrowEvalPython"], plan
+    lines = [(len(ln) - len(ln.lstrip(" :+-*")), ln.lstrip(" :+-*")) for ln in plan.splitlines()]
+    row_exchanges = [i for i, (_, text) in enumerate(lines)
+                     if text.startswith("Exchange hashpartitioning(entity_id")
+                     and "partial_" not in lines[i + 1][1]]
+    assert row_exchanges, plan
+    for i in row_exchanges:
+        below = []
+        for depth, text in lines[i + 1:]:
+            if depth <= lines[i][0]:
+                break
+            below.append(text)
+        assert not any("ArrowEvalPython" in t for t in below), plan
+    # the node's UDF calls, by name and input
+    (node,) = [text for _, text in lines if text.startswith("ArrowEvalPython")]
+    calls = re.findall(r"(\w+)\(((?:[^()]|\([^()]*\))*)\)#\d+", node.split("], [")[0])
+    assert sorted((fn, re.sub(r"#\d+", "", args)) for fn, args in calls) == [
+        ("_udf", f"CASE WHEN (__slot < {schema.num_updates}) THEN value END"),
+        ("_udf", "name"),
+        ("_udf", "name"),
+        ("gestalt_ratio", "__prev_value, value"),
+        ("value_stats", "value"),
+    ], node
     assert "Scan ExistingRDD" not in plan, "lookup table built as a Python RDD"
 
 
